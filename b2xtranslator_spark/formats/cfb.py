@@ -85,7 +85,7 @@ class CompoundFile:
         self._max_sectors = max(1, (len(data) // self.sector_size) + 1)
 
         self._fat = self._build_fat()
-        self._minifat: np.ndarray | None = None
+        self._minifat: list[int] | None = None
         self._mini_stream: bytes | None = None
         self._dir_entries = self._read_directory()
         # name lookup prefers ROOT-LEVEL streams: nested storages (ObjectPool
@@ -104,10 +104,10 @@ class CompoundFile:
         off = (sid + 1) << self.sector_shift
         return self._data[off : off + self.sector_size]
 
-    def _build_fat(self) -> np.ndarray:
+    def _build_fat(self) -> list[int]:
         # 109 DIFAT slots live in the header at 0x4C (Fat.cs:74-101)
         difat = np.frombuffer(self._data, dtype="<u4", count=109, offset=0x4C)
-        fat_sector_ids = [int(s) for s in difat if s not in (FREESECT, ENDOFCHAIN)]
+        fat_sector_ids = _sector_ids(difat)
         # remaining DIFAT sectors are chained (Fat.cs:103-139)
         sid = self.first_difat_sector
         seen: set[int] = set()
@@ -117,9 +117,7 @@ class CompoundFile:
             block = np.frombuffer(self._sector_bytes(sid), dtype="<u4")
             if block.size <= per_sector:
                 break
-            fat_sector_ids.extend(
-                int(s) for s in block[:per_sector] if s not in (FREESECT, ENDOFCHAIN)
-            )
+            fat_sector_ids.extend(_sector_ids(block[:per_sector]))
             sid = int(block[per_sector])
             if len(seen) > self._max_sectors:
                 raise CfbError("DIFAT chain exceeds file size (cycle?)")
@@ -127,10 +125,12 @@ class CompoundFile:
         for s in fat_sector_ids:
             sec = self._sector_bytes(s)
             if len(sec) == self.sector_size:
-                parts.append(np.frombuffer(sec, dtype="<u4"))
+                parts.append(sec)
         if not parts:
             raise CfbError("empty FAT")
-        return np.concatenate(parts)
+        # one Python list: chain walks index it per sector, and list indexing
+        # is several times cheaper than NumPy scalar access
+        return np.frombuffer(b"".join(parts), dtype="<u4").tolist()
 
     def _chain(self, start: int, name: str = "stream") -> list[int]:
         """Follow next = FAT[cur] until ENDOFCHAIN, with cycle/length guards
@@ -141,11 +141,11 @@ class CompoundFile:
         while sid != ENDOFCHAIN and sid != FREESECT:
             if sid in seen or len(chain) > self._max_sectors:
                 break  # corrupt chain: stop rather than loop forever
-            if sid >= self._fat.size:
+            if sid >= len(self._fat):
                 break
             seen.add(sid)
             chain.append(sid)
-            sid = int(self._fat[sid])
+            sid = self._fat[sid]
         return chain
 
     def _read_chain_bytes(self, start: int, size: int) -> bytes:
@@ -216,7 +216,7 @@ class CompoundFile:
         if self._minifat is not None:
             return
         raw = self._read_chain_bytes(self.first_minifat_sector, -1)
-        self._minifat = np.frombuffer(raw, dtype="<u4") if raw else np.empty(0, "<u4")
+        self._minifat = np.frombuffer(raw, dtype="<u4").tolist() if raw else []
         root = self._dir_entries[0] if self._dir_entries else None
         if root is None:
             self._mini_stream = b""
@@ -234,12 +234,12 @@ class CompoundFile:
         seen: set[int] = set()
         max_minis = len(self._mini_stream) // self.mini_sector_size + 1
         while sid != ENDOFCHAIN and sid != FREESECT and len(out) < size:
-            if sid in seen or len(seen) > max_minis or sid >= self._minifat.size:
+            if sid in seen or len(seen) > max_minis or sid >= len(self._minifat):
                 break
             seen.add(sid)
             off = sid * self.mini_sector_size
             out += self._mini_stream[off : off + self.mini_sector_size]
-            sid = int(self._minifat[sid])
+            sid = self._minifat[sid]
         return bytes(out[:size])
 
     # -- public API ----------------------------------------------------------
@@ -273,14 +273,15 @@ class CompoundFile:
         return out[: e.size]
 
     def _checked_chain(
-        self, fat: np.ndarray, start: int, max_count: int, name: str
+        self, fat: list[int], start: int, max_count: int, name: str
     ) -> list[int]:
         chain = [start]
         cur = start
+        n_fat = len(fat)
         while True:
-            if cur >= fat.size:
+            if cur >= n_fat:
                 raise CfbError("Chain could not be build due to an invalid sector id.")
-            nxt = int(fat[cur])
+            nxt = fat[cur]
             if nxt in (DIFSECT, FATSECT, FREESECT):
                 raise CfbError("Chain could not be build due to an invalid sector id.")
             if nxt == ENDOFCHAIN:
@@ -310,6 +311,11 @@ class CompoundFile:
         if len(out) < size:
             out += b"\x00" * (size - len(out))
         return out[:size]
+
+
+def _sector_ids(slots: np.ndarray) -> list[int]:
+    """FAT sector ids among DIFAT slots: every slot but FREESECT/ENDOFCHAIN."""
+    return slots[(slots != FREESECT) & (slots != ENDOFCHAIN)].tolist()
 
 
 def is_cfb(data: bytes) -> bool:

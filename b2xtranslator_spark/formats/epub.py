@@ -113,22 +113,21 @@ def extract_epub_parts(
             return extract_epub_parts(payload, extract_urls, zf=z)
     chapters: list[str] = []
     elements = 0
-    if True:
-        members = _spine_members(zf)
-        if not members:
-            members = [
-                n
-                for n in zf.namelist()
-                if n.lower().endswith((".xhtml", ".html", ".htm"))
-            ][:_MAX_CHAPTERS]
-        for member in members:
-            check_deadline()
-            data = _read_member(zf, member)
-            if not data:
-                continue
-            text, n, _ = extract_html_parts(data, extract_urls=extract_urls)
-            elements += n
-            if text:
-                chapters.append(text)
+    members = _spine_members(zf)
+    if not members:
+        members = [
+            n
+            for n in zf.namelist()
+            if n.lower().endswith((".xhtml", ".html", ".htm"))
+        ][:_MAX_CHAPTERS]
+    for member in members:
+        check_deadline()
+        data = _read_member(zf, member)
+        if not data:
+            continue
+        text, n, _ = extract_html_parts(data, extract_urls=extract_urls)
+        elements += n
+        if text:
+            chapters.append(text)
     text = "\n".join(chapters)
     return text, elements, _tiled_spans(text, "block")

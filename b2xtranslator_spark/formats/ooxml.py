@@ -193,61 +193,60 @@ def extract_docx_parts(
     lines: list[tuple[str, str]] = []  # (part, line)
     elements = 0
 
-    if True:
-        rels = _docx_rels(zf)
-        data = _read_member(zf, "word/document.xml")
+    rels = _docx_rels(zf)
+    data = _read_member(zf, "word/document.xml")
+    if not data:
+        return "", 0, []
+    root = _parse_xml(data)
+    if root is None:
+        return "", 0, []
+    body = root.find(f"{_W}body")
+
+    def walk_block(container, part: str) -> None:
+        nonlocal elements
+        for child in container:
+            elements += 1
+            if elements % 512 == 0:
+                check_deadline()
+            if child.tag == f"{_W}p":
+                lines.append(
+                    (part, _docx_paragraph(child, rels, extract_urls))
+                )
+            elif child.tag == f"{_W}tbl":
+                for tr in child.findall(f"{_W}tr"):
+                    cells = []
+                    for tc in tr.findall(f"{_W}tc"):
+                        cell_lines: list[str] = []
+                        for cp in tc.findall(f"{_W}p"):
+                            cell_lines.append(
+                                _docx_paragraph(cp, rels, extract_urls)
+                            )
+                        cells.append(" ".join(x for x in cell_lines if x))
+                    lines.append((part, "\t".join(cells)))
+            elif child.tag == f"{_W}sdt":  # content control: recurse
+                content = child.find(f"{_W}sdtContent")
+                if content is not None:
+                    walk_block(content, part)
+
+    if body is not None:
+        walk_block(body, "main")
+    # subdocuments in the legacy doc-leg order (extract.py: main,
+    # footnotes, endnotes, comments); separator notes are machinery
+    for part, member, note_tag in (
+        ("footnotes", "word/footnotes.xml", f"{_W}footnote"),
+        ("endnotes", "word/endnotes.xml", f"{_W}endnote"),
+        ("comments", "word/comments.xml", f"{_W}comment"),
+    ):
+        data = _read_member(zf, member)
         if not data:
-            return "", 0, []
-        root = _parse_xml(data)
-        if root is None:
-            return "", 0, []
-        body = root.find(f"{_W}body")
-
-        def walk_block(container, part: str) -> None:
-            nonlocal elements
-            for child in container:
-                elements += 1
-                if elements % 512 == 0:
-                    check_deadline()
-                if child.tag == f"{_W}p":
-                    lines.append(
-                        (part, _docx_paragraph(child, rels, extract_urls))
-                    )
-                elif child.tag == f"{_W}tbl":
-                    for tr in child.findall(f"{_W}tr"):
-                        cells = []
-                        for tc in tr.findall(f"{_W}tc"):
-                            cell_lines: list[str] = []
-                            for cp in tc.findall(f"{_W}p"):
-                                cell_lines.append(
-                                    _docx_paragraph(cp, rels, extract_urls)
-                                )
-                            cells.append(" ".join(x for x in cell_lines if x))
-                        lines.append((part, "\t".join(cells)))
-                elif child.tag == f"{_W}sdt":  # content control: recurse
-                    content = child.find(f"{_W}sdtContent")
-                    if content is not None:
-                        walk_block(content, part)
-
-        if body is not None:
-            walk_block(body, "main")
-        # subdocuments in the legacy doc-leg order (extract.py: main,
-        # footnotes, endnotes, comments); separator notes are machinery
-        for part, member, note_tag in (
-            ("footnotes", "word/footnotes.xml", f"{_W}footnote"),
-            ("endnotes", "word/endnotes.xml", f"{_W}endnote"),
-            ("comments", "word/comments.xml", f"{_W}comment"),
-        ):
-            data = _read_member(zf, member)
-            if not data:
+            continue
+        sub = _parse_xml(data)
+        if sub is None:
+            continue
+        for note in sub.findall(note_tag):
+            if note.get(f"{_W}type") in ("separator", "continuationSeparator"):
                 continue
-            sub = _parse_xml(data)
-            if sub is None:
-                continue
-            for note in sub.findall(note_tag):
-                if note.get(f"{_W}type") in ("separator", "continuationSeparator"):
-                    continue
-                walk_block(note, part)
+            walk_block(note, part)
 
     # drop trailing EMPTY lines (doc-leg convention) without losing part
     # labels for the rest
@@ -312,114 +311,113 @@ def extract_xlsx_parts(
     if zf is None:
         with zipfile.ZipFile(io.BytesIO(payload)) as z:
             return extract_xlsx_parts(payload, zf=z)
-    if True:
-        wb = _read_member(zf, "xl/workbook.xml")
-        if not wb:
-            return "", 0, []
-        wb_root = _parse_xml(wb)
-        if wb_root is None:
-            return "", 0, []
-        rels_data = _read_member(zf, "xl/_rels/workbook.xml.rels")
-        rels: dict[str, str] = {}
-        if rels_data:
-            rels_root = _parse_xml(rels_data)
-            if rels_root is not None:
-                for rel in rels_root.iter(f"{_REL}Relationship"):
-                    rid, target = rel.get("Id"), rel.get("Target")
-                    if rid and target:
-                        t = target.lstrip("/")
-                        rels[rid] = t if t.startswith("xl/") else f"xl/{t}"
-        sst = _shared_strings(zf)
-        lines: list[str] = []
-        records = 0
-        sheets = wb_root.find(f"{_S}sheets")
-        for sheet in (sheets if sheets is not None else []):
-            check_deadline()
-            name = sheet.get("name") or ""
-            rid = sheet.get(f"{_R}id") or ""
-            part = rels.get(rid)
-            if part is None:
-                continue
-            data = _read_member(zf, part)
-            if not data:
-                continue
-            sroot = _parse_xml(data)
-            if sroot is None:
-                continue
-            if name:
-                lines.append(name)
-            # sheet-level hyperlinks: ref -> url via the SHEET's own rels
-            # (xl/worksheets/_rels/sheetN.xml.rels); rendered on the cell
-            # like every other leg's hyperlinks
-            cell_links: dict[str, str] = {}
-            hl = sroot.find(f"{_S}hyperlinks")
-            if hl is not None:
-                base, fname = part.rsplit("/", 1)
-                srels_data = _read_member(zf, f"{base}/_rels/{fname}.rels")
-                srels: dict[str, str] = {}
-                if srels_data:
-                    sr_root = _parse_xml(srels_data)
-                    if sr_root is not None:
-                        for rel in sr_root.iter(f"{_REL}Relationship"):
-                            if rel.get("Id") and rel.get("Target"):
-                                srels[rel.get("Id")] = rel.get("Target")
-                for link in hl.findall(f"{_S}hyperlink"):
-                    ref = link.get("ref")
-                    url = srels.get(link.get(f"{_R}id") or "")
-                    if url is None and link.get("location"):
-                        url = '\\l "' + link.get("location") + '"'
-                    if ref and url:
-                        cell_links[ref] = url
-            sdata = sroot.find(f"{_S}sheetData")
-            for row in (sdata if sdata is not None else []):
-                cols: dict[int, str] = {}
-                # cells may omit r= (writers emit them in order): implicit
-                # position = previous cell's column + 1, else col-0 cells
-                # would silently overwrite each other
-                next_col = 0
-                for c in row.findall(f"{_S}c"):
-                    records += 1
-                    if records % 1024 == 0:
-                        check_deadline()
-                    ref = c.get("r")
-                    col = _col_index(ref) if ref else next_col
-                    next_col = col + 1
-                    ctype = c.get("t") or "n"
-                    val = None
-                    if ctype == "inlineStr":
-                        is_el = c.find(f"{_S}is")
-                        if is_el is not None:
-                            val = _si_text(is_el)
-                    else:
-                        v = c.find(f"{_S}v")
-                        if v is None or v.text is None:
-                            continue
-                        if ctype == "s":
-                            try:
-                                val = sst[int(v.text)]
-                            except (ValueError, IndexError):
-                                val = None
-                        elif ctype == "b":
-                            val = "TRUE" if v.text.strip() == "1" else "FALSE"
-                        elif ctype in ("str", "e"):
+    wb = _read_member(zf, "xl/workbook.xml")
+    if not wb:
+        return "", 0, []
+    wb_root = _parse_xml(wb)
+    if wb_root is None:
+        return "", 0, []
+    rels_data = _read_member(zf, "xl/_rels/workbook.xml.rels")
+    rels: dict[str, str] = {}
+    if rels_data:
+        rels_root = _parse_xml(rels_data)
+        if rels_root is not None:
+            for rel in rels_root.iter(f"{_REL}Relationship"):
+                rid, target = rel.get("Id"), rel.get("Target")
+                if rid and target:
+                    t = target.lstrip("/")
+                    rels[rid] = t if t.startswith("xl/") else f"xl/{t}"
+    sst = _shared_strings(zf)
+    lines: list[str] = []
+    records = 0
+    sheets = wb_root.find(f"{_S}sheets")
+    for sheet in (sheets if sheets is not None else []):
+        check_deadline()
+        name = sheet.get("name") or ""
+        rid = sheet.get(f"{_R}id") or ""
+        part = rels.get(rid)
+        if part is None:
+            continue
+        data = _read_member(zf, part)
+        if not data:
+            continue
+        sroot = _parse_xml(data)
+        if sroot is None:
+            continue
+        if name:
+            lines.append(name)
+        # sheet-level hyperlinks: ref -> url via the SHEET's own rels
+        # (xl/worksheets/_rels/sheetN.xml.rels); rendered on the cell
+        # like every other leg's hyperlinks
+        cell_links: dict[str, str] = {}
+        hl = sroot.find(f"{_S}hyperlinks")
+        if hl is not None:
+            base, fname = part.rsplit("/", 1)
+            srels_data = _read_member(zf, f"{base}/_rels/{fname}.rels")
+            srels: dict[str, str] = {}
+            if srels_data:
+                sr_root = _parse_xml(srels_data)
+                if sr_root is not None:
+                    for rel in sr_root.iter(f"{_REL}Relationship"):
+                        if rel.get("Id") and rel.get("Target"):
+                            srels[rel.get("Id")] = rel.get("Target")
+            for link in hl.findall(f"{_S}hyperlink"):
+                ref = link.get("ref")
+                url = srels.get(link.get(f"{_R}id") or "")
+                if url is None and link.get("location"):
+                    url = '\\l "' + link.get("location") + '"'
+                if ref and url:
+                    cell_links[ref] = url
+        sdata = sroot.find(f"{_S}sheetData")
+        for row in (sdata if sdata is not None else []):
+            cols: dict[int, str] = {}
+            # cells may omit r= (writers emit them in order): implicit
+            # position = previous cell's column + 1, else col-0 cells
+            # would silently overwrite each other
+            next_col = 0
+            for c in row.findall(f"{_S}c"):
+                records += 1
+                if records % 1024 == 0:
+                    check_deadline()
+                ref = c.get("r")
+                col = _col_index(ref) if ref else next_col
+                next_col = col + 1
+                ctype = c.get("t") or "n"
+                val = None
+                if ctype == "inlineStr":
+                    is_el = c.find(f"{_S}is")
+                    if is_el is not None:
+                        val = _si_text(is_el)
+                else:
+                    v = c.find(f"{_S}v")
+                    if v is None or v.text is None:
+                        continue
+                    if ctype == "s":
+                        try:
+                            val = sst[int(v.text)]
+                        except (ValueError, IndexError):
+                            val = None
+                    elif ctype == "b":
+                        val = "TRUE" if v.text.strip() == "1" else "FALSE"
+                    elif ctype in ("str", "e"):
+                        val = v.text
+                    else:  # n (or untyped): numeric
+                        try:
+                            val = _fmt_number(float(v.text))
+                        except ValueError:
                             val = v.text
-                        else:  # n (or untyped): numeric
-                            try:
-                                val = _fmt_number(float(v.text))
-                            except ValueError:
-                                val = v.text
-                    if val is not None:
-                        url = cell_links.get(ref or "")
-                        if url:
-                            if val and val.lower() != url.lower():
-                                val = f"{val} ({url})"
-                            else:
-                                val = url
-                        cols[col] = val
-                if cols:
-                    lines.append(
-                        "\t".join(cols[k] for k in sorted(cols))
-                    )
+                if val is not None:
+                    url = cell_links.get(ref or "")
+                    if url:
+                        if val and val.lower() != url.lower():
+                            val = f"{val} ({url})"
+                        else:
+                            val = url
+                    cols[col] = val
+            if cols:
+                lines.append(
+                    "\t".join(cols[k] for k in sorted(cols))
+                )
     text = "\n".join(lines)
     return text, records, _tiled_spans(text, "row")
 
@@ -440,39 +438,38 @@ def extract_pptx_parts(
     if zf is None:
         with zipfile.ZipFile(io.BytesIO(payload)) as z:
             return extract_pptx_parts(payload, zf=z)
-    if True:
-        slides = []
-        for name in zf.namelist():
-            m = _SLIDE_RE.match(name)
-            if m:
-                slides.append((0, int(m.group(1)), name))
-            m = _NOTES_RE.match(name)
-            if m:
-                slides.append((1, int(m.group(1)), name))
-        slides.sort()
-        lines: list[str] = []
-        records = 0
-        for _, _, name in slides:
-            check_deadline()
-            data = _read_member(zf, name)
-            if not data:
-                continue
-            root = _parse_xml(data)
-            if root is None:
-                continue
-            for p in root.iter(f"{_A}p"):
-                buf: list[str] = []
-                for node in p.iter():
-                    if node.tag == f"{_A}t":
-                        buf.append(node.text or "")
-                        records += 1
-                        if records % 1024 == 0:
-                            check_deadline()
-                    elif node.tag == f"{_A}br":
-                        buf.append("\n")
-                line = "".join(buf)
-                if line:
-                    lines.append(line)
+    slides = []
+    for name in zf.namelist():
+        m = _SLIDE_RE.match(name)
+        if m:
+            slides.append((0, int(m.group(1)), name))
+        m = _NOTES_RE.match(name)
+        if m:
+            slides.append((1, int(m.group(1)), name))
+    slides.sort()
+    lines: list[str] = []
+    records = 0
+    for _, _, name in slides:
+        check_deadline()
+        data = _read_member(zf, name)
+        if not data:
+            continue
+        root = _parse_xml(data)
+        if root is None:
+            continue
+        for p in root.iter(f"{_A}p"):
+            buf: list[str] = []
+            for node in p.iter():
+                if node.tag == f"{_A}t":
+                    buf.append(node.text or "")
+                    records += 1
+                    if records % 1024 == 0:
+                        check_deadline()
+                elif node.tag == f"{_A}br":
+                    buf.append("\n")
+            line = "".join(buf)
+            if line:
+                lines.append(line)
     text = "\n".join(lines)
     return text, records, _tiled_spans(text, "par")
 

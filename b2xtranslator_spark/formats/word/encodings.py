@@ -18,6 +18,7 @@ C fast path) — no per-byte Python in the hot loop.
 from __future__ import annotations
 
 import codecs
+import re
 from functools import lru_cache
 
 _CODEPAGE_TO_CODEC = {
@@ -112,47 +113,69 @@ def resolve_single_byte_codepage(
 
 
 # -- mojibake heuristics (PieceTable.cs:389-611) -----------------------------
+#
+# A single-byte decode yields exactly one character per byte, so "how many
+# characters of the decoded text fall in class X" equals "how many bytes map
+# to a class-X character", which bytes.translate counts at C speed against a
+# 256-entry table built once per (code page, class).
 
-_SMART_PUNCT = set("‘’“”–—…")
-_SUSPICIOUS_MAC = set("ëíìîñó")
-
-
-def _looks_like_mac_smart_punct_mismatch(mac_text: str, win_text: str) -> bool:
-    n = min(len(mac_text), len(win_text))
-    for i in range(n):
-        if win_text[i] in _SMART_PUNCT and mac_text[i] in _SUSPICIOUS_MAC:
-            return True
-    return False
-
-
-import re as _re
-
-# Latin-1-supplement letters: \u00c0-\u00ff minus the two non-letters \u00d7 and \u00f7
-_SUPP_LETTER_RE = _re.compile("[\u00c0-\u00d6\u00d8-\u00f6\u00f8-\u00ff]")
-_ASCII_LETTER_RE = _re.compile("[A-Za-z]")
-_UTF8_MOJIBAKE_RE = _re.compile("[\u00c3\u00c2\u00e2](?=[\u0080-\u00bf\u20ac\u2122])")
-_LATIN_EXT_RE = _re.compile("[\u00c0-\u024f]")
+_CHAR_CLASSES = {
+    # Latin-1-supplement letters: U+00C0-U+00FF minus the non-letters × and ÷
+    "supp_letter": lambda c: "\u00c0" <= c <= "\u00ff" and c not in "\u00d7\u00f7",
+    "letter": str.isalpha,
+    "ascii_letter": lambda c: c.isascii() and c.isalpha(),
+    "cyrillic_letter": lambda c: "\u0400" <= c <= "\u04ff" and c.isalpha(),
+}
 
 
-def _count(text: str, pred) -> int:
-    return sum(1 for c in text if pred(c))
+@lru_cache(maxsize=None)
+def _reject(codepage: int, cls: str) -> bytes:
+    """Bytes whose `codepage` character is NOT in `cls` (translate's delete
+    argument)."""
+    table = _table(_CODEPAGE_TO_CODEC[codepage])
+    pred = _CHAR_CLASSES[cls]
+    return bytes(b for b in range(256) if not pred(table[b]))
 
 
-def _is_cyrillic_letter(c: str) -> bool:
-    return "\u0400" <= c <= "\u04ff" and c.isalpha()
+def _count_class(data: bytes, codepage: int, cls: str) -> int:
+    """Characters of decode_single_byte(data, codepage) in class `cls`."""
+    return len(data.translate(None, _reject(codepage, cls)))
 
 
-def _looks_like_western_mojibake_for_cyrillic(western: str, cyrillic: str) -> bool:
-    # cheap C-speed pre-check before any per-char Python work: the verdict
-    # requires >=6 Latin-supplement letters (PieceTable.cs:520-536)
-    supplement_letters = len(_SUPP_LETTER_RE.findall(western))
-    if supplement_letters < 6:
+_SMART_PUNCT = "‘’“”–—…"
+_SUSPICIOUS_MAC = "ëíìîñó"
+
+
+@lru_cache(maxsize=None)
+def _mac_mismatch_reject() -> bytes:
+    """Bytes that are NOT cp1252 smart punctuation read as a suspicious
+    MacRoman letter. Both readings come from the same byte, so the
+    per-position comparison of PieceTable.cs reduces to a byte set."""
+    mac, win = _table("mac_roman"), _table("cp1252")
+    return bytes(
+        b for b in range(256)
+        if not (win[b] in _SMART_PUNCT and mac[b] in _SUSPICIOUS_MAC)
+    )
+
+
+def _looks_like_mac_smart_punct_mismatch(data: bytes) -> bool:
+    return bool(data.translate(None, _mac_mismatch_reject()))
+
+
+_UTF8_MOJIBAKE_RE = re.compile("[\u00c3\u00c2\u00e2](?=[\u0080-\u00bf\u20ac\u2122])")
+_LATIN_EXT_RE = re.compile("[\u00c0-\u024f]")
+
+
+def _looks_like_western_mojibake_for_cyrillic(data: bytes, codepage: int) -> bool:
+    """Would the cp1251 reading of these `codepage` bytes be the real text?
+    (PieceTable.cs:520-536)"""
+    if _count_class(data, codepage, "supp_letter") < 6:
         return False
-    western_letters = _count(western, str.isalpha)
+    western_letters = _count_class(data, codepage, "letter")
     if western_letters < 6:
         return False
-    ascii_letters = len(_ASCII_LETTER_RE.findall(western))
-    cyr_letters = _count(cyrillic, _is_cyrillic_letter)
+    ascii_letters = _count_class(data, codepage, "ascii_letter")
+    cyr_letters = _count_class(data, 1251, "cyrillic_letter")
     return (
         ascii_letters <= max(1, western_letters // 5)
         and cyr_letters * 10 >= western_letters * 7
@@ -198,32 +221,25 @@ def decode_piece(data: bytes, codepage: int) -> str:
     (PieceTable.DecodeChars, PieceTable.cs:389-433)."""
     if codepage == UNICODE:
         return decode_utf16le(data)
-    text = decode_single_byte(data, codepage)
-    if codepage == 10000:
-        win = decode_single_byte(data, 1252)
-        if _looks_like_mac_smart_punct_mismatch(text, win):
-            return win
-        return text
-    if codepage in (1252, 28591):
-        # decode alternatives lazily: the cyrillic candidate is only needed
-        # when the supplement-letter pre-check can pass, the UTF-8 candidate
-        # only when >=2 mojibake lead bytes are present (behavior identical,
-        # just skips work on the overwhelmingly-common clean path)
-        repaired = False
-        if len(_SUPP_LETTER_RE.findall(text)) >= 6:
-            cyrillic = decode_single_byte(data, 1251)
-            if _looks_like_western_mojibake_for_cyrillic(text, cyrillic):
-                text = cyrillic
-                repaired = True
-        if not repaired and _count_utf8_mojibake(text) >= 2:
+    if codepage == 10000 and _looks_like_mac_smart_punct_mismatch(data):
+        return decode_single_byte(data, 1252)
+    if codepage in (1252, 28591) and _looks_like_western_mojibake_for_cyrillic(
+        data, codepage
+    ):
+        text = decode_single_byte(data, 1251)
+    else:
+        text = decode_single_byte(data, codepage)
+        # the UTF-8 candidate is only decoded when >=2 mojibake lead bytes
+        # are present (skips work on the overwhelmingly-common clean path)
+        if codepage in (1252, 28591) and _count_utf8_mojibake(text) >= 2:
             try:
                 utf8_text = data.decode("utf-8")
             except UnicodeDecodeError:
                 utf8_text = ""
             if _looks_like_utf8_mojibake(text, utf8_text):
                 text = utf8_text
-        if _has_embedded_char(text, "ø", "Ø"):
-            central = decode_single_byte(data, 1250)
-            if _has_embedded_char(central, "ř", "Ř"):
-                text = central
+    if codepage in (1252, 28591) and _has_embedded_char(text, "ø", "Ø"):
+        central = decode_single_byte(data, 1250)
+        if _has_embedded_char(central, "ř", "Ř"):
+            text = central
     return text

@@ -48,6 +48,16 @@ _WIN1252_C1 = str.maketrans(
         0x9E: "ž", 0x9F: "Ÿ",
     }
 )
+_WIN1252_C1_RE = re.compile("[\x91-\x9f]")
+
+
+def _map_win1252_c1(chars: str) -> str:
+    # str.translate walks every non-ASCII string char by char even when
+    # nothing maps; isascii() is O(1) and the regex search runs at C speed
+    if chars.isascii() or not _WIN1252_C1_RE.search(chars):
+        return chars
+    return chars.translate(_WIN1252_C1)
+
 
 _PARA_BOUNDARY_RE = re.compile("[\r\x07\x0c]")
 _DISPATCH_STOP_RE = re.compile("[\x00-\x1f￿]")
@@ -502,7 +512,7 @@ class DocumentMapping:
 
         # fast path: plain visible text, nothing special to dispatch on
         if not f_spec and text_type == "t" and _is_plain(chars):
-            w.text_element(chars.translate(_WIN1252_C1))
+            w.text_element(_map_win1252_c1(chars))
             return
 
         w.start_element("w", text_type)
@@ -518,7 +528,7 @@ class DocumentMapping:
             if c > "\x1f" and c != "￿" and not (f_spec and c == SYMBOL):
                 m = stop_re.search(chars, i + 1)
                 j = m.start() if m else n_chars
-                w.write_string(chars[i:j].translate(_WIN1252_C1))
+                w.write_string(_map_win1252_c1(chars[i:j]))
                 cp += j - i
                 i = j
                 continue

@@ -85,10 +85,11 @@ def _max_run(sorted_col):
     column — ONE interpreted fold (struct accumulator) instead of the RLE
     starts/pairs passes (measured 0.29 s vs 0.40 s for the word column on
     the bench corpus, optimization round 6); integer-identical to
-    -array_min(negc) over _with_rle_pairs output, 0 on empty arrays.
+    -array_min(negc) over _with_rle_pairs output, 0 on empty and NULL
+    arrays.
     _with_rle_pairs stays for consumers that need the full (count, value)
     pairs (top_tokens_sketch)."""
-    return F.aggregate(
+    best = F.aggregate(
         sorted_col,
         F.struct(
             F.lit(0).alias("best"),
@@ -107,6 +108,7 @@ def _max_run(sorted_col):
         ),
         lambda acc: acc["best"],
     )
+    return F.coalesce(best, F.lit(0))
 
 
 def token_count(documents: DataFrame) -> DataFrame:

@@ -306,47 +306,17 @@ def _extract_frames(slices, np) -> Iterator[pd.DataFrame]:
         )
 
 
-def run_extraction(
-    transcripts: DataFrame,
-    num_partitions: int | None = None,
-    salt_buckets: int = 4,
-    mode: str = "none",
-) -> DataFrame:
-    """Arrow-batched extraction with a configurable pre-map layout.
-
-    mode="none" (default): map directly over the scan partitions — ZERO
-    shuffle. The payload column is the bulk of the data, so not moving it
-    before a pure per-document map is the single biggest overhead saving
-    (measured 32% wall at 8 cores vs the salted shuffle); input split sizing
-    (spark.sql.files.maxPartitionBytes=32MB) controls balance instead. Skew
-    defense lives where skew actually bites — the WRITE shuffle
-    (write_extracted salts its partitioning key).
-
-    mode="salted": pre-shuffle on (conv_id, salt(turn_idx)) — conversations
-    stay mostly co-located while a 1000-turn conversation of 10MB
-    attachments splits across `salt_buckets` tasks. Use when a downstream
-    stage consumes the mapped output grouped by conversation directly.
-
-    mode="balanced": round-robin into fine partitions — best task balance
-    when the input file layout itself is skewed.
-
-    Partition count defaults to cores x 8: doc-size variance (4KB..10MB) is
-    high, so fine partitions + AQE coalescing beat coarse ones (measured 2.8x
-    on the sample corpus)."""
-    spark = transcripts.sparkSession
-    pruned = transcripts.select("conv_id", "turn_idx", "text", "tool")
-    n = num_partitions or spark.sparkContext.defaultParallelism * 8
-    if mode == "none":
-        shaped = pruned
-    elif mode == "balanced":
-        shaped = pruned.repartition(n)
-    else:
-        shaped = pruned.repartition(
-            n,
-            F.col("conv_id"),
-            F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(salt_buckets)),
-        )
-    return shaped.mapInPandas(extract_turns, schema=EXTRACTED_SCHEMA)
+def run_extraction(transcripts: DataFrame) -> DataFrame:
+    """Arrow-batched extraction mapped directly over the scan partitions —
+    ZERO shuffle. The payload column is the bulk of the data, so not moving
+    it before a pure per-document map is the single biggest overhead saving
+    (measured 32% wall at 8 cores vs a salted pre-shuffle); input split
+    sizing (spark.sql.files.maxPartitionBytes=32MB) controls balance
+    instead. Skew defense lives where skew actually bites — the WRITE
+    shuffle (write_extracted salts its partitioning key)."""
+    return transcripts.select("conv_id", "turn_idx", "text", "tool").mapInPandas(
+        extract_turns, schema=EXTRACTED_SCHEMA
+    )
 
 
 def write_extracted(
@@ -419,22 +389,26 @@ def run_with_checkpoints(
 
     ckpt_path = os.path.join(out_dir, "_checkpoints")
     done: set[int] = set()
-    try:
-        ckpt = spark.read.parquet(ckpt_path)
-        # group numbers are only meaningful under the SAME n_groups: resuming
-        # run_id with a different group count must re-run everything (the
-        # staging dir is likewise keyed by n_groups), otherwise rows hashed
-        # into a "done-numbered" group of the new partitioning are skipped
-        done = {
-            r["partition_id"]
-            for r in ckpt.where(
-                (F.col("run_id") == run_id)
-                & (F.col("state") == "done")
-                & (F.col("n_groups") == n_groups)
-            ).collect()
-        }
-    except Exception:
-        pass  # first run: no checkpoint table yet (or pre-n_groups schema)
+    # probe first: reading a missing path fails inside the JVM, which logs a
+    # PATH_NOT_FOUND stack trace on every fresh run
+    if _fs_exists(spark, ckpt_path):
+        try:
+            ckpt = spark.read.parquet(ckpt_path)
+            # group numbers are only meaningful under the SAME n_groups:
+            # resuming run_id with a different group count must re-run
+            # everything (the staging dir is likewise keyed by n_groups),
+            # otherwise rows hashed into a "done-numbered" group of the new
+            # partitioning are skipped
+            done = {
+                r["partition_id"]
+                for r in ckpt.where(
+                    (F.col("run_id") == run_id)
+                    & (F.col("state") == "done")
+                    & (F.col("n_groups") == n_groups)
+                ).collect()
+            }
+        except Exception:
+            pass  # pre-n_groups checkpoint schema: re-run every group
 
     group_col = F.pmod(F.xxhash64("conv_id"), F.lit(n_groups))
     # The staging directory is keyed by n_groups: resuming with a different

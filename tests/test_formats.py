@@ -49,6 +49,48 @@ def test_cfb_rejects_garbage():
         CompoundFile(b"{\\rtf1 this is not a compound file" + b"\x00" * 600)
 
 
+# -- CFB sector-chain guards (AbstractFat.GetSectorChain) ----------------------
+
+_INVALID_SID = "Chain could not be build due to an invalid sector id."
+_SIZE_MISMATCH = (
+    "The number of sectors used by WordDocument does not match the specified size."
+)
+
+
+def _cfb_with_fat_edits(edits: dict[int, int]) -> bytes:
+    """One 4096-byte stream in sectors 2..9 with FAT entries overwritten;
+    make_cfb keeps the single FAT sector at sector 0 (file offset 512)."""
+    from b2xtranslator_spark.sources.binfixtures import make_cfb
+
+    data = bytearray(make_cfb([("WordDocument", b"x" * 4096)]))
+    for sid, nxt in edits.items():
+        struct.pack_into("<I", data, 512 + 4 * sid, nxt)
+    return bytes(data)
+
+
+def test_cfb_intact_chain_reads():
+    cf = CompoundFile(_cfb_with_fat_edits({}))
+    assert cf.get_stream("WordDocument") == b"x" * 4096
+
+
+@pytest.mark.parametrize(
+    "edits, message",
+    [
+        ({3: 0xFFFFFFFF}, _INVALID_SID),  # next sector is FREESECT
+        ({3: 10_000}, _INVALID_SID),  # next sector past the FAT
+        ({5: 3}, _SIZE_MISMATCH),  # cycle 3 -> 4 -> 5 -> 3
+        ({9: 10, 10: 0xFFFFFFFE}, _SIZE_MISMATCH),  # one sector too many
+        ({7: 0xFFFFFFFE}, _SIZE_MISMATCH),  # two sectors too few
+    ],
+    ids=["freesect", "past-fat", "cycle", "too-long", "too-short"],
+)
+def test_cfb_chain_guards(edits, message):
+    cf = CompoundFile(_cfb_with_fat_edits(edits))
+    with pytest.raises(CfbError) as err:
+        cf.get_stream("WordDocument")
+    assert str(err.value) == message
+
+
 @needs_ref
 def test_word_document_structures():
     doc = WordBinaryDocument(CompoundFile(open(SIMPLE_DOC, "rb").read()))
@@ -89,6 +131,133 @@ def test_utf8_mojibake_repair():
     text = "Café – naïve".encode("utf-8")
     # decoded as cp1252 it shows Ã©/â€" mojibake; the heuristic repairs it
     assert decode_piece(text, 1252) == "Café – naïve"
+
+
+# -- Word leg encoding heuristics (PieceTable.cs:389-611) ----------------------
+
+
+def _reference_decode_piece(data: bytes, codepage: int) -> str:
+    """PieceTable.DecodeChars stated directly: every verdict counts characters
+    over the decoded candidate texts."""
+    text = decode_single_byte(data, codepage)
+    if codepage == 10000:
+        win = decode_single_byte(data, 1252)
+        if any(w in "‘’“”–—…" and m in "ëíìîñó" for m, w in zip(text, win)):
+            return win
+        return text
+    if codepage not in (1252, 28591):
+        return text
+
+    def mojibake(t: str) -> int:
+        return sum(
+            1
+            for a, b in zip(t, t[1:])
+            if a in "\u00c3\u00c2\u00e2"
+            and ("\u0080" <= b <= "\u00bf" or b in "\u20ac\u2122")
+        )
+
+    def embedded(t: str, chars: str) -> bool:
+        return any(
+            c in chars and 0 < i < len(t) - 1 and t[i - 1].isalpha()
+            and t[i + 1].isalpha()
+            for i, c in enumerate(t)
+        )
+
+    cyrillic = decode_single_byte(data, 1251)
+    supp = sum(1 for c in text if "\u00c0" <= c <= "\u00ff" and c not in "\u00d7\u00f7")
+    letters = sum(1 for c in text if c.isalpha())
+    ascii_letters = sum(1 for c in text if c.isascii() and c.isalpha())
+    cyr = sum(1 for c in cyrillic if "\u0400" <= c <= "\u04ff" and c.isalpha())
+    if (
+        supp >= 6
+        and letters >= 6
+        and ascii_letters <= max(1, letters // 5)
+        and cyr * 10 >= letters * 7
+    ):
+        text = cyrillic
+    else:
+        before = mojibake(text)
+        try:
+            utf8 = data.decode("utf-8")
+        except UnicodeDecodeError:
+            utf8 = ""
+        if (
+            before >= 2
+            and utf8
+            and utf8 != text
+            and mojibake(utf8) < before
+            and sum(1 for c in utf8 if "\u00c0" <= c <= "\u024f" and c.isalpha())
+            >= min(2, before)
+        ):
+            text = utf8
+    if embedded(text, "øØ"):
+        central = decode_single_byte(data, 1250)
+        if embedded(central, "řŘ"):
+            text = central
+    return text
+
+
+_UTF8_UNITS = [c.encode("utf-8") for c in "éèüñçåøÀ–’€™"]
+
+
+def _random_piece(rng) -> bytes:
+    """Bytes drawn from weighted pools: Latin-1-supplement/Cyrillic range
+    0xC0-0xFF, cp1252 smart punctuation 0x91-0x9F, whole UTF-8 sequences
+    (lead byte + continuation), o-slash, ASCII letters and any byte. Each
+    piece draws its own pool weights, so some pieces are pure UTF-8 and some
+    carry no ASCII at all."""
+    weights = [rng.random() if rng.random() < 0.7 else 0.0 for _ in range(6)]
+    weights[4] += 0.01
+    out = bytearray()
+    for _ in range(rng.randint(0, 60)):
+        pool = rng.choices(range(6), weights)[0]
+        if pool == 0:
+            out.append(rng.randint(0xC0, 0xFF))
+        elif pool == 1:
+            out.append(rng.randint(0x91, 0x9F))
+        elif pool == 2:
+            out += rng.choice(_UTF8_UNITS)
+        elif pool == 3:
+            out.append(rng.choice(b"\xf8\xd8"))
+        elif pool == 4:
+            out.append(rng.choice(b"abcdefghijklmnopqrstuvwxyz ABCXYZ"))
+        else:
+            out.append(rng.randint(0, 255))
+    return bytes(out)
+
+
+def test_decode_piece_matches_character_count_reference():
+    import random
+
+    rng = random.Random(20261017)
+    repaired = {1252: 0, 28591: 0, 10000: 0}
+    for codepage in (1252, 28591, 1250, 10000):
+        for _ in range(3000):
+            data = _random_piece(rng)
+            got = decode_piece(data, codepage)
+            assert got == _reference_decode_piece(data, codepage), (codepage, data)
+            if codepage in repaired and got != decode_single_byte(data, codepage):
+                repaired[codepage] += 1
+    # the draw reaches the repair branches, not only the clean path
+    assert all(n >= 20 for n in repaired.values()), repaired
+
+
+def test_cyrillic_under_cp1252_is_repaired():
+    russian = "Привет мир, это проверка текста"
+    assert decode_piece(russian.encode("cp1251"), 1252) == russian
+    assert decode_piece(russian.encode("cp1251"), 28591) == russian
+
+
+def test_french_accented_text_is_left_alone():
+    french = "Noël à l'hôtel: le garçon déjà très âgé préféra où être"
+    assert decode_piece(french.encode("cp1252"), 1252) == french
+
+
+def test_cp1250_r_caron_is_repaired():
+    czech = "Dvořák a přítel"
+    # cp1250 0xF8 (r-caron) reads as o-slash under cp1252
+    assert decode_single_byte(czech.encode("cp1250"), 1252) == "Dvoøák a pøítel"
+    assert decode_piece(czech.encode("cp1250"), 1252) == czech
 
 
 def test_symbol_conversion():

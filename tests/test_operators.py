@@ -1227,6 +1227,7 @@ def test_round6_sql_rewrites_match_column_api_formulations(spark):
         (3, sorted(["a", "b"] * 30)),
         (4, sorted(["", "", "x"])),
         (5, sorted(random.choices(["a", "b", "c", "d"], k=200))),
+        (6, None),
     ]
     arr = spark.createDataFrame(cases, "id long, s array<string>")
     newr = arr.select("id", _max_run(F.col("s")).alias("m"))
