@@ -1,4 +1,5 @@
-"""Per-document wall-clock budget for hostile-input robustness.
+"""Per-document limits for hostile-input robustness: a wall-clock budget and
+a payload size cap (MAX_PAYLOAD_BYTES, below).
 
 At 10^12-turn scale a single unbounded document is a stuck partition: the
 reference survives hostile files with iteration guards, but a fuzzed piece
@@ -21,6 +22,8 @@ import time
 __all__ = [
     "DocumentTimeout",
     "DEFAULT_BUDGET_SECONDS",
+    "MAX_PAYLOAD_BYTES",
+    "oversize_error",
     "set_deadline",
     "clear_deadline",
     "check_deadline",
@@ -35,6 +38,18 @@ class DocumentTimeout(Exception):
 # amortized); 5s is >1000x headroom and keeps the worst hostile input well
 # under the fuzz suite's 10s bound.
 DEFAULT_BUDGET_SECONDS = 5.0
+
+# Per-document payload cap in decoded bytes: at corpus scale one multi-GB
+# attachment must become an ``oversize`` row, not a Python-worker OOM. Far
+# above any legitimate Office binary, small enough that one document cannot
+# take down an executor sized for normal batches. The pipeline gate, the
+# extractor gate, the decompression bound and the archive record cap all
+# read it at call time.
+MAX_PAYLOAD_BYTES = 256 << 20
+
+
+def oversize_error(n_bytes: int) -> str:
+    return f"payload ~{n_bytes} bytes exceeds the size cap ({MAX_PAYLOAD_BYTES} bytes)"
 
 _DEADLINE: float | None = None
 

@@ -9,9 +9,12 @@ corpus. Dispatch mirrors the reference shells: a CFB container with a
 
 from __future__ import annotations
 
+import io
 import time
+import zipfile
 from dataclasses import dataclass, field
 
+from . import budget
 from .budget import (
     DEFAULT_BUDGET_SECONDS,
     DocumentTimeout,
@@ -54,7 +57,83 @@ class ExtractResult:
     metrics: dict = field(default_factory=dict)
 
 
-MAX_PAYLOAD_BYTES = 256 * 1024 * 1024  # per-document size cap (SCALING.md §2)
+class _Unsupported(Exception):
+    """A container of a known kind that holds no document we extract."""
+
+
+# Every extractor below is named through a module global at call time, so
+# rebinding one of these names (e.g. to a timing wrapper) reaches dispatch.
+# Rows return (text, records_decoded, spans); spans None = no span metric.
+
+# zip kind -> extractor over the already-opened container
+_ZIP_EXTRACTORS = {
+    "docx": lambda p, urls, zf: extract_docx_parts(p, extract_urls=urls, zf=zf),
+    "xlsx": lambda p, urls, zf: extract_xlsx_parts(p, zf=zf),
+    "pptx": lambda p, urls, zf: extract_pptx_parts(p, zf=zf),
+    "odt": lambda p, urls, zf: extract_odt_parts(p, extract_urls=urls, zf=zf),
+    "ods": lambda p, urls, zf: extract_ods_parts(p, zf=zf),
+    "odp": lambda p, urls, zf: extract_odp_parts(p, zf=zf),
+    "epub": lambda p, urls, zf: extract_epub_parts(p, extract_urls=urls, zf=zf),
+}
+
+
+def _zip_parts(res: ExtractResult, payload: bytes, urls: bool, main: bool):
+    # the container is opened ONCE and shared by the kind sniffs and the
+    # extractor; a corrupt zip is unsupported, like one with no known part
+    no_part = _Unsupported("zip container without a recognized OOXML/ODF part")
+    try:
+        zf = zipfile.ZipFile(io.BytesIO(payload))
+    except (zipfile.BadZipFile, OSError, ValueError):
+        raise no_part from None
+    with zf:
+        kind = (
+            ooxml_kind(payload, zf=zf)
+            or odf_kind(payload, zf=zf)
+            or epub_kind(payload, zf=zf)
+        )
+        if kind is None:
+            raise no_part
+        out = _ZIP_EXTRACTORS[kind](payload, urls, zf)
+    res.kind = kind
+    return out
+
+
+def _cfb_parts(res: ExtractResult, payload: bytes, urls: bool, main: bool):
+    # stream names pick the leg, as the reference shells do
+    storage = cfb.CompoundFile(payload)  # raises the magic-number error
+    if storage.has_stream("WordDocument"):
+        res.kind = "doc"
+        text, spans, records = extract_doc_text_parts(storage, urls)
+        return text, records, spans
+    if storage.has_stream("Workbook") or storage.has_stream("Book"):
+        res.kind = "xls"
+        return (*extract_xls_text_parts(storage), None)
+    if storage.has_stream("PowerPoint Document"):
+        res.kind = "ppt"
+        return (*extract_ppt_text_parts(storage), None)
+    raise _Unsupported("no recognized document stream in container")
+
+
+# Ordered (kind, sniff, extract) rows: the first sniff that matches wins.
+# The sniffs are conservative (strict markup head probe, NUL-free UTF-8
+# text LAST) so byte-flipped binaries keep flowing to the CFB error path.
+# The two container rows name the document kind they find themselves.
+_FORMATS = (
+    ("html", looks_like_markup,
+     lambda res, p, urls, main: extract_html_parts(
+         p, main_content=main, extract_urls=urls)),
+    ("rtf", looks_like_rtf,
+     lambda res, p, urls, main: extract_rtf_parts(p, extract_urls=urls)),
+    ("eml", looks_like_eml,
+     lambda res, p, urls, main: extract_eml_parts(p, extract_urls=urls)),
+    ("pdf", lambda p: p.startswith(PDF_MAGIC),
+     lambda res, p, urls, main: extract_pdf_parts(p)),
+    ("zip", looks_like_ooxml, _zip_parts),
+    ("text", looks_like_text,
+     lambda res, p, urls, main: extract_text_parts(p)),
+    ("cfb", lambda p: True, _cfb_parts),
+)
+_CONTAINERS = ("zip", "cfb")
 
 
 def extract_payload_text(
@@ -66,156 +145,47 @@ def extract_payload_text(
 ) -> ExtractResult:
     """Extract plain text from one binary document payload.
 
-    Never raises: per-document failure tolerance is a row-level contract
-    (reference: per-file try/catch in Shell/doc2text/Program.cs:56-100 —
-    at corpus scale one hostile document must not fail a task). Documents
-    over MAX_PAYLOAD_BYTES are skipped rather than risking executor memory;
-    documents exceeding ``budget_seconds`` of decode wall time return
+    ``force_kind`` names a row of the format table and skips the sniffs
+    (the pipeline's ``markup:`` prefix declares "html").
+
+    Never raises on payload content: per-document failure tolerance is a
+    row-level contract (reference: per-file try/catch in
+    Shell/doc2text/Program.cs:56-100 — at corpus scale one hostile document
+    must not fail a task). Documents over ``budget.MAX_PAYLOAD_BYTES`` are
+    ``status='oversize'`` rather than risking executor memory; documents
+    exceeding ``budget_seconds`` of decode wall time return
     ``status='timeout'`` rather than stalling the partition (SURVEY.md §7:
     hard timeouts/size caps per document)."""
+    if len(payload) > budget.MAX_PAYLOAD_BYTES:
+        return ExtractResult(
+            status="oversize",
+            error=budget.oversize_error(len(payload)),
+            metrics={"bytes_decoded": 0, "wall_ms": 0},
+        )
     t0 = time.perf_counter()
     res = ExtractResult()
-    if len(payload) > MAX_PAYLOAD_BYTES:
-        res.status = "skipped"
-        res.error = f"payload exceeds size cap ({len(payload)} bytes)"
-        res.metrics["bytes_decoded"] = 0
-        res.metrics["wall_ms"] = 0
-        return res
     set_deadline(budget_seconds)
     try:
         # single-document gzip unwraps transparently (bounded) so
         # page.html.gz / notes.txt.gz dispatch like their plain twins
         payload = maybe_gunzip(payload)
-        # format dispatch: an explicitly-declared kind (the pipeline's
-        # `markup:` payload prefix) bypasses the sniff; otherwise markup is
-        # detected by a conservative head probe (looks_like_markup — strict,
-        # so byte-flipped CFB keeps flowing to the CFB error path) and
-        # everything else is treated as a CFB container exactly as before
-        if force_kind == "html" or (
-            force_kind is None and looks_like_markup(payload)
-        ):
-            res.kind = "html"
-            res.text, elements, spans = extract_html_parts(
-                payload,
-                main_content=html_main_content,
-                extract_urls=extract_urls,
-            )
-            res.metrics["records_decoded"] = elements
-            res.metrics["spans"] = spans
-        elif force_kind == "rtf" or (
-            force_kind is None and looks_like_rtf(payload)
-        ):
-            res.kind = "rtf"
-            res.text, records, spans = extract_rtf_parts(
-                payload, extract_urls=extract_urls
-            )
-            res.metrics["records_decoded"] = records
-            res.metrics["spans"] = spans
-        elif force_kind == "eml" or (
-            force_kind is None and looks_like_eml(payload)
-        ):
-            res.kind = "eml"
-            res.text, records, spans = extract_eml_parts(
-                payload, extract_urls=extract_urls
-            )
-            res.metrics["records_decoded"] = records
-            res.metrics["spans"] = spans
-        elif payload.startswith(PDF_MAGIC):
-            res.kind = "pdf"
-            res.text, records, spans = extract_pdf_parts(payload)
-            res.metrics["records_decoded"] = records
-            res.metrics["spans"] = spans
-        elif looks_like_ooxml(payload):
-            # open the container ONCE and share it across the kind sniffs
-            # and the extractor: the central directory was re-parsed up to
-            # 4x per document before (guide §1.2 per-task work). A corrupt
-            # zip keeps the exact pre-refactor semantics: every sniff
-            # returns None, so the row is "unsupported" with the same
-            # message.
-            import io as _io
-            import zipfile as _zipfile
-
-            try:
-                zf = _zipfile.ZipFile(_io.BytesIO(payload))
-            except (_zipfile.BadZipFile, OSError, ValueError):
-                zf = None
-            kind = None
-            if zf is not None:
-                with zf:
-                    kind = (
-                        ooxml_kind(payload, zf=zf)
-                        or odf_kind(payload, zf=zf)
-                        or epub_kind(payload, zf=zf)
-                    )
-                    if kind == "docx":
-                        res.text, records, spans = extract_docx_parts(
-                            payload, extract_urls=extract_urls, zf=zf
-                        )
-                    elif kind == "xlsx":
-                        res.text, records, spans = extract_xlsx_parts(
-                            payload, zf=zf
-                        )
-                    elif kind == "pptx":
-                        res.text, records, spans = extract_pptx_parts(
-                            payload, zf=zf
-                        )
-                    elif kind == "odt":
-                        res.text, records, spans = extract_odt_parts(
-                            payload, extract_urls=extract_urls, zf=zf
-                        )
-                    elif kind == "ods":
-                        res.text, records, spans = extract_ods_parts(
-                            payload, zf=zf
-                        )
-                    elif kind == "odp":
-                        res.text, records, spans = extract_odp_parts(
-                            payload, zf=zf
-                        )
-                    elif kind == "epub":
-                        res.text, records, spans = extract_epub_parts(
-                            payload, extract_urls=extract_urls, zf=zf
-                        )
-            if kind is None:
-                res.status = "unsupported"
-                res.error = "zip container without a recognized OOXML/ODF part"
-            if res.status == "ok":
-                res.kind = kind
-                res.metrics["records_decoded"] = records
-                res.metrics["spans"] = spans
-        elif force_kind == "text" or (
-            force_kind is None and looks_like_text(payload)
-        ):
-            # LAST sniff in the chain: NUL-free strict-UTF-8 (or BOM) with
-            # a letter-ratio floor, so binary garbage still reaches the
-            # CFB magic error path below
-            res.kind = "text"
-            res.text, records, spans = extract_text_parts(payload)
-            res.metrics["records_decoded"] = records
-            res.metrics["spans"] = spans
+        for kind, sniff, extract in _FORMATS:
+            if (kind == force_kind) if force_kind else sniff(payload):
+                break
         else:
-            storage = cfb.CompoundFile(payload)  # raises the magic-number error
-            if storage.has_stream("WordDocument"):
-                res.kind = "doc"
-                res.text, spans, records = extract_doc_text_parts(
-                    storage, extract_urls
-                )
-                res.metrics["spans"] = spans
-                res.metrics["records_decoded"] = records
-            elif storage.has_stream("Workbook") or storage.has_stream("Book"):
-                res.kind = "xls"
-                res.text, records = extract_xls_text_parts(storage)
-                res.metrics["records_decoded"] = records
-            elif storage.has_stream("PowerPoint Document"):
-                res.kind = "ppt"
-                res.text, records = extract_ppt_text_parts(storage)
-                res.metrics["records_decoded"] = records
-            else:
-                res.status = "unsupported"
-                res.error = "no recognized document stream in container"
+            raise ValueError(f"unknown format kind {force_kind!r}")
+        if kind not in _CONTAINERS:
+            res.kind = kind
+        res.text, records, spans = extract(res, payload, extract_urls, html_main_content)
+        res.metrics["records_decoded"] = records
+        if spans is not None:
+            res.metrics["spans"] = spans
+    except _Unsupported as exc:
+        res.status = "unsupported"
+        res.error = str(exc)
     except DocumentTimeout as exc:
         res.status = "timeout"
         res.error = str(exc)
-        res.text = ""
     except Exception as exc:  # noqa: BLE001 — row-level tolerance by design
         msg = str(exc)
         if "encrypted" in msg.lower():

@@ -26,9 +26,10 @@ import codecs
 import gzip
 import zlib
 
+from .. import budget
+
 __all__ = ["extract_text_parts", "looks_like_text", "maybe_gunzip"]
 
-_MAX_GUNZIP_BYTES = 256 << 20
 _MIN_LETTER_RATIO = 0.30
 
 
@@ -39,10 +40,11 @@ def maybe_gunzip(payload: bytes) -> bytes:
     any decode failure (the CFB error path then reports). One level
     only: a compressed file inside a compressed file is hostile, not a
     corpus."""
+    cap = budget.MAX_PAYLOAD_BYTES
     if payload[:2] == b"\x1f\x8b":
         try:
             with gzip.GzipFile(fileobj=__import__("io").BytesIO(payload)) as gz:
-                data = gz.read(_MAX_GUNZIP_BYTES + 1)
+                data = gz.read(cap + 1)
         except (OSError, EOFError, zlib.error):
             return payload
     elif payload[:3] == b"BZh" and len(payload) > 10:
@@ -50,7 +52,7 @@ def maybe_gunzip(payload: bytes) -> bytes:
 
         dec = bz2.BZ2Decompressor()
         try:
-            data = dec.decompress(payload, _MAX_GUNZIP_BYTES + 1)
+            data = dec.decompress(payload, cap + 1)
         except OSError:
             return payload
     elif payload[:6] == b"\xfd7zXZ\x00":
@@ -58,15 +60,13 @@ def maybe_gunzip(payload: bytes) -> bytes:
 
         dec = lzma.LZMADecompressor()
         try:
-            data = dec.decompress(payload, _MAX_GUNZIP_BYTES + 1)
+            data = dec.decompress(payload, cap + 1)
         except lzma.LZMAError:
             return payload
     else:
         return payload
-    if len(data) > _MAX_GUNZIP_BYTES:
-        raise ValueError(
-            f"compressed payload exceeds the decompressed cap ({_MAX_GUNZIP_BYTES} bytes)"
-        )
+    if len(data) > cap:
+        raise ValueError(f"compressed payload exceeds the decompressed cap ({cap} bytes)")
     return data if data else payload
 
 

@@ -25,14 +25,7 @@ from .writer import TextEventWriter
 
 def extract_doc_text(payload: bytes, extract_urls: bool = True) -> str:
     """Extract plain text from a .doc payload (bytes of a CFB file)."""
-    storage = CompoundFile(payload)
-    return extract_doc_text_from_storage(storage, extract_urls)
-
-
-def extract_doc_text_from_storage(
-    storage: CompoundFile, extract_urls: bool = True
-) -> str:
-    return extract_doc_text_parts(storage, extract_urls)[0]
+    return extract_doc_text_parts(CompoundFile(payload), extract_urls)[0]
 
 
 def extract_doc_text_parts(

@@ -39,13 +39,22 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from . import budget
+
 PAYLOAD_PREFIX = "b64cfb:"
 # raw (non-base64) HTML/markup payloads — the north rule's markup leg;
 # extraction strips boilerplate via formats/markup.py
 MARKUP_PREFIX = "markup:"
 # same, with the link-density main-content heuristic forced ON for this row
-# (per-row opt-in; the B2X_MARKUP_MAIN_CONTENT env knob remains the global)
 MARKUP_MAIN_PREFIX = "markup_main:"
+# payload prefix -> (is_markup, main_content); the markup ones carry raw
+# HTML, the other base64 document bytes
+_PREFIXES = {
+    PAYLOAD_PREFIX: (False, False),
+    MARKUP_MAIN_PREFIX: (True, True),
+    MARKUP_PREFIX: (True, False),
+}
+_PREFIX_TUPLE = tuple(_PREFIXES)
 
 SPAN_TYPE = ArrayType(
     StructType(
@@ -86,67 +95,30 @@ EXTRACTED_SCHEMA = StructType(
 # memoizes results keyed by the payload digest. Bounded LRU — the cached
 # value is the small result tuple (text + spans + metrics), never the
 # payload bytes. Decoding is a pure function of the payload, so a hit is
-# byte-identical to a fresh decode.
+# byte-identical to a fresh decode. Created on first use.
 _DECODE_CACHE: "OrderedDict[bytes, tuple]" = None  # type: ignore[assignment]
-# entries; 0 disables (B2X_DECODE_CACHE env, read at worker import so bench
-# A/B runs can measure the cache-cold decode rate honestly)
-_DECODE_CACHE_MAX = int(os.environ.get("B2X_DECODE_CACHE", "256"))
-
-# Per-document payload cap (decoded bytes): at corpus scale a single
-# multi-GB attachment must become an error row, not a Python-worker OOM.
-# The base64 text is ~4/3 the decoded size; the cap is checked on the
-# encoded length before any allocation. 256 MB default — far above any
-# legitimate Office binary, small enough that one doc cannot take down an
-# executor that sized its memory for normal batches.
-_MAX_PAYLOAD_BYTES = int(os.environ.get("B2X_MAX_PAYLOAD_BYTES", str(256 << 20)))
+_DECODE_CACHE_MAX = 256  # entries
 
 # Output chunking budget for the map kernel: the INPUT Arrow batch size is
 # bounded JVM-side (maxRecordsPerBatch=128 x payload size), but the kernel's
 # OUTPUT frame + its Arrow serialization buffer are extra copies — yielding
 # in byte-bounded slices caps that additional footprint per batch.
-_OUT_CHUNK_BYTES = int(os.environ.get("B2X_OUT_CHUNK_BYTES", str(64 << 20)))
-# opt-in link-density main-content heuristic for markup payloads (the DOM
-# boilerplate rule beyond structural tag stripping; formats/markup.py)
-_MARKUP_MAIN_CONTENT = os.environ.get(
-    "B2X_MARKUP_MAIN_CONTENT", ""
-).lower() in ("1", "true", "yes")
+_OUT_CHUNK_BYTES = 64 << 20
 
 
 def _extract_one(text: str | None, tool: str | None) -> tuple:
-    """Extract a single turn. Payload may arrive in `text` OR `tool`
-    (BASELINE.json input_hint); non-payload turns pass through."""
+    """Extract a single document turn. The payload may arrive in `text` OR
+    `tool` (BASELINE.json input_hint); the kernel calls this only for rows
+    where one of them carries a payload prefix (chat rows never get here)."""
     global _DECODE_CACHE
     import hashlib
 
     from .extractors import extract_payload_text  # module-cached after first call
 
-    src = None
-    is_markup = False
-    markup_main = False
-    markup_prefix_len = len(MARKUP_PREFIX)
-    for candidate in (text, tool):
-        if candidate and candidate.startswith(PAYLOAD_PREFIX):
-            src = candidate
-            break
-        if candidate and candidate.startswith(MARKUP_MAIN_PREFIX):
-            src = candidate
-            is_markup = True
-            markup_main = True
-            markup_prefix_len = len(MARKUP_MAIN_PREFIX)
-            break
-        if candidate and candidate.startswith(MARKUP_PREFIX):
-            src = candidate
-            is_markup = True
-            break
-    if src is None:
-        passthrough = text or ""
-        return (
-            passthrough,
-            [("main", 0, len(passthrough))],
-            "skipped",
-            None,
-            (0, 0, len(passthrough), 0, 0),
-        )
+    src = text if text and text.startswith(_PREFIX_TUPLE) else tool
+    prefix = next(p for p in _PREFIXES if src.startswith(p))
+    is_markup, main_content = _PREFIXES[prefix]
+    body = src[len(prefix):]
 
     # the oversize gate must run BEFORE the cache key (an md5 over the full
     # source) so repeated oversize rows never pay a multi-hundred-MB hash
@@ -156,79 +128,56 @@ def _extract_one(text: str | None, tool: str | None) -> tuple:
     # >= 1 byte/char) and anything smaller is measured by an exact encode —
     # bounded at cap chars, i.e. never the multi-GB worst case the gate
     # exists to stop.
+    cap = budget.MAX_PAYLOAD_BYTES
     if is_markup:
-        raw = src[markup_prefix_len:]
-        byte_len = (
-            len(raw)
-            if len(raw) > _MAX_PAYLOAD_BYTES
-            else len(raw.encode("utf-8"))
-        )
+        byte_len = len(body) if len(body) > cap else len(body.encode("utf-8"))
     else:
-        byte_len = (len(src) - len(PAYLOAD_PREFIX)) // 4 * 3
-    if byte_len > _MAX_PAYLOAD_BYTES:
-        return (
-            "",
-            [],
-            "oversize",
-            f"payload ~{byte_len} bytes exceeds "
-            f"B2X_MAX_PAYLOAD_BYTES={_MAX_PAYLOAD_BYTES}",
-            (0, 0, 0, 1, 0),
-        )
+        byte_len = len(body) // 4 * 3
+    if byte_len > cap:
+        return ("", [], "oversize", budget.oversize_error(byte_len), (0, 0, 0, 1, 0))
 
-    key = None
-    if _DECODE_CACHE_MAX > 0:
-        if _DECODE_CACHE is None:
-            from collections import OrderedDict
+    if _DECODE_CACHE is None:
+        from collections import OrderedDict
 
-            _DECODE_CACHE = OrderedDict()
-        # Hash the exact payload bytes: an ascii-'replace' digest would map a
-        # literal '?' and any non-ASCII char at the same position to the same
-        # key, letting one row be served another row's cached result (ADVICE
-        # r02). utf-8 is injective on str, so collisions need an md5 break.
-        # markup extraction output depends on the main-content mode: the
-        # mode byte must be part of the key or a toggled flag serves stale
-        # results computed under the other mode
-        mode = (
-            b"\x01"
-            if (is_markup and (markup_main or _MARKUP_MAIN_CONTENT))
-            else b"\x00"
-        )
-        key = hashlib.md5(mode + src.encode("utf-8")).digest()
-        hit = _DECODE_CACHE.get(key)
-        if hit is not None:
-            _DECODE_CACHE.move_to_end(key)
-            return hit
+        _DECODE_CACHE = OrderedDict()
+    # Hash the exact payload bytes: an ascii-'replace' digest would map a
+    # literal '?' and any non-ASCII char at the same position to the same
+    # key, letting one row be served another row's cached result (ADVICE
+    # r02). utf-8 is injective on str, so collisions need an md5 break. The
+    # prefix is hashed too, so markup: and markup_main: never share a key.
+    key = hashlib.md5(src.encode("utf-8")).digest()
+    hit = _DECODE_CACHE.get(key)
+    if hit is not None:
+        _DECODE_CACHE.move_to_end(key)
+        return hit
     if is_markup:
-        payload = src[markup_prefix_len:].encode("utf-8")
         res = extract_payload_text(
-            payload, force_kind="html",
-            html_main_content=markup_main or _MARKUP_MAIN_CONTENT,
+            body.encode("utf-8"), force_kind="html", html_main_content=main_content
         )
     else:
         try:
-            payload = base64.b64decode(src[len(PAYLOAD_PREFIX) :])
-        except Exception as exc:  # malformed base64 is a row error, not a task error
+            payload = base64.b64decode(body)
+        except ValueError as exc:  # malformed base64 is a row error, not a task error
             return ("", [], "parse_error", f"base64: {exc}", (0, 0, 0, 1, 0))
         res = extract_payload_text(payload)
     spans = res.metrics.get("spans") or [("main", 0, len(res.text))]
-    failures = 0 if res.status in ("ok", "skipped") else 1
+    ok = int(res.status == "ok")
     out = (
         res.text,
         spans,
         res.status,
         res.error,
         (
-            1 if res.status == "ok" else 0,
+            ok,
             int(res.metrics.get("records_decoded", 0)),
             int(res.metrics.get("bytes_decoded", 0)),
-            failures,
+            1 - ok,
             int(res.metrics.get("wall_ms", 0)),
         ),
     )
-    if key is not None:
-        _DECODE_CACHE[key] = out
-        if len(_DECODE_CACHE) > _DECODE_CACHE_MAX:
-            _DECODE_CACHE.popitem(last=False)
+    _DECODE_CACHE[key] = out
+    if len(_DECODE_CACHE) > _DECODE_CACHE_MAX:
+        _DECODE_CACHE.popitem(last=False)
     return out
 
 
@@ -269,12 +218,8 @@ def _extract_frames(slices, np) -> Iterator[pd.DataFrame]:
         text_s = pdf["text"]
         tool_s = pdf["tool"]
         is_doc = (
-            text_s.str.startswith(PAYLOAD_PREFIX, na=False)
-            | tool_s.str.startswith(PAYLOAD_PREFIX, na=False)
-            | text_s.str.startswith(MARKUP_PREFIX, na=False)
-            | tool_s.str.startswith(MARKUP_PREFIX, na=False)
-            | text_s.str.startswith(MARKUP_MAIN_PREFIX, na=False)
-            | tool_s.str.startswith(MARKUP_MAIN_PREFIX, na=False)
+            text_s.str.startswith(_PREFIX_TUPLE, na=False)
+            | tool_s.str.startswith(_PREFIX_TUPLE, na=False)
         ).to_numpy()
 
         # vectorized passthrough defaults for every row (chat rows keep them)
@@ -479,12 +424,10 @@ def run_with_checkpoints(
 
 
 def read_extracted(spark: SparkSession, out_dir: str, n_groups: int = 8) -> DataFrame:
-    paths = [
-        os.path.join(out_dir, f"group={g}")
-        for g in range(n_groups)
-        if os.path.isdir(os.path.join(out_dir, f"group={g}"))
-    ]
-    return spark.read.parquet(*paths)
+    paths = [os.path.join(out_dir, f"group={g}") for g in range(n_groups)]
+    # through Hadoop's FileSystem: os.path cannot see file://, hdfs:// or
+    # s3a:// URIs
+    return spark.read.parquet(*(p for p in paths if _fs_exists(spark, p)))
 
 
 def extraction_metrics(extracted: DataFrame) -> DataFrame:

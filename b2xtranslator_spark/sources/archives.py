@@ -12,8 +12,8 @@ repartitioned so each archive is split/parsed entirely on an executor
 inside `mapInPandas`, and no archive byte ever moves through a shuffle
 or the driver. Archives are independent, so parallelism scales with
 file count (thousands of ~1 GB files at crawl scale); per-archive size
-caps and per-record caps bound executor memory exactly like the payload
-kernel's MAX_PAYLOAD_BYTES.
+caps bound executor memory, and each record is capped at the payload
+kernel's ``budget.MAX_PAYLOAD_BYTES``.
 
 Formats (public specs):
 - mbox ("mboxrd"-tolerant): messages delimited by "From " separator
@@ -32,11 +32,13 @@ import zlib
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .. import budget
+
 __all__ = ["read_mbox", "read_tar", "read_warc", "read_zip", "split_mbox", "split_warc"]
 
-# per-archive and per-record caps, same philosophy as MAX_PAYLOAD_BYTES
+# per-archive caps, same philosophy as budget.MAX_PAYLOAD_BYTES (which
+# also caps each record)
 _MAX_ARCHIVE_BYTES = 1 << 30
-_MAX_RECORD_BYTES = 256 << 20
 _MAX_RECORDS = 1 << 20
 
 
@@ -129,7 +131,7 @@ def split_warc(data: bytes) -> list[dict]:
         except ValueError:
             length = -1
         body_start = head_end + 4
-        if length < 0 or length > _MAX_RECORD_BYTES:
+        if length < 0 or length > budget.MAX_PAYLOAD_BYTES:
             # unparseable/absurd length: scan to the next record marker
             nxt = data.find(b"\r\n\r\nWARC/", body_start)
             body_end = nxt + 2 if nxt >= 0 else n
@@ -265,7 +267,7 @@ def _split_tar(path: str):
     try:
         with tarfile.open(path, mode="r:*") as tf:
             for info in tf:
-                if not info.isfile() or info.size > _MAX_RECORD_BYTES:
+                if not info.isfile() or info.size > budget.MAX_PAYLOAD_BYTES:
                     continue
                 total += info.size
                 if total > _MAX_ARCHIVE_BYTES:
@@ -273,7 +275,7 @@ def _split_tar(path: str):
                 f = tf.extractfile(info)
                 if f is None:
                     continue
-                yield info.name, f.read(_MAX_RECORD_BYTES)
+                yield info.name, f.read(budget.MAX_PAYLOAD_BYTES)
     except (tarfile.TarError, OSError, EOFError, zlib.error):
         return  # corrupt archive: emit what was salvaged before the error
 
@@ -287,7 +289,7 @@ def _split_zip(path: str):
     try:
         with zipfile.ZipFile(path) as zf:
             for info in zf.infolist():
-                if info.is_dir() or info.file_size > _MAX_RECORD_BYTES:
+                if info.is_dir() or info.file_size > budget.MAX_PAYLOAD_BYTES:
                     continue
                 total += info.file_size
                 if total > _MAX_ARCHIVE_BYTES:

@@ -18,10 +18,14 @@ def test_doc2text_writes_file(tmp_path, capsys):
     assert "test" in out.read_text().lower()
 
 
-@pytest.mark.skipif(not os.path.exists(SAMPLE), reason="corpus unavailable")
-def test_any2text_stdout(capsys):
-    assert main(["any2text", SAMPLE]) == 0
-    assert "test" in capsys.readouterr().out.lower()
+def test_any2text_stdout(tmp_path, capsys):
+    from b2xtranslator_spark.sources.binfixtures import build_xls_fixture
+
+    xls, expected = build_xls_fixture()
+    path = tmp_path / "fixture.xls"
+    path.write_bytes(xls)
+    assert main(["any2text", str(path)]) == 0
+    assert capsys.readouterr().out == expected + "\n"
 
 
 def test_any2text_bad_file(tmp_path, capsys):

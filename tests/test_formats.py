@@ -337,8 +337,88 @@ def test_payload_size_cap():
             return 300 * 1024 * 1024
 
     res = extract_payload_text(FakeHuge(b"x"))
-    assert res.status == "skipped"
+    assert res.status == "oversize"
     assert "size cap" in res.error
+
+
+def _zip(members: list[tuple[str, str]]) -> bytes:
+    import io
+    import zipfile
+
+    buf = io.BytesIO()
+    with zipfile.ZipFile(buf, "w") as zf:
+        for name, data in members:
+            zf.writestr(name, data)
+    return buf.getvalue()
+
+
+def _sniff_cases():
+    """One payload per row of the extractor's format table, in table order,
+    plus the edges around it: (id, payload, force_kind, kind, status, detail),
+    where detail is a substring of the text (ok) or of the error."""
+    import gzip
+
+    import numpy as np
+
+    from b2xtranslator_spark.sources.binfixtures import (
+        build_docx_fixture,
+        build_ppt_fixture,
+        build_xls_fixture,
+        make_cfb,
+    )
+
+    page = b"<html><body><p>hello page</p></body></html>"
+    odt = _zip([
+        ("mimetype", "application/vnd.oasis.opendocument.text"),
+        ("content.xml",
+         "<office:document-content "
+         "xmlns:office='urn:oasis:names:tc:opendocument:xmlns:office:1.0' "
+         "xmlns:text='urn:oasis:names:tc:opendocument:xmlns:text:1.0'>"
+         "<office:body><office:text><text:p>odt words</text:p></office:text>"
+         "</office:body></office:document-content>"),
+    ])
+    epub = _zip([
+        ("mimetype", "application/epub+zip"),
+        ("ch1.xhtml", "<html><body><p>epub words</p></body></html>"),
+    ])
+    eml = b"From: a@example.com\r\nSubject: hi\r\n\r\nmail body line\r\n"
+    pdf = b"%PDF-1.4\n1 0 obj\n<</Type/Catalog>>\nendobj\n%%EOF\n"
+    noise = bytes(np.random.default_rng(5).integers(0, 256, 512, dtype=np.uint8))
+    zip_none = "zip container without a recognized OOXML/ODF part"
+    return [
+        ("html", page, None, "html", "ok", "hello page"),
+        ("rtf", rb"{\rtf1\ansi rtf words\par}", None, "rtf", "ok", "rtf words"),
+        ("eml", eml, None, "eml", "ok", "mail body line"),
+        ("pdf", pdf, None, "pdf", "ok", ""),
+        ("docx", build_docx_fixture()[0], None, "docx", "ok", "Synthetic DOCX"),
+        ("odt", odt, None, "odt", "ok", "odt words"),
+        ("epub", epub, None, "epub", "ok", "epub words"),
+        ("text", b"plain words in a short note\n", None, "text", "ok", "plain words"),
+        ("xls", build_xls_fixture()[0], None, "xls", "ok", "alpha"),
+        ("ppt", build_ppt_fixture()[0], None, "ppt", "ok", "Slide one body"),
+        ("gzip-html", gzip.compress(page), None, "html", "ok", "hello page"),
+        ("forced-html", b"just words", "html", "html", "ok", "just words"),
+        ("corrupt-zip", b"PK\x03\x04" + b"\x00" * 60, None, "unknown",
+         "unsupported", zip_none),
+        ("cfb-no-stream", make_cfb([("Other", b"x")]), None, "unknown",
+         "unsupported", "no recognized document stream in container"),
+        ("random", noise, None, "unknown", "parse_error", "Magic Number not found"),
+    ]
+
+
+@pytest.mark.parametrize(
+    "payload,force_kind,kind,status,detail",
+    [pytest.param(*case[1:], id=case[0]) for case in _sniff_cases()],
+)
+def test_dispatch_sniff_order(payload, force_kind, kind, status, detail):
+    from b2xtranslator_spark.extractors import extract_payload_text
+
+    res = extract_payload_text(payload, force_kind=force_kind)
+    assert (res.kind, res.status) == (kind, status)
+    if status == "ok":
+        assert res.error is None and detail in res.text
+    else:
+        assert res.text == "" and res.error.startswith(detail)
 
 
 # -- PictureDescriptor error-parity replay (ADVICE r03) -----------------------

@@ -147,7 +147,7 @@ def test_markup_main_prefix_forces_heuristic_per_row():
     assert pl._extract_one(pl.MARKUP_MAIN_PREFIX + body, None)[0] == (
         "Kept content line."
     )
-    # the plain prefix on the same payload keeps the menu (env knob off)
+    # the plain prefix on the same payload keeps the menu
     out = pl._extract_one(pl.MARKUP_PREFIX + body, None)[0]
     assert out.splitlines()[0].startswith("Products (/p)")
 
@@ -226,10 +226,10 @@ def test_pipeline_markup_prefix_end_to_end(spark):
         PAYLOAD_PREFIX,
         run_extraction,
     )
+    from b2xtranslator_spark.sources.binfixtures import build_xls_fixture
 
-    doc_b64 = PAYLOAD_PREFIX + base64.b64encode(
-        open("/root/reference/samples/hyperlink.doc", "rb").read()
-    ).decode()
+    xls, xls_text = build_xls_fixture()
+    doc_b64 = PAYLOAD_PREFIX + base64.b64encode(xls).decode()
     ts = datetime.datetime(2026, 1, 1)
     rows = [
         ("c1", 0, "user", "plain chat", None, ts),
@@ -252,6 +252,7 @@ def test_pipeline_markup_prefix_end_to_end(spark):
     assert out[("c2", 0)]["status"] == "ok"
     assert out[("c2", 0)]["text"] == "inline"
     assert out[("c2", 1)]["status"] == "ok"
+    assert out[("c2", 1)]["text"] == xls_text
 
 
 def test_block_spans_slice_the_text():
@@ -298,9 +299,10 @@ def test_markup_oversize_gate_measures_bytes():
     """Review finding (r3, second pass): a mostly-multibyte markup payload
     must be gated on its UTF-8 byte size, not its char count."""
     import b2xtranslator_spark.pipeline as pl
+    from b2xtranslator_spark import budget
 
-    old = pl._MAX_PAYLOAD_BYTES
-    pl._MAX_PAYLOAD_BYTES = 64 * 1024
+    old = budget.MAX_PAYLOAD_BYTES
+    budget.MAX_PAYLOAD_BYTES = 64 * 1024
     try:
         # ~43k chars of 3-byte CJK = ~128KB utf-8: under the cap in chars,
         # over it in bytes
@@ -310,7 +312,7 @@ def test_markup_oversize_gate_measures_bytes():
         ok = pl.MARKUP_PREFIX + "<div>" + "x" * 43000 + "</div>"
         assert pl._extract_one(ok, None)[2] == "ok"
     finally:
-        pl._MAX_PAYLOAD_BYTES = old
+        budget.MAX_PAYLOAD_BYTES = old
 
 
 def test_main_content_flag_via_package_boundary():
@@ -320,38 +322,22 @@ def test_main_content_flag_via_package_boundary():
         html_main_content=True,
     )
     assert res.text == "Actual article content sentence."
-    # pipeline env knob
-    import b2xtranslator_spark.pipeline as pl
-
-    old = pl._MARKUP_MAIN_CONTENT
-    pl._MARKUP_MAIN_CONTENT = True
-    try:
-        out = pl._extract_one(
-            pl.MARKUP_PREFIX
-            + "<body><div><a>x</a><a>y</a><a>z</a></div><p>Kept content line.</p></body>",
-            None,
-        )
-        assert out[0] == "Kept content line."
-    finally:
-        pl._MARKUP_MAIN_CONTENT = old
 
 
 def test_decode_cache_keyed_by_main_content_mode():
-    """Review finding (r3, third pass): toggling the main-content mode must
-    never serve a result cached under the other mode for the SAME payload."""
+    """Review finding (r3, third pass): the main-content mode must never be
+    served a result cached under the other mode for the SAME body — the
+    markup: and markup_main: rows go through one warm cache, in both
+    orders."""
     import b2xtranslator_spark.pipeline as pl
 
-    payload = (
-        pl.MARKUP_PREFIX
-        + "<body><div><a>m</a><a>n</a><a>o</a></div><p>Real body text here.</p></body>"
-    )
-    old = pl._MARKUP_MAIN_CONTENT
-    try:
-        pl._MARKUP_MAIN_CONTENT = False
-        with_menu = pl._extract_one(payload, None)[0]
-        pl._MARKUP_MAIN_CONTENT = True
-        without_menu = pl._extract_one(payload, None)[0]
-    finally:
-        pl._MARKUP_MAIN_CONTENT = old
+    body = "<body><div><a>m</a><a>n</a><a>o</a></div><p>Real body text here.</p></body>"
+    pl._DECODE_CACHE = None
+    with_menu = pl._extract_one(pl.MARKUP_PREFIX + body, None)[0]
+    without_menu = pl._extract_one(pl.MARKUP_MAIN_PREFIX + body, None)[0]
+    # both now cached: each prefix is served its own entry
+    assert pl._extract_one(pl.MARKUP_PREFIX + body, None)[0] == with_menu
+    assert pl._extract_one(pl.MARKUP_MAIN_PREFIX + body, None)[0] == without_menu
+    assert len(pl._DECODE_CACHE) == 2
     assert with_menu == "mno\nReal body text here."
     assert without_menu == "Real body text here."

@@ -165,19 +165,21 @@ def test_spans_cover_text(spark, corpus):
 
 def test_oversize_payload_and_output_chunking(spark, monkeypatch):
     """Memory guards (SURVEY.md §7 / ISSUE-003): a payload over
-    B2X_MAX_PAYLOAD_BYTES becomes an error row (never a worker OOM), and the
-    map kernel yields byte-bounded output slices whose union is exactly the
-    batch."""
+    budget.MAX_PAYLOAD_BYTES becomes an error row (never a worker OOM), and
+    the map kernel yields byte-bounded output slices whose union is exactly
+    the batch."""
     import base64
 
     import pandas as pd
 
     import b2xtranslator_spark.pipeline as pl
+    from b2xtranslator_spark import budget
+    from b2xtranslator_spark.sources.binfixtures import build_xls_fixture
 
-    doc = open("/root/reference/samples/hyperlink.doc", "rb").read()
+    doc, expected = build_xls_fixture()
     payload = pl.PAYLOAD_PREFIX + base64.b64encode(doc).decode()
 
-    monkeypatch.setattr(pl, "_MAX_PAYLOAD_BYTES", 1024)
+    monkeypatch.setattr(budget, "MAX_PAYLOAD_BYTES", 1024)
     monkeypatch.setattr(pl, "_OUT_CHUNK_BYTES", 2 * len(payload))
     batch = pd.DataFrame(
         {
@@ -198,9 +200,10 @@ def test_oversize_payload_and_output_chunking(spark, monkeypatch):
     assert out.loc[1, "status"] == "skipped" and out.loc[1, "text"] == "chat"
 
     # under the default cap the same payload decodes fine
-    monkeypatch.setattr(pl, "_MAX_PAYLOAD_BYTES", 256 << 20)
+    monkeypatch.setattr(budget, "MAX_PAYLOAD_BYTES", 256 << 20)
     ok = pl._extract_one(payload, None)
     assert ok[2] == "ok"
+    assert ok[0] == expected
 
 
 def test_markup_and_pdf_fixtures_ride_the_flagship(spark, corpus):

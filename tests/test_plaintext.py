@@ -66,16 +66,16 @@ def test_gzip_corrupt_falls_through_to_error_path():
 
 
 def test_gzip_bomb_is_rejected():
-    import b2xtranslator_spark.formats.plaintext as pt
+    from b2xtranslator_spark import budget
 
-    old = pt._MAX_GUNZIP_BYTES
-    pt._MAX_GUNZIP_BYTES = 1 << 20
+    old = budget.MAX_PAYLOAD_BYTES
+    budget.MAX_PAYLOAD_BYTES = 1 << 20
     try:
         res = extract_payload_text(gzip.compress(b"a" * (4 << 20)))
         assert res.status == "parse_error"
         assert "cap" in (res.error or "")
     finally:
-        pt._MAX_GUNZIP_BYTES = old
+        budget.MAX_PAYLOAD_BYTES = old
 
 
 def test_binary_garbage_still_reaches_cfb_error_path():

@@ -44,7 +44,8 @@ def test_resume_skips_completed_and_matches_uninterrupted(
     spark, transcripts_path, tmp_path_factory
 ):
     out_killed = str(tmp_path_factory.mktemp("out_killed"))
-    out_clean = str(tmp_path_factory.mktemp("out_clean"))
+    # a file:// URI: output discovery must go through Hadoop's FileSystem
+    out_clean = tmp_path_factory.mktemp("out_clean").as_uri()
 
     # uninterrupted reference run
     stats = run_with_checkpoints(
