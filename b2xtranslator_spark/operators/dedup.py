@@ -46,17 +46,59 @@ def exact_duplicates(documents: DataFrame) -> DataFrame:
     )
 
 
-def _seeded_hash60(col, seed: int):
-    """Seeded 60-bit hash from md5(seed || value) — portable SQL semantics
-    (DuckDB: CAST(('0x'||substr(md5(seed||value),1,15)) AS BIGINT)), chosen
-    over xxhash64 so the whole MinHash family is oracle-checkable."""
-    return F.conv(
-        F.substring(
-            F.md5(F.encode(F.concat(F.lit(f"{seed}|"), col), "UTF-8")), 1, 15
-        ),
-        16,
-        10,
-    ).cast("long")
+def _h60_sql(expr: str, seed: int) -> str:
+    """Seeded 60-bit hash from md5(seed || value), as a SQL expression —
+    portable semantics (DuckDB: CAST(('0x'||substr(md5(seed||value),1,15))
+    AS BIGINT)), chosen over xxhash64 so the whole MinHash family is
+    oracle-checkable. A string, so a query parses it in one call instead of
+    building it through py4j one Column at a time."""
+    return (
+        f"CAST(conv(substring(md5(encode(concat('{seed}|', {expr}), 'UTF-8')), "
+        "1, 15), 16, 10) AS BIGINT)"
+    )
+
+
+def _jaccard_sql(a: str, b: str) -> str:
+    """Exact Jaccard of two word-set arrays, rounded to 6 places; NULL when
+    the sets share no word. A pair with nothing in common never reaches
+    the division, so two empty sets cannot divide by zero under ANSI."""
+    common = f"size(array_intersect({a}, {b}))"
+    return (
+        f"CASE WHEN {common} > 0 THEN "
+        f"round({common} / (size({a}) + size({b}) - {common}), 6) END"
+    )
+
+
+def _doc_features(
+    documents: DataFrame, num_hashes: int, shingle_len: int, tokens: bool
+) -> DataFrame:
+    """One row per doc_id: MinHash minima ``mh0..mh{num_hashes-1}`` and,
+    with ``tokens``, the word set ``t`` (distinct words longer than two
+    characters) that the exact Jaccard compares. Rows sharing a doc_id
+    merge into one (union of their shingles and words), so an id never
+    pairs with itself."""
+    # stage the token array: the shingle lambda slices it per position, and
+    # an unbound split(regexp_replace(...)) subtree would re-tokenize the
+    # document once per shingle (the O(n^2) lambda trap; BENCH notes)
+    staged = documents.select("doc_id", F.split(_norm_text(), " ").alias("_w"))
+    cols, aggs = ["doc_id"], []
+    if num_hashes:
+        # one md5 per shingle; h1 (60-bit) and h2 (40-bit) are cut from it
+        cols.append(
+            "transform(transform("
+            f"sequence(0, greatest(size(_w) - {shingle_len}, 0)), i -> md5(encode("
+            f"concat_ws(' ', slice(_w, i + 1, {shingle_len})), 'UTF-8'))), "
+            "d -> named_struct('a', CAST(conv(substring(d, 1, 15), 16, 10) AS BIGINT), "
+            "'b', CAST(conv(substring(d, 17, 10), 16, 10) AS BIGINT))) AS _h"
+        )
+        aggs += [
+            f"min(array_min(transform(_h, x -> x.a + {s} * x.b))) AS mh{s}"
+            for s in range(num_hashes)
+        ]
+    if tokens:
+        cols.append("array_distinct(filter(_w, w -> length(w) > 2)) AS t")
+        aggs.append("array_distinct(flatten(collect_list(t))) AS t")
+    return staged.selectExpr(*cols).groupBy("doc_id").agg(*(F.expr(a) for a in aggs))
 
 
 def minhash_signatures(
@@ -64,38 +106,66 @@ def minhash_signatures(
 ) -> DataFrame:
     """MinHash signatures via word shingles and md5-derived double hashing.
 
-    shingles: sliding windows of `shingle_len` words; one explode, then a
-    single groupBy computes ALL minima map-side (partial agg) — no per-hash
-    shuffle. The hash family is Kirsch-Mitzenmacher double hashing:
+    shingles: sliding windows of `shingle_len` words. Each row computes its
+    minima in place (one array pass per hash, no explode); one groupBy on
+    doc_id then merges rows that share an id, with map-side partial
+    aggregation. The hash family is Kirsch-Mitzenmacher double hashing:
     h_i = h1 + i*h2 with h1 (60-bit) and h2 (40-bit) taken from ONE md5 of
     the shingle — one digest instead of num_hashes digests per shingle
     (measured 3.5x on the bench), still portable SQL, and a standard
-    construction for MinHash families."""
-    # stage the token array: the shingle lambda slices it per position, and
-    # an unbound split(regexp_replace(...)) subtree would re-tokenize the
-    # document once per shingle (the O(n^2) lambda trap; BENCH notes)
-    staged = documents.select(
-        "doc_id", F.split(_norm_text(), " ").alias("_w")
+    construction for MinHash families. The expressions are parsed from SQL
+    strings: built Column by Column they cost ~0.3 s of py4j per query."""
+    return _doc_features(documents, num_hashes, shingle_len, tokens=False)
+
+
+def _lsh_pairs(
+    documents: DataFrame,
+    num_hashes: int,
+    bands: int,
+    shingle_len: int,
+    max_bucket_size: int,
+    threshold: float | None = None,
+) -> DataFrame:
+    """Band-bucket pair builder behind minhash_lsh_candidates and
+    dedup_pipeline: one (doc_a < doc_b) row per bucket the pair shares, so
+    a pair can repeat across bands and callers dedupe. With a
+    ``threshold`` each member carries its word set through the bucket
+    shuffle and the pair is verified where it is generated: (doc_a, doc_b,
+    jaccard) with jaccard >= threshold."""
+    verify = threshold is not None
+    sig = _doc_features(documents, num_hashes, shingle_len, tokens=verify)
+    rows_per_band = num_hashes // bands
+    band_structs = []
+    for b in range(bands):
+        mins = ", ".join(f"mh{b * rows_per_band + r}" for r in range(rows_per_band))
+        bucket = _h60_sql(f"concat_ws(',', {mins})", 1000 + b)
+        band_structs.append(f"named_struct('band', {b}, 'bucket', {bucket})")
+    member = "'id', doc_id, 't', t" if verify else "'id', doc_id"
+    buckets = sig.selectExpr(
+        f"named_struct({member}) AS m", f"inline(array({', '.join(band_structs)}))"
     )
-    words = F.col("_w")
-    idx = F.sequence(
-        F.lit(0), F.greatest(F.size(words) - shingle_len, F.lit(0))
+    # the skew cap counts each bucket over the same hash partitioning the
+    # grouping then uses (one Exchange), so a hot bucket is dropped before
+    # collect_list would hold it whole in one aggregation buffer
+    grouped = (
+        buckets.selectExpr(
+            "band", "bucket", "m", "count(1) OVER (PARTITION BY band, bucket) AS n"
+        )
+        .where(f"n BETWEEN 2 AND {int(max_bucket_size)}")
+        .groupBy("band", "bucket")
+        .agg(F.expr("collect_list(m) AS ids"))
     )
-    shingles = F.transform(
-        idx,
-        lambda i: F.concat_ws(" ", F.slice(words, i + 1, shingle_len)),
+    # outer explode walks left positions so per-row memory stays O(bucket)
+    pairs = grouped.selectExpr(
+        "ids", "explode(sequence(1, size(ids) - 1)) AS p"
+    ).selectExpr(
+        "element_at(ids, p) AS x", "explode(slice(ids, p + 1, size(ids) - p)) AS y"
     )
-    exploded = staged.select(
-        "doc_id", F.explode(shingles).alias("shingle")
-    )
-    digest = F.md5(F.encode(F.col("shingle"), "UTF-8"))
-    h1 = F.conv(F.substring(digest, 1, 15), 16, 10).cast("long")
-    h2 = F.conv(F.substring(digest, 17, 10), 16, 10).cast("long")
-    aggs = [
-        F.min(h1 + F.lit(seed) * h2).alias(f"mh{seed}")
-        for seed in range(num_hashes)
-    ]
-    return exploded.groupBy("doc_id").agg(*aggs)
+    cols = ["least(x.id, y.id) AS doc_a", "greatest(x.id, y.id) AS doc_b"]
+    if not verify:
+        return pairs.selectExpr(*cols)
+    out = pairs.selectExpr(*cols, f"{_jaccard_sql('x.t', 'y.t')} AS jaccard")
+    return out.where(F.col("jaccard") >= F.lit(float(threshold)))
 
 
 def minhash_lsh_candidates(
@@ -112,45 +182,18 @@ def minhash_lsh_candidates(
     ordered pairs are generated row-locally with a two-level explode — the
     old self equi-join executed the whole shingle+signature pipeline twice
     (Spark does not de-duplicate self-join sides) plus a window-count skew
-    pass; now the signatures are computed once and shuffle once.
+    pass with its own shuffle; now the signatures are computed once and
+    shuffle once.
 
     ``max_bucket_size`` is the skew guard: a band bucket of n docs emits
     n^2/2 pairs, so one degenerate signature (empty/boilerplate text shared
     by thousands of docs) would otherwise go quadratic. Oversized buckets
-    are dropped by the size filter on the grouped bucket (same
-    drop-and-report semantics as operators.skew.cap_bucket_size) — report
-    them with operators.skew.bucket_skew_stats."""
-    sig = minhash_signatures(documents, num_hashes, shingle_len)
-    rows_per_band = num_hashes // bands
-    band_cols = []
-    for b in range(bands):
-        cols = [f"mh{b * rows_per_band + r}" for r in range(rows_per_band)]
-        band_cols.append(
-            F.struct(
-                F.lit(b).alias("band"),
-                _seeded_hash60(F.concat_ws(",", *cols), 1000 + b).alias("bucket"),
-            )
-        )
-    buckets = sig.select(
-        "doc_id", F.explode(F.array(*band_cols)).alias("bb")
-    ).select("doc_id", "bb.band", "bb.bucket")
-    grouped = (
-        buckets.groupBy("band", "bucket")
-        .agg(F.collect_list("doc_id").alias("ids"))
-        .where(F.size("ids").between(2, max_bucket_size))
-    )
-    # outer explode walks left positions so per-row memory stays O(bucket)
-    lefts = grouped.select(
-        "ids", F.explode(F.sequence(F.lit(1), F.size("ids") - 1)).alias("p")
-    )
-    pairs = lefts.select(
-        F.element_at("ids", F.col("p")).alias("x"),
-        F.explode(
-            F.slice("ids", F.col("p") + 1, F.size("ids") - F.col("p"))
-        ).alias("y"),
-    )
-    return pairs.select(
-        F.least("x", "y").alias("doc_a"), F.greatest("x", "y").alias("doc_b")
+    are dropped by a per-bucket count over the grouping's own partitioning,
+    below the collect_list (same drop-and-report semantics as
+    operators.skew.cap_bucket_size) — report them with
+    operators.skew.bucket_skew_stats."""
+    return _lsh_pairs(
+        documents, num_hashes, bands, shingle_len, max_bucket_size
     ).distinct()
 
 
@@ -330,59 +373,71 @@ def connected_components(
     it — the canonical "keeper" of its duplicate cluster. The stage that
     turns pairwise LSH output into per-document keep/drop decisions.
 
-    Plan: iterative min-label propagation. Each round joins the (node, lbl)
-    frame to the symmetric edge list, takes the min neighbor label per node,
-    and stops when no label changed (one cheap count action per round). The
-    round count is bounded by the cluster diameter — near-duplicate clusters
-    are shallow (dozens of hops at most), not social-graph deep, so a small
-    max_iter bound holds at corpus scale; the classic large-star/small-star
-    alternation (Kiveris et al., "Connected Components in MapReduce") halves
-    that to O(log d) rounds with the same join shape if diameter ever grows.
-    Labels are checkpoint-truncated each round via localCheckpoint to stop
-    the lineage (and its plan) growing linearly with iterations.
+    Plan: iterative min-label propagation over an adjacency list. The edge
+    list is materialised once as (node, lbl, nbrs), and the first round is
+    folded into it: every endpoint starts at the min of its closed
+    neighbourhood. Each further round is one shuffle: every node sends its
+    label to its neighbours, and one groupBy on the node takes the min of
+    what arrived, keeping the node's old label and neighbour list beside it.
+    The number of labels that changed rides that round's checkpoint as an
+    Observation, so a round costs no extra join and no count job; the loop
+    stops at the first round where nothing changed. The round count is
+    bounded by the cluster diameter — near-duplicate clusters are shallow
+    (dozens of hops at most), not social-graph deep, so a small max_iter
+    bound holds at corpus scale; the classic large-star/small-star
+    alternation (Kiveris et al., "Connected Components in MapReduce")
+    halves that to O(log d) rounds if diameter ever grows. Each round is
+    checkpoint-truncated via localCheckpoint to stop the lineage (and its
+    plan) growing linearly with iterations.
 
-    ``nodes`` (a frame with doc_id) widens the output to singleton docs
-    (cluster_id = own doc_id); omitted, only docs appearing in pairs are
-    labeled. Pair endpoints are always labeled, even if absent from a
-    narrower ``nodes`` frame (output covers nodes UNION endpoints). Oracle: a recursive transitive-closure CTE computes the same
-    min-reachable label in portable SQL."""
-    e = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-    edges = e.unionByName(
-        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct()
+    Only edge endpoints propagate: a singleton can never change label, so
+    carrying the full corpus through every round would shuffle O(corpus)
+    rows x rounds for work proportional to the (typically tiny) endpoint
+    set. ``nodes`` (a frame with doc_id) widens the output to singleton
+    docs (cluster_id = own doc_id) in one final groupBy; omitted, only docs
+    appearing in pairs are labeled. Pair endpoints are always labeled, even
+    if absent from a narrower ``nodes`` frame (output covers nodes UNION
+    endpoints; a severed path would silently split clusters). Oracle: a
+    recursive transitive-closure CTE computes the same min-reachable label
+    in portable SQL."""
+    from pyspark.sql import Observation
+
     # materialize the edge list ONCE: its lineage is the whole upstream
-    # candidate/verify dataflow, and every propagation round would otherwise
-    # re-execute it from the scan up
-    edges = edges.localCheckpoint(eager=True)
-    # Propagate ONLY over edge endpoints: a singleton node can never change
-    # label, so carrying the full corpus through every round would join and
-    # checkpoint O(corpus) rows x max_iter for work proportional to the
-    # (typically tiny) duplicate-pair endpoint set. Singletons from `nodes`
-    # are unioned back once at the end. This also guarantees endpoint nodes
-    # missing from a narrower `nodes` frame still propagate (a severed path
-    # would silently split clusters).
-    endpoints = edges.select(F.col("src").alias("node")).distinct()
-    labels = endpoints.withColumn("lbl", F.col("node"))
+    # candidate/verify dataflow, and every round would otherwise re-execute
+    # it from the scan up
+    adj = (
+        pairs.selectExpr(
+            "inline(array(named_struct('node', doc_a, 'nbr', doc_b), "
+            "named_struct('node', doc_b, 'nbr', doc_a)))"
+        )
+        .groupBy("node")
+        .agg(F.expr("collect_set(nbr) AS nbrs"))
+        .selectExpr("node", "least(node, array_min(nbrs)) AS lbl", "nbrs")
+        .localCheckpoint(eager=True)
+    )
+    types = {f.name: f.dataType.simpleString() for f in adj.schema.fields}
     converged = False
     for _ in range(max_iter):
-        neighbor_min = (
-            edges.join(labels, edges.dst == labels.node)
-            .groupBy("src")
-            .agg(F.min("lbl").alias("nbr_lbl"))
-        )
-        new_labels = (
-            labels.join(neighbor_min, labels.node == neighbor_min.src, "left")
-            .select(
-                "node",
-                F.least(F.col("lbl"), F.coalesce(F.col("nbr_lbl"), F.col("lbl"))).alias(
-                    "new_lbl"
-                ),
-                "lbl",
+        sent = adj.selectExpr("node", "lbl AS cand", "lbl AS old", "nbrs").unionByName(
+            adj.selectExpr(
+                "explode(nbrs) AS node",
+                "lbl AS cand",
+                f"CAST(NULL AS {types['lbl']}) AS old",
+                f"CAST(NULL AS {types['nbrs']}) AS nbrs",
             )
-        ).localCheckpoint(eager=True)  # one execution; `changed` reads the result
-        changed = new_labels.where(F.col("new_lbl") != F.col("lbl")).limit(1).count()
-        labels = new_labels.select("node", F.col("new_lbl").alias("lbl"))
-        if changed == 0:
+        )
+        # old label and neighbour list come only from the node's own row
+        merged = sent.groupBy("node").agg(
+            F.expr("min(cand) AS lbl"), F.expr("max(old) AS old"),
+            F.expr("max(nbrs) AS nbrs"),
+        )
+        obs = Observation()
+        adj = (
+            merged.observe(obs, F.expr("count_if(lbl < old) AS changed"))
+            .drop("old")
+            .localCheckpoint(eager=True)
+        )
+        if obs.get["changed"] == 0:
             converged = True
             break
     if not converged:
@@ -394,14 +449,15 @@ def connected_components(
             "raise max_iter (cluster diameter exceeds it) or switch to the "
             "large-star/small-star O(log d) variant"
         )
+    labels = adj.select("node", "lbl")
     if nodes is not None:
-        singletons = (
-            nodes.select(F.col("doc_id").alias("node"))
-            .distinct()
-            .join(endpoints, "node", "left_anti")
-            .withColumn("lbl", F.col("node"))
+        # a node's own id bounds its component label from above, so one
+        # min per node labels endpoints and singletons alike
+        labels = (
+            labels.unionByName(nodes.selectExpr("doc_id AS node", "doc_id AS lbl"))
+            .groupBy("node")
+            .agg(F.min("lbl").alias("lbl"))
         )
-        labels = labels.unionByName(singletons)
     return labels.select(
         F.col("node").alias("doc_id"), F.col("lbl").alias("cluster_id")
     )
@@ -577,36 +633,17 @@ def jaccard_verify_pairs(
 ) -> DataFrame:
     """Exact word-set Jaccard for GIVEN candidate pairs only (the verify
     stage after LSH pair-finding). Unlike ngram_jaccard_pairs (which
-    self-joins the whole token table), this joins the candidate list to the
-    per-doc distinct-token sets twice, so work is proportional to the
-    candidates' token mass — the shape a candidates->verify pipeline needs
-    at corpus scale."""
-    words = F.split(_norm_text(), " ")
-    tok = (
-        documents.select("doc_id", F.explode(words).alias("w"))
-        .where(F.length("w") > 2)
-        .distinct()
-    )
-    sizes = tok.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    ta = tok.select(F.col("doc_id").alias("doc_a"), "w")
-    tb = tok.select(F.col("doc_id").alias("doc_b"), "w")
-    common = (
-        pairs.join(ta, "doc_a")
-        .join(tb, ["doc_b", "w"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("common"))
-    )
-    na = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
-    nb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
+    self-joins the whole token table), this joins the candidate list to one
+    word-set array per document twice and intersects the two arrays in
+    place, so work is proportional to the candidates' token mass — the
+    shape a candidates->verify pipeline needs at corpus scale.
+    dedup_pipeline does the same verify inside the LSH bucket pass."""
+    sets = _doc_features(documents, 0, 0, tokens=True)
     return (
-        common.join(na, "doc_a")
-        .join(nb, "doc_b")
-        .withColumn(
-            "jaccard",
-            F.round(F.col("common") / (F.col("na") + F.col("nb") - F.col("common")), 6),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
+        pairs.join(sets.selectExpr("doc_id AS doc_a", "t AS ta"), "doc_a")
+        .join(sets.selectExpr("doc_id AS doc_b", "t AS tb"), "doc_b")
+        .selectExpr("doc_a", "doc_b", f"{_jaccard_sql('ta', 'tb')} AS jaccard")
+        .where(F.col("jaccard") >= F.lit(float(threshold)))
     )
 
 
@@ -624,14 +661,17 @@ def dedup_pipeline(
 
     This is the end-to-end composition a training-data pipeline runs:
     candidate generation is banded (never all-pairs, skew-guarded), the
-    verify touches only candidate token mass, clustering is min-label
-    propagation, and the decision is a deterministic function of the
-    cluster (min doc_id wins). Fully oracle-checkable in portable SQL
-    (recursive CTE over the same candidate+verify definition)."""
-    pairs = minhash_lsh_candidates(
-        documents, num_hashes, bands, max_bucket_size=max_bucket_size
+    verify runs where each pair is generated in the bucket pass (each
+    member carries its word set, so there is no join back to the corpus),
+    clustering is min-label propagation, and the decision is a
+    deterministic function of the cluster (min doc_id wins). Fully
+    oracle-checkable in portable SQL (recursive CTE over the same
+    candidate+verify definition)."""
+    # a pair verified in several bands repeats here; the adjacency
+    # collect_set in connected_components absorbs that without a distinct
+    verified = _lsh_pairs(
+        documents, num_hashes, bands, 4, max_bucket_size, jaccard_threshold
     )
-    verified = jaccard_verify_pairs(documents, pairs, jaccard_threshold)
     clusters = connected_components(
         verified.select("doc_a", "doc_b"), nodes=documents
     )

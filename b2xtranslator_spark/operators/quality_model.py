@@ -109,7 +109,16 @@ def train_quality_model(labeled: DataFrame, reg_param: float = 0.01):
         standardization=True,
         maxIter=50,
     )
-    return Pipeline(stages=[assembler, lr]).fit(labeled)
+    model = Pipeline(stages=[assembler, lr]).fit(labeled)
+    # Scoring ships the LR model inside its UDF closures, and the model's
+    # training summary references the SparkSession. Once that session has
+    # registered an Observation (run_with_checkpoints, connected_components)
+    # its ObservationManager is set and is not serializable, so every
+    # scoring task would fail. Scoring needs only the coefficients: drop the
+    # summary (PySpark has no public setter; this is the JVM model's own).
+    jvm = labeled.sparkSession._jvm
+    model.stages[-1]._java_obj.setSummary(jvm.scala.Option.empty())
+    return model
 
 
 def score_quality(documents: DataFrame, model) -> DataFrame:

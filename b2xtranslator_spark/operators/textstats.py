@@ -783,7 +783,7 @@ def top_tokens_sketch(
     tokens live inside its own row, so its top-per_doc_k is computed with
     array ops in the projection, no (doc_id, token) shuffle; only the
     (small) distinct candidate set and the k-row result move."""
-    from .dedup import _seeded_hash60
+    from .dedup import _h60_sql
 
     words = _words()
     tok = documents.select(F.explode(words).alias("w")).where(
@@ -793,7 +793,7 @@ def top_tokens_sketch(
     bucket_cols = [
         F.struct(
             F.lit(d).alias("d"),
-            F.pmod(_seeded_hash60(F.col("w"), 2000 + d), F.lit(width)).alias("b"),
+            F.expr(f"pmod({_h60_sql('w', 2000 + d)}, {width})").alias("b"),
         )
         for d in range(depth)
     ]

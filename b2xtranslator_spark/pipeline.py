@@ -296,6 +296,16 @@ def write_extracted(
 # -- checkpointed run (resume without recompute) --------------------------------
 
 
+# one row per committed group; resume reads (run_id, partition_id, n_groups,
+# state)
+CHECKPOINT_DDL = (
+    "run_id string, partition_id int, conv_bucket int, n_groups int, "
+    "state string, docs_parsed long, records_decoded long, failures long, "
+    "ts long"
+)
+_CHECKPOINT_FIELDS = [f.split(" ") for f in CHECKPOINT_DDL.split(", ")]
+
+
 def _fs_exists(spark: SparkSession, path: str) -> bool:
     """Existence check through Hadoop's FileSystem so it answers correctly
     for hdfs:// and s3a:// URIs, not only the local filesystem."""
@@ -324,10 +334,12 @@ def run_with_checkpoints(
     write); every group then reads only its own partition directory. On a
     real deployment the input is an Iceberg table bucketed by conv_id and
     the staging step disappears — bucket partition pruning does this for
-    free at the metadata layer.
+    free at the metadata layer. With n_groups == 1 there is nothing to
+    prune: the one group reads the input directly and nothing is staged.
 
     Per-group metrics ride the write job via Observation (no second read of
-    the written output).
+    the written output). The checkpoint row (schema CHECKPOINT_DDL) is
+    written from literals, with no Python-side job.
 
     fail_after_groups is a test hook simulating a killed run."""
     from pyspark.sql import Observation
@@ -355,22 +367,24 @@ def run_with_checkpoints(
         except Exception:
             pass  # pre-n_groups checkpoint schema: re-run every group
 
-    group_col = F.pmod(F.xxhash64("conv_id"), F.lit(n_groups))
-    # The staging directory is keyed by n_groups: resuming with a different
-    # group count must re-stage, not silently skip rows whose grp value
-    # exceeds the new n_groups (ADVICE r02). Existence is checked through the
-    # Hadoop FileSystem API so the guard also holds on HDFS/S3 paths where
-    # os.path.exists is always False and every run would re-scan the corpus.
-    staged_path = os.path.join(out_dir, f"_staged_g{n_groups}")
-    if not _fs_exists(spark, os.path.join(staged_path, "_SUCCESS")):
-        (
-            spark.read.parquet(transcripts_path)
-            .withColumn("grp", group_col)
-            .write.mode("overwrite")
-            .partitionBy("grp")
-            .parquet(staged_path)
-        )
-    staged = spark.read.parquet(staged_path)
+    staged = None  # one group is the whole input: nothing to prune
+    if n_groups > 1:
+        # The staging directory is keyed by n_groups: resuming with a
+        # different group count must re-stage, not silently skip rows whose
+        # grp value exceeds the new n_groups (ADVICE r02). Existence is
+        # checked through the Hadoop FileSystem API so the guard also holds
+        # on HDFS/S3 paths where os.path.exists is always False and every
+        # run would re-scan the corpus.
+        staged_path = os.path.join(out_dir, f"_staged_g{n_groups}")
+        if not _fs_exists(spark, os.path.join(staged_path, "_SUCCESS")):
+            (
+                spark.read.parquet(transcripts_path)
+                .withColumn("grp", F.pmod(F.xxhash64("conv_id"), F.lit(n_groups)))
+                .write.mode("overwrite")
+                .partitionBy("grp")
+                .parquet(staged_path)
+            )
+        staged = spark.read.parquet(staged_path)
 
     processed = 0
     stats = {"groups_run": 0, "groups_skipped": len(done)}
@@ -380,8 +394,11 @@ def run_with_checkpoints(
         if fail_after_groups is not None and processed >= fail_after_groups:
             stats["killed"] = True
             return stats
-        # partition pruning: only the grp=<group> directory is scanned
-        subset = staged.where(F.col("grp") == group).drop("grp")
+        if staged is None:
+            subset = spark.read.parquet(transcripts_path)
+        else:
+            # partition pruning: only the grp=<group> directory is scanned
+            subset = staged.where(F.col("grp") == group).drop("grp")
         obs = Observation()
         extracted = run_extraction(subset).observe(
             obs,
@@ -399,25 +416,25 @@ def run_with_checkpoints(
         # lineage + metrics row; append is safe because resume filters on
         # (run_id, state, partition_id) and group commits are idempotent
         agg = obs.get
-        row = [
-            (
-                run_id,
-                group,
-                group,
-                n_groups,
-                "done",
-                int(agg["docs_parsed"] or 0),
-                int(agg["records_decoded"] or 0),
-                int(agg["failures"] or 0),
-                int(time.time() * 1000),
+        row = (
+            run_id,
+            group,
+            group,
+            n_groups,
+            "done",
+            int(agg["docs_parsed"] or 0),
+            int(agg["records_decoded"] or 0),
+            int(agg["failures"] or 0),
+            int(time.time() * 1000),
+        )
+        # literals over a one-row range: a JVM-only plan, where a Python
+        # list through createDataFrame costs a Python-RDD job
+        spark.range(1, numPartitions=1).select(
+            *(
+                F.lit(v).cast(t).alias(name)
+                for v, (name, t) in zip(row, _CHECKPOINT_FIELDS)
             )
-        ]
-        spark.createDataFrame(
-            row,
-            "run_id string, partition_id int, conv_bucket int, n_groups int, "
-            "state string, docs_parsed long, records_decoded long, "
-            "failures long, ts long",
-        ).coalesce(1).write.mode("append").parquet(ckpt_path)
+        ).write.mode("append").parquet(ckpt_path)
         processed += 1
         stats["groups_run"] += 1
     return stats

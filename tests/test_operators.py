@@ -239,7 +239,16 @@ def test_bucket_skew_guard_caps_planted_hot_bucket(spark):
     docs = spark.createDataFrame(boiler + normal, "doc_id long, text string")
 
     t0 = time.time()
-    pairs = minhash_lsh_candidates(docs, 16, 4, max_bucket_size=50).toPandas()
+    cands = minhash_lsh_candidates(docs, 16, 4, max_bucket_size=50)
+    # the size cap is applied below the collect_list aggregate, so the hot
+    # bucket is never held whole in one aggregation buffer, and the per-bucket
+    # count adds no Exchange (3: signature groupBy, bucket grouping, pair
+    # distinct)
+    plan = cands._jdf.queryExecution().executedPlan().toString()
+    assert plan.index("Filter") > plan.index("partial_collect_list"), plan
+    assert "count(1) windowspecdefinition(band" in plan.split("Filter")[1], plan
+    assert plan.count("Exchange") == 3, plan
+    pairs = cands.toPandas()
     # without the cap the boilerplate bucket alone emits 500*499/2 = 124,750
     # pairs; with it the candidate set stays tiny and fast
     assert len(pairs) < 1000, f"hot bucket leaked {len(pairs)} pairs"
@@ -336,6 +345,46 @@ def test_dedup_pipeline_keep_drop_decisions(docs, spark):
         assert bool(by_doc.loc[by_doc.loc[i, "cluster_id"], "keep"])
     # survivors + dropped = corpus; each cluster keeps exactly one doc
     assert out["keep"].sum() == out["cluster_id"].nunique()
+
+
+def test_dedup_edge_rows_match_reference_outputs(spark):
+    """NULL and empty texts, a doc_id on two rows and a pair of two-letter
+    texts (the expected rows are the reference outputs): NULL text hashes
+    the empty shingle like "" does; a repeated doc_id is one document (no
+    self-pair); word sets that are empty (no word longer than two
+    characters) verify nothing and never divide by zero under ANSI."""
+    from b2xtranslator_spark.operators.dedup import dedup_pipeline, jaccard_verify_pairs
+
+    text = "the quick brown fox jumps over the lazy dog again"
+    docs = spark.createDataFrame(
+        [(1, None), (2, None), (3, ""), (4, ""), (5, text), (5, text),
+         (6, "ab cd"), (7, "ab cd")],
+        "doc_id long, text string",
+    )
+    cands = minhash_lsh_candidates(docs)
+    assert sorted(tuple(r) for r in cands.collect()) == [
+        (1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4), (6, 7)
+    ]
+    assert jaccard_verify_pairs(docs, cands).collect() == []
+    out = sorted(tuple(r) for r in dedup_pipeline(docs).collect())
+    assert out == [(d, d, True) for d in range(1, 8)]
+
+
+def test_dedup_pipeline_job_count(docs, spark):
+    """The pipeline's cost on small corpora is fixed per Spark job: the
+    explode/join implementation ran 30 jobs on this fixture (four per
+    connected-components round); the fused verify and one-shuffle rounds
+    must stay at half that or fewer."""
+    from b2xtranslator_spark.operators.dedup import dedup_pipeline
+
+    sc = spark.sparkContext
+    sc.setJobGroup("dedup_pipeline_job_count", "count jobs")
+    try:
+        dedup_pipeline(docs).toPandas()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("dedup_pipeline_job_count")
+    assert 0 < len(jobs) <= 15, len(jobs)
 
 
 def test_top_tokens_sketch_dominates_exact_counts(docs, spark):
@@ -1059,8 +1108,13 @@ def test_bpe_encode_plan_is_pure_map(spark):
 def test_quality_model_separates_planted_spam(spark):
     """CCNet-style learned filter: train LR on heuristic labels over a
     mixed corpus; planted keyboard-mash/boilerplate spam must score below
-    planted prose, and held-out accuracy must beat chance decisively."""
+    planted prose, and held-out accuracy must beat chance decisively.
+    Scoring must also work in a session that has used an Observation
+    (run_with_checkpoints, connected_components): its ObservationManager
+    does not serialize, so the fitted model must not drag the session into
+    its scoring closures through the LR training summary."""
     import numpy as np
+    from pyspark.sql import Observation
 
     from b2xtranslator_spark.operators.quality_model import (
         heuristic_labels,
@@ -1083,6 +1137,9 @@ def test_quality_model_separates_planted_spam(spark):
             junk = "".join(rng.choice(list("#$%@!&*0123456789xz")) for _ in range(140))
             rows.append((i, (junk + " ") * 3))
     docs = spark.createDataFrame(rows, "doc_id long, text string")
+    obs = Observation()
+    docs.observe(obs, F.count(F.lit(1)).alias("n")).collect()
+    assert obs.get["n"] == 120
     labeled = heuristic_labels(docs)
     assert labeled.count() > 40  # both extremes represented
     model = train_quality_model(labeled)

@@ -151,3 +151,29 @@ def test_resume_with_different_n_groups_reruns_everything(
     # and the original partitioning still resumes as fully done
     s3 = run_with_checkpoints(spark, transcripts_path, out, run_id="rg", n_groups=2)
     assert s3 == {"groups_run": 0, "groups_skipped": 2}
+
+
+def test_single_group_run(spark, transcripts_path, tmp_path_factory):
+    """One group is the whole input: nothing is staged, the checkpoint row
+    keeps its schema, and a second call skips the group."""
+    import os
+
+    from pyspark.sql.types import StructType
+
+    out = str(tmp_path_factory.mktemp("out_single"))
+    stats = run_with_checkpoints(spark, transcripts_path, out, run_id="r1g", n_groups=1)
+    assert stats == {"groups_run": 1, "groups_skipped": 0}
+    assert not os.path.exists(os.path.join(out, "_staged_g1"))
+    ckpt = spark.read.parquet(f"{out}/_checkpoints")
+    assert ckpt.schema == StructType.fromDDL(
+        "run_id string, partition_id int, conv_bucket int, n_groups int, "
+        "state string, docs_parsed long, records_decoded long, "
+        "failures long, ts long"
+    )
+    assert [(r["run_id"], r["partition_id"], r["state"]) for r in ckpt.collect()] == [
+        ("r1g", 0, "done")
+    ]
+    n_turns = spark.read.parquet(transcripts_path).count()
+    assert read_extracted(spark, out, 1).count() == n_turns
+    stats = run_with_checkpoints(spark, transcripts_path, out, run_id="r1g", n_groups=1)
+    assert stats == {"groups_run": 0, "groups_skipped": 1}
