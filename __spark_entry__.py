@@ -24,7 +24,6 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 from b2xtranslator_spark.operators.dedup import (  # noqa: E402
     SIMHASH_BITS,
     connected_components,
-    connected_components_star,
     duplicate_text_spans,
     trim_duplicate_spans,
     paragraph_duplicates,
@@ -1315,12 +1314,9 @@ def _q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same cluster spec via the O(log d) large-star/small-star rounds —
-    interchangeable with _q_dedup_clusters, checked against the SAME
-    recursive-CTE oracle."""
-    docs = _table(spark, sf_dir, "documents").where(F.col("doc_id") < 400)
-    pairs = minhash_lsh_candidates(docs, num_hashes=16, bands=4)
-    return connected_components_star(pairs, nodes=docs)
+    """The dedup_clusters query under its second name, which keeps the
+    driver's query set stable; same recursive-CTE oracle."""
+    return _q_dedup_clusters(spark, sf_dir)
 
 
 def _q_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1916,7 +1912,7 @@ def _sql_minhash_lsh(doc_cap: int, num_hashes: int = 16, bands: int = 4) -> str:
 def _sql_dedup_clusters(doc_cap: int) -> str:
     """SQL mirror of operators.dedup.connected_components over the minhash
     candidate pairs: transitive closure by recursive CTE, cluster id = min
-    reachable doc_id (the iterative min-label propagation's fixpoint)."""
+    reachable doc_id (the large-star/small-star fixpoint's root)."""
     return f"""
             WITH RECURSIVE {_sql_minhash_pairs_cte(doc_cap)},
             edges AS (

@@ -89,7 +89,9 @@ def banded_hamming_pairs(
     )
     ca, cb = f"{out_prefix}_a", f"{out_prefix}_b"
     return (
-        pairs.select(
+        # a repeated id shares every bucket with itself: no self-pair
+        pairs.where(F.col("x.i") != F.col("y.i"))
+        .select(
             F.least("x.i", "y.i").alias(ca),
             F.greatest("x.i", "y.i").alias(cb),
             # popcount(xor) is symmetric, so the (a, b) orientation never

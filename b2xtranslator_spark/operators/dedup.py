@@ -14,7 +14,7 @@ Four families over the `documents` table, all shuffle-conscious:
 - embedding cosine near-dup: exact pair similarity over `embeddings`
   (oracle-checkable via DuckDB list_cosine_similarity)
 - connected components: candidate pairs -> per-document cluster keeper
-  (iterative min-label propagation; oracle-checkable via a recursive
+  (large-star/small-star rounds; oracle-checkable via a recursive
   transitive-closure CTE)
 
 Every candidate self-join takes a ``max_bucket_size`` skew guard
@@ -363,6 +363,25 @@ def embedding_near_duplicates(
     )
 
 
+def _star_adjacency(edges: DataFrame, obs) -> DataFrame:
+    """Symmetric adjacency (node, nbrs) of an (a, b) edge list, without
+    self-loops, checkpointed. ``obs`` counts the nodes that are neither a
+    star root (every neighbour larger) nor a star leaf (one smaller
+    neighbour): 0 means the graph is a star forest."""
+    return (
+        edges.selectExpr(
+            "inline(array(named_struct('node', a, 'nbr', b), "
+            "named_struct('node', b, 'nbr', a)))"
+        )
+        .groupBy("node")
+        .agg(F.expr("array_remove(collect_set(nbr), node) AS nbrs"))
+        .observe(obs, F.expr(
+            "count_if(size(nbrs) > 1 AND array_min(nbrs) < node) AS open"
+        ))
+        .localCheckpoint(eager=True)
+    )
+
+
 def connected_components(
     pairs: DataFrame,
     nodes: DataFrame | None = None,
@@ -373,83 +392,78 @@ def connected_components(
     it — the canonical "keeper" of its duplicate cluster. The stage that
     turns pairwise LSH output into per-document keep/drop decisions.
 
-    Plan: iterative min-label propagation over an adjacency list. The edge
-    list is materialised once as (node, lbl, nbrs), and the first round is
-    folded into it: every endpoint starts at the min of its closed
-    neighbourhood. Each further round is one shuffle: every node sends its
-    label to its neighbours, and one groupBy on the node takes the min of
-    what arrived, keeping the node's old label and neighbour list beside it.
-    The number of labels that changed rides that round's checkpoint as an
-    Observation, so a round costs no extra join and no count job; the loop
-    stops at the first round where nothing changed. The round count is
-    bounded by the cluster diameter — near-duplicate clusters are shallow
-    (dozens of hops at most), not social-graph deep, so a small max_iter
-    bound holds at corpus scale; the classic large-star/small-star
-    alternation (Kiveris et al., "Connected Components in MapReduce")
-    halves that to O(log d) rounds if diameter ever grows. Each round is
-    checkpoint-truncated via localCheckpoint to stop the lineage (and its
-    plan) growing linearly with iterations.
+    Plan: alternating large-star/small-star rounds (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond", SoCC'14) over an
+    adjacency list (node, nbrs), so the round count is O(log d) in the
+    cluster diameter d, not O(d). The edge list is materialised once as
+    that adjacency, and every half-round is one explode of each node's
+    list plus one groupBy on the node that rebuilds it:
 
-    Only edge endpoints propagate: a singleton can never change label, so
-    carrying the full corpus through every round would shuffle O(corpus)
-    rows x rounds for work proportional to the (typically tiny) endpoint
-    set. ``nodes`` (a frame with doc_id) widens the output to singleton
-    docs (cluster_id = own doc_id) in one final groupBy; omitted, only docs
-    appearing in pairs are labeled. Pair endpoints are always labeled, even
-    if absent from a narrower ``nodes`` frame (output covers nodes UNION
-    endpoints; a severed path would silently split clusters). Oracle: a
-    recursive transitive-closure CTE computes the same min-reachable label
-    in portable SQL."""
+    - large-star: each node links its LARGER neighbours to the minimum of
+      its closed neighbourhood — chains contract from every node at once;
+    - small-star: each node with smaller neighbours links them and itself
+      to the smallest of them — partial trees flatten into stars.
+
+    Both keep connectivity, and their fixpoint is a star forest: every
+    component is its minimum with all other members hanging off it. Each
+    rebuilt adjacency is checkpoint-truncated via localCheckpoint, and the
+    number of nodes that are neither root nor leaf rides that checkpoint
+    as an Observation, so a half-round costs no join and no count job. The
+    loop stops at the first adjacency (the initial one included) where
+    that number is 0; ``max_iter`` bounds the large+small round pairs.
+    Trade: at the fixpoint the minimum's row holds every member id of its
+    component in one array. A clique member's row already does in the
+    first adjacency; for a long chain the array is new.
+
+    Only edge endpoints take part in the rounds. ``nodes`` (a frame with
+    doc_id) widens the output to singleton docs (cluster_id = own doc_id)
+    in one final groupBy; omitted, only docs appearing in pairs are
+    labeled. Pair endpoints are always labeled, even if absent from a
+    narrower ``nodes`` frame (output covers nodes UNION endpoints; a
+    severed path would silently split clusters). Oracle: a recursive
+    transitive-closure CTE computes the same min-reachable label in
+    portable SQL."""
     from pyspark.sql import Observation
 
+    obs = Observation()
     # materialize the edge list ONCE: its lineage is the whole upstream
     # candidate/verify dataflow, and every round would otherwise re-execute
     # it from the scan up
-    adj = (
-        pairs.selectExpr(
-            "inline(array(named_struct('node', doc_a, 'nbr', doc_b), "
-            "named_struct('node', doc_b, 'nbr', doc_a)))"
-        )
-        .groupBy("node")
-        .agg(F.expr("collect_set(nbr) AS nbrs"))
-        .selectExpr("node", "least(node, array_min(nbrs)) AS lbl", "nbrs")
-        .localCheckpoint(eager=True)
-    )
-    types = {f.name: f.dataType.simpleString() for f in adj.schema.fields}
-    converged = False
-    for _ in range(max_iter):
-        sent = adj.selectExpr("node", "lbl AS cand", "lbl AS old", "nbrs").unionByName(
-            adj.selectExpr(
-                "explode(nbrs) AS node",
-                "lbl AS cand",
-                f"CAST(NULL AS {types['lbl']}) AS old",
-                f"CAST(NULL AS {types['nbrs']}) AS nbrs",
+    adj = _star_adjacency(pairs.selectExpr("doc_a AS a", "doc_b AS b"), obs)
+    # an endpoint of self-pairs only has no neighbour, so the rounds drop it
+    loops = adj.where("size(nbrs) = 0")
+    rounds = 0
+    while obs.get["open"]:
+        if rounds == 2 * max_iter:
+            # silently returning partial labels would hand out cluster_ids
+            # whose "keeper" is itself not a keeper and diverge from the
+            # transitive-closure oracle
+            raise ValueError(
+                f"connected_components did not converge in {max_iter} "
+                "rounds; raise max_iter"
             )
-        )
-        # old label and neighbour list come only from the node's own row
-        merged = sent.groupBy("node").agg(
-            F.expr("min(cand) AS lbl"), F.expr("max(old) AS old"),
-            F.expr("max(nbrs) AS nbrs"),
-        )
+        if rounds % 2 == 0:  # large-star
+            edges = adj.selectExpr(
+                "explode(filter(nbrs, v -> v > node)) AS a",
+                "least(node, array_min(nbrs)) AS b",
+            )
+        else:  # small-star
+            edges = (
+                adj.selectExpr("node", "filter(nbrs, v -> v < node) AS s")
+                .where("size(s) > 0")
+                .selectExpr(
+                    "explode(array_union(s, array(node))) AS a",
+                    "array_min(s) AS b",
+                )
+            )
         obs = Observation()
-        adj = (
-            merged.observe(obs, F.expr("count_if(lbl < old) AS changed"))
-            .drop("old")
-            .localCheckpoint(eager=True)
-        )
-        if obs.get["changed"] == 0:
-            converged = True
-            break
-    if not converged:
-        # silently returning partial labels would hand out cluster_ids whose
-        # "keeper" is itself not a keeper (min within max_iter hops, not the
-        # component min) and diverge from the transitive-closure oracle
-        raise ValueError(
-            f"connected_components did not converge in {max_iter} rounds; "
-            "raise max_iter (cluster diameter exceeds it) or switch to the "
-            "large-star/small-star O(log d) variant"
-        )
-    labels = adj.select("node", "lbl")
+        adj = _star_adjacency(edges, obs)
+        rounds += 1
+    labels = (
+        adj.where("size(nbrs) > 0")
+        .unionByName(loops)
+        .selectExpr("node", "least(node, array_min(nbrs)) AS lbl")
+    )
     if nodes is not None:
         # a node's own id bounds its component label from above, so one
         # min per node labels endpoints and singletons alike
@@ -515,119 +529,6 @@ def paragraph_duplicates(documents: DataFrame, min_len: int = 20) -> DataFrame:
     )
 
 
-def connected_components_star(
-    pairs: DataFrame,
-    nodes: DataFrame | None = None,
-    max_iter: int = 16,
-) -> DataFrame:
-    """Connected components via alternating large-star/small-star rounds
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14) — the deep-diameter scale path promised in
-    connected_components' docstring: O(log d) rounds instead of O(d), with
-    the same per-round join shape (one groupBy on the node key).
-
-    - large-star: every node links its LARGER neighbors to the minimum of
-      its closed neighborhood — long chains contract toward small ids from
-      every node at once.
-    - small-star: every node (edges canonicalized u > v) re-links its
-      smaller neighbors and itself to the neighborhood minimum — flattens
-      the partial trees into stars.
-
-    Both rounds preserve connectivity and strictly shrink total edge
-    weight, so the fixpoint is a star forest: every node's remaining edge
-    points at its component minimum. Output schema matches
-    connected_components exactly ((doc_id, cluster_id), singletons from
-    ``nodes`` included), so the two variants are interchangeable — and
-    checked equal in tests and against the same recursive-CTE oracle."""
-    e = pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
-    edges = (
-        e.where(F.col("u") != F.col("v"))
-        .select(
-            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-        )
-        .distinct()
-        .localCheckpoint(eager=True)  # cut the candidate-dataflow lineage
-    )
-    converged = False
-    for _ in range(max_iter):
-        # large-star over the symmetric view: for each node u, attach its
-        # larger neighbors to m = min(N(u) ∪ {u})
-        sym = edges.unionByName(
-            edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-        m = sym.groupBy("u").agg(
-            F.least(F.min("v"), F.first("u")).alias("m")
-        )
-        large = (
-            sym.join(m, "u")
-            .where(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .where(F.col("u") != F.col("v"))
-        )
-        # small-star over canonical (u > v) edges: attach smaller neighbors
-        # AND u itself to the neighborhood minimum
-        m2 = edges.groupBy("u").agg(F.min("v").alias("m"))
-        small = (
-            edges.join(m2, "u")
-            .select(
-                F.col("v").alias("a"), F.col("m"), F.col("u").alias("self_u")
-            )
-            .select(
-                F.explode(
-                    F.array(
-                        F.struct(F.col("a").alias("x"), F.col("m").alias("y")),
-                        F.struct(
-                            F.col("self_u").alias("x"), F.col("m").alias("y")
-                        ),
-                    )
-                ).alias("s")
-            )
-            .select(F.col("s.x").alias("u"), F.col("s.y").alias("v"))
-            .where(F.col("u") != F.col("v"))
-        )
-        new_edges = (
-            large.unionByName(small)
-            .select(
-                F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-            )
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            new_edges.exceptAll(edges).limit(1).count()
-            + edges.exceptAll(new_edges).limit(1).count()
-        )
-        edges = new_edges
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        raise ValueError(
-            f"connected_components_star did not converge in {max_iter} "
-            "rounds (log-diameter bound exceeded — pathological input?)"
-        )
-    # star forest: u > v = root. Roots label themselves.
-    labels = edges.select(F.col("u").alias("node"), F.col("v").alias("lbl"))
-    roots = (
-        edges.select(F.col("v").alias("node"))
-        .distinct()
-        .join(labels.select("node"), "node", "left_anti")
-        .withColumn("lbl", F.col("node"))
-    )
-    labels = labels.unionByName(roots)
-    if nodes is not None:
-        singles = (
-            nodes.select(F.col("doc_id").alias("node"))
-            .distinct()
-            .join(labels.select("node"), "node", "left_anti")
-            .withColumn("lbl", F.col("node"))
-        )
-        labels = labels.unionByName(singles)
-    return labels.select(
-        F.col("node").alias("doc_id"), F.col("lbl").alias("cluster_id")
-    )
-
-
 def jaccard_verify_pairs(
     documents: DataFrame, pairs: DataFrame, threshold: float = 0.5
 ) -> DataFrame:
@@ -663,7 +564,7 @@ def dedup_pipeline(
     candidate generation is banded (never all-pairs, skew-guarded), the
     verify runs where each pair is generated in the bucket pass (each
     member carries its word set, so there is no join back to the corpus),
-    clustering is min-label propagation, and the decision is a
+    clustering is large-star/small-star rounds, and the decision is a
     deterministic function of the cluster (min doc_id wins). Fully
     oracle-checkable in portable SQL (recursive CTE over the same
     candidate+verify definition)."""

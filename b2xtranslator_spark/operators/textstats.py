@@ -688,6 +688,11 @@ def corpus_filter(
     FIRST failed check in a fixed order: duplicate > lang > quality >
     dup_lines > bigram).
 
+    NULL text has a NULL fingerprint, and the keeper window puts all
+    NULL-fp rows in one partition: the smallest such doc_id is kept and
+    the others are ``duplicate``. Empty text is a separate partition of
+    its own. This is DuckDB's PARTITION BY, which the oracle SQL uses.
+
     Plan shape (optimization round 6): ONE scan — all per-document signals
     come from the shared row_signals projection — and ONE exchange (the
     exact-dup keeper as a min-over-fp window, replacing the old

@@ -483,6 +483,31 @@ def test_banded_hamming_covers_remainder_bits(spark):
         )
 
 
+def test_banded_hamming_repeated_id_emits_no_self_pair(spark):
+    """A signature id that repeats shares every band bucket with itself; it
+    must not come back paired with itself, directly or via simhash."""
+    from b2xtranslator_spark.operators.banding import banded_hamming_pairs
+    from b2xtranslator_spark.operators.dedup import simhash_candidate_pairs
+
+    h = 0x0123456789ABCDEF
+    sig = spark.createDataFrame(
+        [(1, h), (1, h ^ 1), (2, h)], "img_id long, h long"
+    )
+    pairs = banded_hamming_pairs(
+        sig, "img_id", "h", bits=64, bands=8, max_hamming=3,
+        max_bucket_size=1000, out_prefix="img",
+    ).collect()
+    assert [(r["img_a"], r["img_b"]) for r in pairs] == [(1, 2)]
+
+    text = "the same words in the same order make the same simhash"
+    docs = spark.createDataFrame(
+        [(1, text, "en", "s", 1), (1, text, "en", "s", 1), (2, text, "en", "s", 1)],
+        "doc_id long, text string, lang string, source string, n_chars int",
+    )
+    pairs = simhash_candidate_pairs(docs, max_hamming=0).collect()
+    assert [(r["doc_a"], r["doc_b"]) for r in pairs] == [(1, 2)]
+
+
 def test_connected_components_endpoints_missing_from_nodes(spark):
     """Review finding (r3): a pair endpoint absent from a narrower `nodes`
     frame must still propagate — dropping it would sever the path and split
@@ -580,42 +605,103 @@ def test_repetition_stats_is_shuffle_free(spark):
     assert "Exchange" not in plan, plan
 
 
-def test_connected_components_star_matches_minlabel(docs, spark):
-    """The large-star/small-star variant must produce byte-identical
-    labels to min-label propagation on the real LSH candidate graph."""
-    from b2xtranslator_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
+def _union_find_labels(pairs, nodes=()):
+    """Plain-Python reference: every node -> min id of its component."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    for n in nodes:
+        find(n)
+    return {n: find(n) for n in parent}
+
+
+def test_connected_components_matches_union_find(docs, spark):
+    """Labels equal an independent union-find on the real LSH candidate
+    graph, on a seeded random sparse graph (cycles, repeated and reversed
+    pairs) and on a self-pair, whose endpoint is still labeled."""
+    import random
+
+    from b2xtranslator_spark.operators.dedup import connected_components
+
+    def labels(pairs, nodes=None):
+        return {
+            r["doc_id"]: r["cluster_id"]
+            for r in connected_components(pairs, nodes=nodes).collect()
+        }
 
     cands = minhash_lsh_candidates(docs, 16, 8)
-    a = {
-        (r["doc_id"], r["cluster_id"])
-        for r in connected_components(cands, nodes=docs).collect()
-    }
-    b = {
-        (r["doc_id"], r["cluster_id"])
-        for r in connected_components_star(cands, nodes=docs).collect()
-    }
-    assert a == b
+    ids = [r["doc_id"] for r in docs.select("doc_id").collect()]
+    edges = [(r["doc_a"], r["doc_b"]) for r in cands.collect()]
+    assert edges
+    assert labels(cands, docs) == _union_find_labels(edges, ids)
+
+    rng = random.Random(11)
+    edges = [(rng.randrange(300), rng.randrange(300)) for _ in range(240)]
+    pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
+    assert labels(pairs) == _union_find_labels(edges)
+
+    pairs = spark.createDataFrame([(9, 5), (5, 1), (7, 7)], "doc_a long, doc_b long")
+    assert labels(pairs) == {1: 1, 5: 1, 9: 1, 7: 7}
 
 
-def test_connected_components_star_handles_deep_chains(spark):
-    """A 100-hop chain needs ~100 min-label rounds (the O(d) variant
-    correctly refuses at max_iter=20) but only O(log d) star rounds."""
-    from b2xtranslator_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
+def _job_count(spark, group, action):
+    """Spark jobs that ``action`` runs, counted under a fresh job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "count jobs")
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_connected_components_job_count(docs, spark):
+    """On the LSH candidate graph (already materialised) clustering is the
+    adjacency build plus a round or two: at most 6 Spark jobs."""
+    from b2xtranslator_spark.operators.dedup import connected_components
+
+    cands = minhash_lsh_candidates(docs, 16, 8).localCheckpoint(eager=True)
+    n = _job_count(
+        spark, "cc_lsh_graph",
+        lambda: connected_components(cands, nodes=docs).collect(),
     )
+    assert n <= 6, f"connected_components ran {n} Spark jobs"
 
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(100)], "doc_a long, doc_b long"
-    )
+
+def test_connected_components_deep_chains(spark):
+    """A 100-hop chain converges at the default max_iter in O(log d)
+    large/small-star rounds (at most 30 Spark jobs), whether ids run along
+    the chain or are shuffled; too small a max_iter still refuses."""
+    import random
+
+    from b2xtranslator_spark.operators.dedup import connected_components
+
+    for shuffle in (False, True):
+        ids = list(range(101))
+        if shuffle:
+            random.Random(5).shuffle(ids)
+        chain = spark.createDataFrame(
+            list(zip(ids, ids[1:])), "doc_a long, doc_b long"
+        )
+        out = []
+        n = _job_count(
+            spark, f"cc_chain_{shuffle}",
+            lambda: out.extend(connected_components(chain).collect()),
+        )
+        assert sorted(r["doc_id"] for r in out) == list(range(101))
+        assert all(r["cluster_id"] == 0 for r in out)
+        assert n <= 30, f"{n} Spark jobs for the 100-hop chain"
     with pytest.raises(ValueError, match="did not converge"):
-        connected_components(chain, max_iter=20)
-    out = connected_components_star(chain, max_iter=16).collect()
-    assert len(out) == 101
-    assert all(r["cluster_id"] == 0 for r in out)
+        connected_components(chain, max_iter=2)
 
 
 def test_pii_scan_counts_and_scrubs(spark):
@@ -687,6 +773,31 @@ def test_corpus_filter_reasons_and_order(spark):
     # doc 5 is all stopwords: quality stays high (stop_ratio), but the top
     # bigram covers everything -> first failing check in order is bigram
     assert out[5][0] is False and out[5][1] in ("bigram", "quality")
+
+
+def test_corpus_filter_null_and_empty_text_keepers(spark):
+    """NULL text has a NULL fingerprint: all NULL-text rows share one
+    keeper partition (smallest id kept, the rest duplicate), and empty
+    text is a partition of its own, as DuckDB's PARTITION BY groups them."""
+    from b2xtranslator_spark.operators.textstats import corpus_filter
+
+    clean = (
+        "the quick brown fox jumps over the lazy dog and that "
+        "is that for the test of time with good words to read"
+    )
+    rows = [(1, None), (2, None), (3, ""), (4, ""), (5, clean)]
+    docs = spark.createDataFrame(
+        [(i, t, "en", "s", 1) for i, t in rows],
+        "doc_id long, text string, lang string, source string, n_chars int",
+    )
+    out = {r["doc_id"]: (r["keep"], r["reason"]) for r in corpus_filter(docs).collect()}
+    assert out == {
+        1: (False, "lang"),
+        2: (False, "duplicate"),
+        3: (False, "lang"),
+        4: (False, "duplicate"),
+        5: (True, "ok"),
+    }
 
 
 def test_chunk_documents_overlap_and_coverage(spark):
