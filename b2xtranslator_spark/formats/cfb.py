@@ -316,7 +316,3 @@ class CompoundFile:
 def _sector_ids(slots: np.ndarray) -> list[int]:
     """FAT sector ids among DIFAT slots: every slot but FREESECT/ENDOFCHAIN."""
     return slots[(slots != FREESECT) & (slots != ENDOFCHAIN)].tolist()
-
-
-def is_cfb(data: bytes) -> bool:
-    return len(data) >= 8 and data[:8] == MAGIC

@@ -137,15 +137,6 @@ def _persist_directory(stream: bytes, current_edit_offset: int) -> tuple[dict[in
     return persist, doc_persist_id
 
 
-def extract_ppt_text(payload: bytes) -> str:
-    storage = CompoundFile(payload)
-    return extract_ppt_text_from_storage(storage)
-
-
-def extract_ppt_text_from_storage(storage: CompoundFile) -> str:
-    return extract_ppt_text_parts(storage)[0]
-
-
 def extract_ppt_text_parts(storage: CompoundFile) -> tuple[str, int]:
     stream = storage.get_stream("PowerPoint Document")
 

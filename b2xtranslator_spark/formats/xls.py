@@ -157,15 +157,6 @@ def _short_string(data: bytes, pos: int, biff8: bool) -> str:
     return data[pos + 1 : pos + 1 + cch].decode("latin-1")
 
 
-def extract_xls_text(payload: bytes) -> str:
-    storage = CompoundFile(payload)
-    return extract_xls_text_from_storage(storage)
-
-
-def extract_xls_text_from_storage(storage: CompoundFile) -> str:
-    return extract_xls_text_parts(storage)[0]
-
-
 def extract_xls_text_parts(storage: CompoundFile) -> tuple[str, int]:
     # Workbook, falling back to Book (XlsDocument.cs:45-56)
     if storage.has_stream("Workbook"):

@@ -105,10 +105,9 @@ def sessionize_events(
     ts_col: str = "ts",
     id_col: str = "event_id",
 ) -> DataFrame:
-    """Batch gap-based sessionization (the batch twin of
-    streaming/sessionize.py): a session boundary wherever the gap from the
-    user's previous event exceeds ``gap_seconds``; session index via a
-    running sum of boundary flags. Returns per-session stats.
+    """Batch gap-based sessionization: a session boundary wherever the gap
+    from the user's previous event exceeds ``gap_seconds``; session index
+    via a running sum of boundary flags. Returns per-session stats.
 
     One shuffle (window partition on the user); timestamps compared as
     integer MICROSECONDS (unix_micros) so the boundary arithmetic is

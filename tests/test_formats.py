@@ -10,6 +10,7 @@ import struct
 
 import pytest
 
+from b2xtranslator_spark.extractors import extract_payload_text
 from b2xtranslator_spark.formats import ppt
 from b2xtranslator_spark.formats.cfb import CfbError, CompoundFile
 from b2xtranslator_spark.formats.word.document import WordBinaryDocument
@@ -24,7 +25,6 @@ from b2xtranslator_spark.formats.word.symbols import (
     convert_symbol_character,
     convert_symbol_hex,
 )
-from b2xtranslator_spark.formats.xls import extract_xls_text
 
 SIMPLE_DOC = "/root/reference/UnitTests/files/simple.doc"
 SIMPLE_XLS = "/root/reference/UnitTests/files/simple.xls"
@@ -105,9 +105,10 @@ def test_word_document_structures():
 
 @needs_ref
 def test_xls_simple_cells():
-    text = extract_xls_text(open(SIMPLE_XLS, "rb").read())
-    assert "Hello World" in text
-    assert "1" in text and "4" in text
+    res = extract_payload_text(open(SIMPLE_XLS, "rb").read())
+    assert (res.kind, res.status) == ("xls", "ok")
+    assert "Hello World" in res.text
+    assert "1" in res.text and "4" in res.text
 
 
 def test_single_byte_decode_dotnet_semantics():
