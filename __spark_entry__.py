@@ -53,7 +53,6 @@ from b2xtranslator_spark.operators.similarity import (  # noqa: E402
     cosine_topk_bruteforce,
     cosine_topk_lsh,
     embedding_dedup_pipeline,
-    embedding_near_duplicates_fast,
     embedding_near_duplicates_lsh,
     ivf_topk,
     ivf_topk_grid,
@@ -1382,9 +1381,9 @@ def _q_embed_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_embed_neardup_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return embedding_near_duplicates_fast(
-        _table(spark, sf_dir, "embeddings"), threshold=0.35, max_vecs=400
-    )
+    """The dedup_embedding_lsh query under its second name, which keeps the
+    driver's query set stable; same exact-cosine oracle."""
+    return _q_embed_neardup_lsh(spark, sf_dir)
 
 
 def _q_similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:

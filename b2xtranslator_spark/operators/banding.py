@@ -1,28 +1,74 @@
-"""Banded Hamming pair-finding over any integer signature column.
+"""Banded candidate pairs and the one skew policy every LSH leg shares.
 
-The pigeonhole construction shared by text SimHash and image dHash dedup:
-slice a ``bits``-wide signature into ``bands`` disjoint bit ranges and
-group on (band, slice) — any pair within ``bands - 1`` Hamming distance
-shares at least one identical band, so the candidate set has 100% recall
-for ``max_hamming <= bands - 1``; an exact popcount(xor) filter verifies.
+Every banding scheme in this repo (minhash bands, SimHash and image dHash
+bit slices, sign-LSH embedding bands) keys its rows by (band, bucket) and
+pairs the members of each bucket. ``bucket_pairs`` is that step, written
+once:
 
-Plan shape (optimization round 6): ONE pass over the signatures and ONE
-shuffle. The old shape was a self equi-join on (band, key), which executed
-the whole signature pipeline TWICE (Spark does not de-duplicate the two
-sides of a self-join) plus a window-count skew guard with its own shuffle —
-measured 12 Exchanges / double compute on the bench. Now each (band, key)
-bucket is grouped once (collect_list of (id, hash) rows), the skew cap is a
-size filter on the grouped bucket (same drop-oversized-bucket semantics as
-operators.skew.cap_bucket_size, no extra shuffle), and ordered candidate
-pairs are generated ROW-LOCALLY with a two-level explode — the outer
-explode walks left positions so per-row memory stays O(bucket), never
-O(bucket^2). The shuffle is O(rows x bands) collect rows, never pairs.
+- a bucket of n rows emits n^2/2 pairs, so one degenerate hot bucket
+  (thousands of empty documents sharing a signature, near-zero vectors
+  sharing a sign pattern) would turn a linear plan quadratic. A count
+  window over (band, bucket) drops every bucket above ``max_bucket_size``
+  BELOW the collect_list, so a hot bucket is refused before one
+  aggregation buffer holds it whole. The window and the grouping share
+  one hash partitioning, so the cap adds no Exchange;
+- each surviving bucket is grouped once and ordered pairs are generated
+  row-locally with a two-level explode: the outer explode walks left
+  positions, so per-row memory stays O(bucket), never O(bucket^2). The
+  shuffle is O(rows x bands) member rows, never pairs.
+
+Dropped buckets cost recall for their members; ``bucket_skew_stats``
+lists them from a keyed frame (for embeddings, the output of
+similarity.lsh_band_buckets). Members of a hot bucket usually still meet
+through their other bands, so the practical cost is small unless an item
+is degenerate in every band, which is the content (empty text, zero
+vectors) a dedup pipeline wants quarantined anyway.
+
+``banded_hamming_pairs`` is the pigeonhole construction shared by text
+SimHash and image dHash dedup: slice a ``bits``-wide signature into
+``bands`` disjoint bit ranges — any pair within ``bands - 1`` Hamming
+distance shares at least one identical band, so the candidate set has
+100% recall for ``max_hamming <= bands - 1``; an exact popcount(xor)
+filter verifies.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+
+def bucket_pairs(keyed: DataFrame, max_bucket_size: int) -> DataFrame:
+    """(band, bucket, m) rows -> one (x, y) row per ordered pair of members
+    that share a bucket, x before y in the bucket's collect order. A pair
+    repeats once per bucket it shares, and a member repeated within a
+    bucket pairs with itself; callers filter and dedupe. Buckets of more
+    than ``max_bucket_size`` rows are dropped before they are collected."""
+    grouped = (
+        keyed.selectExpr(
+            "band", "bucket", "m", "count(1) OVER (PARTITION BY band, bucket) AS n"
+        )
+        .where(f"n BETWEEN 2 AND {int(max_bucket_size)}")
+        .groupBy("band", "bucket")
+        .agg(F.expr("collect_list(m) AS ids"))
+    )
+    return grouped.selectExpr(
+        "ids", "explode(sequence(1, size(ids) - 1)) AS p"
+    ).selectExpr(
+        "element_at(ids, p) AS x", "explode(slice(ids, p + 1, size(ids) - p)) AS y"
+    )
+
+
+def bucket_skew_stats(df: DataFrame, keys: list[str], max_rows: int) -> DataFrame:
+    """The buckets the ``max_bucket_size`` cap drops: (keys..., n_rows),
+    largest first. Run alongside the capped query so dropped candidate mass
+    is a reported metric, not a silent recall loss."""
+    return (
+        df.groupBy(*keys)
+        .agg(F.count(F.lit(1)).alias("n_rows"))
+        .where(F.col("n_rows") > max_rows)
+        .orderBy(F.desc("n_rows"))
+    )
 
 
 def banded_hamming_pairs(
@@ -38,7 +84,7 @@ def banded_hamming_pairs(
     """(id, hash) -> (``{out_prefix}_a``, ``{out_prefix}_b``, hamming) pairs
     with hamming <= max_hamming. Recall is complete while
     max_hamming <= bands - 1 and no band bucket exceeded the skew cap
-    (dropped buckets are observable via skew.bucket_skew_stats)."""
+    (dropped buckets are observable via bucket_skew_stats)."""
     if not 1 <= bands <= bits:
         raise ValueError(f"bands must be in [1, bits={bits}], got {bands}")
     width = bits // bands
@@ -54,39 +100,15 @@ def banded_hamming_pairs(
             .bitwiseAND(
                 F.lit((1 << (last_width if b == bands - 1 else width)) - 1)
             )
-            .alias("key"),
+            .alias("bucket"),
         )
         for b in range(bands)
     ]
     keyed = sig.select(
-        id_col, hash_col, F.explode(F.array(*band_cols)).alias("bk")
-    ).select(id_col, hash_col, "bk.band", "bk.key")
-    # ONE shuffle: each (band, key) bucket grouped once; the size filter IS
-    # the skew cap (drop oversized buckets, same policy as skew.py); size-1
-    # buckets can emit no pair and are dropped with it.
-    grouped = (
-        keyed.groupBy("band", "key")
-        .agg(
-            F.collect_list(
-                F.struct(
-                    F.col(id_col).alias("i"), F.col(hash_col).alias("h")
-                )
-            ).alias("rs")
-        )
-        .where(F.size("rs").between(2, max_bucket_size))
-    )
-    # row-local ordered pair generation, memory-bounded: outer explode of
-    # left positions (one row per (bucket, left)), inner explode of the
-    # right-side slice — per-row state is O(bucket), never O(bucket^2)
-    lefts = grouped.select(
-        "rs", F.explode(F.sequence(F.lit(1), F.size("rs") - 1)).alias("p")
-    )
-    pairs = lefts.select(
-        F.element_at("rs", F.col("p")).alias("x"),
-        F.explode(
-            F.slice("rs", F.col("p") + 1, F.size("rs") - F.col("p"))
-        ).alias("y"),
-    )
+        F.struct(F.col(id_col).alias("i"), F.col(hash_col).alias("h")).alias("m"),
+        F.explode(F.array(*band_cols)).alias("bk"),
+    ).select("m", "bk.band", "bk.bucket")
+    pairs = bucket_pairs(keyed, max_bucket_size)
     ca, cb = f"{out_prefix}_a", f"{out_prefix}_b"
     return (
         # a repeated id shares every bucket with itself: no self-pair

@@ -21,7 +21,7 @@ history). Both are pure Catalyst plans:
 Skew posture: a pathological million-turn conversation concentrates on
 one task in both plans. assemble_conversations guards with an optional
 ``max_turns`` cap (drop-and-report beats a straggler at scale, same
-policy as operators/skew.py); turn_windows carries O(k) state per row.
+policy as banding.bucket_pairs); turn_windows carries O(k) state per row.
 """
 
 from __future__ import annotations

@@ -17,15 +17,17 @@ Four families over the `documents` table, all shuffle-conscious:
   (large-star/small-star rounds; oracle-checkable via a recursive
   transitive-closure CTE)
 
-Every candidate self-join takes a ``max_bucket_size`` skew guard
-(operators/skew.py): one degenerate hot bucket otherwise goes quadratic at
-corpus scale.
+Every banded leg takes a ``max_bucket_size`` skew guard
+(operators/banding.py): one degenerate hot bucket otherwise goes quadratic
+at corpus scale.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from .banding import banded_hamming_pairs, bucket_pairs
 
 
 def _norm_text():
@@ -144,23 +146,7 @@ def _lsh_pairs(
     buckets = sig.selectExpr(
         f"named_struct({member}) AS m", f"inline(array({', '.join(band_structs)}))"
     )
-    # the skew cap counts each bucket over the same hash partitioning the
-    # grouping then uses (one Exchange), so a hot bucket is dropped before
-    # collect_list would hold it whole in one aggregation buffer
-    grouped = (
-        buckets.selectExpr(
-            "band", "bucket", "m", "count(1) OVER (PARTITION BY band, bucket) AS n"
-        )
-        .where(f"n BETWEEN 2 AND {int(max_bucket_size)}")
-        .groupBy("band", "bucket")
-        .agg(F.expr("collect_list(m) AS ids"))
-    )
-    # outer explode walks left positions so per-row memory stays O(bucket)
-    pairs = grouped.selectExpr(
-        "ids", "explode(sequence(1, size(ids) - 1)) AS p"
-    ).selectExpr(
-        "element_at(ids, p) AS x", "explode(slice(ids, p + 1, size(ids) - p)) AS y"
-    )
+    pairs = bucket_pairs(buckets, max_bucket_size)
     cols = ["least(x.id, y.id) AS doc_a", "greatest(x.id, y.id) AS doc_b"]
     if not verify:
         return pairs.selectExpr(*cols)
@@ -189,9 +175,8 @@ def minhash_lsh_candidates(
     n^2/2 pairs, so one degenerate signature (empty/boilerplate text shared
     by thousands of docs) would otherwise go quadratic. Oversized buckets
     are dropped by a per-bucket count over the grouping's own partitioning,
-    below the collect_list (same drop-and-report semantics as
-    operators.skew.cap_bucket_size) — report them with
-    operators.skew.bucket_skew_stats."""
+    below the collect_list (banding.bucket_pairs) — report them with
+    banding.bucket_skew_stats."""
     return _lsh_pairs(
         documents, num_hashes, bands, shingle_len, max_bucket_size
     ).distinct()
@@ -252,12 +237,10 @@ def simhash_candidate_pairs(
     an exact popcount(xor) filter verifies. The shuffle is O(docs x bands),
     never all-pairs (the banding mirror of minhash_lsh_candidates).
 
-    ``max_bucket_size`` drops degenerate hot slices before the self-join
-    (the n^2 skew guard; see operators.skew) — the pigeonhole recall
-    guarantee then holds only for pairs whose shared band survived the cap,
-    so report dropped buckets via bucket_skew_stats."""
-    from .banding import banded_hamming_pairs
-
+    ``max_bucket_size`` drops degenerate hot slices before they are
+    collected (the n^2 skew guard of banding.bucket_pairs) — the pigeonhole
+    recall guarantee then holds only for pairs whose shared band survived
+    the cap, so report dropped buckets via bucket_skew_stats."""
     sig = simhash(documents, bits)
     return banded_hamming_pairs(
         sig, "doc_id", "simhash", bits, bands, max_hamming,
@@ -332,7 +315,10 @@ def embedding_near_duplicates(
     """Embedding-cosine near-duplicate pairs (exact, O(n^2) within the cap).
 
     The exact pass is the verify stage; at corpus scale candidates come from
-    LSH bucketing first (see ann_lsh_bucketed in operators/similarity.py)."""
+    LSH bucketing first (see embedding_near_duplicates_lsh in
+    operators/similarity.py)."""
+    from .similarity import _cosine
+
     vecs = embeddings
     if max_vecs is not None:
         vecs = vecs.where(F.col("vec_id") < max_vecs)
@@ -342,22 +328,10 @@ def embedding_near_duplicates(
     b = vecs.select(
         F.col("vec_id").alias("vec_b"), F.col("embedding").alias("eb")
     )
-    dot = F.aggregate(
-        F.zip_with("ea", "eb", lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    norm = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(
-            F.transform(c, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )
     return (
         a.crossJoin(b)
         .where(F.col("vec_a") < F.col("vec_b"))
-        .withColumn("cosine", F.round(dot / (norm(F.col("ea")) * norm(F.col("eb"))), 6))
+        .withColumn("cosine", _cosine(F.col("ea"), F.col("eb")))
         .where(F.col("cosine") >= threshold)
         .select("vec_a", "vec_b", "cosine")
     )

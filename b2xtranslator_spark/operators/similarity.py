@@ -8,18 +8,20 @@
   shipping weights. The plane family includes a plane*dim cross term: without
   it every plane is a shifted window of one LCG sequence and bands are
   correlated (measured: recall plateaus no matter how many bands are added).
-- banded LSH near-duplicate pipeline: candidates from a per-band bucket
-  equi-join (shuffle O(vecs x bands), never all-pairs), verified by exact
-  cosine. At 100 TB this replaces the cross join; threshold drives the
-  (planes_per_band, bands) choice — high thresholds (0.9+) want long bands
-  (8+ planes) for tiny buckets, low thresholds want short bands + more of
-  them for recall.
+- banded LSH near-duplicate pipeline: candidates from the per-(band,
+  bucket) grouping of operators/banding.py (shuffle O(vecs x bands), never
+  all-pairs), verified by exact cosine. At 100 TB this replaces the cross
+  join; threshold drives the (planes_per_band, bands) choice — high
+  thresholds (0.9+) want long bands (8+ planes) for tiny buckets, low
+  thresholds want short bands + more of them for recall.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .banding import bucket_pairs
 
 # deterministic hyperplane family: weight(plane, dim) =
 #   ((M1*plane + M2*dim + MX*plane*dim + C) % MOD) - (MOD-1)/2
@@ -46,6 +48,26 @@ def _norm(c):
     )
 
 
+def _cosine(a, b, na=None, nb=None):
+    """round(dot / (norm * norm), 6) of two embedding columns: the one
+    exact cosine every scorer here returns. ``na``/``nb`` are norms
+    precomputed per vector; omitted, they are folded in place."""
+    na = _norm(a) if na is None else na
+    nb = _norm(b) if nb is None else nb
+    return F.round(_dot(a, b) / (na * nb), 6)
+
+
+def _topk(cand: DataFrame, q: str, k: int) -> DataFrame:
+    """Top ``k`` (vec_id, cosine) of the candidates' ``embedding`` against
+    the query column ``q``; ties break on vec_id."""
+    return (
+        cand.withColumn("cosine", _cosine(F.col("embedding"), F.col(q)))
+        .select("vec_id", "cosine")
+        .orderBy(F.desc("cosine"), F.asc("vec_id"))
+        .limit(k)
+    )
+
+
 def cosine_topk_bruteforce(
     embeddings: DataFrame, query_vec_id: int = 0, k: int = 10
 ) -> DataFrame:
@@ -54,17 +76,10 @@ def cosine_topk_bruteforce(
     query = embeddings.where(F.col("vec_id") == query_vec_id).select(
         F.col("embedding").alias("q")
     )
-    scored = (
-        embeddings.where(F.col("vec_id") != query_vec_id)
-        .crossJoin(F.broadcast(query))
-        .withColumn(
-            "cosine",
-            F.round(_dot(F.col("embedding"), F.col("q"))
-                    / (_norm(F.col("embedding")) * _norm(F.col("q"))), 6),
-        )
-        .select("vec_id", "cosine")
+    cand = embeddings.where(F.col("vec_id") != query_vec_id).crossJoin(
+        F.broadcast(query)
     )
-    return scored.orderBy(F.desc("cosine"), F.asc("vec_id")).limit(k)
+    return _topk(cand, "q", k)
 
 
 def _hyperplane_sign(embedding_col, plane: int):
@@ -126,15 +141,12 @@ def _plane_matrix(n_planes: int, dim: int):
 
 
 def lsh_band_buckets(
-    embeddings: DataFrame,
-    bands: int,
-    planes_per_band: int,
-    carry_embedding: bool = True,
+    embeddings: DataFrame, bands: int, planes_per_band: int
 ) -> DataFrame:
-    """One row per (vector, band): the band's bucket key from its own
-    disjoint slice of the plane family. The downstream equi-join on
-    (band, bucket) is the scale path — each vector shuffles ``bands`` times,
-    never pairwise.
+    """One row per (vector, band): (vec_id, band, bucket), the band's bucket
+    key from its own disjoint slice of the plane family. The downstream
+    grouping on (band, bucket) is the scale path — each vector id shuffles
+    ``bands`` times, never pairwise, and never its embedding.
 
     All bands*planes projections are ONE BLAS matmul per Arrow batch
     (mapInPandas) against the deterministic integer plane matrix — measured
@@ -142,18 +154,7 @@ def lsh_band_buckets(
     map (no shuffle). Integer weights times float64 products are exact, so
     the only engine-dependence is FP summation order on projections that
     land exactly at zero — the recall margin (and the exact-cosine verify
-    stage downstream) absorbs it.
-
-    ``carry_embedding=True`` duplicates the full vector through the band
-    shuffle (bands x byte amplification on the widest column — with the
-    default 20 bands that is 20x the embedding bytes). ``False`` emits only
-    (vec_id, band, bucket) — the id-only rows shuffle at ~1/30th the bytes
-    for a 64-dim float vector and the verify stage re-joins embeddings by
-    vec_id (two extra hash joins). Benchmarked both at sf0.1
-    (BENCH/BASELINE.md round 3): carrying wins while embedding bytes/row is
-    below roughly the dedup-join row overhead; at corpus scale with wide
-    vectors (>=256 dims) the id-only plan shuffles an order of magnitude
-    fewer bytes and is the default recommendation."""
+    stage downstream) absorbs it."""
     import numpy as np
     import pandas as pd
 
@@ -173,26 +174,15 @@ def lsh_band_buckets(
             for b in range(bands):
                 for r in range(planes_per_band):
                     keys[:, b] = keys[:, b] * 2 + bits[:, b * planes_per_band + r]
-            cols = {
+            yield pd.DataFrame({
                 "vec_id": np.repeat(pdf["vec_id"].to_numpy(), bands),
                 "band": np.tile(np.arange(bands), len(pdf)),
                 "bucket": keys.reshape(-1),
-            }
-            if carry_embedding:
-                cols["embedding"] = [
-                    e for e in pdf["embedding"] for _ in range(bands)
-                ]
-            yield pd.DataFrame(cols)
+            })
 
-    schema = (
-        "vec_id long, band int, bucket long, embedding array<float>"
-        if carry_embedding
-        else "vec_id long, band int, bucket long"
+    return embeddings.select("vec_id", "embedding").mapInPandas(
+        kernel, "vec_id long, band int, bucket long"
     )
-    return embeddings.select("vec_id", "embedding").mapInPandas(kernel, schema)
-
-
-from .skew import bucket_skew_stats, cap_bucket_size  # noqa: E402,F401 re-export
 
 
 def embedding_near_duplicates_lsh(
@@ -202,7 +192,6 @@ def embedding_near_duplicates_lsh(
     bands: int = 20,
     planes_per_band: int = 2,
     max_bucket_size: int = 100_000,
-    carry_vectors: bool = True,
 ) -> DataFrame:
     """Near-duplicate pairs via banded sign-LSH candidates + exact-cosine
     verify. Same output contract as dedup.embedding_near_duplicates (the
@@ -213,54 +202,26 @@ def embedding_near_duplicates_lsh(
     0.35 on the test corpus with a 4-band margin (empirically 0 misses
     from 16 bands up).
 
-    Plan (optimization round 6, guide §8 "decide with small rows, move big
-    rows once"): the band kernel emits ID-ONLY rows; each (band, bucket)
-    is grouped ONCE and ordered candidate pairs are generated row-locally
-    (two-level explode, per-row memory O(bucket)); pairs are de-duplicated
-    while still id-only (a pair surfaces from up to ``bands`` buckets, so
-    deduplicating AFTER attaching vectors shuffled the embedding payload
-    once per surfacing — measured 398k heavy rows vs 80k id pairs on the
-    bench); only then are embeddings + precomputed norms attached by join
-    for the exact-cosine verify. The old shape was a self equi-join that
-    executed the band kernel twice plus a window-count skew pass and
-    carried embeddings through every stage. The size filter on the grouped
-    bucket IS the skew cap (same drop-oversized-bucket semantics as
-    operators.skew.cap_bucket_size); report drops via bucket_skew_stats.
+    Plan (guide §8 "decide with small rows, move big rows once"): the band
+    kernel emits ID-ONLY rows and banding.bucket_pairs pairs each bucket's
+    ids; pairs are de-duplicated while still id-only (a pair surfaces from
+    up to ``bands`` buckets, so deduplicating AFTER attaching vectors
+    shuffled the embedding payload once per surfacing — measured 398k heavy
+    rows vs 80k id pairs on the bench); only then are embeddings +
+    precomputed norms attached by join for the exact-cosine verify.
 
     ``max_bucket_size`` caps candidate generation per (band, bucket): a hot
     bucket of n rows emits n^2/2 pairs, so one degenerate signature (e.g.
     thousands of near-zero vectors sharing a sign pattern) would otherwise
-    dominate the job.
-
-    ``carry_vectors`` is retained for API compatibility; since the round-6
-    restructure both settings execute the same id-only plan (carrying the
-    vectors through the pair stages was strictly more shuffle bytes for
-    identical results)."""
+    dominate the job. The cap drops such a bucket before it is collected;
+    report drops via banding.bucket_skew_stats."""
     vecs = embeddings
     if max_vecs is not None:
         vecs = vecs.where(F.col("vec_id") < max_vecs)
-    bb = lsh_band_buckets(vecs, bands, planes_per_band, carry_embedding=False)
-    grouped = (
-        bb.groupBy("band", "bucket")
-        .agg(F.collect_list("vec_id").alias("ids"))
-        .where(F.size("ids").between(2, max_bucket_size))
-    )
-    # outer explode walks left positions so per-row memory stays O(bucket)
-    lefts = grouped.select(
-        "ids",
-        F.explode(F.sequence(F.lit(1), F.size("ids") - 1)).alias("p"),
-    )
+    bb = lsh_band_buckets(vecs, bands, planes_per_band)
     ids = (
-        lefts.select(
-            F.element_at("ids", F.col("p")).alias("x"),
-            F.explode(
-                F.slice("ids", F.col("p") + 1, F.size("ids") - F.col("p"))
-            ).alias("y"),
-        )
-        .select(
-            F.least("x", "y").alias("vec_a"),
-            F.greatest("x", "y").alias("vec_b"),
-        )
+        bucket_pairs(bb.selectExpr("band", "bucket", "vec_id AS m"), max_bucket_size)
+        .select(F.least("x", "y").alias("vec_a"), F.greatest("x", "y").alias("vec_b"))
         .dropDuplicates(["vec_a", "vec_b"])
     )
     # attach embeddings once per deduplicated pair; the norm is computed
@@ -285,72 +246,11 @@ def embedding_near_duplicates_lsh(
     return (
         cand.withColumn(
             "cosine",
-            F.round(
-                _dot(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb")),
-                6,
-            ),
+            _cosine(F.col("ea"), F.col("eb"), F.col("na"), F.col("nb")),
         )
         .where(F.col("cosine") >= threshold)
         .select("vec_a", "vec_b", "cosine")
     )
-
-
-def embedding_near_duplicates_fast(
-    embeddings: DataFrame,
-    threshold: float = 0.35,
-    max_vecs: int | None = 400,
-    bands: int = 20,
-    planes_per_band: int = 2,
-    max_bucket_size: int = 100_000,
-) -> DataFrame:
-    """NumPy-matmul variant of embedding_near_duplicates_lsh: one BLAS call
-    per (band, bucket) group via applyInPandas scores the whole bucket at
-    once (~10-100x the per-element Catalyst aggregate). No driver collect,
-    no broadcast of vector data — each bucket is scored where it lands after
-    the band shuffle. Rounding is half-away-from-zero to match Spark's
-    F.round / the DuckDB oracle exactly on both signs (np.round is banker's
-    rounding, and floor(x*1e6+0.5) rounds negative halves toward +inf;
-    ADVICE r01/r02).
-
-    The dense n x n similarity matrix is O(bucket^2) memory, so the skew
-    guard is mandatory here: buckets over ``max_bucket_size`` are dropped
-    pre-shuffle via cap_bucket_size (so no oversized group is ever
-    materialized as a pandas frame, let alone an n x n allocation) — report
-    them via bucket_skew_stats."""
-    import numpy as np
-    import pandas as pd
-
-    vecs = embeddings
-    if max_vecs is not None:
-        vecs = vecs.where(F.col("vec_id") < max_vecs)
-    bb = lsh_band_buckets(vecs, bands, planes_per_band)
-    # drop hot buckets BEFORE the group shuffle: applyInPandas materializes
-    # each group as one in-memory pandas frame, so a degenerate bucket of
-    # vectors would OOM the Python worker before the kernel's own size check
-    # ever ran (the window-count guard spills JVM-side instead)
-    bb = cap_bucket_size(bb, ["band", "bucket"], max_bucket_size)
-
-    empty = pd.DataFrame({"vec_a": [], "vec_b": [], "cosine": []})
-
-    def score_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) > max_bucket_size:  # defense-in-depth; capped upstream
-            return empty
-        ids = pdf["vec_id"].to_numpy()
-        mat = np.array(list(pdf["embedding"]), dtype=np.float64)
-        mat = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-        sims = mat @ mat.T
-        # HALF_UP on magnitude, sign restored = round half away from zero
-        rounded = np.copysign(np.floor(np.abs(sims) * 1e6 + 0.5), sims) / 1e6
-        ai, bi = np.nonzero((rounded >= threshold) & (ids[:, None] < ids[None, :]))
-        return pd.DataFrame(
-            {"vec_a": ids[ai], "vec_b": ids[bi], "cosine": rounded[ai, bi]}
-        )
-
-    pairs = bb.groupBy("band", "bucket").applyInPandas(
-        score_bucket, "vec_a long, vec_b long, cosine double"
-    )
-    # a pair can surface from several bands with the identical cosine
-    return pairs.dropDuplicates(["vec_a", "vec_b"])
 
 
 def cosine_topk_lsh(
@@ -374,24 +274,14 @@ def cosine_topk_lsh(
     query = bucketed.where(F.col("vec_id") == query_vec_id).select(
         F.col("bucket").alias("qbucket"), F.col("embedding").alias("q")
     )
-    return (
-        bucketed.join(
-            F.broadcast(query),
-            F.bit_count(
-                F.col("bucket").cast("long").bitwiseXOR(F.col("qbucket").cast("long"))
-            )
-            <= probe_hamming,
+    cand = bucketed.join(
+        F.broadcast(query),
+        F.bit_count(
+            F.col("bucket").cast("long").bitwiseXOR(F.col("qbucket").cast("long"))
         )
-        .where(F.col("vec_id") != query_vec_id)
-        .withColumn(
-            "cosine",
-            F.round(_dot(F.col("embedding"), F.col("q"))
-                    / (_norm(F.col("embedding")) * _norm(F.col("q"))), 6),
-        )
-        .select("vec_id", "cosine")
-        .orderBy(F.desc("cosine"), F.asc("vec_id"))
-        .limit(k)
-    )
+        <= probe_hamming,
+    ).where(F.col("vec_id") != query_vec_id)
+    return _topk(cand, "q", k)
 
 
 def ivf_topk(
@@ -451,19 +341,12 @@ def ivf_topk(
     query = embeddings.where(F.col("vec_id") == query_vec_id).select(
         F.col("embedding").alias("q")
     )
-    return (
+    cand = (
         assigned.where(F.col("cluster").isin(probe))
         .where(F.col("vec_id") != query_vec_id)
         .crossJoin(F.broadcast(query))
-        .withColumn(
-            "cosine",
-            F.round(_dot(F.col("embedding"), F.col("q"))
-                    / (_norm(F.col("embedding")) * _norm(F.col("q"))), 6),
-        )
-        .select("vec_id", "cosine")
-        .orderBy(F.desc("cosine"), F.asc("vec_id"))
-        .limit(k)
     )
+    return _topk(cand, "q", k)
 
 
 def embedding_dedup_pipeline(
@@ -502,19 +385,6 @@ def embedding_dedup_pipeline(
 _GRID_SEED = 1000  # centroid index offset: disjoint from the LSH plane family
 
 
-def _grid_weight(c, d):
-    """Deterministic integer centroid weight (same arithmetic family as the
-    LSH hyperplanes, offset seed so centroids and planes are uncorrelated);
-    c and d are Columns."""
-    a = (
-        F.lit(_M1) * (c + F.lit(_GRID_SEED))
-        + F.lit(_M2) * d
-        + F.lit(_MX) * (c + F.lit(_GRID_SEED)) * d
-        + F.lit(_C)
-    ) % F.lit(_MOD)
-    return (a - F.lit(_HALF)).cast("double")
-
-
 def ivf_topk_grid(
     embeddings: DataFrame,
     query_vec_id: int = 0,
@@ -541,83 +411,42 @@ def ivf_topk_grid(
     set; candidate filtering happens at the scan; top-k is TakeOrdered.
     No shuffle anywhere but the final k rows.
 
-    Optimization round 6: when the table's vectors share ONE dimension
-    (checked with a tiny min/max-size probe at build, like ivf_topk's
-    existing head() probe), the integer weight matrix and the centroid
-    norms become LITERALS — the interpreted weight arithmetic previously
-    re-evaluated 3x per (centroid, dim) per row, and the norm fold is
-    row-independent anyway. Exactness: the weights are positive-operand
-    integer arithmetic (Python % == SQL % here) and every norm is
-    sqrt of an exact-integer double sum (all terms < 2^53, so fold order
-    cannot matter), so the literal path produces bit-identical negs/
-    cosines; mixed-dimension tables fall back to the original
-    per-row-dim formulation. Measured 3.7 -> ~1.3 s on the bench table."""
-    emb = F.col("embedding")
-    dim = F.size(emb)
-
-    def cl_sorted():
-        return F.array_sort(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(n_centroids - 1)),
-                lambda c: F.struct(
-                    F.round(
-                        -F.aggregate(
-                            F.zip_with(
-                                emb,
-                                F.sequence(F.lit(0), dim - 1),
-                                lambda x, d: x.cast("double") * _grid_weight(c, d),
-                            ),
-                            F.lit(0.0),
-                            lambda acc, v: acc + v,
-                        )
-                        / F.sqrt(
-                            F.aggregate(
-                                F.transform(
-                                    F.sequence(F.lit(0), dim - 1),
-                                    lambda d: _grid_weight(c, d)
-                                    * _grid_weight(c, d),
-                                ),
-                                F.lit(0.0),
-                                lambda acc, v: acc + v,
-                            )
-                        ),
-                        6,
-                    ).alias("negs"),
-                    c.cast("int").alias("c"),
-                ),
-            )
-        )
-
-    def cl_literal_sql(d: int) -> str:
-        import math
-
-        structs = []
-        for c in range(n_centroids):
-            cs = c + _GRID_SEED
-            wrow = [
-                ((_M1 * cs + _M2 * dd + _MX * cs * dd + _C) % _MOD) - _HALF
-                for dd in range(d)
-            ]
-            # exact-integer sum of squares -> the same double sqrt the
-            # Catalyst fold produced (order-independent: all exact)
-            norm = math.sqrt(float(sum(w * w for w in wrow)))
-            warr = "array(" + ", ".join(f"{w}D" for w in wrow) + ")"
-            structs.append(
-                "named_struct('negs', round(-aggregate(zip_with(embedding, "
-                f"{warr}, (x, w) -> CAST(x AS DOUBLE) * w), "
-                "CAST(0 AS DOUBLE), (acc, v) -> acc + v) "
-                f"/ {norm!r}D, 6), 'c', {c})"
-            )
-        return f"array_sort(array({', '.join(structs)}))"
+    The table's vectors must share ONE dimension (checked with a tiny
+    min/max-size probe at build, like ivf_topk's head() probe; a cosine
+    across two dimensions is undefined, so a mixed table raises
+    ValueError). The integer weight matrix and the centroid norms are then
+    LITERALS. Exactness: the weights are positive-operand integer
+    arithmetic (Python % == SQL % here) and every norm is sqrt of an
+    exact-integer double sum (all terms < 2^53, so fold order cannot
+    matter)."""
+    import math
 
     dims = embeddings.agg(
         F.min(F.size("embedding")).alias("lo"),
         F.max(F.size("embedding")).alias("hi"),
     ).first()
-    if dims["lo"] is not None and dims["lo"] == dims["hi"]:
-        cl_col = F.expr(cl_literal_sql(int(dims["lo"])))
-    else:
-        cl_col = cl_sorted()
+    if dims["lo"] != dims["hi"]:
+        raise ValueError(
+            "ivf_topk_grid needs one embedding dimension, got sizes "
+            f"{dims['lo']}..{dims['hi']}"
+        )
+    structs = []
+    # an empty table has no dimension (lo is None) and no row to score
+    for c in range(n_centroids):
+        cs = c + _GRID_SEED
+        wrow = [
+            ((_M1 * cs + _M2 * d + _MX * cs * d + _C) % _MOD) - _HALF
+            for d in range(dims["lo"] or 0)
+        ]
+        norm = math.sqrt(float(sum(w * w for w in wrow)))
+        warr = "array(" + ", ".join(f"{w}D" for w in wrow) + ")"
+        structs.append(
+            "named_struct('negs', round(-aggregate(zip_with(embedding, "
+            f"{warr}, (x, w) -> CAST(x AS DOUBLE) * w), "
+            "CAST(0 AS DOUBLE), (acc, v) -> acc + v) "
+            f"/ {norm!r}D, 6), 'c', {c})"
+        )
+    cl_col = F.expr(f"array_sort(array({', '.join(structs)}))")
     scored = embeddings.select("vec_id", "embedding", cl_col.alias("cl"))
     assigned = scored.select(
         "vec_id", "embedding", F.col("cl")[0]["c"].alias("cluster")
@@ -633,16 +462,4 @@ def ivf_topk_grid(
         .crossJoin(F.broadcast(qrow))
         .where(F.array_contains(F.col("probes"), F.col("cluster")))
     )
-    return (
-        cand.withColumn(
-            "cosine",
-            F.round(
-                _dot(F.col("embedding"), F.col("qe"))
-                / (_norm(F.col("embedding")) * _norm(F.col("qe"))),
-                6,
-            ),
-        )
-        .select("vec_id", "cosine")
-        .orderBy(F.desc("cosine"), F.asc("vec_id"))
-        .limit(k)
-    )
+    return _topk(cand, "qe", k)

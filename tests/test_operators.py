@@ -123,19 +123,15 @@ def test_embedding_lsh_equals_exact(embeddings):
     semantics change, at the tuned recall)."""
     from b2xtranslator_spark.operators.dedup import embedding_near_duplicates
     from b2xtranslator_spark.operators.similarity import (
-        embedding_near_duplicates_fast,
         embedding_near_duplicates_lsh,
     )
 
     exact = embedding_near_duplicates(embeddings, threshold=0.35, max_vecs=200)
     want = {(r.vec_a, r.vec_b, r.cosine) for r in exact.toPandas().itertuples()}
     assert want, "test corpus should contain pairs above threshold"
-    for fn in (embedding_near_duplicates_lsh, embedding_near_duplicates_fast):
-        got = {
-            (r.vec_a, r.vec_b, r.cosine)
-            for r in fn(embeddings, threshold=0.35, max_vecs=200).toPandas().itertuples()
-        }
-        assert got == want, f"{fn.__name__}: {len(got ^ want)} differing pairs"
+    lsh = embedding_near_duplicates_lsh(embeddings, threshold=0.35, max_vecs=200)
+    got = {(r.vec_a, r.vec_b, r.cosine) for r in lsh.toPandas().itertuples()}
+    assert got == want, f"{len(got ^ want)} differing pairs"
 
 
 def test_ivf_topk_scores_exactly_and_recalls(embeddings):
@@ -224,13 +220,12 @@ def test_bucket_skew_guard_caps_planted_hot_bucket(spark):
     and bucket_skew_stats reports what was dropped."""
     import time
 
+    from b2xtranslator_spark.operators.banding import bucket_skew_stats
     from b2xtranslator_spark.operators.dedup import simhash_candidate_pairs
     from b2xtranslator_spark.operators.similarity import (
-        embedding_near_duplicates_fast,
         embedding_near_duplicates_lsh,
         lsh_band_buckets,
     )
-    from b2xtranslator_spark.operators.skew import bucket_skew_stats
 
     # 500 identical boilerplate docs -> one signature in every band,
     # plus 10 normal docs that must still dedup among themselves
@@ -240,13 +235,10 @@ def test_bucket_skew_guard_caps_planted_hot_bucket(spark):
 
     t0 = time.time()
     cands = minhash_lsh_candidates(docs, 16, 4, max_bucket_size=50)
-    # the size cap is applied below the collect_list aggregate, so the hot
-    # bucket is never held whole in one aggregation buffer, and the per-bucket
-    # count adds no Exchange (3: signature groupBy, bucket grouping, pair
-    # distinct)
+    # the per-bucket count adds no Exchange (3: signature groupBy, bucket
+    # grouping, pair distinct); test_bucket_cap_filters_below_collect_list
+    # checks where the cap sits
     plan = cands._jdf.queryExecution().executedPlan().toString()
-    assert plan.index("Filter") > plan.index("partial_collect_list"), plan
-    assert "count(1) windowspecdefinition(band" in plan.split("Filter")[1], plan
     assert plan.count("Exchange") == 3, plan
     pairs = cands.toPandas()
     # without the cap the boilerplate bucket alone emits 500*499/2 = 124,750
@@ -273,34 +265,39 @@ def test_bucket_skew_guard_caps_planted_hot_bucket(spark):
     ).toPandas()
     assert not any(p.vec_a < 500 and p.vec_b < 500 for p in lsh_pairs.itertuples())
 
-    fast_pairs = embedding_near_duplicates_fast(
-        emb, threshold=0.9, max_vecs=None, max_bucket_size=50
-    ).toPandas()
-    assert not any(p.vec_a < 500 and p.vec_b < 500 for p in fast_pairs.itertuples())
-
     # the dropped mass is REPORTED, not silent: every band shows the hot bucket
     bb = lsh_band_buckets(emb, bands=20, planes_per_band=2)
     stats = bucket_skew_stats(bb, ["band", "bucket"], 50).toPandas()
     assert len(stats) >= 20 and stats["n_rows"].max() >= 500
 
 
-def test_id_only_band_shuffle_matches_carried_variant(embeddings):
-    """The byte-economical id-only band shuffle (carry_vectors=False) must
-    produce exactly the pairs of the carried variant — same candidates, same
-    exact-cosine verify, ~bands-x fewer shuffled embedding bytes."""
+@pytest.mark.parametrize("leg", ["minhash", "simhash", "dhash", "embedding"])
+def test_bucket_cap_filters_below_collect_list(spark, docs, embeddings, leg):
+    """Every banded leg applies the skew cap below the bucket collect_list,
+    so a hot bucket is never held whole in one aggregation buffer: the
+    first Filter beneath partial_collect_list reads the per-bucket count
+    window."""
+    from b2xtranslator_spark.operators.dedup import simhash_candidate_pairs
+    from b2xtranslator_spark.operators.multimodal import image_near_duplicates
     from b2xtranslator_spark.operators.similarity import (
         embedding_near_duplicates_lsh,
     )
 
-    a = (
-        embedding_near_duplicates_lsh(embeddings, 0.35, 400, carry_vectors=True)
-        .toPandas().sort_values(["vec_a", "vec_b"]).reset_index(drop=True)
-    )
-    b = (
-        embedding_near_duplicates_lsh(embeddings, 0.35, 400, carry_vectors=False)
-        .toPandas().sort_values(["vec_a", "vec_b"]).reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(a, b)
+    small = docs.where(F.col("doc_id") < 50)
+    df = {
+        "minhash": lambda: minhash_lsh_candidates(small, 16, 4, max_bucket_size=50),
+        "simhash": lambda: simhash_candidate_pairs(small, max_bucket_size=50),
+        "dhash": lambda: image_near_duplicates(
+            synthesize_media(spark, n_rows=12), max_bucket_size=50
+        ),
+        "embedding": lambda: embedding_near_duplicates_lsh(
+            embeddings, max_vecs=100, max_bucket_size=50
+        ),
+    }[leg]()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    below = plan.split("partial_collect_list", 1)[1]
+    under_filter = below.split("Filter", 1)[1].split("\n", 2)[1]
+    assert "count(1) windowspecdefinition(band" in under_filter, plan
 
 
 def test_connected_components_cluster_planted_dups(docs, spark):
@@ -900,6 +897,21 @@ def test_ivf_grid_scores_exactly_and_recalls(embeddings):
     assert set(brute.vec_id) <= set(wide.vec_id)  # all cells probed = exact
     again = ivf_topk_grid(embeddings, 0, k=50, n_centroids=16, n_probe=4).toPandas()
     assert ann.vec_id.tolist() == again.vec_id.tolist()
+
+
+def test_ivf_grid_refuses_mixed_dimensions(spark):
+    """A cosine across two dimensions is undefined: a table whose vectors
+    differ in length is refused at build, and an empty table returns an
+    empty result."""
+    from b2xtranslator_spark.operators.similarity import ivf_topk_grid
+
+    schema = "vec_id long, embedding array<float>"
+    mixed = spark.createDataFrame([(0, [1.0, 0.0]), (1, [1.0, 0.0, 1.0])], schema)
+    with pytest.raises(ValueError, match="one embedding dimension"):
+        ivf_topk_grid(mixed, 0, k=5)
+    empty = ivf_topk_grid(spark.createDataFrame([], schema), 0, k=5)
+    assert empty.columns == ["vec_id", "cosine"]
+    assert empty.collect() == []
 
 
 # -- conversation operators (round 4) -----------------------------------------
