@@ -1846,7 +1846,7 @@ def _sql_media_image_grid() -> str:
 
 def _sql_h60(expr: str) -> str:
     """60-bit hash from the first 15 hex digits of md5 — the SQL mirror of
-    operators.dedup._h60_sql / _token_hash60."""
+    operators.textstats._h60_sql."""
     return f"CAST(('0x' || substr(md5({expr}), 1, 15)) AS BIGINT)"
 
 

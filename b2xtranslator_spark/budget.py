@@ -43,8 +43,7 @@ DEFAULT_BUDGET_SECONDS = 5.0
 # attachment must become an ``oversize`` row, not a Python-worker OOM. Far
 # above any legitimate Office binary, small enough that one document cannot
 # take down an executor sized for normal batches. The pipeline gate, the
-# extractor gate, the decompression bound and the archive record cap all
-# read it at call time.
+# extractor gate and the decompression bound all read it at call time.
 MAX_PAYLOAD_BYTES = 256 << 20
 
 

@@ -84,18 +84,15 @@ class _Ref(tuple):
     __slots__ = ()
 
 
+# runs of whitespace and % comments to end of line (or of buffer)
+_WS_RE = re.compile(rb"(?:[\x00\t\n\x0c\r ]+|%[^\n]*\n?)*")
+
+
 def _skip_ws(buf: bytes, pos: int) -> int:
-    n = len(buf)
-    while pos < n:
-        c = buf[pos]
-        if c in _WS:
-            pos += 1
-        elif c == 0x25:  # % comment to EOL
-            e = buf.find(b"\n", pos)
-            pos = n if e < 0 else e + 1
-        else:
-            break
-    return pos
+    # one regex match, not one Python step per byte: an inflated stream
+    # can hold megabytes of NUL "whitespace"; max() keeps a pos past the
+    # end as it is (the regex clamps it to len(buf))
+    return max(pos, _WS_RE.match(buf, pos).end())
 
 
 def _parse_literal_string(buf: bytes, pos: int) -> tuple[bytes, int]:

@@ -83,8 +83,9 @@ def banded_hamming_pairs(
 ) -> DataFrame:
     """(id, hash) -> (``{out_prefix}_a``, ``{out_prefix}_b``, hamming) pairs
     with hamming <= max_hamming. Recall is complete while
-    max_hamming <= bands - 1 and no band bucket exceeded the skew cap
-    (dropped buckets are observable via bucket_skew_stats)."""
+    max_hamming <= bands - 1 and no band bucket exceeded the skew cap.
+    The (band, bucket) frame is built here, so dropped buckets are not
+    counted today."""
     if not 1 <= bands <= bits:
         raise ValueError(f"bands must be in [1, bits={bits}], got {bands}")
     width = bits // bands

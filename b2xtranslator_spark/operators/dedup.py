@@ -28,10 +28,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .banding import banded_hamming_pairs, bucket_pairs
-
-
-def _norm_text():
-    return F.regexp_replace(F.lower(F.col("text")), "\\s+", " ")
+from .textstats import _content_md5, _h60_sql, _norm, _words
 
 
 def exact_duplicates(documents: DataFrame) -> DataFrame:
@@ -39,24 +36,12 @@ def exact_duplicates(documents: DataFrame) -> DataFrame:
     group (groups of size 1 included so the fingerprint+groupBy semantics are
     verifiable on corpora without duplicates)."""
     return (
-        documents.select("doc_id", F.md5(F.encode(_norm_text(), "UTF-8")).alias("fp"))
+        documents.select("doc_id", _content_md5().alias("fp"))
         .groupBy("fp")
         .agg(
             F.count("*").alias("dup_count"),
             F.min("doc_id").alias("keeper_doc_id"),
         )
-    )
-
-
-def _h60_sql(expr: str, seed: int) -> str:
-    """Seeded 60-bit hash from md5(seed || value), as a SQL expression —
-    portable semantics (DuckDB: CAST(('0x'||substr(md5(seed||value),1,15))
-    AS BIGINT)), chosen over xxhash64 so the whole MinHash family is
-    oracle-checkable. A string, so a query parses it in one call instead of
-    building it through py4j one Column at a time."""
-    return (
-        f"CAST(conv(substring(md5(encode(concat('{seed}|', {expr}), 'UTF-8')), "
-        "1, 15), 16, 10) AS BIGINT)"
     )
 
 
@@ -82,7 +67,7 @@ def _doc_features(
     # stage the token array: the shingle lambda slices it per position, and
     # an unbound split(regexp_replace(...)) subtree would re-tokenize the
     # document once per shingle (the O(n^2) lambda trap; BENCH notes)
-    staged = documents.select("doc_id", F.split(_norm_text(), " ").alias("_w"))
+    staged = documents.select("doc_id", F.split(_norm(), " ").alias("_w"))
     cols, aggs = ["doc_id"], []
     if num_hashes:
         # one md5 per shingle; h1 (60-bit) and h2 (40-bit) are cut from it
@@ -175,8 +160,9 @@ def minhash_lsh_candidates(
     n^2/2 pairs, so one degenerate signature (empty/boilerplate text shared
     by thousands of docs) would otherwise go quadratic. Oversized buckets
     are dropped by a per-bucket count over the grouping's own partitioning,
-    below the collect_list (banding.bucket_pairs) — report them with
-    banding.bucket_skew_stats."""
+    below the collect_list (banding.bucket_pairs). The buckets are keyed
+    inside this leg, so today they are dropped without a count a caller
+    can read."""
     return _lsh_pairs(
         documents, num_hashes, bands, shingle_len, max_bucket_size
     ).distinct()
@@ -185,19 +171,9 @@ def minhash_lsh_candidates(
 SIMHASH_BITS = 60  # 15 hex digits of md5 -> fits a signed 64-bit lane
 
 
-def _token_hash60(col):
-    """60-bit token hash from the first 15 hex digits of md5 — chosen over
-    xxhash64 so the identical value is computable in portable SQL
-    (DuckDB: CAST(('0x'||substr(md5(w),1,15)) AS BIGINT)), making the whole
-    SimHash family oracle-checkable."""
-    return F.conv(F.substring(F.md5(F.encode(col, "UTF-8")), 1, 15), 16, 10).cast(
-        "long"
-    )
-
-
 def simhash(documents: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame:
-    """SimHash: per-token 60-bit md5-derived hash, per-bit +/-1 vote,
-    sign -> bit.
+    """SimHash: per-token 60-bit md5-derived hash (textstats._h60_sql),
+    per-bit +/-1 vote, sign -> bit.
 
     One explode + one groupBy; the per-bit votes are computed map-side
     (partial agg) inside Catalyst (no Python). The whole
@@ -205,11 +181,11 @@ def simhash(documents: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame:
     constructing 60 vote aggregates + 60 reconstruction terms through the
     column API cost ~1 s of py4j round trips per query build (measured,
     optimization round 6) for an identical integer-exact plan."""
-    words = F.split(_norm_text(), " ")
+    words = F.split(_norm(), " ")
     tok = documents.select("doc_id", F.explode(words).alias("w")).where(
         F.length("w") > 0
     )
-    tok = tok.select("doc_id", _token_hash60(F.col("w")).alias("h"))
+    tok = tok.selectExpr("doc_id", f"{_h60_sql('w')} AS h")
     # per-bit vote: sum(+1 if bit set else -1); bit set in the final hash
     # when the vote is positive — same expressions the column-API build
     # produced, parsed server-side in one call
@@ -240,7 +216,8 @@ def simhash_candidate_pairs(
     ``max_bucket_size`` drops degenerate hot slices before they are
     collected (the n^2 skew guard of banding.bucket_pairs) — the pigeonhole
     recall guarantee then holds only for pairs whose shared band survived
-    the cap, so report dropped buckets via bucket_skew_stats."""
+    the cap. The slices are keyed inside banded_hamming_pairs, so today
+    the dropped ones are not counted."""
     sig = simhash(documents, bits)
     return banded_hamming_pairs(
         sig, "doc_id", "simhash", bits, bands, max_hamming,
@@ -269,7 +246,7 @@ def ngram_jaccard_pairs(
     docs = documents
     if max_docs is not None:
         docs = docs.where(F.col("doc_id") < max_docs)
-    words = F.split(_norm_text(), " ")
+    words = F.split(_norm(), " ")
     tok = docs.select("doc_id", F.explode(words).alias("w")).where(
         F.length("w") > 2
     ).distinct()
@@ -557,6 +534,20 @@ def dedup_pipeline(
     )
 
 
+def _gram_hashes(staged: DataFrame, n: int) -> DataFrame:
+    """(doc_id, pos, h): one row per token ``n``-gram of the staged ``ws``
+    arrays, h its 60-bit hash. Documents shorter than n tokens have no
+    grams; the filter also guards Spark's sequence(), which DESCENDS when
+    stop < start (sequence(0,-1) is [0,-1], not empty) and would feed
+    slice() an invalid 0 start."""
+    gram = _h60_sql(f"array_join(slice(ws, i + 1, {n}), ' ')")
+    return staged.where(F.size("ws") >= n).selectExpr(
+        "doc_id",
+        f"posexplode(transform(sequence(0, size(ws) - {n}), i -> {gram})) "
+        "AS (pos, h)",
+    )
+
+
 def duplicate_text_spans(
     documents: DataFrame, n: int = 8, min_count: int = 2
 ) -> DataFrame:
@@ -575,25 +566,7 @@ def duplicate_text_spans(
     doc_id: new island when the position gap exceeds n) -> one groupBy for
     span extents. No all-pairs anywhere; shuffle keys are gram hashes and
     doc_ids. md5-60bit grams keep the operator oracle-portable."""
-    ws = F.split(F.lower(F.col("text")), " ")
-    # documents shorter than n tokens have no grams; the filter also guards
-    # Spark's sequence(), which DESCENDS when stop < start (sequence(0,-1)
-    # is [0,-1], not empty) and would feed slice() an invalid 0 start
-    staged = (
-        documents.select("doc_id", ws.alias("ws"))
-        .where(F.size("ws") >= n)
-        .select(
-            "doc_id",
-            F.posexplode(
-                F.expr(
-                    f"transform(sequence(0, size(ws)-{n}),"
-                    f" i -> conv(substring(md5(array_join(slice(ws, i+1, {n}), ' ')),"
-                    " 1, 15), 16, 10))"
-                )
-            ).alias("pos", "h"),
-        )
-        .select("doc_id", "pos", F.col("h").cast("long").alias("h"))
-    )
+    staged = _gram_hashes(documents.select("doc_id", _words().alias("ws")), n)
     dup_hashes = (
         staged.groupBy("h")
         .agg(F.count(F.lit(1)).alias("n_occ"))
@@ -645,23 +618,8 @@ def trim_duplicate_spans(
     (enforced loudly, same policy as paragraph_duplicates); doc_id must
     fit 2^43 — document ids beyond that need a wider key."""
     pos_limit = 1 << 20
-    ws = F.split(F.lower(F.col("text")), " ")
-    staged = documents.select("doc_id", ws.alias("ws"))
-    grams = (
-        staged.where(F.size("ws") >= n)
-        .select(
-            "doc_id",
-            F.posexplode(
-                F.expr(
-                    f"transform(sequence(0, size(ws)-{n}),"
-                    f" i -> conv(substring(md5(array_join(slice(ws, i+1, {n}), ' ')),"
-                    " 1, 15), 16, 10))"
-                )
-            ).alias("pos", "h"),
-        )
-        .select("doc_id", "pos", F.col("h").cast("long").alias("h"))
-    )
-    grams = grams.where(
+    staged = documents.select("doc_id", _words().alias("ws"))
+    grams = _gram_hashes(staged, n).where(
         F.assert_true(
             F.col("pos") < pos_limit,
             "trim_duplicate_spans: document with >= 2^20 tokens breaks the "

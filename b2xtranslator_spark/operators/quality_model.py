@@ -6,9 +6,9 @@ text with a LINEAR classifier trained to separate a trusted reference
 corpus from raw crawl — rules catch boilerplate, the model catches
 "looks wrong" text no rule names. This module is that stage on Spark
 ML: featurize with the SAME row-local signals the rule filters use
-(quality_score + repetition_stats columns — pure Catalyst maps, zero
-shuffle), train `pyspark.ml.classification.LogisticRegression` on
-labeled examples, score the corpus with the fitted model's broadcast
+(textstats.row_signals columns — pure Catalyst maps, zero shuffle),
+train `pyspark.ml.classification.LogisticRegression` on labeled
+examples, score the corpus with the fitted model's broadcast
 coefficients.
 
 100 TB shape:
@@ -31,7 +31,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from .textstats import quality_score, repetition_stats
+from .textstats import row_signals
 
 __all__ = ["heuristic_labels", "quality_features", "score_quality", "train_quality_model"]
 
@@ -54,8 +54,6 @@ def quality_features(documents: DataFrame) -> DataFrame:
     doc_id joins (the old shape joined quality_score and
     repetition_stats frames, scanning the corpus per signal group for
     identical values)."""
-    from .textstats import row_signals
-
     return row_signals(documents).select(
         "doc_id",
         "alpha_ratio",

@@ -26,15 +26,31 @@ def _words(col: str = "text"):
 
 
 def _norm(col: str = "text"):
-    """Whitespace-collapsed lowercased text — the shared normalization whose
-    exact form every oracle mirror depends on (same as dedup._norm_text)."""
+    """Whitespace-collapsed lowercased text — the one normaliser of the text
+    and dedup operators, whose exact form every oracle mirror depends on."""
     return F.regexp_replace(F.lower(F.col(col)), "\\s+", " ")
 
 
 def _content_md5(col: str = "text"):
     """md5 of the normalized content — the engine-portable fingerprint used
-    by sampling, stratification and fingerprinting alike."""
+    by sampling, stratification, fingerprinting and exact dedup alike."""
     return F.md5(F.encode(_norm(col), "UTF-8"))
+
+
+def _h60_sql(expr: str, seed: int | None = None) -> str:
+    """60-bit hash of a string SQL expression: the first 15 hex digits of
+    its UTF-8 md5 as a BIGINT; with a ``seed`` the hashed value is
+    ``'<seed>|' || expr``. Portable (DuckDB: CAST(('0x' ||
+    substr(md5(v), 1, 15)) AS BIGINT)), chosen over xxhash64 so minhash,
+    SimHash, winnowing, the span operators and the sketch stay
+    oracle-checkable. A string, so a query parses it in one call instead of
+    building it through py4j one Column at a time."""
+    if seed is not None:
+        expr = f"concat('{seed}|', {expr})"
+    return (
+        f"CAST(conv(substring(md5(encode({expr}, 'UTF-8')), 1, 15), 16, 10) "
+        "AS BIGINT)"
+    )
 
 
 def _with_rle_pairs(df, sorted_col: str, out_col: str):
@@ -122,61 +138,18 @@ def token_count(documents: DataFrame) -> DataFrame:
 
 def language_id(documents: DataFrame) -> DataFrame:
     """Stopword-hit language heuristic: distinct-marker intersection counts
-    per language, argmax with deterministic tiebreak by language code."""
-    words = _words()
-    hits = {
-        lang: F.size(F.array_intersect(words, F.array(*[F.lit(w) for w in ws])))
-        for lang, ws in STOPWORDS.items()
-    }
-    # deterministic argmax: order by (hits desc, lang asc)
-    pairs = F.array(
-        *[F.struct(hits[lang].alias("hits"), F.lit(lang).alias("lang"))
-          for lang in sorted(STOPWORDS)]
-    )
-    best = F.array_sort(
-        pairs,
-        lambda a, b: F.when(a["hits"] > b["hits"], -1)
-        .when(a["hits"] < b["hits"], 1)
-        .when(a["lang"] < b["lang"], -1)
-        .when(a["lang"] > b["lang"], 1)
-        .otherwise(0),
-    )[0]
-    return documents.select(
-        "doc_id",
-        best["lang"].alias("pred_lang"),
-        best["hits"].cast("int").alias("marker_hits"),
-    )
+    per language, argmax with deterministic tiebreak by language code. A
+    projection of row_signals."""
+    return row_signals(documents).select("doc_id", "pred_lang", "marker_hits")
 
 
 def quality_score(documents: DataFrame) -> DataFrame:
     """Length / punctuation / stopword-ratio quality features + a composite
-    score; mirrors common pretraining-corpus quality filters."""
-    n_chars = F.length("text")
-    words = _words()
-    n_words = F.size(words)
-    alpha_chars = F.length(F.regexp_replace(F.col("text"), "[^a-zA-Z]", ""))
-    punct_chars = F.length(F.regexp_replace(F.col("text"), "[^.,;:!?]", ""))
-    en_stop_hits = F.size(
-        F.array_intersect(words, F.array(*[F.lit(w) for w in STOPWORDS["en"]]))
-    )
-    alpha_ratio = (alpha_chars / F.greatest(n_chars, F.lit(1))).cast("double")
-    punct_ratio = (punct_chars / F.greatest(n_chars, F.lit(1))).cast("double")
-    mean_word_len = (n_chars / F.greatest(n_words, F.lit(1))).cast("double")
-    stop_ratio = (en_stop_hits / F.lit(10.0)).cast("double")
-    score = (
-        F.lit(0.4) * alpha_ratio
-        + F.lit(0.3) * stop_ratio
-        + F.lit(0.2) * F.least(mean_word_len / F.lit(10.0), F.lit(1.0))
-        + F.lit(0.1) * (F.lit(1.0) - F.least(punct_ratio * 10, F.lit(1.0)))
-    ).cast("double")
-    return documents.select(
-        "doc_id",
-        n_chars.alias("n_chars_m"),
-        n_words.alias("n_words"),
-        F.round(alpha_ratio, 6).alias("alpha_ratio"),
-        F.round(punct_ratio, 6).alias("punct_ratio"),
-        F.round(mean_word_len, 6).alias("mean_word_len"),
-        F.round(score, 6).alias("quality"),
+    score; mirrors common pretraining-corpus quality filters. A projection
+    of row_signals."""
+    return row_signals(documents).select(
+        "doc_id", "n_chars_m", "n_words", "alpha_ratio", "punct_ratio",
+        "mean_word_len", "quality",
     )
 
 
@@ -234,21 +207,14 @@ def winnowing_fingerprints(
     docs = documents
     if max_docs is not None:
         docs = docs.where(F.col("doc_id") < max_docs)
-    # stage the normalized text: gram_hash's lambda substr-indexes it per
-    # gram, and an unbound regexp_replace subtree would re-normalize the
+    # stage the normalized text: the gram-hash lambda substr-indexes it
+    # per gram, and an unbound regexp_replace subtree would re-normalize the
     # whole document once per character (the O(n^2) lambda trap)
     staged = docs.select("doc_id", _norm().alias("_t"))
-    norm = F.col("_t")
-    starts = F.sequence(
-        F.lit(1), F.greatest(F.length(norm) - (k - 1), F.lit(1))
-    )
-    gram_hash = lambda i: F.conv(  # noqa: E731
-        F.substring(F.md5(F.encode(norm.substr(i, F.lit(k)), "UTF-8")), 1, 15),
-        16,
-        10,
-    ).cast("long")
-    hashed = staged.select(
-        "doc_id", F.transform(starts, gram_hash).alias("hs")
+    hashed = staged.selectExpr(
+        "doc_id",
+        f"transform(sequence(1, greatest(length(_t) - {k - 1}, 1)), "
+        f"i -> {_h60_sql(f'substr(_t, i, {k})')}) AS hs",
     )
     # window minima: min(hs[p .. p+window-1]), end-clipped like ROWS BETWEEN
     # CURRENT ROW AND window-1 FOLLOWING (F.slice clips at the array end)
@@ -372,58 +338,13 @@ def repetition_stats(documents: DataFrame) -> DataFrame:
     High values mark boilerplate/spam documents every pretraining corpus
     filter drops.
 
-    Plan shape: a PURE MAP — lines, words and bigrams are row-local array
-    ops (split / zip_with / run-length via _with_rle_pairs), so the operator
-    one projection inside whole-stage codegen with ZERO shuffle at any
-    corpus size. The DuckDB oracle states the same statistics through the
-    independent unnest + GROUP BY formulation."""
-    lines = F.filter(
-        # NOT F.transform(..., F.trim): transform passes (elem, idx) to any
-        # binary callable, and trim's optional second param is the trim
-        # STRING — the index would silently become trim characters
-        F.transform(F.split(F.col("text"), "\n"), lambda x: F.trim(x)),
-        lambda x: x != F.lit(""),
-    )
-    ws = _words()
-    n_tokens = F.size(ws)
-    # bigrams in occurrence order: zip tokens with their successors
-    bigrams = F.zip_with(
-        F.slice(ws, 1, F.greatest(n_tokens - 1, F.lit(0))),
-        F.slice(
-            ws, 2, F.greatest(n_tokens - 1, F.lit(0))
-        ),
-        lambda a, b: F.concat(a, F.lit(" "), b),
-    )
-    # STAGE the sorted arrays as bound columns before the run-length fold:
-    # an unbound array_sort subtree would re-sort per element (the O(n^2)
-    # trap); the max-run itself is one fold per array (_max_run)
-    staged = documents.select(
-        "doc_id",
-        lines.alias("_lines"),
-        n_tokens.alias("_n_tokens"),
-        F.array_sort(ws).alias("_sw"),
-        F.array_sort(bigrams).alias("_sb"),
-    )
-    n_lines = F.size(F.col("_lines"))
-    dup_line_frac = F.when(
-        n_lines > F.lit(0),
-        F.lit(1.0) - F.size(F.array_distinct(F.col("_lines"))) / n_lines,
-    ).otherwise(F.lit(0.0)).cast("double")
-    denom = F.greatest(F.col("_n_tokens"), F.lit(1))
-    top_word_frac = (_max_run(F.col("_sw")) / denom).cast("double")
-    # overlapping occurrences ('a a a a a': 4 x 'a a' over 5 tokens) can push
-    # 2*count past the token total — clamp to keep the documented [0, 1]
-    # "fraction of tokens covered" contract on degenerate repetition
-    top_bigram_frac = F.least(
-        (F.lit(2) * _max_run(F.col("_sb")) / denom).cast("double"),
-        F.lit(1.0),
-    )
-    return staged.select(
-        "doc_id",
-        n_lines.alias("n_lines"),
-        F.round(dup_line_frac, 6).alias("dup_line_frac"),
-        F.round(top_word_frac, 6).alias("top_word_frac"),
-        F.round(top_bigram_frac, 6).alias("top_bigram_frac"),
+    A projection of row_signals, so a PURE MAP: lines, words and bigrams
+    are row-local array ops with ZERO shuffle at any corpus size. The
+    DuckDB oracle states the same statistics through the independent
+    unnest + GROUP BY formulation."""
+    return row_signals(documents).select(
+        "doc_id", "n_lines", "dup_line_frac", "top_word_frac",
+        "top_bigram_frac",
     )
 
 
@@ -563,18 +484,23 @@ def _row_signal_cols():
     if _ROW_SIGNAL_COLS is not None:
         return _ROW_SIGNAL_COLS
     lines = F.filter(
+        # NOT F.transform(..., F.trim): transform passes (elem, idx) to any
+        # binary callable, and trim's optional second param is the trim
+        # STRING — the index would silently become trim characters
         F.transform(F.split(F.col("text"), "\n"), lambda x: F.trim(x)),
         lambda x: x != F.lit(""),
     )
     ws = _words()
     n_tokens = F.size(ws)
+    # bigrams in occurrence order: zip tokens with their successors
     bigrams = F.zip_with(
         F.slice(ws, 1, F.greatest(n_tokens - 1, F.lit(0))),
         F.slice(ws, 2, F.greatest(n_tokens - 1, F.lit(0))),
         lambda a, b: F.concat(a, F.lit(" "), b),
     )
-    # stage every reused array ONCE (the bound-column discipline of
-    # repetition_stats: unbound sorts/filters re-evaluate per element)
+    # stage every reused array ONCE as a bound column: an unbound
+    # array_sort subtree would re-sort per element (the O(n^2) trap); the
+    # max-run itself is one fold per array (_max_run)
     stage1 = [
         F.col("doc_id"),
         F.col("text"),
@@ -612,6 +538,9 @@ def _row_signal_cols():
     ).otherwise(F.lit(0.0)).cast("double")
     denom = F.greatest(F.col("_n_tokens"), F.lit(1))
     top_word_frac = (_max_run(F.col("_sw")) / denom).cast("double")
+    # overlapping occurrences ('a a a a a': 4 x 'a a' over 5 tokens) can push
+    # 2*count past the token total — clamp to keep the documented [0, 1]
+    # "fraction of tokens covered" contract on degenerate repetition
     top_bigram_frac = F.least(
         (F.lit(2) * _max_run(F.col("_sb")) / denom).cast("double"),
         F.lit(1.0),
@@ -621,6 +550,7 @@ def _row_signal_cols():
         lang: F.size(F.array_intersect(words, F.array(*[F.lit(w) for w in wl])))
         for lang, wl in STOPWORDS.items()
     }
+    # deterministic argmax: order by (hits desc, lang asc)
     pairs = F.array(
         *[F.struct(hits[lang].alias("hits"), F.lit(lang).alias("lang"))
           for lang in sorted(STOPWORDS)]
@@ -663,9 +593,10 @@ def row_signals(documents: DataFrame) -> DataFrame:
     mean_word_len, quality (the quality_score block), n_lines,
     dup_line_frac, top_word_frac, top_bigram_frac (the repetition_stats
     block), pred_lang, marker_hits (the language_id block), fp (the
-    content fingerprint) and log_n_chars — every value IDENTICAL to the
-    standalone operator's output (the expressions are the same; only the
-    doc_id joins between them are gone). Zero shuffle: consumers that need
+    content fingerprint) and log_n_chars. quality_score, repetition_stats
+    and language_id are projections of it, so each signal has one
+    definition; Catalyst prunes the columns a projection does not read.
+    Zero shuffle: consumers that need
     cross-document state (the exact-dup keeper, the corpus aggregate) add
     exactly one exchange of these small fixed-width rows instead of
     re-scanning the corpus per signal. The chained projections collapse
@@ -788,8 +719,6 @@ def top_tokens_sketch(
     tokens live inside its own row, so its top-per_doc_k is computed with
     array ops in the projection, no (doc_id, token) shuffle; only the
     (small) distinct candidate set and the k-row result move."""
-    from .dedup import _h60_sql
-
     words = _words()
     tok = documents.select(F.explode(words).alias("w")).where(
         F.length("w") >= min_len

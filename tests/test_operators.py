@@ -559,10 +559,16 @@ def test_top_tokens_sketch_run_length_edges(spark):
 def test_repetition_stats_flags_boilerplate(spark):
     """Gopher repetition signals: planted boilerplate (repeated lines /
     words / bigrams) scores high, clean prose scores low, degenerate rows
-    are harmless."""
-    from b2xtranslator_spark.operators.textstats import repetition_stats
+    are harmless. The NULL and empty text rows also pin the values of the
+    quality_score and language_id signals, which no oracle corpus holds."""
+    from b2xtranslator_spark.operators.textstats import (
+        language_id,
+        quality_score,
+        repetition_stats,
+    )
 
     rows = [
+        (0, None, "en", "s", 1),
         (1, "buy now\nbuy now\nbuy now\nunique line", "en", "s", 1),
         (2, "the quick brown fox jumps over a lazy dog", "en", "s", 1),
         (3, "spam spam spam spam ham", "en", "s", 1),
@@ -581,6 +587,15 @@ def test_repetition_stats_flags_boilerplate(spark):
     # "click here" appears 3x of 6 tokens -> 2*3/6
     assert out[4]["top_bigram_frac"] == 1.0
     assert out[5]["n_lines"] == 0 and out[5]["dup_line_frac"] == 0.0
+    assert tuple(out[0])[1:] == (None, 0.0, 0.0, 0.0)
+    assert tuple(out[5])[1:] == (0, 0.0, 1.0, 0.0)
+    # split("", " ") is [""]: one empty word
+    quality = {r["doc_id"]: tuple(r)[1:] for r in quality_score(docs).collect()}
+    assert quality[0] == (None,) * 6
+    assert quality[5] == (0, 1, 0.0, 0.0, 0.0, 0.1)
+    lang = {r["doc_id"]: tuple(r)[1:] for r in language_id(docs).collect()}
+    assert lang[0] == ("de", None)
+    assert lang[5] == ("de", 0)
     # degenerate overlap ('a a a a a': 4 overlapping 'a a' over 5 tokens)
     # must clamp at 1.0, not read 1.6
     extra = spark.createDataFrame(
@@ -1341,11 +1356,8 @@ def test_round6_sql_rewrites_match_column_api_formulations(spark):
     random.seed(42)
 
     # simhash: one parsed expression vs the 60-agg column build
-    from b2xtranslator_spark.operators.dedup import (
-        _norm_text,
-        _token_hash60,
-        simhash,
-    )
+    from b2xtranslator_spark.operators.dedup import simhash
+    from b2xtranslator_spark.operators.textstats import _h60_sql, _norm
 
     words = ["the", "café", "東京", "naïve", "zz"] + [f"w{i}" for i in range(50)]
     rows = [
@@ -1355,9 +1367,9 @@ def test_round6_sql_rewrites_match_column_api_formulations(spark):
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     bits = 60
     tok = docs.select(
-        "doc_id", F.explode(F.split(_norm_text(), " ")).alias("w")
+        "doc_id", F.explode(F.split(_norm(), " ")).alias("w")
     ).where(F.length("w") > 0)
-    h = _token_hash60(F.col("w"))
+    h = F.expr(_h60_sql("w"))
     votes = [
         F.sum(
             F.when(F.shiftright(h, b).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)

@@ -302,6 +302,27 @@ def test_budget_applies_to_pdf():
     assert res2.status == "ok" and res2.text == "after"
 
 
+def test_nul_flate_stream_is_skipped_within_budget():
+    """A ~65 KB PDF whose one /FlateDecode content stream inflates to 64 MB
+    of NUL bytes, which PDF reads as whitespace: the whitespace skip must
+    not walk them one Python step per byte, or the 1 s budget is overrun
+    several times over. A seeded word follows the NUL run."""
+    import time
+
+    import numpy as np
+
+    rng = np.random.default_rng(1101)
+    word = bytes(rng.integers(ord("a"), ord("z") + 1, 12).astype(np.uint8))
+    pdf = _one_page(b"\0" * (64 << 20) + b"BT (" + word + b") Tj ET", flate=True)
+    assert len(pdf) < 100_000
+    t0 = time.perf_counter()
+    res = extract_payload_text(pdf, budget_seconds=1)
+    assert time.perf_counter() - t0 < 3
+    assert res.status in ("ok", "timeout")
+    if res.status == "ok":
+        assert res.text == word.decode()
+
+
 def test_cycle_in_page_tree_terminates():
     pdf = _pdf(
         {

@@ -292,9 +292,8 @@ def test_every_module_is_reachable():
     """Every module of the package is imported, directly or transitively,
     by a product entry point: a module only its own tests import is dead
     code. Pure ``ast`` walk of absolute and relative imports (function-level
-    imports included); no Spark. ``sources/archives.py`` is a named root
-    because it is the documented archive reader and no entry point imports
-    it. Empty ``__init__.py`` files are exempt."""
+    imports included); no Spark. The roots are the entry points only.
+    Empty ``__init__.py`` files are exempt."""
     import ast
     from pathlib import Path
 
@@ -311,7 +310,6 @@ def test_every_module_is_reachable():
         pkg / "pipeline.py",
         repo / "__spark_entry__.py",
         repo / "scripts" / "job.py",
-        pkg / "sources" / "archives.py",
     ]
 
     def imported(path):
