@@ -151,22 +151,17 @@ def extract_payload_text(
     Never raises on payload content: per-document failure tolerance is a
     row-level contract (reference: per-file try/catch in
     Shell/doc2text/Program.cs:56-100 — at corpus scale one hostile document
-    must not fail a task). Documents over ``budget.MAX_PAYLOAD_BYTES`` are
-    ``status='oversize'`` rather than risking executor memory; documents
-    exceeding ``budget_seconds`` of decode wall time return
-    ``status='timeout'`` rather than stalling the partition (SURVEY.md §7:
-    hard timeouts/size caps per document)."""
-    if len(payload) > budget.MAX_PAYLOAD_BYTES:
-        return ExtractResult(
-            status="oversize",
-            error=budget.oversize_error(len(payload)),
-            metrics={"bytes_decoded": 0, "wall_ms": 0},
-        )
+    must not fail a task). Documents whose payload and inflated bytes pass
+    ``budget.MAX_PAYLOAD_BYTES`` are ``status='oversize'`` rather than
+    risking executor memory; documents exceeding ``budget_seconds`` of
+    decode wall time return ``status='timeout'`` rather than stalling the
+    partition (SURVEY.md §7: hard timeouts/size caps per document)."""
     t0 = time.perf_counter()
     res = ExtractResult()
     set_deadline(budget_seconds)
     try:
-        # single-document gzip unwraps transparently (bounded) so
+        budget.charge(len(payload))
+        # single-document gzip/bz2/xz unwraps transparently so
         # page.html.gz / notes.txt.gz dispatch like their plain twins
         payload = maybe_gunzip(payload)
         for kind, sniff, extract in _FORMATS:
@@ -183,8 +178,8 @@ def extract_payload_text(
     except _Unsupported as exc:
         res.status = "unsupported"
         res.error = str(exc)
-    except DocumentTimeout as exc:
-        res.status = "timeout"
+    except (DocumentTimeout, budget.PayloadOversize) as exc:
+        res.status = "timeout" if isinstance(exc, DocumentTimeout) else "oversize"
         res.error = str(exc)
     except Exception as exc:  # noqa: BLE001 — row-level tolerance by design
         msg = str(exc)

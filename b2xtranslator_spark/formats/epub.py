@@ -2,7 +2,7 @@
 
 Books are a core LLM-training-data source; EPUB is just a zip of XHTML
 chapters plus an OPF manifest, so this leg is thin plumbing over two
-existing kernels: the ooxml leg's defensive zip reads (size caps,
+existing kernels: the ooxml leg's defensive zip reads (budget-charged,
 per-part degradation, deadline ticks) and the markup leg's HTML text
 fold (formats/markup.py — same block conventions, link anchors, and
 entity handling as the oracle-checked html path).

@@ -19,6 +19,8 @@ import zlib
 
 import numpy as np
 
+from .. import budget
+
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 
 
@@ -121,8 +123,8 @@ def decode_png(data: bytes) -> np.ndarray:
             break
     if width is None or not idat:
         raise ValueError("missing IHDR/IDAT")
-    raw = zlib.decompress(bytes(idat))
     stride = width * channels
+    raw = budget.inflate(zlib.decompressobj(), bytes(idat), limit=height * (stride + 1))
     if len(raw) < height * (stride + 1):
         raise ValueError("truncated PNG data")
     out = np.zeros((height, width, channels), dtype=np.uint8)

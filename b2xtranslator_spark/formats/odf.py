@@ -10,7 +10,7 @@ formatter): a user switching from the reference loses nothing and gains
 the ODF formats.
 
 Pure stdlib (zipfile + xml.etree) with the ooxml leg's defensive
-plumbing reused outright: size-capped member reads, per-part parse
+plumbing reused outright: budget-charged member reads, per-part parse
 degradation, deadline checks every N elements. Deleted tracked changes
 live OUTSIDE the body in ODF (<text:tracked-changes>), so skipping that
 subtree gives the same deleted-run filter semantics as the legacy P7
@@ -29,7 +29,7 @@ import io
 import zipfile
 
 from ..budget import check_deadline
-from .ooxml import _MEMBER_CAP, _parse_xml, _read_member, _tiled_spans
+from .ooxml import _parse_xml, _read_member, _tiled_spans
 from .xls import _fmt_number
 
 __all__ = [

@@ -12,8 +12,8 @@ the modern formats.
 Pure stdlib (zipfile + zlib + xml.etree, whose expat carries the
 billion-laughs amplification guards), defensive by construction:
 
-- zip member reads are SIZE-CAPPED (decompressed) so a zip bomb cannot
-  balloon an executor;
+- zip member reads charge the decode budget (``budget.inflate``), so a
+  zip bomb, one member or many, is an ``oversize`` row;
 - XML parse failures, missing members, and malformed relationships
   degrade per-part, never raise out of the extractor;
 - the per-document deadline is checked between parts and every N
@@ -30,7 +30,7 @@ import re
 import zipfile
 from xml.etree import ElementTree as ET
 
-from ..budget import check_deadline
+from ..budget import check_deadline, inflate
 from .xls import _fmt_number
 
 __all__ = [
@@ -48,10 +48,6 @@ _S = "{http://schemas.openxmlformats.org/spreadsheetml/2006/main}"
 _REL = "{http://schemas.openxmlformats.org/package/2006/relationships}"
 _MC = "{http://schemas.openxmlformats.org/markup-compatibility/2006}"
 
-# per-member decompressed cap: no single XML part of a real document
-# approaches this; a zip bomb does
-_MEMBER_CAP = 64 << 20
-
 
 def looks_like_ooxml(payload: bytes) -> bool:
     return payload[:4] == b"PK\x03\x04"
@@ -63,10 +59,7 @@ def _read_member(zf: zipfile.ZipFile, name: str) -> bytes | None:
     except KeyError:
         return None
     with zf.open(info) as f:
-        data = f.read(_MEMBER_CAP + 1)
-    if len(data) > _MEMBER_CAP:
-        raise ValueError(f"zip member {name} exceeds the decompressed cap")
-    return data
+        return inflate(f)
 
 
 def _parse_xml(data: bytes) -> ET.Element | None:

@@ -2,7 +2,8 @@
 
 Pure stdlib ([ISO 32000-1] object syntax + zlib FlateDecode), built for the
 same per-document batch kernel as the CFB and markup paths: deterministic,
-never raises (callers get row-level status), deadline-bounded.
+never raises (callers get row-level status), deadline-bounded; the Flate,
+LZW and RunLength filters charge their output to the decode budget.
 
 Structure mirrors the CFB reader's philosophy (spec-driven parse with
 defensive relaxations for corrupt files, formats/cfb.py):
@@ -54,7 +55,7 @@ from __future__ import annotations
 import re
 import zlib
 
-from ..budget import check_deadline
+from ..budget import charge, check_deadline, inflate
 
 __all__ = ["extract_pdf_text", "PDF_MAGIC"]
 
@@ -62,7 +63,6 @@ PDF_MAGIC = b"%PDF-"
 TJ_SPACE_KERN = -180  # thousandths of an em; gaps wider than this are spaces
 
 _WS = b"\x00\t\n\x0c\r "
-_DELIM = b"()<>[]{}/%"
 _OBJ_RE = re.compile(rb"(\d{1,10})\s+(\d{1,5})\s+obj\b")
 _TRAILER_RE = re.compile(rb"trailer\b")
 _ESCAPES = {
@@ -95,71 +95,56 @@ def _skip_ws(buf: bytes, pos: int) -> int:
     return max(pos, _WS_RE.match(buf, pos).end())
 
 
+# literal-string tokens: a run of ordinary bytes, an escape, a CR(LF), a paren
+_LIT_TOKEN_RE = re.compile(rb"[^\\()\r]+|\\([0-7]{1,3}|\r\n?|[\s\S])?|\r\n?|[()]")
+
+
 def _parse_literal_string(buf: bytes, pos: int) -> tuple[bytes, int]:
-    """pos is after '('. Nested parens balance; escapes per 7.3.4.2."""
+    """pos is after '('. Nested parens balance; escapes per 7.3.4.2.
+    Ordinary bytes are copied a run at a time: an inflated stream can hold
+    one string of many megabytes."""
     out = bytearray()
     depth = 1
-    n = len(buf)
-    while pos < n:
-        c = buf[pos]
-        if c == 0x5C:  # backslash
-            pos += 1
-            if pos >= n:
+    for m in _LIT_TOKEN_RE.finditer(buf, pos):
+        tok, e = m.group(), m.group(1)
+        if tok[0] == 0x5C:  # backslash
+            if e is None:
                 break
-            e = buf[pos]
-            if e in _ESCAPES:
-                out += _ESCAPES[e].encode("latin-1")
-                pos += 1
-            elif 0x30 <= e <= 0x37:  # octal \ddd (1-3 digits)
-                oct_digits = bytearray([e])
-                pos += 1
-                while pos < n and len(oct_digits) < 3 and 0x30 <= buf[pos] <= 0x37:
-                    oct_digits.append(buf[pos])
-                    pos += 1
-                out.append(int(oct_digits.decode(), 8) & 0xFF)
-            elif e in (0x0A, 0x0D):  # line continuation
-                pos += 1
-                if e == 0x0D and pos < n and buf[pos] == 0x0A:
-                    pos += 1
-            else:  # unknown escape: drop the backslash
-                out.append(e)
-                pos += 1
-            continue
-        if c == 0x28:
+            if e[0] in _ESCAPES:
+                out += _ESCAPES[e[0]].encode("latin-1")
+            elif e[0] in b"01234567":  # octal \ddd (1-3 digits)
+                out.append(int(e, 8) & 0xFF)
+            elif e[0] not in b"\r\n":  # unknown escape: drop the backslash
+                out += e  # (an escaped end of line is a continuation)
+        elif tok == b"(":
             depth += 1
-        elif c == 0x29:
+            out += tok
+        elif tok == b")":
             depth -= 1
             if depth == 0:
-                return bytes(out), pos + 1
-        elif c == 0x0D:  # EOL inside string normalizes to \n (7.3.4.2)
+                return bytes(out), m.end()
+            out += tok
+        elif tok[0] == 0x0D:  # EOL inside string normalizes to \n (7.3.4.2)
             out.append(0x0A)
-            pos += 1
-            if pos < n and buf[pos] == 0x0A:
-                pos += 1
-            continue
-        out.append(c)
-        pos += 1
-    return bytes(out), pos  # unterminated: best-effort
+        else:
+            out += tok
+    return bytes(out), len(buf)  # unterminated: best-effort
 
 
 def _parse_hex_string(buf: bytes, pos: int) -> tuple[bytes, int]:
     e = buf.find(b">", pos)
     if e < 0:
         e = len(buf)
-    digits = re.sub(rb"[^0-9A-Fa-f]", b"", buf[pos:e])
-    if len(digits) % 2:
-        digits += b"0"
-    return bytes.fromhex(digits.decode("ascii")), min(e + 1, len(buf))
+    return _ascii_hex_decode(buf[pos:e]), min(e + 1, len(buf))
 
 
-_NAME_STOP = _WS + _DELIM
+# a name runs to the first whitespace or delimiter byte
+_NAME_RE = re.compile(rb"[^\x00\t\n\x0c\r ()<>\[\]{}/%]*")
 
 
 def _parse_name(buf: bytes, pos: int) -> tuple[str, int]:
     start = pos
-    n = len(buf)
-    while pos < n and buf[pos] not in _NAME_STOP:
-        pos += 1
+    pos = _NAME_RE.match(buf, pos).end()
     raw = buf[start:pos]
     # #xx hex escapes in names
     raw = re.sub(rb"#([0-9A-Fa-f]{2})", lambda m: bytes([int(m.group(1), 16)]), raw)
@@ -310,6 +295,7 @@ def _lzw_decode(data: bytes, early_change: int = 1) -> bytes:
             else:
                 return bytes(out)  # corrupt code: keep the prefix
             table.append(prev + entry[:1])
+            charge(len(entry))
             out += entry
             prev = entry
             if len(table) + early_change >= (1 << width) and width < 12:
@@ -386,12 +372,13 @@ def _run_length_decode(data: bytes) -> bytes:
         if ln == 128:
             break
         if ln < 128:
-            out += data[pos : pos + ln + 1]
+            run = data[pos : pos + ln + 1]
             pos += ln + 1
-        else:
-            if pos < n:
-                out += data[pos : pos + 1] * (257 - ln)
-                pos += 1
+        else:  # a repeat (empty when the data ends here)
+            run = data[pos : pos + 1] * (257 - ln)
+            pos += 1
+        charge(len(run))
+        out += run
     return bytes(out)
 
 
@@ -534,13 +521,11 @@ class _Document:
             name = self.resolve(f)
             parm = self.resolve(parms_list[i]) if i < len(parms_list) else None
             if name == "/FlateDecode":
+                # a truncated deflate yields its prefix (salvage)
                 try:
-                    data = zlib.decompress(data)
+                    data = inflate(zlib.decompressobj(), data)
                 except zlib.error:
-                    try:  # truncated deflate: salvage the prefix
-                        data = zlib.decompressobj().decompress(data)
-                    except zlib.error:
-                        return b""
+                    return b""
                 data = self._maybe_unpredict(data, parm)
             elif name == "/ASCIIHexDecode":
                 data = _ascii_hex_decode(data)

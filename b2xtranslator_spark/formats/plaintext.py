@@ -14,16 +14,19 @@ kernels close that gap:
   UTF-8 (or carries a text BOM) with a minimum letter ratio, so binary
   garbage keeps flowing to the CFB magic error path the hostile-input
   contract depends on.
-- `maybe_gunzip`: single-document gzip (magic 1f 8b) transparently
-  unwrapped, size-capped, before dispatch — `page.html.gz` and
+- `maybe_gunzip`: single-document gzip/bzip2/xz transparently unwrapped,
+  charged to the decode budget, before dispatch — `page.html.gz` and
   `notes.txt.gz` extract like their uncompressed twins. One level only
   (a .gz inside a .gz is hostile, not a corpus).
 """
 
 from __future__ import annotations
 
+import bz2
 import codecs
 import gzip
+import io
+import lzma
 import zlib
 
 from .. import budget
@@ -33,41 +36,30 @@ __all__ = ["extract_text_parts", "looks_like_text", "maybe_gunzip"]
 _MIN_LETTER_RATIO = 0.30
 
 
+# magic -> (reader, data) for budget.inflate: GzipFile joins every member
+# as gunzip does; bz2 and xz decode their first stream only
+_CODECS = (
+    (b"\x1f\x8b", lambda p: (gzip.GzipFile(fileobj=io.BytesIO(p)), None)),
+    (b"BZh", lambda p: (bz2.BZ2Decompressor(), p)),
+    (b"\xfd7zXZ\x00", lambda p: (lzma.LZMADecompressor(), p)),
+)
+
+
 def maybe_gunzip(payload: bytes) -> bytes:
     """payload, decompressed once if wrapped in a stdlib-supported
-    compression container — gzip (1f 8b), bzip2 (BZh), or xz (FD 37 7A
-    58 5A 00) — bounded by the decompressed cap; the original bytes on
-    any decode failure (the CFB error path then reports). One level
-    only: a compressed file inside a compressed file is hostile, not a
-    corpus."""
-    cap = budget.MAX_PAYLOAD_BYTES
-    if payload[:2] == b"\x1f\x8b":
-        try:
-            with gzip.GzipFile(fileobj=__import__("io").BytesIO(payload)) as gz:
-                data = gz.read(cap + 1)
-        except (OSError, EOFError, zlib.error):
-            return payload
-    elif payload[:3] == b"BZh" and len(payload) > 10:
-        import bz2
-
-        dec = bz2.BZ2Decompressor()
-        try:
-            data = dec.decompress(payload, cap + 1)
-        except OSError:
-            return payload
-    elif payload[:6] == b"\xfd7zXZ\x00":
-        import lzma
-
-        dec = lzma.LZMADecompressor()
-        try:
-            data = dec.decompress(payload, cap + 1)
-        except lzma.LZMAError:
-            return payload
-    else:
-        return payload
-    if len(data) > cap:
-        raise ValueError(f"compressed payload exceeds the decompressed cap ({cap} bytes)")
-    return data if data else payload
+    compression container (gzip, bzip2 or xz), charged to the document's
+    decoded-byte allowance (past it, ``budget.PayloadOversize``); the
+    original bytes on any decode failure (the CFB error path then
+    reports). One level only: a compressed file inside a compressed file
+    is hostile, not a corpus."""
+    for magic, open_reader in _CODECS:
+        if payload.startswith(magic):
+            try:
+                data = budget.inflate(*open_reader(payload))
+            except (OSError, EOFError, zlib.error, lzma.LZMAError):
+                return payload
+            return data if data else payload
+    return payload
 
 
 def looks_like_text(payload: bytes) -> bool:

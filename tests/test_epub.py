@@ -163,3 +163,11 @@ def test_url_encoded_href_resolves():
         zf.writestr("OEBPS/ch 0.xhtml", "<html><body><p>spaced name</p></body></html>")
     text, _, _ = extract_epub_parts(buf.getvalue())
     assert text == "spaced name"
+
+
+def test_chapters_summing_past_budget_are_oversize(decode_bomb):
+    """Eight 8 MB chapters: each is under a 16 MB decode budget, their sum
+    is four times it. The budget is per document, not per member."""
+    r = decode_bomb(make_epub([" " * (8 << 20)] * 8))
+    assert r["status"] == "oversize", r
+    assert r["s"] < 10 and r["rss_mb"] < 48, r

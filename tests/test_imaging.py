@@ -57,6 +57,30 @@ def test_corrupt_inputs_raise_not_crash():
             decode_image(bad)
 
 
+def test_idat_bomb_is_oversize(decode_bomb):
+    """A PNG whose IHDR declares 4096 x 4096 RGB (48 MB) and whose IDAT
+    inflates to 64 MB, against a 16 MB decode budget: decode_image raises
+    PayloadOversize (a ``decode_error`` row in the media kernels)."""
+    import struct
+    import zlib
+
+    def chunk(tag, body):
+        crc = struct.pack(">I", zlib.crc32(tag + body))
+        return struct.pack(">I", len(body)) + tag + body + crc
+
+    z = zlib.compressobj()
+    idat = b"".join(z.compress(b"\0" * (1 << 20)) for _ in range(64)) + z.flush()
+    png = (
+        b"\x89PNG\r\n\x1a\n"
+        + chunk(b"IHDR", struct.pack(">IIBBBBB", 4096, 4096, 8, 2, 0, 0, 0))
+        + chunk(b"IDAT", idat)
+        + chunk(b"IEND", b"")
+    )
+    r = decode_bomb(png, image=True)
+    assert r["status"] == "PayloadOversize", r
+    assert r["s"] < 10 and r["rss_mb"] < 48, r
+
+
 def test_mean_pool_shapes():
     img = np.random.RandomState(0).randint(0, 256, (33, 17, 3)).astype(np.uint8)
     assert mean_pool(img, 4, 4).shape == (4, 4, 3)

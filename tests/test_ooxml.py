@@ -243,10 +243,10 @@ def test_hostile_zip_and_xml_never_raise():
 def test_zip_bomb_member_is_rejected():
     # a single member that decompresses far beyond the cap must be refused,
     # not ballooned
-    import b2xtranslator_spark.formats.ooxml as ox
+    from b2xtranslator_spark import budget
 
-    old = ox._MEMBER_CAP
-    ox._MEMBER_CAP = 1 << 20
+    old = budget.MAX_PAYLOAD_BYTES
+    budget.MAX_PAYLOAD_BYTES = 1 << 20
     try:
         big = _zip(
             {
@@ -255,10 +255,10 @@ def test_zip_bomb_member_is_rejected():
             }
         )
         res = extract_payload_text(big)
-        assert res.status == "parse_error"
+        assert res.status == "oversize"
         assert "cap" in (res.error or "")
     finally:
-        ox._MEMBER_CAP = old
+        budget.MAX_PAYLOAD_BYTES = old
 
 
 def test_pipeline_ooxml_end_to_end(spark):

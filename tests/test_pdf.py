@@ -303,24 +303,53 @@ def test_budget_applies_to_pdf():
 
 
 def test_nul_flate_stream_is_skipped_within_budget():
-    """A ~65 KB PDF whose one /FlateDecode content stream inflates to 64 MB
-    of NUL bytes, which PDF reads as whitespace: the whitespace skip must
-    not walk them one Python step per byte, or the 1 s budget is overrun
-    several times over. A seeded word follows the NUL run."""
+    """Small PDFs whose one /FlateDecode content stream inflates to 64 MB
+    of NUL bytes (which PDF reads as whitespace), to a 128 MB name, or to a
+    64 MB literal string: the whitespace skip, the name scan and the string
+    copy must not walk them one Python step per byte, or the 1 s budget is
+    overrun several times over. A seeded word follows the NUL run."""
     import time
 
     import numpy as np
 
     rng = np.random.default_rng(1101)
     word = bytes(rng.integers(ord("a"), ord("z") + 1, 12).astype(np.uint8))
-    pdf = _one_page(b"\0" * (64 << 20) + b"BT (" + word + b") Tj ET", flate=True)
-    assert len(pdf) < 100_000
-    t0 = time.perf_counter()
-    res = extract_payload_text(pdf, budget_seconds=1)
-    assert time.perf_counter() - t0 < 3
-    assert res.status in ("ok", "timeout")
-    if res.status == "ok":
-        assert res.text == word.decode()
+    run = b"a" * (64 << 20)
+    cases = (  # (content stream, its text), built one at a time
+        lambda: (b"\0" * (64 << 20) + b"BT (" + word + b") Tj ET", word),
+        lambda: (b"BT /" + run + run, b""),
+        lambda: (b"BT (" + run + b") Tj ET", run),
+    )
+    for case in cases:
+        ops, text = case()
+        pdf, head = _one_page(ops, flate=True), ops[:4]
+        del ops
+        assert len(pdf) < 300_000
+        t0 = time.perf_counter()
+        res = extract_payload_text(pdf, budget_seconds=1)
+        assert time.perf_counter() - t0 < 3, head
+        assert res.status in ("ok", "timeout")
+        if res.status == "ok":
+            assert res.text == text.decode()
+
+
+def test_flate_bomb_is_oversize(decode_bomb):
+    """A one-page PDF whose content stream inflates to 64 MB, four times a
+    16 MB decode budget: the inflate stops one byte past the budget."""
+    z = zlib.compressobj()
+    data = b"".join(z.compress(b"\0" * (1 << 20)) for _ in range(64)) + z.flush()
+    head = b"<</Length %d/Filter/FlateDecode>>stream\n" % len(data)
+    pdf = _pdf(
+        {
+            1: b"<</Type/Catalog/Pages 2 0 R>>",
+            2: b"<</Type/Pages/Kids[3 0 R]/Count 1>>",
+            3: b"<</Type/Page/Parent 2 0 R/Contents 4 0 R>>",
+            4: head + data + b"\nendstream",
+        }
+    )
+    r = decode_bomb(pdf)
+    assert r["status"] == "oversize", r
+    assert r["s"] < 10 and r["rss_mb"] < 48, r
 
 
 def test_cycle_in_page_tree_terminates():

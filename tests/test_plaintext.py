@@ -5,6 +5,8 @@ from __future__ import annotations
 import codecs
 import gzip
 
+import pytest
+
 from b2xtranslator_spark.extractors import extract_payload_text
 from b2xtranslator_spark.formats.plaintext import (
     extract_text_parts,
@@ -56,11 +58,18 @@ def test_gzip_unwraps_html_and_text():
     res = extract_payload_text(gzip.compress("plain notes café\n".encode()))
     assert res.status == "ok" and res.kind == "text"
     assert res.text == "plain notes café"
+    # members join and zero padding is skipped, as gunzip does
+    two = gzip.compress(b"first\n") + gzip.compress(b"second\n") + b"\0" * 8
+    assert maybe_gunzip(two) == b"first\nsecond\n"
 
 
 def test_gzip_corrupt_falls_through_to_error_path():
     bad = b"\x1f\x8b" + b"\x00" * 60
     assert maybe_gunzip(bad) == bad
+    # a gzip missing its trailer, or followed by garbage, is not unwrapped
+    whole = gzip.compress(b"notes " * 50)
+    for bad2 in (whole[:-6], whole + b"junk"):
+        assert maybe_gunzip(bad2) == bad2
     res = extract_payload_text(bad)
     assert res.status in ("parse_error", "unsupported")
 
@@ -72,10 +81,29 @@ def test_gzip_bomb_is_rejected():
     budget.MAX_PAYLOAD_BYTES = 1 << 20
     try:
         res = extract_payload_text(gzip.compress(b"a" * (4 << 20)))
-        assert res.status == "parse_error"
+        assert res.status == "oversize"
         assert "cap" in (res.error or "")
     finally:
         budget.MAX_PAYLOAD_BYTES = old
+
+
+@pytest.mark.parametrize("codec", ["gzip", "bz2", "xz"])
+def test_compressed_text_bomb_is_oversize(codec, decode_bomb):
+    """Text that inflates to 64 MB, four times a 16 MB decode budget: the
+    unwrap stops one byte past the budget and the row is ``oversize``."""
+    import bz2
+    import lzma
+    import zlib
+
+    z = {
+        "gzip": lambda: zlib.compressobj(wbits=31),
+        "bz2": bz2.BZ2Compressor,
+        "xz": lzma.LZMACompressor,
+    }[codec]()
+    data = b"".join(z.compress(b"a" * (1 << 20)) for _ in range(64)) + z.flush()
+    r = decode_bomb(data)
+    assert r["status"] == "oversize", r
+    assert r["s"] < 10 and r["rss_mb"] < 48, r
 
 
 def test_binary_garbage_still_reaches_cfb_error_path():
@@ -106,6 +134,10 @@ def test_bz2_and_xz_payloads_unwrap():
     assert res.status == "ok" and res.kind == "html" and res.text == "bz2 page"
     res = extract_payload_text(lzma.compress("xz notes café\n".encode()))
     assert res.status == "ok" and res.kind == "text" and res.text == "xz notes café"
+    # one stream only, and a truncated stream yields its prefix
+    for comp in (bz2.compress, lzma.compress):
+        assert maybe_gunzip(comp(b"first\n") + comp(b"second\n")) == b"first\n"
+        assert maybe_gunzip(comp(b"notes " * 50)[:-10]).startswith(b"notes notes")
     # corrupt containers fall through to the error path, never raise
     for bad in (b"BZh9" + b"\x00" * 40, b"\xfd7zXZ\x00" + b"\x00" * 40):
         r = extract_payload_text(bad)

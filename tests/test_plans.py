@@ -342,3 +342,47 @@ def test_every_module_is_reachable():
         if name not in seen and path.read_text().strip()
     )
     assert not orphans, f"modules no entry point imports: {orphans}"
+
+
+def test_decompression_is_charged_in_budget():
+    """One module knows the decompression bound: no module of the package
+    but ``budget.py`` calls a ``decompress``, and only
+    ``ooxml._read_member`` opens or reads a zip member (``zf.open(...)``
+    or ``zf.read(...)`` on a name, in a module that imports zipfile; a
+    builtin ``open(path).read()`` is no member). Every inflate then
+    goes through ``budget.inflate`` and charges the one per-document
+    allowance. Pure ``ast`` walk; no Spark."""
+    import ast
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parent.parent / "b2xtranslator_spark"
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        if rel == "budget.py":
+            continue
+        tree = ast.parse(path.read_text())
+        zips = any(
+            isinstance(n, ast.Import) and any(a.name == "zipfile" for a in n.names)
+            or isinstance(n, ast.ImportFrom) and n.module == "zipfile"
+            for n in ast.walk(tree)
+        )
+        exempt = {
+            id(n)
+            for f in ast.walk(tree)
+            if rel == "formats/ooxml.py"
+            and isinstance(f, ast.FunctionDef)
+            and f.name == "_read_member"
+            for n in ast.walk(f)
+        }
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call) or id(node) in exempt:
+                continue
+            f = node.func
+            name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+            member = zips and name in ("open", "read") and isinstance(
+                getattr(f, "value", None), ast.Name
+            )
+            if name == "decompress" or member:
+                offenders.append(f"{rel}:{node.lineno} {name}")
+    assert not offenders, f"inflates outside budget.py: {offenders}"
