@@ -84,6 +84,7 @@ from b2xtranslator_spark.operators.textstats import (  # noqa: E402
 from b2xtranslator_spark.pipeline import (  # noqa: E402
     MARKUP_MAIN_PREFIX,
     MARKUP_PREFIX,
+    extraction_metrics,
     run_extraction,
 )
 from b2xtranslator_spark.sources.transcripts import (  # noqa: E402
@@ -896,14 +897,7 @@ def _q_extract_pdf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_extract_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     transcripts, _ = _transcripts(spark, sf_dir)
-    extracted = run_extraction(transcripts)
-    return extracted.agg(
-        F.count("*").alias("turns"),
-        F.sum("metrics.docs_parsed").alias("docs_parsed"),
-        F.sum("metrics.records_decoded").alias("records_decoded"),
-        F.sum("metrics.bytes_decoded").alias("bytes_decoded"),
-        F.sum("metrics.failures").alias("failures"),
-    )
+    return extraction_metrics(run_extraction(transcripts))
 
 
 def _q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1856,7 +1850,7 @@ def _sql_minhash_pairs_cte(doc_cap: int, num_hashes: int = 16, bands: int = 4) -
     norm = "regexp_replace(lower(text), '\\s+', ' ', 'g')"
     rows = num_hashes // bands
     # Kirsch-Mitzenmacher double hashing from one md5 per shingle
-    # (mirrors operators.dedup.minhash_signatures)
+    # (mirrors operators.dedup._doc_features)
     mh_cols = ",\n                   ".join(
         "min(CAST(('0x' || substr(md5(shingle), 1, 15)) AS BIGINT)"
         " + %d * CAST(('0x' || substr(md5(shingle), 17, 10)) AS BIGINT))"

@@ -132,7 +132,7 @@ class CompoundFile:
         # is several times cheaper than NumPy scalar access
         return np.frombuffer(b"".join(parts), dtype="<u4").tolist()
 
-    def _chain(self, start: int, name: str = "stream") -> list[int]:
+    def _chain(self, start: int) -> list[int]:
         """Follow next = FAT[cur] until ENDOFCHAIN, with cycle/length guards
         (AbstractFat.GetSectorChain; DirectoryTree.cs:75-78 cycle pattern)."""
         chain: list[int] = []
@@ -148,15 +148,13 @@ class CompoundFile:
             sid = self._fat[sid]
         return chain
 
-    def _read_chain_bytes(self, start: int, size: int) -> bytes:
-        chain = self._chain(start)
-        out = b"".join(self._sector_bytes(s) for s in chain)
-        return out[:size] if size >= 0 else out
+    def _read_chain_bytes(self, start: int) -> bytes:
+        return b"".join(self._sector_bytes(s) for s in self._chain(start))
 
     # -- directory ---------------------------------------------------------
 
     def _read_directory(self) -> list[DirectoryEntry]:
-        raw = self._read_chain_bytes(self.first_dir_sector, -1)
+        raw = self._read_chain_bytes(self.first_dir_sector)
         entries: list[DirectoryEntry] = []
         for sid in range(len(raw) // 128):
             off = sid * 128
@@ -215,7 +213,7 @@ class CompoundFile:
     def _ensure_mini(self) -> None:
         if self._minifat is not None:
             return
-        raw = self._read_chain_bytes(self.first_minifat_sector, -1)
+        raw = self._read_chain_bytes(self.first_minifat_sector)
         self._minifat = np.frombuffer(raw, dtype="<u4").tolist() if raw else []
         root = self._dir_entries[0] if self._dir_entries else None
         if root is None:
@@ -223,33 +221,9 @@ class CompoundFile:
             return
         # MiniFat.cs:114-126 — tolerate root entries that under-declare the
         # mini stream size by reading the full physical chain.
-        chain = self._chain(root.start_sector, "MiniStream")
-        self._mini_stream = b"".join(self._sector_bytes(s) for s in chain)
-
-    def _read_mini_chain(self, start: int, size: int) -> bytes:
-        self._ensure_mini()
-        assert self._minifat is not None and self._mini_stream is not None
-        out = bytearray()
-        sid = start
-        seen: set[int] = set()
-        max_minis = len(self._mini_stream) // self.mini_sector_size + 1
-        while sid != ENDOFCHAIN and sid != FREESECT and len(out) < size:
-            if sid in seen or len(seen) > max_minis or sid >= len(self._minifat):
-                break
-            seen.add(sid)
-            off = sid * self.mini_sector_size
-            out += self._mini_stream[off : off + self.mini_sector_size]
-            sid = self._minifat[sid]
-        return bytes(out[:size])
+        self._mini_stream = self._read_chain_bytes(root.start_sector)
 
     # -- public API ----------------------------------------------------------
-
-    def list_streams(self) -> list[tuple[str, int]]:
-        return [
-            (e.path or e.name, e.size)
-            for e in self._dir_entries
-            if e.type == STGTY_STREAM
-        ]
 
     def has_stream(self, name: str) -> bool:
         return name in self._by_name or name.lower() in self._by_name

@@ -37,7 +37,7 @@ from html.parser import HTMLParser
 
 from ..budget import check_deadline
 
-__all__ = ["extract_html_text", "looks_like_markup"]
+__all__ = ["extract_html_parts", "looks_like_markup"]
 
 # subtrees that are never content
 _DROP = {
@@ -346,19 +346,6 @@ def extract_html_parts(
         spans.append(("block", start, end + (1 if i < len(blocks) - 1 else 0)))
         start = end + 1
     return "\n".join(b[0] for b in blocks), fold.elements, spans
-
-
-def extract_html_text(
-    payload: bytes | str,
-    main_content: bool = False,
-    link_density_max: float = 0.5,
-    extract_urls: bool = True,
-) -> tuple[str, int]:
-    """(text, elements_decoded) — extract_html_parts without the spans."""
-    text, elements, _ = extract_html_parts(
-        payload, main_content, link_density_max, extract_urls
-    )
-    return text, elements
 
 
 _MARKUP_PREFIXES = ("<!doctype", "<html", "<head", "<body")

@@ -57,7 +57,7 @@ import zlib
 
 from ..budget import charge, check_deadline, inflate
 
-__all__ = ["extract_pdf_text", "PDF_MAGIC"]
+__all__ = ["extract_pdf_parts", "PDF_MAGIC"]
 
 PDF_MAGIC = b"%PDF-"
 TJ_SPACE_KERN = -180  # thousandths of an em; gaps wider than this are spaces
@@ -882,9 +882,3 @@ def extract_pdf_parts(
         for i, (p, s, e) in enumerate(spans)
     ]
     return "\n".join(texts), records, spans
-
-
-def extract_pdf_text(payload: bytes) -> tuple[str, int]:
-    """(text, records_decoded) — extract_pdf_parts without the spans."""
-    text, records, _ = extract_pdf_parts(payload)
-    return text, records

@@ -32,7 +32,7 @@ from __future__ import annotations
 
 from ..budget import check_deadline
 
-__all__ = ["extract_rtf_parts", "extract_rtf_text", "looks_like_rtf"]
+__all__ = ["extract_rtf_parts", "looks_like_rtf"]
 
 # destinations whose content is never body text (RTF 1.9 destination
 # control words; fldinst carries the field instruction, not its result)
@@ -343,10 +343,3 @@ def extract_rtf_parts(
     if text == "":
         spans = []
     return text, records, spans
-
-
-def extract_rtf_text(
-    payload: bytes, extract_urls: bool = True
-) -> tuple[str, int]:
-    text, records, _ = extract_rtf_parts(payload, extract_urls)
-    return text, records

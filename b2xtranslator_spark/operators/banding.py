@@ -17,12 +17,11 @@ once:
   positions, so per-row memory stays O(bucket), never O(bucket^2). The
   shuffle is O(rows x bands) member rows, never pairs.
 
-Dropped buckets cost recall for their members; ``bucket_skew_stats``
-lists them from a keyed frame (for embeddings, the output of
-similarity.lsh_band_buckets). Members of a hot bucket usually still meet
-through their other bands, so the practical cost is small unless an item
-is degenerate in every band, which is the content (empty text, zero
-vectors) a dedup pipeline wants quarantined anyway.
+Dropped buckets cost recall for their members, and no leg counts them
+yet. Members of a hot bucket usually still meet through their other
+bands, so the practical cost is small unless an item is degenerate in
+every band, which is the content (empty text, zero vectors) a dedup
+pipeline wants quarantined anyway.
 
 ``banded_hamming_pairs`` is the pigeonhole construction shared by text
 SimHash and image dHash dedup: slice a ``bits``-wide signature into
@@ -56,18 +55,6 @@ def bucket_pairs(keyed: DataFrame, max_bucket_size: int) -> DataFrame:
         "ids", "explode(sequence(1, size(ids) - 1)) AS p"
     ).selectExpr(
         "element_at(ids, p) AS x", "explode(slice(ids, p + 1, size(ids) - p)) AS y"
-    )
-
-
-def bucket_skew_stats(df: DataFrame, keys: list[str], max_rows: int) -> DataFrame:
-    """The buckets the ``max_bucket_size`` cap drops: (keys..., n_rows),
-    largest first. Run alongside the capped query so dropped candidate mass
-    is a reported metric, not a silent recall loss."""
-    return (
-        df.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("n_rows"))
-        .where(F.col("n_rows") > max_rows)
-        .orderBy(F.desc("n_rows"))
     )
 
 

@@ -82,31 +82,12 @@ def cosine_topk_bruteforce(
     return _topk(cand, "q", k)
 
 
-def _hyperplane_sign(embedding_col, plane: int):
-    """Sign of the projection onto deterministic hyperplane ``plane`` — one
-    LSH bit. Integer weights, expressible identically in portable SQL."""
-    weighted = F.aggregate(
-        F.zip_with(
-            embedding_col,
-            F.sequence(F.lit(0), F.size(embedding_col) - 1),
-            lambda x, d: x.cast("double") * (
-                (
-                    (F.lit(_M1 * plane) + F.lit(_M2) * d
-                     + F.lit(_MX * plane) * d + F.lit(_C)) % _MOD
-                ) - _HALF
-            ).cast("double"),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    return F.when(weighted >= 0, 1).otherwise(0)
-
-
 def _hyperplane_sign_sql(plane: int, col: str = "embedding") -> str:
-    """SQL-string twin of _hyperplane_sign — identical integer-weight
-    arithmetic, parsed server-side in one call (building the per-plane
+    """Sign of the projection onto deterministic hyperplane ``plane`` — one
+    LSH bit, with integer weights so portable SQL computes it identically.
+    Parsed server-side in one call: building the per-plane
     zip_with/aggregate lambdas through the column API cost ~0.15 s of
-    py4j round trips per query, measured optimization round 6)."""
+    py4j round trips per query (measured optimization round 6)."""
     m1p = _M1 * plane
     mxp = _MX * plane
     return (
@@ -132,7 +113,7 @@ def lsh_bucket(embeddings: DataFrame, n_planes: int = 8) -> DataFrame:
 
 def _plane_matrix(n_planes: int, dim: int):
     """The deterministic integer weight matrix, NumPy form (same formula as
-    _hyperplane_sign)."""
+    _hyperplane_sign_sql)."""
     import numpy as np
 
     p = np.arange(n_planes, dtype=np.int64)[:, None]
@@ -213,8 +194,8 @@ def embedding_near_duplicates_lsh(
     ``max_bucket_size`` caps candidate generation per (band, bucket): a hot
     bucket of n rows emits n^2/2 pairs, so one degenerate signature (e.g.
     thousands of near-zero vectors sharing a sign pattern) would otherwise
-    dominate the job. The cap drops such a bucket before it is collected;
-    report drops via banding.bucket_skew_stats."""
+    dominate the job. The cap drops such a bucket before it is collected,
+    and the dropped buckets are not counted today."""
     vecs = embeddings
     if max_vecs is not None:
         vecs = vecs.where(F.col("vec_id") < max_vecs)

@@ -907,32 +907,3 @@ def corpus_report(documents: DataFrame) -> DataFrame:
         F.round(F.count_distinct(F.col("fp")) / n, 6).alias("distinct_fp_ratio"),
         F.round(F.avg("quality"), 6).alias("mean_quality"),
     )
-
-
-def write_training_shards(
-    packed: DataFrame, path: str, seqs_per_shard: int = 1024
-) -> DataFrame:
-    """Materialize pack_sequences output as fixed-size training shards —
-    the sink step that turns packed sequences into the numbered files a
-    data loader streams. Shard assignment is CLOSED-FORM
-    (floor(seq_id / seqs_per_shard)), not sampled, so re-running the job
-    bit-reproduces the same shard membership; rows are colocated by one
-    hash repartition on the shard id and sorted (source, seq_id) within,
-    so each shard directory holds exactly one ordered parquet file.
-    Returns the shard manifest (shard, n_seqs, n_docs, n_tokens) — the
-    index a loader reads instead of listing files."""
-    out = packed.withColumn(
-        "shard", F.floor(F.col("seq_id") / F.lit(seqs_per_shard)).cast("int")
-    )
-    (
-        out.repartition("shard")
-        .sortWithinPartitions("source", "seq_id")
-        .write.partitionBy("shard")
-        .mode("overwrite")
-        .parquet(path)
-    )
-    return out.groupBy("shard").agg(
-        F.count(F.lit(1)).alias("n_seqs"),
-        F.sum("n_docs").alias("n_docs"),
-        F.sum("seq_tokens").alias("n_tokens"),
-    )

@@ -3,18 +3,16 @@
 Architecture (SURVEY.md §3 "Spark lifecycle"):
 
     read transcripts (column-pruned)
-      -> salt & repartition by conv_id        (skew defense: oversized
-                                               attachment conversations split
-                                               across tasks)
-      -> mapInPandas(extract_turns)           (Arrow batches; pure per-
-                                               document map; no shuffle)
-      -> write partitioned by conv_bucket,
-         sorted within partitions by (conv_id, turn_idx)
+      -> mapInPandas(extract_turns)           (Arrow batches over the scan
+                                               splits; pure per-document map)
+      -> per group: sort within partitions by (conv_id, turn_idx) and
+         write <out>/group=<g>/ map-only
 
-plus bucket-group checkpointing so a killed run resumes without recomputing
-completed groups (Iceberg-snapshot-per-commit semantics expressed over
-parquet staging in this sandbox; the commit unit is a deterministic
-hash-bucket group, idempotent under retry).
+The job has no salt, no repartition and no conv_bucket write: its one sink
+is run_with_checkpoints, which commits the corpus in deterministic
+hash-bucket groups so a killed run resumes without recomputing completed
+groups (Iceberg-snapshot-per-commit semantics expressed over parquet
+staging; the commit unit is a group, idempotent under retry).
 
 The per-document decode is a scalar black box to Catalyst (SURVEY.md §4): no
 custom rules, no RDDs, no driver-side loops over rows.
@@ -257,39 +255,11 @@ def run_extraction(transcripts: DataFrame) -> DataFrame:
     it before a pure per-document map is the single biggest overhead saving
     (measured 32% wall at 8 cores vs a salted pre-shuffle); input split
     sizing (spark.sql.files.maxPartitionBytes=32MB) controls balance
-    instead. Skew defense lives where skew actually bites — the WRITE
-    shuffle (write_extracted salts its partitioning key)."""
+    instead. The sink (run_with_checkpoints) writes map-only too, so no
+    step shuffles rows by conversation, and a giant conversation cannot
+    make one task larger than its own input splits."""
     return transcripts.select("conv_id", "turn_idx", "text", "tool").mapInPandas(
         extract_turns, schema=EXTRACTED_SCHEMA
-    )
-
-
-def write_extracted(
-    extracted: DataFrame, path: str, n_buckets: int = 32, salt_buckets: int = 4
-) -> None:
-    """Sink (SURVEY.md §2.1 S9): partitioned by conv_id hash bucket, stable
-    (conv_id, turn_idx) order within files.
-
-    This is the shuffle where conversation skew bites (north_star: oversized
-    attachment conversations), so the partitioning key carries a salt: a
-    giant conversation spreads over `salt_buckets` reducers, each writing a
-    sorted file into the same conv_bucket directory."""
-    (
-        extracted.withColumn(
-            "conv_bucket", F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets))
-        )
-        .repartition(
-            F.col("conv_bucket"),
-            F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(salt_buckets)),
-        )
-        # the sort must LEAD with the partition column: FileFormatWriter
-        # re-sorts each task by partition columns when rows aren't already
-        # clustered on them, which would destroy the (conv_id, turn_idx)
-        # order
-        .sortWithinPartitions("conv_bucket", "conv_id", "turn_idx")
-        .write.mode("overwrite")
-        .partitionBy("conv_bucket")
-        .parquet(path)
     )
 
 
@@ -400,13 +370,7 @@ def run_with_checkpoints(
             # partition pruning: only the grp=<group> directory is scanned
             subset = staged.where(F.col("grp") == group).drop("grp")
         obs = Observation()
-        extracted = run_extraction(subset).observe(
-            obs,
-            F.count(F.lit(1)).alias("turns"),
-            F.sum("metrics.docs_parsed").alias("docs_parsed"),
-            F.sum("metrics.records_decoded").alias("records_decoded"),
-            F.sum("metrics.failures").alias("failures"),
-        )
+        extracted = run_extraction(subset).observe(obs, *_run_totals())
         group_out = os.path.join(out_dir, f"group={group}")
         (
             extracted.sortWithinPartitions("conv_id", "turn_idx")
@@ -447,16 +411,20 @@ def read_extracted(spark: SparkSession, out_dir: str, n_groups: int = 8) -> Data
     return spark.read.parquet(*(p for p in paths if _fs_exists(spark, p)))
 
 
-def extraction_metrics(extracted: DataFrame) -> DataFrame:
-    """Run-level metrics aggregation (SURVEY.md §2.4 A3/A4): Catalyst's
-    built-in partial+final hash aggregate, no custom code."""
-    return extracted.agg(
-        F.count("*").alias("turns"),
+def _run_totals() -> list:
+    """The run totals, one aggregate column each: the rollup that
+    extraction_metrics computes and each checkpoint group observes."""
+    return [
+        F.count(F.lit(1)).alias("turns"),
         F.sum("metrics.docs_parsed").alias("docs_parsed"),
         F.sum("metrics.records_decoded").alias("records_decoded"),
         F.sum("metrics.bytes_decoded").alias("bytes_decoded"),
         F.sum("metrics.failures").alias("failures"),
-        F.sum(F.when(F.col("status") == "encrypted", 1).otherwise(0)).alias(
-            "encrypted"
-        ),
-    )
+    ]
+
+
+def extraction_metrics(extracted: DataFrame) -> DataFrame:
+    """Run-level totals (SURVEY.md §2.4 A3/A4): one row of turns,
+    docs_parsed, records_decoded, bytes_decoded and failures, through
+    Catalyst's partial+final hash aggregate."""
+    return extracted.agg(*_run_totals())

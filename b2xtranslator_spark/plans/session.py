@@ -2,8 +2,9 @@
 
 The job is a pure per-document map over wide binary payloads (SURVEY.md §3):
 the knobs that matter are Arrow batch shaping for mapInPandas, AQE for
-runtime coalescing of the salted shuffle, and shuffle partition counts sized
-to local[32] (a real cluster submit overrides via spark-submit --conf).
+runtime coalescing of the operators' shuffles, and at least 32 shuffle
+partitions (a real cluster submit overrides via spark-submit --conf). The
+default master runs one local thread per core this process may use.
 """
 
 from __future__ import annotations
@@ -16,16 +17,13 @@ from pyspark.sql import SparkSession
 def build_session(
     app_name: str = "b2xtranslator-spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    master = master or f"local[{cpus}]"
-    shuffle_partitions = shuffle_partitions or max(cpus, 32)
+    cpus = len(os.sched_getaffinity(0))
     b = (
         SparkSession.builder.appName(app_name)
-        .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .master(master or f"local[{cpus}]")
+        .config("spark.sql.shuffle.partitions", str(max(cpus, 32)))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         # parallelismFirst stays at its default (true): measured A/B this
@@ -61,7 +59,7 @@ def build_session(
         # JVM-only agg queries also got slightly faster (0.42 -> 0.30 s).
         # A real multi-executor cluster sizes executors instead and can
         # override via spark-submit --conf.
-        .config("spark.task.cpus", os.environ.get("SPARK_GRAFT_TASK_CPUS", "2"))
+        .config("spark.task.cpus", "2")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Djava.net.preferIPv6Addresses=false")

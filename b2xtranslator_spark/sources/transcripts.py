@@ -327,7 +327,7 @@ def build_gzip_text_fixture() -> tuple[bytes, str]:
 
 def _skeleton(n_turns: int, doc_fraction: float, seed: int, n_samples: int) -> pd.DataFrame:
     """Integer skeleton: conv assignment with skew (80% of conversations have
-    1-5 turns, a long tail has hundreds — exercises the salting path), plus
+    1-5 turns, a long tail has hundreds), plus
     deterministic sample assignment and payload-column choice."""
     rng = np.random.default_rng(seed)
     conv_sizes = []

@@ -10,7 +10,7 @@ import base64
 import pytest
 
 from b2xtranslator_spark.extractors import extract_payload_text
-from b2xtranslator_spark.formats.markup import extract_html_text, looks_like_markup
+from b2xtranslator_spark.formats.markup import extract_html_parts, looks_like_markup
 
 FULL_PAGE = """<!DOCTYPE html>
 <html><head><title>SKIP title</title><style>p{}</style><script>var x=1;</script></head>
@@ -48,13 +48,13 @@ FULL_PAGE_EXPECTED = (
 
 
 def test_full_page_golden():
-    text, elements = extract_html_text(FULL_PAGE)
+    text, elements, _ = extract_html_parts(FULL_PAGE)
     assert text == FULL_PAGE_EXPECTED
     assert elements > 10
 
 
 def test_entities_and_charrefs_decode():
-    text, _ = extract_html_text("<p>a &lt; b &amp;&amp; c &gt; d &#8212; e</p>")
+    text, _, _ = extract_html_parts("<p>a &lt; b &amp;&amp; c &gt; d &#8212; e</p>")
     assert text == "a < b && c > d — e"
 
 
@@ -63,8 +63,8 @@ def test_link_density_heuristic_drops_menus():
         "<body><div><a>Products</a> <a>Pricing</a> <a>Docs</a></div>"
         "<p>Actual article content sentence.</p></body>"
     )
-    keep_all, _ = extract_html_text(html)
-    main, _ = extract_html_text(html, main_content=True)
+    keep_all, _, _ = extract_html_parts(html)
+    main, _, _ = extract_html_parts(html, main_content=True)
     assert keep_all.splitlines() == [
         "Products Pricing Docs",
         "Actual article content sentence.",
@@ -77,28 +77,28 @@ def test_anchor_href_rendering_mirrors_reference_hyperlinks():
     fields (TextWriter.cs:354-440 / writer._output_hyperlink): display then
     ' (url)', bare url when they match or when there is no display text."""
     # display != href -> "display (href)"
-    text, _ = extract_html_text('<p>See <a href="https://x.io/d">the docs</a>.</p>')
+    text, _, _ = extract_html_parts('<p>See <a href="https://x.io/d">the docs</a>.</p>')
     assert text == "See the docs (https://x.io/d)."
     # display == href (case-insensitive) -> display only
-    text, _ = extract_html_text('<p><a href="https://X.io">https://x.io</a></p>')
+    text, _, _ = extract_html_parts('<p><a href="https://X.io">https://x.io</a></p>')
     assert text == "https://x.io"
     # no display -> bare url (appended as a bare text run, like the
     # reference's description-less hyperlink fields)
-    text, _ = extract_html_text('<p>go <a href="/next"></a> now</p>')
+    text, _, _ = extract_html_parts('<p>go <a href="/next"></a> now</p>')
     assert text == "go /next now"
     # no href -> display only, no parentheses
-    text, _ = extract_html_text("<p><a>plain anchor</a></p>")
+    text, _, _ = extract_html_parts("<p><a>plain anchor</a></p>")
     assert text == "plain anchor"
     # extract_urls=False -> display only (previous behavior)
-    text, _ = extract_html_text(
+    text, _, _ = extract_html_parts(
         '<p>See <a href="https://x.io/d">the docs</a>.</p>', extract_urls=False
     )
     assert text == "See the docs."
     # unclosed anchor at EOF still renders its url
-    text, _ = extract_html_text('<p><a href="/a">tail')
+    text, _, _ = extract_html_parts('<p><a href="/a">tail')
     assert text == "tail (/a)"
     # nav anchors stay dropped regardless
-    text, _ = extract_html_text(
+    text, _, _ = extract_html_parts(
         '<nav><a href="/">Home</a></nav><p>body</p>'
     )
     assert text == "body"
@@ -113,11 +113,11 @@ def test_anchor_urls_count_as_link_mass_for_main_content():
         '<a href="/prev">previous article</a></div>'
         "<p>Real content sentence that clearly dominates its own block.</p>"
     )
-    keep_all, _ = extract_html_text(html)
+    keep_all, _, _ = extract_html_parts(html)
     assert keep_all.splitlines()[0] == (
         "Read more: next article (/next) previous article (/prev)"
     )
-    main, _ = extract_html_text(html, main_content=True)
+    main, _, _ = extract_html_parts(html, main_content=True)
     assert main == "Real content sentence that clearly dominates its own block."
 
 
@@ -125,7 +125,7 @@ def test_pre_block_link_ratio_applies_to_every_line():
     """ADVICE r03: multi-line <pre> used to bill the whole block's link
     mass to its first emitted line; every line now carries one ratio."""
     html = '<pre>plain line one\n<a href="/x">linked</a>\nplain line two</pre>'
-    keep_all, _ = extract_html_text(html)
+    keep_all, _, _ = extract_html_parts(html)
     assert keep_all.splitlines() == [
         "plain line one",
         "linked (/x)",
@@ -133,7 +133,7 @@ def test_pre_block_link_ratio_applies_to_every_line():
     ]
     # the block is majority-plain, so NO line may be dropped by the
     # heuristic (first-line billing used to drop "plain line one")
-    main, _ = extract_html_text(html, main_content=True)
+    main, _, _ = extract_html_parts(html, main_content=True)
     assert main == keep_all
 
 
@@ -162,18 +162,18 @@ def test_malformed_html_never_raises():
         "",
         "\x00\x01<p>\x02binary\x03</p>",
     ):
-        text, _ = extract_html_text(payload)  # must not raise
+        text, _, _ = extract_html_parts(payload)  # must not raise
         assert isinstance(text, str)
 
 
 def test_unclosed_script_drops_rest():
     # deterministic contract: an unclosed DROP subtree swallows the tail
-    text, _ = extract_html_text("<p>kept</p><script>var x;<p>lost</p>")
+    text, _, _ = extract_html_parts("<p>kept</p><script>var x;<p>lost</p>")
     assert text == "kept"
 
 
 def test_nested_table_flattens_cells():
-    text, _ = extract_html_text(
+    text, _, _ = extract_html_parts(
         "<table><tr><td>outer<table><tr><td>inner</td></tr></table></td></tr></table>"
     )
     assert "outer" in text and "inner" in text
@@ -256,8 +256,6 @@ def test_pipeline_markup_prefix_end_to_end(spark):
 
 
 def test_block_spans_slice_the_text():
-    from b2xtranslator_spark.formats.markup import extract_html_parts
-
     text, _, spans = extract_html_parts(FULL_PAGE)
     assert [p for p, _, _ in spans] == ["block"] * len(spans)
     # spans TILE the text (the pipeline contract): the joining newline
@@ -272,14 +270,14 @@ def test_block_spans_slice_the_text():
 def test_self_closing_and_implicit_drop_tags_do_not_leak():
     """Review finding (r3, second pass): XHTML self-closing drop tags and
     HTML5 implicit-close sequences must not suppress the document tail."""
-    text, _ = extract_html_text("<p>before</p><iframe/><p>after</p>")
+    text, _, _ = extract_html_parts("<p>before</p><iframe/><p>after</p>")
     assert text == "before\nafter"
-    text, _ = extract_html_text(
+    text, _, _ = extract_html_parts(
         "<p>a</p><select><option>x<option>y</select><p>b</p>"
     )
     assert text == "a\nb"
     # end tag closes everything opened above its matching start
-    text, _ = extract_html_text(
+    text, _, _ = extract_html_parts(
         "<p>a</p><nav><select><option>m</select>menu</nav><p>b</p>"
     )
     assert text == "a\nb"
@@ -288,7 +286,7 @@ def test_self_closing_and_implicit_drop_tags_do_not_leak():
 def test_nested_table_keeps_outer_cells():
     """Review finding (r3, second pass): an inner table must not clobber
     the outer row's already-collected cells."""
-    text, _ = extract_html_text(
+    text, _, _ = extract_html_parts(
         "<table><tr><td>A</td><td><table><tr><td>B</td></tr></table>"
         "</td><td>C</td></tr></table>"
     )

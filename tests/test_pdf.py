@@ -10,7 +10,7 @@ import zlib
 import pytest
 
 from b2xtranslator_spark.extractors import extract_payload_text
-from b2xtranslator_spark.formats.pdf import extract_pdf_text
+from b2xtranslator_spark.formats.pdf import extract_pdf_parts
 
 
 def _pdf(objects: dict[int, bytes], root: int | None = 1) -> bytes:
@@ -50,26 +50,26 @@ def _one_page(ops: bytes, **kw) -> bytes:
 
 
 def test_minimal_tj():
-    text, _ = extract_pdf_text(_one_page(b"BT /F1 12 Tf (Hello world) Tj ET"))
+    text, _, _ = extract_pdf_parts(_one_page(b"BT /F1 12 Tf (Hello world) Tj ET"))
     assert text == "Hello world"
 
 
 def test_lines_via_td_and_tstar():
     ops = b"BT (line one) Tj 0 -14 Td (line two) Tj T* (line three) Tj ET"
-    text, _ = extract_pdf_text(_one_page(ops))
+    text, _, _ = extract_pdf_parts(_one_page(ops))
     assert text == "line one\nline two\nline three"
 
 
 def test_horizontal_td_is_not_a_newline():
     ops = b"BT (left) Tj 120 0 Td ( right) Tj ET"
-    text, _ = extract_pdf_text(_one_page(ops))
+    text, _, _ = extract_pdf_parts(_one_page(ops))
     assert text == "left right"
 
 
 def test_tj_array_kerning_space():
     # -250 < TJ_SPACE_KERN (-180): word gap; -20: intra-word kern, no space
     ops = b"BT [(Hel) -20 (lo) -250 (world)] TJ ET"
-    text, _ = extract_pdf_text(_one_page(ops))
+    text, _, _ = extract_pdf_parts(_one_page(ops))
     assert text == "Hello world"
 
 
@@ -78,7 +78,7 @@ def test_string_escapes_and_hex():
         rb"BT (paren \( octal \101 tab\there) Tj "
         rb"0 -10 Td <48692121> Tj ET"
     )
-    text, _ = extract_pdf_text(_one_page(ops))
+    text, _, _ = extract_pdf_parts(_one_page(ops))
     assert text == "paren ( octal A tab\there\nHi!!"
 
 
@@ -86,7 +86,7 @@ def test_multiline_literal_string_verbatim():
     # raw newlines inside () are preserved — the identity contract the
     # driver oracle relies on
     ops = b"BT (first\nsecond\n\nfourth) Tj ET"
-    text, _ = extract_pdf_text(_one_page(ops))
+    text, _, _ = extract_pdf_parts(_one_page(ops))
     assert text == "first\nsecond\n\nfourth"
 
 
@@ -102,12 +102,12 @@ def test_hostile_corpus_text_roundtrips_with_length():
         .replace("\r", "\\r")
     )
     ops = b"BT (" + esc.encode() + b") Tj ET\n"
-    text = extract_pdf_text(_one_page(ops))[0]
+    text = extract_pdf_parts(_one_page(ops))[0]
     assert text.rstrip("\n") == hostile
 
 
 def test_flate_stream():
-    text, _ = extract_pdf_text(_one_page(b"BT (compressed text) Tj ET", flate=True))
+    text, _, _ = extract_pdf_parts(_one_page(b"BT (compressed text) Tj ET", flate=True))
     assert text == "compressed text"
 
 
@@ -122,7 +122,7 @@ def test_length_indirect_and_wrong():
             4: body,
         }
     )
-    text, _ = extract_pdf_text(pdf)
+    text, _, _ = extract_pdf_parts(pdf)
     assert text == "resilient"
 
 
@@ -204,7 +204,7 @@ def test_lzw_content_stream_extracts():
             4: body,
         }
     )
-    assert "lzw compressed page text" in extract_pdf_text(pdf)[0]
+    assert "lzw compressed page text" in extract_pdf_parts(pdf)[0]
 
 
 def test_two_pages_tree_order():
@@ -219,7 +219,7 @@ def test_two_pages_tree_order():
             6: _content(b"BT (first page) Tj ET"),
         }
     )
-    text, _ = extract_pdf_text(pdf)
+    text, _, _ = extract_pdf_parts(pdf)
     assert text == "first page\nsecond page"
 
 
@@ -231,7 +231,7 @@ def test_missing_catalog_falls_back_to_file_order():
         },
         root=None,
     )
-    text, _ = extract_pdf_text(pdf)
+    text, _, _ = extract_pdf_parts(pdf)
     assert text == "orphan page"
 
 
@@ -251,12 +251,12 @@ def test_obj_pattern_inside_stream_payload_is_data_not_definition():
             9: _content(b"BT (hijacked) Tj ET"),
         }
     )
-    text = extract_pdf_text(pdf)[0]
+    text = extract_pdf_parts(pdf)[0]
     assert "real text" in text
     assert "hijacked" not in text
     # a REAL later redefinition (outside any stream) still wins
     pdf2 = pdf + b"4 0 obj\n" + _content(b"BT (updated) Tj ET") + b"\nendobj\n"
-    assert "updated" in extract_pdf_text(pdf2)[0]
+    assert "updated" in extract_pdf_parts(pdf2)[0]
 
 
 def test_incremental_update_last_definition_wins():
@@ -269,7 +269,7 @@ def test_incremental_update_last_definition_wins():
         }
     )
     update = b"4 0 obj\n" + _content(b"BT (new revision) Tj ET") + b"\nendobj\n"
-    text, _ = extract_pdf_text(base + update)
+    text, _, _ = extract_pdf_parts(base + update)
     assert text == "new revision"
 
 
@@ -361,7 +361,7 @@ def test_cycle_in_page_tree_terminates():
             4: _content(b"BT (survives cycles) Tj ET"),
         }
     )
-    text, _ = extract_pdf_text(pdf)
+    text, _, _ = extract_pdf_parts(pdf)
     assert text == "survives cycles"
 
 
@@ -418,21 +418,21 @@ GREEK_CMAP = (
 
 
 def test_tounicode_bfchar_1byte():
-    text, _ = extract_pdf_text(
+    text, _, _ = extract_pdf_parts(
         _font_pdf(GREEK_CMAP, b"BT /F1 12 Tf (AB) Tj ET")
     )
     assert text == "αβ"
 
 
 def test_tounicode_unmapped_code_falls_back_latin1():
-    text, _ = extract_pdf_text(
+    text, _, _ = extract_pdf_parts(
         _font_pdf(GREEK_CMAP, b"BT /F1 12 Tf (A-B) Tj ET")
     )
     assert text == "α-β"
 
 
 def test_tounicode_resources_inherited_from_pages_node():
-    text, _ = extract_pdf_text(
+    text, _, _ = extract_pdf_parts(
         _font_pdf(GREEK_CMAP, b"BT /F1 12 Tf (AB) Tj ET", res_on_pages=True)
     )
     assert text == "αβ"
@@ -446,7 +446,7 @@ def test_tounicode_bfrange_consecutive_2byte():
         b"endcmap\n"
     )
     # hex string: codes 0001 0002 0003 -> A B C
-    text, _ = extract_pdf_text(
+    text, _, _ = extract_pdf_parts(
         _font_pdf(cmap, b"BT /F1 12 Tf <000100020003> Tj ET")
     )
     assert text == "ABC"
@@ -459,7 +459,7 @@ def test_tounicode_bfrange_array_form():
         b"1 beginbfrange\n<01> <02> [<0058> <0059>]\nendbfrange\n"
         b"endcmap\n"
     )
-    text, _ = extract_pdf_text(
+    text, _, _ = extract_pdf_parts(
         _font_pdf(cmap, b"BT /F1 12 Tf <0102> Tj ET")
     )
     assert text == "XY"
@@ -472,20 +472,20 @@ def test_tounicode_multi_codeunit_destination():
         b"1 beginbfchar\n<01> <00660066>\nendbfchar\n"  # ff pair
         b"endcmap\n"
     )
-    text, _ = extract_pdf_text(_font_pdf(cmap, b"BT /F1 12 Tf <01> Tj ET"))
+    text, _, _ = extract_pdf_parts(_font_pdf(cmap, b"BT /F1 12 Tf <01> Tj ET"))
     assert text == "ff"
 
 
 def test_utf16be_bom_string_without_cmap():
     # text-string convention: BOM-prefixed UTF-16BE (Cyrillic Pe, er)
     ops = b"BT (\xfe\xff\x04\x1f\x04\x40) Tj ET"
-    text, _ = extract_pdf_text(_one_page(ops))
+    text, _, _ = extract_pdf_parts(_one_page(ops))
     assert text == "Пр"
 
 
 def test_tf_switches_decoders_mid_stream():
     ops = b"BT /F1 12 Tf (AB) Tj /F9 9 Tf ( plain) Tj ET"
-    text, _ = extract_pdf_text(_font_pdf(GREEK_CMAP, ops))
+    text, _, _ = extract_pdf_parts(_font_pdf(GREEK_CMAP, ops))
     assert text == "αβ plain"  # unknown /F9 -> Latin-1
 
 
@@ -514,7 +514,7 @@ def test_hostile_giant_bfrange_is_bounded():
         b"endcmap\n"
     )
     t0 = time.perf_counter()
-    text, _ = extract_pdf_text(
+    text, _, _ = extract_pdf_parts(
         _font_pdf(cmap, b"BT /F1 12 Tf <00000041> Tj ET")
     )
     assert time.perf_counter() - t0 < 10
@@ -523,8 +523,6 @@ def test_hostile_giant_bfrange_is_bounded():
 
 
 def test_page_spans_slice_the_text():
-    from b2xtranslator_spark.formats.pdf import extract_pdf_parts
-
     pdf = _pdf(
         {
             1: b"<</Type/Catalog/Pages 2 0 R>>",
@@ -555,7 +553,7 @@ def test_surrogate_cmap_destinations_stay_arrow_safe():
         b"1 beginbfrange\n<0001> <0003> <D7FF>\nendbfrange\n"
         b"endcmap\n"
     )
-    text, _ = extract_pdf_text(
+    text, _, _ = extract_pdf_parts(
         _font_pdf(cmap, b"BT /F1 12 Tf <000100020003> Tj ET")
     )
     text.encode("utf-8")  # must not raise
@@ -570,7 +568,7 @@ def test_tm_same_y_stays_on_one_line():
         b"1 0 0 1 60 700 Tm ( World) Tj "
         b"1 0 0 1 10 680 Tm (next line) Tj ET"
     )
-    text, _ = extract_pdf_text(_one_page(ops))
+    text, _, _ = extract_pdf_parts(_one_page(ops))
     assert text == "Hello World\nnext line"
 
 
@@ -595,10 +593,10 @@ def test_asciihex_ascii85_runlength_filters():
         )
 
     hexed = ops.hex().encode() + b">"
-    assert extract_pdf_text(page_with(hexed, b"/ASCIIHexDecode"))[0] == "filtered text"
+    assert extract_pdf_parts(page_with(hexed, b"/ASCIIHexDecode"))[0] == "filtered text"
 
     a85 = base64.a85encode(ops) + b"~>"
-    assert extract_pdf_text(page_with(a85, b"/ASCII85Decode"))[0] == "filtered text"
+    assert extract_pdf_parts(page_with(a85, b"/ASCII85Decode"))[0] == "filtered text"
 
     # run-length: literal runs + a repeat run + an explicit EOD marker,
     # with trailing bytes after EOD that MUST stay undecoded (review r3:
@@ -611,12 +609,12 @@ def test_asciihex_ascii85_runlength_filters():
         + bytes([128])                 # EOD
         + bytes([8]) + b"(never) Tj"   # after EOD: must not decode
     )
-    assert extract_pdf_text(page_with(rl, b"/RunLengthDecode"))[0] == "a" + "c" * 10
+    assert extract_pdf_parts(page_with(rl, b"/RunLengthDecode"))[0] == "a" + "c" * 10
 
     # chained: ASCII85 over Flate (decode order = filter array order)
     chained = base64.a85encode(_zlib.compress(ops)) + b"~>"
     assert (
-        extract_pdf_text(page_with(chained, b"[/ASCII85Decode/FlateDecode]"))[0]
+        extract_pdf_parts(page_with(chained, b"[/ASCII85Decode/FlateDecode]"))[0]
         == "filtered text"
     )
 
@@ -654,7 +652,7 @@ def _objstm_pdf() -> bytes:
 
 
 def test_object_stream_members_are_found():
-    text, _ = extract_pdf_text(_objstm_pdf())
+    text, _, _ = extract_pdf_parts(_objstm_pdf())
     assert text == "from an object stream"
 
 
@@ -664,7 +662,7 @@ def test_direct_definition_beats_objstm_member():
         b"3 0 obj\n<</Type/Page/Parent 2 0 R/Contents 6 0 R>>\nendobj\n"
         b"6 0 obj\n" + _content(b"BT (updated revision) Tj ET") + b"\nendobj\n"
     )
-    text, _ = extract_pdf_text(_objstm_pdf() + update)
+    text, _, _ = extract_pdf_parts(_objstm_pdf() + update)
     assert text == "updated revision"
 
 
@@ -733,7 +731,7 @@ def test_unterminated_stream_does_not_swallow_later_objects():
         b"9 0 obj\n<</Length 999999>>stream\nGARBAGE-NO-TERMINATOR\nendobj\n"
         b"3 0 obj\n<</Type/Page/Parent 2 0 R/Contents 5 0 R>>\nendobj\n"
     )
-    text, _ = extract_pdf_text(base + update)
+    text, _, _ = extract_pdf_parts(base + update)
     assert text == "new text"
 
 
@@ -806,20 +804,20 @@ def _predicted_page(ops: bytes, predictor: int, columns: int, tag: int = 2) -> b
 
 def test_flate_png_up_predictor_content_stream():
     ops = b"BT (predicted up text) Tj ET" + b" " * 4  # pad to a row multiple
-    text, _ = extract_pdf_text(_predicted_page(ops, 12, 8, tag=2))
+    text, _, _ = extract_pdf_parts(_predicted_page(ops, 12, 8, tag=2))
     assert text == "predicted up text"
 
 
 def test_flate_png_sub_paeth_average_predictors():
     for tag in (0, 1, 3, 4):
         ops = b"BT (tagged text) Tj ET" + b" " * 2
-        text, _ = extract_pdf_text(_predicted_page(ops, 12, 12, tag=tag))
+        text, _, _ = extract_pdf_parts(_predicted_page(ops, 12, 12, tag=tag))
         assert text == "tagged text", tag
 
 
 def test_flate_tiff_predictor_content_stream():
     ops = b"BT (tiff differenced) Tj ET"
-    text, _ = extract_pdf_text(_predicted_page(ops, 2, 7))
+    text, _, _ = extract_pdf_parts(_predicted_page(ops, 2, 7))
     assert text == "tiff differenced"
 
 
@@ -842,7 +840,7 @@ def test_lzw_with_png_predictor():
             4: body,
         }
     )
-    text, _ = extract_pdf_text(doc)
+    text, _, _ = extract_pdf_parts(doc)
     assert text == "lzw predicted"
 
 

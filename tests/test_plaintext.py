@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import codecs
 import gzip
+import random
 
 import pytest
 
@@ -66,10 +67,15 @@ def test_gzip_unwraps_html_and_text():
 def test_gzip_corrupt_falls_through_to_error_path():
     bad = b"\x1f\x8b" + b"\x00" * 60
     assert maybe_gunzip(bad) == bad
-    # a gzip missing its trailer, or followed by garbage, is not unwrapped
+    # a gzip cut inside its deflate data, missing its trailer, or followed
+    # by garbage is not unwrapped
     whole = gzip.compress(b"notes " * 50)
-    for bad2 in (whole[:-6], whole + b"junk"):
+    rng = random.Random(7)
+    words = " ".join(f"note{rng.randrange(10**6)}" for _ in range(300))
+    long_ = gzip.compress(words.encode(), mtime=0)  # 1182 bytes
+    for bad2 in (long_[: len(long_) // 2], whole[:-6], whole + b"junk"):
         assert maybe_gunzip(bad2) == bad2
+        assert extract_payload_text(bad2).status == "parse_error"
     res = extract_payload_text(bad)
     assert res.status in ("parse_error", "unsupported")
 

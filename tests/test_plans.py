@@ -344,6 +344,62 @@ def test_every_module_is_reachable():
     assert not orphans, f"modules no entry point imports: {orphans}"
 
 
+def test_every_definition_has_a_caller():
+    """Every module-level function and class of the package, and every
+    method of a class without bases, is named by some file outside
+    ``tests/`` (the package itself included): a definition only tests call
+    is dead code. A reference is a name, an attribute or an imported name;
+    ``__all__`` strings are not references, and dunders are exempt. Methods
+    of classes with bases (``HTMLParser`` overrides) are called by the base
+    and are not checked. Pure ``ast`` walk over names, not scopes; no
+    Spark."""
+    import ast
+    from pathlib import Path
+
+    repo = Path(__file__).resolve().parent.parent
+    pkg = repo / "b2xtranslator_spark"
+    sources = [
+        p
+        for p in repo.rglob("*.py")
+        if not any(
+            part == "tests" or part.startswith(".")
+            for part in p.relative_to(repo).parts
+        )
+    ]
+
+    referenced, defined = set(), []
+    for path in sources:
+        tree = ast.parse(path.read_text())
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Name):
+                referenced.add(node.id)
+            elif isinstance(node, ast.Attribute):
+                referenced.add(node.attr)
+            elif isinstance(node, ast.ImportFrom):
+                referenced.update(a.name for a in node.names)
+        if not path.is_relative_to(pkg):
+            continue
+        rel = path.relative_to(pkg).as_posix()
+        for node in tree.body:
+            if not isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+                continue
+            defined.append((f"{rel}:{node.name}", node.name))
+            if isinstance(node, ast.ClassDef) and not node.bases:
+                defined += [
+                    (f"{rel}:{node.name}.{m.name}", m.name)
+                    for m in node.body
+                    if isinstance(m, ast.FunctionDef)
+                ]
+
+    unused = [
+        where
+        for where, name in defined
+        if name not in referenced
+        and not (name.startswith("__") and name.endswith("__"))
+    ]
+    assert not unused, f"definitions no file outside tests/ names: {unused}"
+
+
 def test_decompression_is_charged_in_budget():
     """One module knows the decompression bound: no module of the package
     but ``budget.py`` calls a ``decompress``, and only

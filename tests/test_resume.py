@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from b2xtranslator_spark.pipeline import (
+    extraction_metrics,
     read_extracted,
     run_with_checkpoints,
 )
@@ -71,16 +72,21 @@ def test_resume_skips_completed_and_matches_uninterrupted(
     assert stats["groups_skipped"] == 2
     assert stats["groups_run"] == N_GROUPS - 2
 
-    a = _canonical(read_extracted(spark, out_killed, N_GROUPS))
+    resumed = read_extracted(spark, out_killed, N_GROUPS)
+    a = _canonical(resumed)
     b = _canonical(read_extracted(spark, out_clean, N_GROUPS))
     assert a.equals(b)
 
-    # checkpoint table carries lineage + metrics
+    # checkpoint table carries lineage + metrics, and its per-group totals
+    # add up to the run totals of the output they commit
     ckpt = spark.read.parquet(f"{out_killed}/_checkpoints")
     rows = ckpt.where(F.col("run_id") == "r2").collect()
     assert len(rows) == N_GROUPS
     assert all(r["state"] == "done" for r in rows)
-    assert sum(r["docs_parsed"] for r in rows) > 0
+    totals = extraction_metrics(resumed).collect()[0]
+    assert totals["docs_parsed"] > 0
+    for col in ("docs_parsed", "records_decoded", "failures"):
+        assert sum(r[col] for r in rows) == totals[col], col
 
 
 def test_rerun_same_run_id_is_noop(spark, transcripts_path, tmp_path_factory):
@@ -91,25 +97,22 @@ def test_rerun_same_run_id_is_noop(spark, transcripts_path, tmp_path_factory):
     assert stats["groups_skipped"] == 2
 
 
-def test_write_extracted_files_are_sorted(spark, transcripts_path, tmp_path_factory):
-    """The sink contract: every output file is sorted by (conv_id, turn_idx)
-    — including under partitionBy, whose writer re-sorts tasks by partition
-    columns (the sort must lead with conv_bucket or ordering is destroyed)."""
+def test_group_files_are_sorted(spark, transcripts_path, tmp_path_factory):
+    """The sink contract: every parquet file run_with_checkpoints writes
+    under each group=<g>/ is sorted by (conv_id, turn_idx)."""
     import glob
 
     import pandas as pd
 
-    from b2xtranslator_spark.pipeline import run_extraction, write_extracted
-
     out = str(tmp_path_factory.mktemp("sink"))
-    transcripts = spark.read.parquet(transcripts_path)
-    write_extracted(run_extraction(transcripts), out, n_buckets=8)
-    files = glob.glob(f"{out}/conv_bucket=*/*.parquet")
-    assert files
-    for f in files:
-        pdf = pd.read_parquet(f)[["conv_id", "turn_idx"]]
-        expected = pdf.sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
-        assert pdf.equals(expected), f"unsorted output file: {f}"
+    run_with_checkpoints(spark, transcripts_path, out, run_id="rs", n_groups=N_GROUPS)
+    for g in range(N_GROUPS):
+        files = glob.glob(f"{out}/group={g}/*.parquet")
+        assert files, f"group {g} wrote no file"
+        for f in files:
+            pdf = pd.read_parquet(f)[["conv_id", "turn_idx"]]
+            expected = pdf.sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
+            assert pdf.equals(expected), f"unsorted output file: {f}"
 
 
 def test_group_selection_prunes_staged_partitions(

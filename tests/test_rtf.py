@@ -6,7 +6,7 @@ from __future__ import annotations
 import pytest
 
 from b2xtranslator_spark.extractors import extract_payload_text
-from b2xtranslator_spark.formats.rtf import extract_rtf_text, looks_like_rtf
+from b2xtranslator_spark.formats.rtf import extract_rtf_parts, looks_like_rtf
 
 DOC = (
     rb"{\rtf1\ansi\ansicpg1252\deff0"
@@ -27,54 +27,54 @@ DOC_EXPECTED = (
 
 
 def test_basic_document_golden():
-    text, records = extract_rtf_text(DOC)
+    text, records, _ = extract_rtf_parts(DOC)
     assert text == DOC_EXPECTED
     assert records > 10
 
 
 def test_escapes_and_specials():
-    text, _ = extract_rtf_text(
+    text, _, _ = extract_rtf_parts(
         rb"{\rtf1 braces \{x\} and back\\slash \~ dash\emdash done}"
     )
     # \~ is a non-breaking space; \emdash eats its one trailing delimiter
     assert text == "braces {x} and back\\slash \xa0 dash—done"
     # \'hh codepage byte (cp1252 euro at 0x80): exactly TWO hex digits,
     # the rest is literal text
-    text, _ = extract_rtf_text(rb"{\rtf1\ansicpg1252 price \'8042}")
+    text, _, _ = extract_rtf_parts(rb"{\rtf1\ansicpg1252 price \'8042}")
     assert text == "price €42"
 
 
 def test_unicode_uc_skip_convention():
     # \uc1: one fallback char after \uN is skipped
-    text, _ = extract_rtf_text(b"{\\rtf1\\uc1 snow \\u9731?man}")
+    text, _, _ = extract_rtf_parts(b"{\\rtf1\\uc1 snow \\u9731?man}")
     assert text == "snow ☃man"
     # \uc2 skips two; \uc0 skips none
-    text, _ = extract_rtf_text(b"{\\rtf1\\uc2 x\\u233ab y}")
+    text, _, _ = extract_rtf_parts(b"{\\rtf1\\uc2 x\\u233ab y}")
     assert text == "x\xe9 y"
-    text, _ = extract_rtf_text(rb"{\rtf1\uc0 x\u233y}")
+    text, _, _ = extract_rtf_parts(rb"{\rtf1\uc0 x\u233y}")
     assert text == "x\xe9y"
     # negative \uN wraps at 65536 (spec: signed 16-bit)
-    text, _ = extract_rtf_text(rb"{\rtf1\uc0 a\u-3513b}")
+    text, _, _ = extract_rtf_parts(rb"{\rtf1\uc0 a\u-3513b}")
     assert text == "ab"
     # \uc is GROUP-scoped: restored after }
-    text, _ = extract_rtf_text(rb"{\rtf1\uc1 {\uc0 \u65x}\u66?y}")
+    text, _, _ = extract_rtf_parts(rb"{\rtf1\uc1 {\uc0 \u65x}\u66?y}")
     assert text == "AxBy"
 
 
 def test_fallback_escape_counts_toward_uc_skip():
     # the ANSI fallback may itself be an \'hh escape
-    text, _ = extract_rtf_text(rb"{\rtf1\uc1 \u233\'e9z}")
+    text, _, _ = extract_rtf_parts(rb"{\rtf1\uc1 \u233\'e9z}")
     assert text == "\xe9z"
 
 
 def test_destinations_dropped_and_shptxt_kept():
-    text, _ = extract_rtf_text(
+    text, _, _ = extract_rtf_parts(
         rb"{\rtf1{\*\generator Acme 1.0;}body"
         rb"{\shp{\*\shpinst\shpleft0{\shptxt boxed text}}} end}"
     )
     assert text == "bodyboxed text end"
     # unknown \* destination is dropped whole
-    text, _ = extract_rtf_text(rb"{\rtf1 a{\*\futuristic stuff}b}")
+    text, _, _ = extract_rtf_parts(rb"{\rtf1 a{\*\futuristic stuff}b}")
     assert text == "ab"
 
 
@@ -85,31 +85,31 @@ def test_hyperlink_field_renders_display_and_url():
         rb"{\rtf1 see {\field{\*\fldinst HYPERLINK "
         rb'"http://x.io"}{\fldrslt the site}} ok}'
     )
-    text, _ = extract_rtf_text(src)
+    text, _, _ = extract_rtf_parts(src)
     assert text == "see the site (http://x.io) ok"
     # extract_urls=False: display only (the previous behavior)
-    text, _ = extract_rtf_text(src, extract_urls=False)
+    text, _, _ = extract_rtf_parts(src, extract_urls=False)
     assert text == "see the site ok"
     # display == url -> bare url
-    text, _ = extract_rtf_text(
+    text, _, _ = extract_rtf_parts(
         rb"{\rtf1 {\field{\*\fldinst HYPERLINK "
         rb'"http://x.io"}{\fldrslt HTTP://x.io}}}'
     )
     assert text == "http://x.io"
     # empty result -> bare url
-    text, _ = extract_rtf_text(
+    text, _, _ = extract_rtf_parts(
         rb'{\rtf1 go {\field{\*\fldinst HYPERLINK "http://y.io"}{\fldrslt }}}'
     )
     assert text == "go http://y.io"
     # a non-HYPERLINK field keeps its result text verbatim
-    text, _ = extract_rtf_text(
+    text, _, _ = extract_rtf_parts(
         rb"{\rtf1 page {\field{\*\fldinst PAGE}{\fldrslt 7}} of 9}"
     )
     assert text == "page 7 of 9"
 
 
 def test_raw_newlines_in_source_are_not_text():
-    text, _ = extract_rtf_text(b"{\\rtf1 one\r\ntwo\nthree}")
+    text, _, _ = extract_rtf_parts(b"{\\rtf1 one\r\ntwo\nthree}")
     assert text == "onetwothree"
 
 
@@ -122,7 +122,7 @@ def test_malformed_never_raises():
         b"{\\rtf1" + b"}" * 50,
         b"{\\rtf1 \\u-40000 lone-surrogate-range}",
     ):
-        text, _ = extract_rtf_text(payload)
+        text, _, _ = extract_rtf_parts(payload)
         assert isinstance(text, str)
         assert "\ud800" not in text  # Arrow-safe: no lone surrogates
 
@@ -188,7 +188,7 @@ def test_bin_raw_bytes_are_skipped():
     # the 5 raw bytes "01}23" contain a brace that is DATA, not a group
     # close; the real close follows the binary run
     src = b"{\\rtf1 before{\\pict\\bin5 01}23} after}"
-    text, _ = extract_rtf_text(src)
+    text, _, _ = extract_rtf_parts(src)
     assert text == "before after"
     # without the \bin skip, the embedded '}' would have closed \pict
     # early and leaked "23" as text
@@ -200,7 +200,7 @@ def test_hyperlink_inside_skipped_destination_does_not_leak():
         rb"{\rtf1 body {\header head {\field{\*\fldinst HYPERLINK "
         rb'"http://h.io"}{\fldrslt hidden}}} tail}'
     )
-    text, _ = extract_rtf_text(src)
+    text, _, _ = extract_rtf_parts(src)
     assert text == "body  tail"
     assert "hidden" not in text and "h.io" not in text
 
@@ -210,7 +210,7 @@ def test_upr_unicode_ansi_pair_emits_exactly_one_version():
     ONE version may surface (we keep the ANSI body, drop the \\ud twin —
     never both, which would duplicate corpus text)."""
     src = rb"{\rtf1 a {\upr{plain version}{\*\ud{\uc0 unicode version}}} b}"
-    text, _ = extract_rtf_text(src)
+    text, _, _ = extract_rtf_parts(src)
     assert text.count("version") == 1
     assert text == "a plain version b"
 
@@ -223,7 +223,7 @@ def test_unicode_escape_inside_field_result_stays_in_field():
         rb"{\rtf1 before {\field{\*\fldinst HYPERLINK "
         rb'"http://x.example"}{\fldrslt caf\u233 e}} after\par}'
     )
-    text, _ = extract_rtf_text(src)
+    text, _, _ = extract_rtf_parts(src)
     assert text == "before café (http://x.example) after"
 
 
@@ -234,13 +234,13 @@ def test_unicode_escape_inside_field_instruction_stays_in_instruction():
         rb"{\rtf1 x {\field{\*\fldinst HYPERLINK "
         rb'"http://\u233 ?.example"}{\fldrslt link}} y\par}'
     )
-    text, _ = extract_rtf_text(src)
+    text, _, _ = extract_rtf_parts(src)
     assert text == "x link (http://é.example) y"
 
 
 def test_unicode_escape_inside_shptxt_lands_in_body_order():
     src = rb"{\rtf1 a {\shpinst\shptxt caf\u233 ?} b\par}"
-    text, _ = extract_rtf_text(src)
+    text, _, _ = extract_rtf_parts(src)
     assert text == "a café b"
 
 
@@ -257,7 +257,7 @@ def test_deadline_fires_on_text_heavy_payload():
     try:
         t0 = time.monotonic()
         with pytest.raises(budget.DocumentTimeout):
-            extract_rtf_text(payload)
+            extract_rtf_parts(payload)
         # generous bound: the gate fires every 64 KiB of progress
         assert time.monotonic() - t0 < 5.0
     finally:
