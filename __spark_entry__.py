@@ -166,7 +166,7 @@ def _scatter_small(df: DataFrame, spark: SparkSession) -> DataFrame:
 
 
 def _synth_extract(docs: DataFrame, synth_fn) -> DataFrame:
-    """Fuse payload synthesis and extraction into ONE mapInPandas stage.
+    """Fuse payload synthesis and extraction into ONE mapInArrow stage.
 
     The synthesized legs used to chain two Python evals (synth ->
     JVM -> extract), so every payload string crossed the JVM<->Python
@@ -177,14 +177,17 @@ def _synth_extract(docs: DataFrame, synth_fn) -> DataFrame:
     in-process, and ships back only the three columns the leg returns
     (doc_id, extracted, status) instead of the full extraction schema —
     the payload now never crosses the boundary at all. Output values are
-    identical: same synthesis bytes, same kernel, same casts."""
+    identical: same synthesis bytes, same kernel, same casts. The synth
+    functions are written over pandas frames, so this leg's workers
+    convert each input batch."""
     from b2xtranslator_spark.pipeline import extract_turns
 
     def fused(batches):
         import pandas as pd
+        import pyarrow as pa
 
         def transcript_frames():
-            for pdf in synth_fn(batches):
+            for pdf in synth_fn(b.to_pandas() for b in batches):
                 yield pd.DataFrame(
                     {
                         "conv_id": pdf["source"].values,
@@ -195,15 +198,13 @@ def _synth_extract(docs: DataFrame, synth_fn) -> DataFrame:
                 )
 
         for out in extract_turns(transcript_frames()):
-            yield pd.DataFrame(
-                {
-                    "doc_id": out["turn_idx"].to_numpy().astype("int64"),
-                    "extracted": out["text"],
-                    "status": out["status"],
-                }
+            yield pa.RecordBatch.from_arrays(
+                [out.column("turn_idx").cast(pa.int64()), out.column("text"),
+                 out.column("status")],
+                names=["doc_id", "extracted", "status"],
             )
 
-    return docs.mapInPandas(
+    return docs.mapInArrow(
         fused, schema="doc_id long, extracted string, status string"
     )
 
@@ -280,7 +281,7 @@ def _q_extract_markup(spark: SparkSession, sf_dir: str) -> DataFrame:
     FULL DuckDB oracle: HTML pages are synthesized deterministically from
     the documents table (escaped text wrapped in content tags plus
     title/style/nav/footer/script boilerplate), extracted through the real
-    pipeline (markup: payload -> mapInPandas -> formats/markup.py
+    pipeline (markup: payload -> mapInArrow -> formats/markup.py
     boilerplate strip), and the expected cleaned text is stated
     INDEPENDENTLY in portable SQL: boilerplate gone, entities decoded back
     to the original text, whitespace collapsed, h1/p blocks newline-joined.

@@ -60,6 +60,8 @@ MAX_PAYLOAD_BYTES = 256 << 20
 def oversize_error(n_bytes: int) -> str:
     return f"payload ~{n_bytes} bytes exceeds the size cap ({MAX_PAYLOAD_BYTES} bytes)"
 
+
+_PIECE = 1 << 20  # inflate's read size
 _DEADLINE: float | None = None
 _LEFT: int | None = None  # decoded bytes the open document may still take
 
@@ -93,10 +95,27 @@ def charge(n_bytes: int) -> None:
 
 def inflate(source, data: bytes | None = None, limit: int | None = None) -> bytes:
     """One charged read of at most one byte past the allowance (or ``limit``,
-    a declared size): ``source.decompress(data, n)`` or ``source.read(n)``."""
+    a declared size): ``source.readinto`` a file, or ``source.decompress``
+    ``data``. It reads in 1 MB pieces into one growing buffer, so a bomb is
+    refused holding about the allowance, where one unbounded call would
+    also hold the codec's output blocks (or the file's buffered copy)."""
     left = MAX_PAYLOAD_BYTES if _LEFT is None else _LEFT
     # at least 1: a max_length of 0 means "unbounded" to a decompressor
     n = max(1, left + 1 if limit is None else min(limit, left + 1))
-    out = source.read(n) if data is None else source.decompress(data, n)
+    out = bytearray()
+    piece = memoryview(bytearray(min(n, _PIECE))) if data is None else None
+    while len(out) < n:
+        step = min(n - len(out), _PIECE)
+        if data is None:
+            got = piece[: source.readinto(piece[:step])]
+        elif source.eof:
+            break
+        else:
+            got = source.decompress(data, step)
+            # zlib hands back the input it did not read; bz2 and lzma keep it
+            data = getattr(source, "unconsumed_tail", b"")
+        if not got:
+            break
+        out += got
     charge(len(out))
-    return out
+    return bytes(out)

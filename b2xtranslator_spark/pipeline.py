@@ -3,10 +3,15 @@
 Architecture (SURVEY.md §3 "Spark lifecycle"):
 
     read transcripts (column-pruned)
-      -> mapInPandas(extract_turns)           (Arrow batches over the scan
+      -> mapInArrow(extract_turns)            (Arrow batches over the scan
                                                splits; pure per-document map)
       -> per group: sort within partitions by (conv_id, turn_idx) and
          write <out>/group=<g>/ map-only
+
+The kernel works on the Arrow batches themselves: payload cells are read in
+place from the batch's data buffers and the output columns are built from
+buffers, so a Python worker never materializes a pandas frame (nor imports
+pandas) and never holds a payload as a Python str.
 
 The job has no salt, no repartition and no conv_bucket write: its one sink
 is run_with_checkpoints, which commits the corpus in deterministic
@@ -21,13 +26,17 @@ custom rules, no RDDs, no driver-side loops over rows.
 from __future__ import annotations
 
 import base64
+import hashlib
 import os
 import time
+from collections import OrderedDict
 from collections.abc import Iterator
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import (
     ArrayType,
     IntegerType,
@@ -45,14 +54,15 @@ PAYLOAD_PREFIX = "b64cfb:"
 MARKUP_PREFIX = "markup:"
 # same, with the link-density main-content heuristic forced ON for this row
 MARKUP_MAIN_PREFIX = "markup_main:"
-# payload prefix -> (is_markup, main_content); the markup ones carry raw
-# HTML, the other base64 document bytes
+# payload prefix (UTF-8) -> (is_markup, main_content); the markup ones carry
+# raw HTML, the other base64 document bytes
 _PREFIXES = {
-    PAYLOAD_PREFIX: (False, False),
-    MARKUP_MAIN_PREFIX: (True, True),
-    MARKUP_PREFIX: (True, False),
+    PAYLOAD_PREFIX.encode(): (False, False),
+    MARKUP_MAIN_PREFIX.encode(): (True, True),
+    MARKUP_PREFIX.encode(): (True, False),
 }
 _PREFIX_TUPLE = tuple(_PREFIXES)
+_PREFIX_MAX = max(map(len, _PREFIX_TUPLE))
 
 SPAN_TYPE = ArrayType(
     StructType(
@@ -86,6 +96,21 @@ EXTRACTED_SCHEMA = StructType(
     ]
 )
 
+# the kernel's input columns; run_extraction casts to these types, so the
+# batches carry string columns and an int32 turn_idx
+TRANSCRIPT_SCHEMA = StructType(
+    [
+        StructField("conv_id", StringType()),
+        StructField("turn_idx", IntegerType()),
+        StructField("text", StringType()),
+        StructField("tool", StringType()),
+    ]
+)
+_IN_ARROW = pa.schema(list(to_arrow_type(TRANSCRIPT_SCHEMA)))
+_OUT_ARROW = pa.schema(list(to_arrow_type(EXTRACTED_SCHEMA)))
+_SPANS_ARROW = _OUT_ARROW.field("spans").type
+_METRICS_ARROW = _OUT_ARROW.field("metrics").type
+
 
 # Content-addressed per-worker decode cache: real transcript corpora repeat
 # identical attachments (the same document forwarded across turns and
@@ -99,62 +124,69 @@ _DECODE_CACHE_MAX = 256  # entries
 
 # Output chunking budget for the map kernel: the INPUT Arrow batch size is
 # bounded JVM-side (maxRecordsPerBatch=128 x payload size), but the kernel's
-# OUTPUT frame + its Arrow serialization buffer are extra copies — yielding
-# in byte-bounded slices caps that additional footprint per batch.
+# OUTPUT columns + their Arrow serialization buffer are extra copies —
+# yielding in slices of about this many input bytes caps that additional
+# footprint per batch.
 _OUT_CHUNK_BYTES = 64 << 20
 
+_CONTINUATION = bytes(range(0x80, 0xC0))  # UTF-8 bytes that start no character
 
-def _extract_one(text: str | None, tool: str | None) -> tuple:
-    """Extract a single document turn. The payload may arrive in `text` OR
-    `tool` (BASELINE.json input_hint); the kernel calls this only for rows
-    where one of them carries a payload prefix (chat rows never get here)."""
+
+def _chars(utf8: memoryview) -> int:
+    """Characters in UTF-8 bytes, counted in 1 MB pieces: the bytes that are
+    not continuation bytes."""
+    step = 1 << 20
+    return sum(
+        len(bytes(utf8[i:i + step]).translate(None, _CONTINUATION))
+        for i in range(0, len(utf8), step)
+    )
+
+
+def _extract_one(src: memoryview) -> tuple:
+    """Extract one payload cell: the UTF-8 bytes of `text` or `tool`, prefix
+    included (BASELINE.json input_hint: the payload may arrive in either).
+    Returns (text, spans, status, error, metrics)."""
     global _DECODE_CACHE
-    import hashlib
-
     from .extractors import extract_payload_text  # module-cached after first call
 
-    src = text if text and text.startswith(_PREFIX_TUPLE) else tool
-    prefix = next(p for p in _PREFIXES if src.startswith(p))
+    src = memoryview(src)
+    prefix = next(p for p in _PREFIX_TUPLE if src[:len(p)] == p)
     is_markup, main_content = _PREFIXES[prefix]
     body = src[len(prefix):]
 
     # the oversize gate must run BEFORE the cache key (an md5 over the full
     # source) so repeated oversize rows never pay a multi-hundred-MB hash
-    # for a result that is never cached. Binary payloads: exact from the
-    # base64 ratio. Markup: a char count UNDER-measures UTF-8 (CJK/emoji
-    # are 2-4 bytes/char), so chars > cap rejects immediately (UTF-8 is
-    # >= 1 byte/char) and anything smaller is measured by an exact encode —
-    # bounded at cap chars, i.e. never the multi-GB worst case the gate
-    # exists to stop.
+    # for a result that is never cached. Markup counts its UTF-8 bytes;
+    # base64 estimates the decoded size from its characters, which only a
+    # non-ASCII body (never valid base64) has fewer of than bytes.
     cap = budget.MAX_PAYLOAD_BYTES
-    if is_markup:
-        byte_len = len(body) if len(body) > cap else len(body.encode("utf-8"))
-    else:
-        byte_len = len(body) // 4 * 3
-    if byte_len > cap:
-        return ("", [], "oversize", budget.oversize_error(byte_len), (0, 0, 0, 1, 0))
+    size = len(body) if is_markup else len(body) // 4 * 3
+    if size > cap and not is_markup:
+        size = _chars(body) // 4 * 3
+    if size > cap:
+        return ("", [], "oversize", budget.oversize_error(size), (0, 0, 0, 1, 0))
 
     if _DECODE_CACHE is None:
-        from collections import OrderedDict
-
         _DECODE_CACHE = OrderedDict()
-    # Hash the exact payload bytes: an ascii-'replace' digest would map a
+    # Hash the exact cell bytes: an ascii-'replace' digest would map a
     # literal '?' and any non-ASCII char at the same position to the same
     # key, letting one row be served another row's cached result (ADVICE
-    # r02). utf-8 is injective on str, so collisions need an md5 break. The
-    # prefix is hashed too, so markup: and markup_main: never share a key.
-    key = hashlib.md5(src.encode("utf-8")).digest()
+    # r02). The bytes are the cell's UTF-8, so collisions need an md5
+    # break. The prefix is hashed too, so markup: and markup_main: never
+    # share a key.
+    key = hashlib.md5(src).digest()
     hit = _DECODE_CACHE.get(key)
     if hit is not None:
         _DECODE_CACHE.move_to_end(key)
         return hit
+    raw = bytes(body)
     if is_markup:
-        res = extract_payload_text(
-            body.encode("utf-8"), force_kind="html", html_main_content=main_content
-        )
+        res = extract_payload_text(raw, force_kind="html", html_main_content=main_content)
     else:
         try:
-            payload = base64.b64decode(body)
+            # a non-ASCII body goes in as str, which base64 refuses with its
+            # own message
+            payload = base64.b64decode(raw if raw.isascii() else str(raw, "utf-8"))
         except ValueError as exc:  # malformed base64 is a row error, not a task error
             return ("", [], "parse_error", f"base64: {exc}", (0, 0, 0, 1, 0))
         res = extract_payload_text(payload)
@@ -179,74 +211,121 @@ def _extract_one(text: str | None, tool: str | None) -> tuple:
     return out
 
 
-def extract_turns(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas kernel: one Arrow batch of turns in, one batch of
-    extracted rows out. Non-payload (chat) rows never enter a per-row Python
-    conditional: the whole batch is mask-assigned with vectorized pandas ops
-    and only the document-bearing indices loop into the parser core (which
-    vectorizes its own byte work internally)."""
-    import numpy as np
-
-    for whole in batches:
+def extract_turns(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    """mapInArrow kernel: one Arrow batch of turns in, its extracted rows
+    out, in slices of about _OUT_CHUNK_BYTES of input. A pandas frame is
+    accepted too (in-process callers) and converted first."""
+    for batch in batches:
+        if not isinstance(batch, pa.RecordBatch):
+            batch = pa.RecordBatch.from_pandas(batch, schema=_IN_ARROW, preserve_index=False)
+        if not batch.num_rows:
+            continue
+        text = _cells(batch.column("text"))
+        tool = _cells(batch.column("tool"))
         # byte-bounded slicing: one slice's outputs (and their Arrow
         # serialization) are the only extra copies alive at a time, so a
         # batch of huge attachments cannot triple-buffer itself into an OOM
-        sizes = (
-            whole["text"].str.len().to_numpy(dtype="float64", na_value=0.0)
-            + whole["tool"].str.len().to_numpy(dtype="float64", na_value=0.0)
-        )
-        cuts = [0]
-        acc = 0
-        for r, sz in enumerate(sizes):
-            acc += int(sz)
-            if acc >= _OUT_CHUNK_BYTES and r + 1 < len(whole):
-                cuts.append(r + 1)
-                acc = 0
-        cuts.append(len(whole))
-        slices = (
-            [whole]
-            if len(cuts) == 2
-            else [whole.iloc[a:b] for a, b in zip(cuts, cuts[1:]) if b > a]
-        )
-        yield from _extract_frames(slices, np)
+        a = acc = 0
+        for r, size in enumerate((text[2] - text[1] + tool[2] - tool[1]).tolist()):
+            acc += size
+            if acc >= _OUT_CHUNK_BYTES and r + 1 < batch.num_rows:
+                yield _extract_rows(batch, text, tool, a, r + 1)
+                a, acc = r + 1, 0
+        yield _extract_rows(batch, text, tool, a, batch.num_rows)
 
 
-def _extract_frames(slices, np) -> Iterator[pd.DataFrame]:
-    for pdf in slices:
-        text_s = pdf["text"]
-        tool_s = pdf["tool"]
-        is_doc = (
-            text_s.str.startswith(_PREFIX_TUPLE, na=False)
-            | tool_s.str.startswith(_PREFIX_TUPLE, na=False)
-        ).to_numpy()
+def _cells(col: pa.Array) -> tuple[memoryview, np.ndarray, np.ndarray]:
+    """A string column read in place: its data buffer and each cell's start
+    and end offsets in it. A null cell is empty."""
+    validity, offsets, data = col.buffers()
+    # 64-bit offsets under spark.sql.execution.arrow.useLargeVarTypes
+    width = np.int64 if pa.types.is_large_string(col.type) else np.int32
+    off = np.frombuffer(offsets, width, len(col) + 1, col.offset * np.dtype(width).itemsize)
+    starts, ends = off[:-1], off[1:]
+    if col.null_count:
+        bits = np.unpackbits(np.frombuffer(validity, np.uint8), bitorder="little")
+        ends = np.where(bits[col.offset:col.offset + len(col)].view(bool), ends, starts)
+    return memoryview(data if data is not None else b"").cast("B"), starts, ends
 
-        # vectorized passthrough defaults for every row (chat rows keep them)
-        passthrough = text_s.fillna("")
-        texts = passthrough.to_numpy(dtype=object).copy()
-        lens = passthrough.str.len().to_numpy()
-        spans = [[("main", 0, int(n))] for n in lens]
-        statuses = np.full(len(pdf), "skipped", dtype=object)
-        errors: list = [None] * len(pdf)
-        metrics: list = [(0, 0, int(n), 0, 0) for n in lens]
 
-        for i in np.nonzero(is_doc)[0]:
-            t, s, st, err, m = _extract_one(text_s.iat[i], tool_s.iat[i])
-            texts[i] = t
-            spans[i] = s
-            statuses[i] = st
-            errors[i] = err
-            metrics[i] = m
-        yield pd.DataFrame(
-            {
-                "conv_id": pdf["conv_id"].values,
-                "turn_idx": pdf["turn_idx"].values,
-                "text": texts,
-                "spans": spans,
-                "status": statuses,
-                "error": errors,
-                "metrics": metrics,
-            }
-        )
+def _is_payload(cell: memoryview) -> bool:
+    return bytes(cell[:_PREFIX_MAX]).startswith(_PREFIX_TUPLE)
+
+
+def _extract_rows(batch: pa.RecordBatch, text, tool, a: int, b: int) -> pa.RecordBatch:
+    """Rows [a, b) of the batch: a payload-bearing row is decoded, a chat
+    row passes its text through with status 'skipped'."""
+    texts, spans, statuses, errors, metrics = [], [], [], [], []
+    rows = zip(*(bound[a:b].tolist() for bound in (text[1], text[2], tool[1], tool[2])))
+    for t0, t1, o0, o1 in rows:
+        cell = text[0][t0:t1]
+        src = cell if _is_payload(cell) else tool[0][o0:o1]
+        if src is cell or _is_payload(src):
+            t, s, st, err, m = _extract_one(src)
+            cell = t.encode("utf-8")
+        else:  # spans and bytes_decoded count characters
+            n = len(str(cell, "utf-8"))
+            s, st, err, m = [("main", 0, n)], "skipped", None, (0, 0, n, 0, 0)
+        texts.append(cell)
+        spans.append(s)
+        statuses.append(st.encode())
+        errors.append(err)
+        metrics.append(m)
+
+    flat = [s for row in spans for s in row]
+    span_values = pa.StructArray.from_arrays(
+        [
+            _strings([p.encode() for p, _, _ in flat]),
+            _ints([s for _, s, _ in flat], pa.int32()),
+            _ints([e for _, _, e in flat], pa.int32()),
+        ],
+        fields=list(_SPANS_ARROW.value_type),
+    )
+    columns = np.array(metrics, dtype=np.int64).T
+    return pa.RecordBatch.from_arrays(
+        [
+            batch.column("conv_id").slice(a, b - a),
+            batch.column("turn_idx").slice(a, b - a),
+            _strings(texts),
+            pa.ListArray.from_arrays(
+                _ints(np.cumsum([0] + [len(row) for row in spans]), pa.int32()),
+                span_values,
+                type=_SPANS_ARROW,
+            ),
+            _strings(statuses),
+            _strings([e.encode() if e is not None else b"" for e in errors],
+                     valid=[e is not None for e in errors]),
+            pa.StructArray.from_arrays(
+                [_ints(c, f.type) for c, f in zip(columns, _METRICS_ARROW)],
+                fields=list(_METRICS_ARROW),
+            ),
+        ],
+        schema=_OUT_ARROW,
+    )
+
+
+# The output columns are built from buffers: pa.array over Python objects
+# imports pandas into the worker (about +37 MB each, with pyarrow 16).
+
+
+def _ints(values, type_: pa.DataType) -> pa.Array:
+    """An integer array of `type_` without nulls."""
+    data = np.ascontiguousarray(values, dtype=f"i{type_.bit_width // 8}")
+    return pa.Array.from_buffers(type_, len(data), [None, pa.py_buffer(data)])
+
+
+def _strings(values: list, valid: list[bool] | None = None) -> pa.Array:
+    """A string array of UTF-8 byte strings; `valid` False marks a null."""
+    offsets = np.zeros(len(values) + 1, np.int64)
+    np.cumsum([len(v) for v in values], out=offsets[1:])
+    if offsets[-1] >= 1 << 31:
+        raise OverflowError("a kernel output slice holds 2 GB or more of strings")
+    mask = None if valid is None else pa.py_buffer(np.packbits(valid, bitorder="little"))
+    return pa.Array.from_buffers(
+        pa.string(),
+        len(values),
+        [mask, pa.py_buffer(offsets.astype(np.int32)), pa.py_buffer(b"".join(values))],
+    )
 
 
 def run_extraction(transcripts: DataFrame) -> DataFrame:
@@ -257,10 +336,12 @@ def run_extraction(transcripts: DataFrame) -> DataFrame:
     sizing (spark.sql.files.maxPartitionBytes=32MB) controls balance
     instead. The sink (run_with_checkpoints) writes map-only too, so no
     step shuffles rows by conversation, and a giant conversation cannot
-    make one task larger than its own input splits."""
-    return transcripts.select("conv_id", "turn_idx", "text", "tool").mapInPandas(
-        extract_turns, schema=EXTRACTED_SCHEMA
-    )
+    make one task larger than its own input splits. The casts to
+    TRANSCRIPT_SCHEMA are no-ops (Catalyst drops them) where the types
+    already match."""
+    return transcripts.select(
+        *(F.col(f.name).cast(f.dataType).alias(f.name) for f in TRANSCRIPT_SCHEMA)
+    ).mapInArrow(extract_turns, schema=EXTRACTED_SCHEMA)
 
 
 # -- checkpointed run (resume without recompute) --------------------------------
@@ -269,7 +350,7 @@ def run_extraction(transcripts: DataFrame) -> DataFrame:
 # one row per committed group; resume reads (run_id, partition_id, n_groups,
 # state)
 CHECKPOINT_DDL = (
-    "run_id string, partition_id int, conv_bucket int, n_groups int, "
+    "run_id string, partition_id int, n_groups int, "
     "state string, docs_parsed long, records_decoded long, failures long, "
     "ts long"
 )
@@ -382,7 +463,6 @@ def run_with_checkpoints(
         agg = obs.get
         row = (
             run_id,
-            group,
             group,
             n_groups,
             "done",

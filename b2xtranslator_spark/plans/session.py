@@ -1,17 +1,59 @@
 """SparkSession factory tuned for the extraction workload.
 
 The job is a pure per-document map over wide binary payloads (SURVEY.md §3):
-the knobs that matter are Arrow batch shaping for mapInPandas, AQE for
-runtime coalescing of the operators' shuffles, and at least 32 shuffle
-partitions (a real cluster submit overrides via spark-submit --conf). The
-default master runs one local thread per core this process may use.
+the knobs that matter are Arrow batch shaping for the mapInArrow kernel, one
+task slot per physical core, AQE for runtime coalescing of the operators'
+shuffles, and at least 32 shuffle partitions (a real cluster submit
+overrides via spark-submit --conf). The default master runs one local
+thread per CPU this process may use.
 """
 
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
+
+
+def _cpu_list(text: str) -> set[int]:
+    """CPU numbers of a sysfs list such as "0-3,8,10-11"."""
+    cpus: set[int] = set()
+    for part in text.strip().split(","):
+        lo, _, hi = part.partition("-")
+        cpus.update(range(int(lo), int(hi or lo) + 1))
+    return cpus
+
+
+def task_cpus(cpus: set[int], siblings: dict[int, str], cores: int) -> int:
+    """CPUs per map task: the SMT threads per physical core among `cpus`
+    (the affinity set), from each CPU's thread_siblings_list text in
+    `siblings` (a CPU missing there is its own core), clamped to
+    [1, cores], the cores the master runs tasks on.
+
+    One Python decoder per physical core: SMT siblings share the core's
+    execution units, so a second decoder on the sibling thread mostly
+    adds memory and contention. Measured at local[32] on a 16-core,
+    32-thread box (SCALING.md §7): task.cpus=2 ran cache-cold extraction
+    in 5.6 s, stable, where task.cpus=1 swung 5.9-38 s. On 4 cores with
+    one thread each, one slot per core gave perfbench `doc_cold`
+    1.24-1.64x the turns/s of two slots (10 seeds)."""
+    physical = {
+        frozenset(_cpu_list(siblings[c]) & cpus) if c in siblings else frozenset({c})
+        for c in cpus
+    }
+    return max(1, min(len(cpus) // max(1, len(physical)), cores))
+
+
+def _sibling_lists(cpus: set[int]) -> dict[int, str]:
+    out = {}
+    for c in cpus:
+        try:
+            with open(f"/sys/devices/system/cpu/cpu{c}/topology/thread_siblings_list") as f:
+                out[c] = f.read()
+        except OSError:
+            pass
+    return out
 
 
 def build_session(
@@ -19,11 +61,19 @@ def build_session(
     master: str | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = len(os.sched_getaffinity(0))
+    cpus = os.sched_getaffinity(0)
+    master = master or f"local[{len(cpus)}]"
+    local = re.fullmatch(r"local\[(\d+)\]", master)
+    # glibc gives threads that malloc concurrently their own arenas (up to
+    # 8 per core), which the JVM's many threads turn into RSS: on 4 cores
+    # and 4 map slots, two arenas (the Hadoop/YARN container default) cut
+    # the doc_cold peak by ~145 MB at the same speed. Set before the JVM
+    # starts: the driver JVM, the Python daemon and its workers inherit it.
+    os.environ.setdefault("MALLOC_ARENA_MAX", "2")
     b = (
         SparkSession.builder.appName(app_name)
-        .master(master or f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(max(cpus, 32)))
+        .master(master)
+        .config("spark.sql.shuffle.partitions", str(max(len(cpus), 32)))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         # parallelismFirst stays at its default (true): measured A/B this
@@ -39,6 +89,10 @@ def build_session(
         # 128 is the plateau (ISSUE-003-Memory-Management.md bounds still
         # hold: 128 x 10MB worst case = 1.3GB per in-flight batch).
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "128")
+        # the parquet reader's batch (default 4096 rows) matches the Arrow
+        # batch: its column vectors hold a batch of payload rows per scan
+        # task (doc_cold peak RSS 30-85 MB lower than at 4096)
+        .config("spark.sql.parquet.columnarReaderBatchSize", "128")
         # smaller splits than the 128MB default: payload rows are huge, so
         # 32MB keeps scan tasks plentiful and uniform for the map stage
         .config("spark.sql.files.maxPartitionBytes", "33554432")
@@ -51,15 +105,16 @@ def build_session(
         # (sessionize_events) must mean treat-as-UTC on every host, not
         # whatever the box's /etc/localtime says
         .config("spark.sql.session.timeZone", "UTC")
-        # one box cannot run 32 JVM task threads + 32 Python workers + GC on
-        # 32 hardware threads: task.cpus=2 halves concurrent tasks so each
-        # (JVM thread, Python worker) pair gets a real core. Measured at
-        # local[32], cache-cold sf0.1 extraction, median of 3:
-        # 10.1-19.0 s (swinging 5.9-38) -> 5.6 s (stable 4.7-8.0); the
-        # JVM-only agg queries also got slightly faster (0.42 -> 0.30 s).
-        # A real multi-executor cluster sizes executors instead and can
-        # override via spark-submit --conf.
-        .config("spark.task.cpus", "2")
+        # one task slot, so one (JVM thread, Python worker) pair, per
+        # physical core (task_cpus). Set even when it is 1: readers of the
+        # conf count slots as cores / task.cpus. A real multi-executor
+        # cluster sizes executors instead and can override via
+        # spark-submit --conf.
+        .config(
+            "spark.task.cpus",
+            str(task_cpus(cpus, _sibling_lists(cpus),
+                          int(local.group(1)) if local else len(cpus))),
+        )
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Djava.net.preferIPv6Addresses=false")

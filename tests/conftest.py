@@ -13,7 +13,7 @@ sys.path.insert(0, str(REPO))
 def spark():
     from b2xtranslator_spark.plans.session import build_session
 
-    spark = build_session(app_name="b2x-tests", master="local[8]")
+    spark = build_session(app_name="b2x-tests")
     yield spark
     spark.stop()
 

@@ -170,4 +170,4 @@ def test_chapters_summing_past_budget_are_oversize(decode_bomb):
     is four times it. The budget is per document, not per member."""
     r = decode_bomb(make_epub([" " * (8 << 20)] * 8))
     assert r["status"] == "oversize", r
-    assert r["s"] < 10 and r["rss_mb"] < 48, r
+    assert r["s"] < 10 and r["rss_mb"] < 32, r

@@ -78,7 +78,7 @@ def test_idat_bomb_is_oversize(decode_bomb):
     )
     r = decode_bomb(png, image=True)
     assert r["status"] == "PayloadOversize", r
-    assert r["s"] < 10 and r["rss_mb"] < 48, r
+    assert r["s"] < 10 and r["rss_mb"] < 32, r
 
 
 def test_mean_pool_shapes():

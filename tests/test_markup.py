@@ -144,11 +144,11 @@ def test_markup_main_prefix_forces_heuristic_per_row():
         "<body><div><a href='/p'>Products</a> <a href='/q'>Pricing</a> "
         "<a href='/d'>Docs</a></div><p>Kept content line.</p></body>"
     )
-    assert pl._extract_one(pl.MARKUP_MAIN_PREFIX + body, None)[0] == (
+    assert pl._extract_one((pl.MARKUP_MAIN_PREFIX + body).encode())[0] == (
         "Kept content line."
     )
     # the plain prefix on the same payload keeps the menu
-    out = pl._extract_one(pl.MARKUP_PREFIX + body, None)[0]
+    out = pl._extract_one((pl.MARKUP_PREFIX + body).encode())[0]
     assert out.splitlines()[0].startswith("Products (/p)")
 
 
@@ -305,10 +305,10 @@ def test_markup_oversize_gate_measures_bytes():
         # ~43k chars of 3-byte CJK = ~128KB utf-8: under the cap in chars,
         # over it in bytes
         big = pl.MARKUP_PREFIX + "<div>" + "中" * 43000 + "</div>"
-        assert pl._extract_one(big, None)[2] == "oversize"
+        assert pl._extract_one(big.encode())[2] == "oversize"
         # same char count in ASCII stays under the byte cap
         ok = pl.MARKUP_PREFIX + "<div>" + "x" * 43000 + "</div>"
-        assert pl._extract_one(ok, None)[2] == "ok"
+        assert pl._extract_one(ok.encode())[2] == "ok"
     finally:
         budget.MAX_PAYLOAD_BYTES = old
 
@@ -331,11 +331,11 @@ def test_decode_cache_keyed_by_main_content_mode():
 
     body = "<body><div><a>m</a><a>n</a><a>o</a></div><p>Real body text here.</p></body>"
     pl._DECODE_CACHE = None
-    with_menu = pl._extract_one(pl.MARKUP_PREFIX + body, None)[0]
-    without_menu = pl._extract_one(pl.MARKUP_MAIN_PREFIX + body, None)[0]
+    with_menu = pl._extract_one((pl.MARKUP_PREFIX + body).encode())[0]
+    without_menu = pl._extract_one((pl.MARKUP_MAIN_PREFIX + body).encode())[0]
     # both now cached: each prefix is served its own entry
-    assert pl._extract_one(pl.MARKUP_PREFIX + body, None)[0] == with_menu
-    assert pl._extract_one(pl.MARKUP_MAIN_PREFIX + body, None)[0] == without_menu
+    assert pl._extract_one((pl.MARKUP_PREFIX + body).encode())[0] == with_menu
+    assert pl._extract_one((pl.MARKUP_MAIN_PREFIX + body).encode())[0] == without_menu
     assert len(pl._DECODE_CACHE) == 2
     assert with_menu == "mno\nReal body text here."
     assert without_menu == "Real body text here."

@@ -349,7 +349,7 @@ def test_flate_bomb_is_oversize(decode_bomb):
     )
     r = decode_bomb(pdf)
     assert r["status"] == "oversize", r
-    assert r["s"] < 10 and r["rss_mb"] < 48, r
+    assert r["s"] < 10 and r["rss_mb"] < 32, r
 
 
 def test_cycle_in_page_tree_terminates():

@@ -171,6 +171,7 @@ def test_oversize_payload_and_output_chunking(spark, monkeypatch):
     import base64
 
     import pandas as pd
+    import pyarrow as pa
 
     import b2xtranslator_spark.pipeline as pl
     from b2xtranslator_spark import budget
@@ -191,7 +192,7 @@ def test_oversize_payload_and_output_chunking(spark, monkeypatch):
     )
     frames = list(pl.extract_turns(iter([batch])))
     assert len(frames) > 1, "expected byte-bounded chunked output"
-    out = pd.concat(frames, ignore_index=True)
+    out = pa.Table.from_batches(frames).to_pandas()
     assert len(out) == 6
     assert list(out["turn_idx"]) == list(range(6))  # order preserved
     assert (out.loc[[0, 3, 5], "status"] == "oversize").all()
@@ -201,7 +202,7 @@ def test_oversize_payload_and_output_chunking(spark, monkeypatch):
 
     # under the default cap the same payload decodes fine
     monkeypatch.setattr(budget, "MAX_PAYLOAD_BYTES", 256 << 20)
-    ok = pl._extract_one(payload, None)
+    ok = pl._extract_one(payload.encode())
     assert ok[2] == "ok"
     assert ok[0] == expected
 
@@ -227,3 +228,214 @@ def test_markup_and_pdf_fixtures_ride_the_flagship(spark, corpus):
         # normalization (hash-based sampling doesn't guarantee these two
         # fixtures land in the 300-turn equality test)
         assert (normalize_text(res.text) or "") == r["expected_text"]
+
+
+# -- the mapInArrow kernel ---------------------------------------------------
+
+_PARITY_CAP = 64 << 10  # budget.MAX_PAYLOAD_BYTES while the parity batch runs
+
+
+def _parity_batch(seed: int = 18):
+    """A seeded batch of (text, tool) cells covering every path of the
+    kernel: payloads in either column (the other holding chat or null),
+    null and empty cells, markup:/markup_main: with CJK, a non-ASCII and a
+    malformed base64 body, oversize rows of both kinds and a repeated
+    payload (a cache hit)."""
+    import base64
+
+    import numpy as np
+
+    import b2xtranslator_spark.pipeline as pl
+    from b2xtranslator_spark.sources.binfixtures import (
+        build_docx_fixture,
+        build_ppt_fixture,
+        build_xls_fixture,
+    )
+
+    rng = np.random.default_rng(seed)
+
+    def b64(doc: bytes) -> str:
+        return pl.PAYLOAD_PREFIX + base64.b64encode(doc).decode()
+
+    xls = b64(build_xls_fixture()[0])
+    payloads = [
+        xls,
+        b64(build_ppt_fixture()[0]),
+        b64(build_docx_fixture()[0]),
+        pl.MARKUP_PREFIX + "<nav><a href='/'>首页</a></nav><p>東京 café — naïve</p>",
+        pl.MARKUP_MAIN_PREFIX
+        + "<div><a href='/a'>一</a> <a href='/b'>二</a> <a href='/c'>三</a></div>"
+        + "<p>正文内容 stays, 😀 too.</p>",
+        pl.PAYLOAD_PREFIX + "QUJD" + "é" * 8,  # non-ASCII base64
+        pl.PAYLOAD_PREFIX + "QUJDR",  # malformed base64
+        b64(rng.bytes(_PARITY_CAP + 1024)),  # oversize base64
+        # over the cap in UTF-8 bytes, under it in characters
+        pl.MARKUP_PREFIX + "<p>" + "東" * (_PARITY_CAP // 2) + "</p>",
+        # non-ASCII base64 over the cap in bytes, under it in characters:
+        # a parse_error, as its characters decide
+        pl.PAYLOAD_PREFIX + "é" * (_PARITY_CAP * 4 // 3 // 2 + 64),
+        xls,  # the same cell again: a cache hit
+    ]
+    chats = ["hello", "", None, "多语言 chat ☃", "x" * 300, None]
+    text, tool = [], []
+    for p in payloads:
+        other = chats[int(rng.integers(len(chats)))]
+        if rng.random() < 0.5:
+            text.append(p)
+            tool.append(other)
+        else:
+            text.append(other)
+            tool.append(p)
+    for c in chats:
+        text.append(c)
+        tool.append(chats[int(rng.integers(len(chats)))])
+    order = rng.permutation(len(text))
+    return [text[i] for i in order], [tool[i] for i in order]
+
+
+def _parent_row(text, tool) -> tuple:
+    """One row as the pandas kernel that mapInArrow replaced computed it
+    over Python str: (text, spans, status, error, metrics without
+    wall_ms)."""
+    import base64
+
+    import b2xtranslator_spark.pipeline as pl
+    from b2xtranslator_spark import budget
+    from b2xtranslator_spark.extractors import extract_payload_text
+
+    prefixes = {
+        pl.PAYLOAD_PREFIX: (False, False),
+        pl.MARKUP_MAIN_PREFIX: (True, True),
+        pl.MARKUP_PREFIX: (True, False),
+    }
+    src = text if text and text.startswith(tuple(prefixes)) else tool
+    if not (src and src.startswith(tuple(prefixes))):
+        t = text or ""
+        return t, [("main", 0, len(t))], "skipped", None, (0, 0, len(t), 0)
+    prefix = next(p for p in prefixes if src.startswith(p))
+    is_markup, main_content = prefixes[prefix]
+    body = src[len(prefix):]
+    cap = budget.MAX_PAYLOAD_BYTES
+    if is_markup:
+        size = len(body) if len(body) > cap else len(body.encode("utf-8"))
+    else:
+        size = len(body) // 4 * 3
+    if size > cap:
+        return "", [], "oversize", budget.oversize_error(size), (0, 0, 0, 1)
+    if is_markup:
+        res = extract_payload_text(
+            body.encode("utf-8"), force_kind="html", html_main_content=main_content
+        )
+    else:
+        try:
+            payload = base64.b64decode(body)
+        except ValueError as exc:
+            return "", [], "parse_error", f"base64: {exc}", (0, 0, 0, 1)
+        res = extract_payload_text(payload)
+    ok = int(res.status == "ok")
+    return (
+        res.text,
+        [tuple(s) for s in res.metrics.get("spans") or [("main", 0, len(res.text))]],
+        res.status,
+        res.error,
+        (ok, res.metrics.get("records_decoded", 0), res.metrics.get("bytes_decoded", 0), 1 - ok),
+    )
+
+
+def _kernel_rows(batches) -> list[tuple]:
+    import pyarrow as pa
+
+    import b2xtranslator_spark.pipeline as pl
+
+    out = pa.Table.from_batches(list(pl.extract_turns(iter(batches))))
+    assert out.schema == pl._OUT_ARROW
+    return [
+        (
+            r["text"],
+            [(s["part"], s["start"], s["end"]) for s in r["spans"]],
+            r["status"],
+            r["error"],
+            tuple(r["metrics"].values())[:4],
+        )
+        for r in out.to_pylist()
+    ]
+
+
+def test_arrow_kernel_matches_pandas_kernel_row_for_row(monkeypatch):
+    """Parity on the seeded batch: every output column but wall_ms equals
+    what the pandas kernel computed, through a RecordBatch and through a
+    pandas frame (the in-process callers' input), and the repeated
+    payload is served from the cache."""
+    import pandas as pd
+    import pyarrow as pa
+
+    import b2xtranslator_spark.extractors as ex
+    import b2xtranslator_spark.pipeline as pl
+    from b2xtranslator_spark import budget
+
+    monkeypatch.setattr(budget, "MAX_PAYLOAD_BYTES", _PARITY_CAP)
+    text, tool = _parity_batch()
+    expected = [_parent_row(t, o) for t, o in zip(text, tool)]
+    statuses = sorted(e[2] for e in expected)
+    assert statuses.count("oversize") == 2 and statuses.count("parse_error") == 3
+    assert statuses.count("ok") == 6
+
+    frame = pd.DataFrame(
+        {"conv_id": [f"c{i % 3}" for i in range(len(text))],
+         "turn_idx": range(len(text)), "text": text, "tool": tool}
+    )
+    batch = pa.RecordBatch.from_pandas(frame, schema=pl._IN_ARROW, preserve_index=False)
+    calls = []
+    decode = ex.extract_payload_text
+    monkeypatch.setattr(ex, "extract_payload_text",
+                        lambda *a, **k: calls.append(1) or decode(*a, **k))
+    monkeypatch.setattr(pl, "_DECODE_CACHE", None)
+    assert _kernel_rows([batch]) == expected
+    assert len(calls) == 5, "the repeated payload must be a cache hit"
+    monkeypatch.setattr(pl, "_DECODE_CACHE", None)
+    assert _kernel_rows([frame]) == expected
+    # a sliced batch (non-zero array offsets, nulls included) reads the
+    # same cells
+    monkeypatch.setattr(pl, "_DECODE_CACHE", None)
+    assert _kernel_rows([batch.slice(3)]) == expected[3:]
+
+
+_PANDAS_FREE = r"""
+import sys
+import pyarrow as pa
+from b2xtranslator_spark import budget
+from b2xtranslator_spark.pipeline import extract_turns
+
+budget.MAX_PAYLOAD_BYTES = int(sys.argv[2])
+batch = pa.ipc.open_file(sys.argv[1]).get_batch(0)
+out = list(extract_turns(iter([batch])))
+assert sum(b.num_rows for b in out) == batch.num_rows
+print("pandas" in sys.modules)
+"""
+
+
+def test_arrow_kernel_never_imports_pandas(tmp_path):
+    """A Python worker running the kernel over RecordBatches never imports
+    pandas (pyarrow 16's pa.array would, ~37 MB per worker): the whole
+    parity batch runs in a fresh interpreter."""
+    import subprocess
+    import sys
+
+    import pandas as pd
+    import pyarrow as pa
+
+    import b2xtranslator_spark.pipeline as pl
+
+    text, tool = _parity_batch()
+    frame = pd.DataFrame({"conv_id": "c", "turn_idx": range(len(text)),
+                          "text": text, "tool": tool})
+    batch = pa.RecordBatch.from_pandas(frame, schema=pl._IN_ARROW, preserve_index=False)
+    path = tmp_path / "batch.arrow"
+    with pa.ipc.new_file(str(path), batch.schema) as w:
+        w.write_batch(batch)
+    out = subprocess.run(
+        [sys.executable, "-c", _PANDAS_FREE, str(path), str(_PARITY_CAP)],
+        cwd=pl.__file__.rsplit("/b2xtranslator_spark/", 1)[0],
+        capture_output=True, text=True, timeout=120, check=True,
+    )
+    assert out.stdout.split() == ["False"], out.stdout + out.stderr

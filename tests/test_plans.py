@@ -67,7 +67,7 @@ def test_extraction_plan_shape(spark):
         pytest.skip("sample corpus unavailable")
     extracted = run_extraction(transcripts)
     plan = _plan(extracted)
-    assert "MapInPandas" in plan
+    assert "MapInArrow" in plan
     assert plan.count("Exchange") >= 1
     # extraction itself must add no joins beyond the generator's broadcasts
     assert "SortMergeJoin" not in plan
@@ -193,7 +193,7 @@ def test_skew_guarded_joins_have_no_cartesian(spark, docs):
 def test_markup_and_pdf_queries_have_no_premap_shuffle(spark):
     """The synthesized markup/PDF extraction queries must stay the headline
     plan shape: scan -> projection (payload synthesis) -> python map, with
-    no Exchange before the mapInPandas and no join anywhere."""
+    no Exchange before the mapInArrow and no join anywhere."""
     import importlib.util
     from pathlib import Path
 
@@ -204,7 +204,7 @@ def test_markup_and_pdf_queries_have_no_premap_shuffle(spark):
     spec.loader.exec_module(em)
     for name in ("extract_markup_transcripts", "extract_pdf_transcripts"):
         plan = _plan(em.queries()[name](spark, SF_DIR))
-        map_idx = plan.find("MapInPandas")
+        map_idx = plan.find("MapInArrow")
         assert map_idx >= 0, plan
         below = plan[map_idx:]
         # the only Exchange allowed upstream of the map is the

@@ -169,7 +169,7 @@ def test_single_group_run(spark, transcripts_path, tmp_path_factory):
     assert not os.path.exists(os.path.join(out, "_staged_g1"))
     ckpt = spark.read.parquet(f"{out}/_checkpoints")
     assert ckpt.schema == StructType.fromDDL(
-        "run_id string, partition_id int, conv_bucket int, n_groups int, "
+        "run_id string, partition_id int, n_groups int, "
         "state string, docs_parsed long, records_decoded long, "
         "failures long, ts long"
     )
@@ -180,3 +180,52 @@ def test_single_group_run(spark, transcripts_path, tmp_path_factory):
     assert read_extracted(spark, out, 1).count() == n_turns
     stats = run_with_checkpoints(spark, transcripts_path, out, run_id="r1g", n_groups=1)
     assert stats == {"groups_run": 0, "groups_skipped": 1}
+
+
+def test_resume_from_checkpoints_that_carry_conv_bucket(spark, tmp_path):
+    """A _checkpoints directory written while the checkpoint row still had
+    a conv_bucket column (always equal to partition_id) resumes: its done
+    groups are skipped, the rest run and append rows without the column,
+    and the output equals a one-pass extraction."""
+    import pandas as pd
+
+    from b2xtranslator_spark.pipeline import run_extraction
+
+    n = 24
+    src = str(tmp_path / "t.parquet")
+    spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "conv_id": [f"c{i % 6}" for i in range(n)],
+                "turn_idx": range(n),
+                "text": [f"markup:<p>turn {i} 東京</p>" if i % 3 else f"chat {i}"
+                         for i in range(n)],
+                "tool": [None] * n,
+            }
+        )
+    ).write.parquet(src)
+    out = str(tmp_path / "out")
+    stats = run_with_checkpoints(spark, src, out, "old", n_groups=2, fail_after_groups=1)
+    assert stats["killed"] and stats["groups_run"] == 1
+
+    # rewrite the committed rows in the older layout
+    ckpt = f"{out}/_checkpoints"
+    rows = spark.read.parquet(ckpt).toPandas()
+    rows.insert(2, "conv_bucket", rows["partition_id"])
+    spark.createDataFrame(
+        rows,
+        "run_id string, partition_id int, conv_bucket int, n_groups int, "
+        "state string, docs_parsed long, records_decoded long, failures long, "
+        "ts long",
+    ).write.mode("overwrite").parquet(ckpt)
+
+    stats = run_with_checkpoints(spark, src, out, "old", n_groups=2)
+    assert stats == {"groups_run": 1, "groups_skipped": 1}
+    assert run_with_checkpoints(spark, src, out, "old", n_groups=2) == {
+        "groups_run": 0, "groups_skipped": 2,
+    }
+    assert sorted(spark.read.parquet(ckpt).select("partition_id").toPandas()[
+        "partition_id"]) == [0, 1]
+    assert _canonical(read_extracted(spark, out, 2)).equals(
+        _canonical(run_extraction(spark.read.parquet(src)))
+    )
