@@ -11,12 +11,15 @@ in tests/ (206 reference fixtures).
 
 from __future__ import annotations
 
+import base64
+import gzip
 import os
 import sys
 from collections.abc import Callable
 from pathlib import Path
+from xml.sax.saxutils import escape
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
@@ -84,10 +87,15 @@ from b2xtranslator_spark.operators.textstats import (  # noqa: E402
 from b2xtranslator_spark.pipeline import (  # noqa: E402
     MARKUP_MAIN_PREFIX,
     MARKUP_PREFIX,
+    PAYLOAD_PREFIX,
+    extract_turns,
     extraction_metrics,
     run_extraction,
 )
+from b2xtranslator_spark.sources.binfixtures import _W_NS, _zip_members  # noqa: E402
 from b2xtranslator_spark.sources.transcripts import (  # noqa: E402
+    _epub_fixture,
+    _odf_fixture,
     load_sample_corpus,
     synthesize_transcripts,
 )
@@ -133,11 +141,13 @@ def _scatter_small(df: DataFrame, spark: SparkSession) -> DataFrame:
     when the scan is smaller than the slot count.
 
     Slot count = defaultParallelism / spark.task.cpus, NOT
-    defaultParallelism: with task.cpus=2 a 32-partition Python stage runs
-    as TWO waves of Arrow workers on 16 slots — measured 0.70 s vs 0.38 s
-    for the identical one-wave kernel (optimization round 6, guide §2.6
-    stragglers/idle capacity). Derived from the session conf, so any
-    cluster override keeps the scatter aligned.
+    defaultParallelism. build_session sets task.cpus by the slot rule
+    plans/session.task_cpus: the SMT threads per physical core, 1 on a
+    4-core VM, 2 on a 16x2 SMT box. At task.cpus=2 a 32-partition Python
+    stage on 32 cores runs as TWO waves of Arrow workers on 16 slots —
+    measured 0.70 s vs 0.38 s for the identical one-wave kernel
+    (optimization round 6, guide §2.6 stragglers/idle capacity). Read from
+    the session conf, so any cluster override keeps the scatter aligned.
 
     The split-count probe estimates Σ ceil(file_size / maxPartitionBytes)
     from the scan's file listing: the exact df.rdd.getNumPartitions()
@@ -165,47 +175,71 @@ def _scatter_small(df: DataFrame, spark: SparkSession) -> DataFrame:
     return df
 
 
-def _synth_extract(docs: DataFrame, synth_fn) -> DataFrame:
-    """Fuse payload synthesis and extraction into ONE mapInArrow stage.
+def _extraction_leg(
+    spark: SparkSession,
+    sf_dir: str,
+    cell: Column,
+    build: Callable[[str], bytes] | None = None,
+) -> DataFrame:
+    """One synthesized extraction leg: a payload per documents-row, run
+    through the product kernel, as (doc_id, extracted, status).
 
-    The synthesized legs used to chain two Python evals (synth ->
-    JVM -> extract), so every payload string crossed the JVM<->Python
-    boundary twice and each task ran two Arrow workers (guide §4.1: you
-    control how many bytes cross the boundary). The fused kernel feeds the
-    synthesized transcript frames straight into the SAME
-    pipeline.extract_turns kernel (the product extraction code, unchanged)
+    `cell` is a Column over the documents row (doc_id, text, source).
+    Without `build` it is the payload itself, a markup: or b64cfb: string
+    stated in Catalyst; with `build` it is the text that build(text) turns
+    into document bytes on the worker, carried as b64cfb: + base64.
+
+    Either way the leg is ONE mapInArrow stage. The kernel wraps each input
+    batch as a transcript RecordBatch and feeds it straight into
+    pipeline.extract_turns (the product extraction code, unchanged)
     in-process, and ships back only the three columns the leg returns
-    (doc_id, extracted, status) instead of the full extraction schema —
-    the payload now never crosses the boundary at all. Output values are
-    identical: same synthesis bytes, same kernel, same casts. The synth
-    functions are written over pandas frames, so this leg's workers
-    convert each input batch."""
-    from b2xtranslator_spark.pipeline import extract_turns
+    instead of the full extraction schema. A synthesized payload never
+    crosses the JVM<->Python boundary and each task runs one Arrow worker
+    (guide §4.1: you control how many bytes cross the boundary); a
+    synthesis UDF chained in front of run_extraction was slower at sf0.1
+    (docx 1.14 -> 1.76 s, text 0.82 -> 1.18 s, median of 5 warm runs on a
+    4-vCPU VM). `build` must be a closure or a package function: a
+    top-level function of this module is pickled by reference, and this
+    module is not on the workers' path."""
+    docs = _scatter_small(
+        _table(spark, sf_dir, "documents").select("doc_id", "text", "source"),
+        spark,
+    )
+    rows = docs.select(
+        F.col("source").alias("conv_id"),
+        F.col("doc_id").cast("int").alias("turn_idx"),
+        cell.alias("tool"),
+    )
 
-    def fused(batches):
-        import pandas as pd
+    def kernel(batches):
         import pyarrow as pa
 
-        def transcript_frames():
-            for pdf in synth_fn(b.to_pandas() for b in batches):
-                yield pd.DataFrame(
-                    {
-                        "conv_id": pdf["source"].values,
-                        "turn_idx": pdf["doc_id"].to_numpy().astype("int32"),
-                        "text": pd.Series([None] * len(pdf), dtype=object),
-                        "tool": pdf["payload_b64"].values,
-                    }
+        def transcripts():
+            for b in batches:
+                tool = b.column("tool")
+                if build is not None:
+                    tool = pa.array(
+                        [
+                            PAYLOAD_PREFIX + base64.b64encode(build(t or "")).decode()
+                            for t in tool.to_pylist()
+                        ],
+                        pa.string(),
+                    )
+                yield pa.RecordBatch.from_arrays(
+                    [b.column("conv_id"), b.column("turn_idx"),
+                     pa.nulls(b.num_rows, pa.string()), tool],
+                    names=["conv_id", "turn_idx", "text", "tool"],
                 )
 
-        for out in extract_turns(transcript_frames()):
+        for out in extract_turns(transcripts()):
             yield pa.RecordBatch.from_arrays(
                 [out.column("turn_idx").cast(pa.int64()), out.column("text"),
                  out.column("status")],
                 names=["doc_id", "extracted", "status"],
             )
 
-    return docs.mapInArrow(
-        fused, schema="doc_id long, extracted string, status string"
+    return rows.mapInArrow(
+        kernel, schema="doc_id long, extracted string, status string"
     )
 
 
@@ -276,6 +310,17 @@ def _q_extract_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     return joined
 
 
+def _html_escaped_text() -> Column:
+    """The document text with &, < and > escaped for an HTML body."""
+    return F.regexp_replace(
+        F.regexp_replace(
+            F.regexp_replace(F.col("text"), "&", "&amp;"), "<", "&lt;"
+        ),
+        ">",
+        "&gt;",
+    )
+
+
 def _q_extract_markup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Markup leg of the north rule, and the one extraction query with a
     FULL DuckDB oracle: HTML pages are synthesized deterministically from
@@ -287,14 +332,6 @@ def _q_extract_markup(spark: SparkSession, sf_dir: str) -> DataFrame:
     to the original text, whitespace collapsed, h1/p blocks newline-joined.
     Any extraction drift (a dropped block, an extra newline, un-decoded
     entity, non-ok status) breaks the value hash."""
-    docs = _scatter_small(_table(spark, sf_dir, "documents"), spark)
-    esc = F.regexp_replace(
-        F.regexp_replace(
-            F.regexp_replace(F.col("text"), "&", "&amp;"), "<", "&lt;"
-        ),
-        ">",
-        "&gt;",
-    )
     html = F.concat(
         F.lit(
             MARKUP_PREFIX
@@ -314,26 +351,13 @@ def _q_extract_markup(spark: SparkSession, sf_dir: str) -> DataFrame:
             '">the manual</a></p>'
             "<p>caf&eacute; &#8212; &#x6771;&#x4EAC; na&iuml;ve</p><p>"
         ),
-        esc,
+        _html_escaped_text(),
         F.lit(
             "</p><footer>(c) 2026 corp</footer><script>track()</script>"
             + "</body></html>"
         ),
     )
-    transcripts = docs.select(
-        F.col("source").alias("conv_id"),
-        F.col("doc_id").cast("int").alias("turn_idx"),
-        F.lit("tool").alias("role"),
-        html.alias("text"),
-        F.lit(None).cast("string").alias("tool"),
-        F.lit("2026-01-01 00:00:00").cast("timestamp").alias("ts"),
-    )
-    out = run_extraction(transcripts)
-    return out.select(
-        F.col("turn_idx").cast("long").alias("doc_id"),
-        F.col("text").alias("extracted"),
-        "status",
-    )
+    return _extraction_leg(spark, sf_dir, html)
 
 
 def _q_extract_markup_main(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -346,14 +370,6 @@ def _q_extract_markup_main(spark: SparkSession, sf_dir: str) -> DataFrame:
     heuristic, and the oracle states independently that exactly the
     content blocks survive. Any drift in the density accounting, the
     rendered-URL link mass, or the block fold breaks the value hash."""
-    docs = _scatter_small(_table(spark, sf_dir, "documents"), spark)
-    esc = F.regexp_replace(
-        F.regexp_replace(
-            F.regexp_replace(F.col("text"), "&", "&amp;"), "<", "&lt;"
-        ),
-        ">",
-        "&gt;",
-    )
     html = F.concat(
         F.lit(
             MARKUP_MAIN_PREFIX
@@ -366,26 +382,13 @@ def _q_extract_markup_main(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(
             "</h1><p>caf&eacute; &#8212; &#x6771;&#x4EAC; na&iuml;ve</p><p>"
         ),
-        esc,
+        _html_escaped_text(),
         F.lit(
             '</p><div>Read more: <a href="/next">next article</a> '
             + '<a href="/prev">previous article</a></div></body></html>'
         ),
     )
-    transcripts = docs.select(
-        F.col("source").alias("conv_id"),
-        F.col("doc_id").cast("int").alias("turn_idx"),
-        F.lit("tool").alias("role"),
-        html.alias("text"),
-        F.lit(None).cast("string").alias("tool"),
-        F.lit("2026-01-01 00:00:00").cast("timestamp").alias("ts"),
-    )
-    out = run_extraction(transcripts)
-    return out.select(
-        F.col("turn_idx").cast("long").alias("doc_id"),
-        F.col("text").alias("extracted"),
-        "status",
-    )
+    return _extraction_leg(spark, sf_dir, html)
 
 
 def _q_extract_rtf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -397,7 +400,6 @@ def _q_extract_rtf(spark: SparkSession, sf_dir: str) -> DataFrame:
     round-trips verbatim, so the expected extraction is the original text
     sans trailing newlines — any drift in group/control-word/escape
     handling breaks the value hash."""
-    docs = _scatter_small(_table(spark, sf_dir, "documents"), spark)
     esc = F.replace(
         F.replace(
             F.replace(F.col("text"), F.lit("\\"), F.lit("\\\\")),
@@ -426,22 +428,8 @@ def _q_extract_rtf(spark: SparkSession, sf_dir: str) -> DataFrame:
         esc,
         F.lit("\\par }"),
     )
-    transcripts = docs.select(
-        F.col("source").alias("conv_id"),
-        F.col("doc_id").cast("int").alias("turn_idx"),
-        F.lit("tool").alias("role"),
-        F.lit(None).cast("string").alias("text"),
-        F.concat(F.lit("b64cfb:"), F.base64(F.encode(rtf, "UTF-8"))).alias(
-            "tool"
-        ),
-        F.lit("2026-01-01 00:00:00").cast("timestamp").alias("ts"),
-    )
-    out = run_extraction(transcripts)
-    return out.select(
-        F.col("turn_idx").cast("long").alias("doc_id"),
-        F.col("text").alias("extracted"),
-        "status",
-    )
+    payload = F.concat(F.lit(PAYLOAD_PREFIX), F.base64(F.encode(rtf, "UTF-8")))
+    return _extraction_leg(spark, sf_dir, payload)
 
 
 def _q_extract_docx(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -452,113 +440,30 @@ def _q_extract_docx(spark: SparkSession, sf_dir: str) -> DataFrame:
     by the real zip + ElementTree path. Paragraph text round-trips
     verbatim, so the expected extraction is the original text sans
     trailing newlines."""
-    docs = _scatter_small(
-        _table(spark, sf_dir, "documents").select("doc_id", "text", "source"),
-        spark,
+    # non-ASCII lead paragraph, planted as raw UTF-8 XML text plus
+    # decimal/hex charrefs (ADVICE r04: the oracle must be able to
+    # see encoding drift) — extracts as "café — 東京 naïve"
+    lead = (
+        "<w:p><w:r><w:t xml:space='preserve'>caf&#233; — "
+        "&#x6771;&#x4EAC; naïve</w:t></w:r></w:p>"
     )
 
-    def synth(batches):
-        import base64
-        import io
-        import zipfile
-        from xml.sax.saxutils import escape
-
-        import pandas as pd
-
-        w_ns = (
-            'xmlns:w="http://schemas.openxmlformats.org/'
-            'wordprocessingml/2006/main"'
+    def docx(txt: str) -> bytes:
+        paras = lead + "".join(
+            "<w:p><w:r><w:t xml:space='preserve'>"
+            + escape(line).replace("\r", "&#13;")
+            + "</w:t></w:r></w:p>"
+            for line in txt.split("\n")
         )
-        # non-ASCII lead paragraph, planted as raw UTF-8 XML text plus
-        # decimal/hex charrefs (ADVICE r04: the oracle must be able to
-        # see encoding drift) — extracts as "café — 東京 naïve"
-        lead = (
-            "<w:p><w:r><w:t xml:space='preserve'>caf&#233; — "
-            "&#x6771;&#x4EAC; naïve</w:t></w:r></w:p>"
+        doc_xml = (
+            f'<?xml version="1.0"?><w:document {_W_NS}>'
+            f"<w:body>{paras}</w:body></w:document>"
         )
-        for pdf in batches:
-            out = {"doc_id": [], "source": [], "payload_b64": []}
-            for d, txt, src in zip(
-                pdf["doc_id"].values, pdf["text"].values, pdf["source"].values
-            ):
-                paras = lead + "".join(
-                    "<w:p><w:r><w:t xml:space='preserve'>"
-                    + escape(line).replace("\r", "&#13;")
-                    + "</w:t></w:r></w:p>"
-                    for line in (txt or "").split("\n")
-                )
-                doc_xml = (
-                    f'<?xml version="1.0"?><w:document {w_ns}>'
-                    f"<w:body>{paras}</w:body></w:document>"
-                )
-                buf = io.BytesIO()
-                with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as zf:
-                    zf.writestr("[Content_Types].xml", "<Types/>")
-                    zf.writestr("word/document.xml", doc_xml)
-                out["doc_id"].append(int(d))
-                out["source"].append(src)
-                out["payload_b64"].append(
-                    "b64cfb:" + base64.b64encode(buf.getvalue()).decode()
-                )
-            yield pd.DataFrame(out)
+        return _zip_members(
+            {"[Content_Types].xml": "<Types/>", "word/document.xml": doc_xml}
+        )
 
-    return _synth_extract(docs, synth)
-
-
-_ODF_NS = (
-    'xmlns:office="urn:oasis:names:tc:opendocument:xmlns:office:1.0" '
-    'xmlns:text="urn:oasis:names:tc:opendocument:xmlns:text:1.0" '
-    'xmlns:table="urn:oasis:names:tc:opendocument:xmlns:table:1.0" '
-    'xmlns:draw="urn:oasis:names:tc:opendocument:xmlns:drawing:1.0" '
-    'xmlns:presentation="urn:oasis:names:tc:opendocument:xmlns:presentation:1.0"'
-)
-
-_ODF_MIMES = {
-    "text": "application/vnd.oasis.opendocument.text",
-    "spreadsheet": "application/vnd.oasis.opendocument.spreadsheet",
-    "presentation": "application/vnd.oasis.opendocument.presentation",
-}
-
-
-def _odf_payload_synth(docs: DataFrame, which: str, body_fn) -> DataFrame:
-    """Shared ODF synthesis plumbing: per documents-row, body_fn(text) ->
-    office:<which> inner XML; zipped with the real mimetype member and
-    b64-carried through the binary payload path (zip magic + mimetype
-    dispatch in formats/odf.py)."""
-
-    def synth(batches):
-        import base64
-        import io
-        import zipfile
-
-        import pandas as pd
-
-        mime = _ODF_MIMES[which]
-        for pdf in batches:
-            out = {"doc_id": [], "source": [], "payload_b64": []}
-            for d, txt, src in zip(
-                pdf["doc_id"].values, pdf["text"].values, pdf["source"].values
-            ):
-                content = (
-                    f'<?xml version="1.0" encoding="UTF-8"?>'
-                    f"<office:document-content {_ODF_NS}><office:body>"
-                    f"<office:{which}>{body_fn(txt or '')}</office:{which}>"
-                    f"</office:body></office:document-content>"
-                )
-                buf = io.BytesIO()
-                with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as zf:
-                    zf.writestr(
-                        zipfile.ZipInfo("mimetype"), mime, zipfile.ZIP_STORED
-                    )
-                    zf.writestr("content.xml", content)
-                out["doc_id"].append(int(d))
-                out["source"].append(src)
-                out["payload_b64"].append(
-                    "b64cfb:" + base64.b64encode(buf.getvalue()).decode()
-                )
-            yield pd.DataFrame(out)
-
-    return _synth_extract(docs, synth)
+    return _extraction_leg(spark, sf_dir, F.col("text"), docx)
 
 
 def _q_extract_odt(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -569,21 +474,16 @@ def _q_extract_odt(spark: SparkSession, sf_dir: str) -> DataFrame:
     and extracted by the real zip + ElementTree path (formats/odf.py).
     Paragraph text round-trips verbatim, so the expected extraction is
     the lead plus the original text sans trailing newlines."""
-    docs = _scatter_small(
-        _table(spark, sf_dir, "documents").select("doc_id", "text", "source"),
-        spark,
-    )
+    lead = "<text:p>caf&#233; — &#x6771;&#x4EAC; naïve</text:p>"
 
-    def body(txt: str) -> str:
-        from xml.sax.saxutils import escape
-
-        lead = "<text:p>caf&#233; — &#x6771;&#x4EAC; naïve</text:p>"
-        return lead + "".join(
+    def odt(txt: str) -> bytes:
+        paras = "".join(
             "<text:p>" + escape(line).replace("\r", "&#13;") + "</text:p>"
             for line in txt.split("\n")
         )
+        return _odf_fixture("odt", lead + paras)
 
-    return _odf_payload_synth(docs, "text", body)
+    return _extraction_leg(spark, sf_dir, F.col("text"), odt)
 
 
 def _q_extract_ods(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -594,30 +494,25 @@ def _q_extract_ods(spark: SparkSession, sf_dir: str) -> DataFrame:
     text round-trips verbatim (tabs inside a line stay inside the one
     cell), so the expected extraction is the sheet name line, the typed
     lead row, and the original text sans trailing newlines."""
-    docs = _scatter_small(
-        _table(spark, sf_dir, "documents").select("doc_id", "text", "source"),
-        spark,
-    )
 
-    def body(txt: str) -> str:
-        from xml.sax.saxutils import escape
-
+    def ods(txt: str) -> bytes:
         rows = "".join(
             "<table:table-row><table:table-cell office:value-type='string'>"
             "<text:p>" + escape(line).replace("\r", "&#13;") + "</text:p>"
             "</table:table-cell></table:table-row>"
             for line in txt.split("\n")
         )
-        return (
+        return _odf_fixture(
+            "ods",
             '<table:table table:name="S"><table:table-row>'
             '<table:table-cell office:value-type="float" office:value="42"/>'
             '<table:table-cell office:value-type="float" office:value="2.5"/>'
             '<table:table-cell office:value-type="boolean"'
             ' office:boolean-value="true"/>'
-            "</table:table-row>" + rows + "</table:table>"
+            "</table:table-row>" + rows + "</table:table>",
         )
 
-    return _odf_payload_synth(docs, "spreadsheet", body)
+    return _extraction_leg(spark, sf_dir, F.col("text"), ods)
 
 
 def _q_extract_odp(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -628,28 +523,23 @@ def _q_extract_odp(spark: SparkSession, sf_dir: str) -> DataFrame:
     ordering contract shared with the legacy PPT leg). Empty trailing
     lines of the slide text are preserved by the notes suffix, so the
     expected extraction is exactly text + newline + the notes line."""
-    docs = _scatter_small(
-        _table(spark, sf_dir, "documents").select("doc_id", "text", "source"),
-        spark,
-    )
 
-    def body(txt: str) -> str:
-        from xml.sax.saxutils import escape
-
+    def odp(txt: str) -> bytes:
         paras = "".join(
             "<text:p>" + escape(line).replace("\r", "&#13;") + "</text:p>"
             for line in txt.split("\n")
         )
-        return (
+        return _odf_fixture(
+            "odp",
             "<draw:page><draw:frame><draw:text-box>"
             + paras
             + "</draw:text-box></draw:frame>"
             "<presentation:notes><draw:frame><draw:text-box>"
             "<text:p>notes: d&#233;j&#224; vu &#x2713;</text:p>"
-            "</draw:text-box></draw:frame></presentation:notes></draw:page>"
+            "</draw:text-box></draw:frame></presentation:notes></draw:page>",
         )
 
-    return _odf_payload_synth(docs, "presentation", body)
+    return _extraction_leg(spark, sf_dir, F.col("text"), odp)
 
 
 def _q_extract_epub(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -662,66 +552,17 @@ def _q_extract_epub(spark: SparkSession, sf_dir: str) -> DataFrame:
     document text, chapter-joined by newlines — any drift in spine
     resolution, manifest filtering, entity decode, or the block fold
     breaks the value hash."""
-    docs = _scatter_small(
-        _table(spark, sf_dir, "documents").select("doc_id", "text", "source"),
-        spark,
+    lead = (
+        "<html><body><h1>Chapter One</h1>"
+        "<p>caf&eacute; &#8212; 東京 na&iuml;ve</p></body></html>"
     )
+    cover = '<item id="cover" href="cover.png" media-type="image/png"/>'
 
-    def synth(batches):
-        import base64
-        import io
-        import zipfile
-        from xml.sax.saxutils import escape
+    def epub(txt: str) -> bytes:
+        ch1 = "<html><body><p>" + escape(txt) + "</p></body></html>"
+        return _epub_fixture([lead, ch1], cover)
 
-        import pandas as pd
-
-        container = (
-            '<?xml version="1.0"?>'
-            '<container xmlns="urn:oasis:names:tc:opendocument:xmlns:container">'
-            '<rootfiles><rootfile full-path="OEBPS/content.opf" '
-            'media-type="application/oebps-package+xml"/></rootfiles></container>'
-        )
-        opf = (
-            '<?xml version="1.0"?>'
-            '<package xmlns="http://www.idpf.org/2007/opf" version="3.0">'
-            '<manifest>'
-            '<item id="c0" href="ch0.xhtml" media-type="application/xhtml+xml"/>'
-            '<item id="c1" href="ch1.xhtml" media-type="application/xhtml+xml"/>'
-            '<item id="cover" href="cover.png" media-type="image/png"/>'
-            '</manifest><spine><itemref idref="c0"/><itemref idref="c1"/>'
-            "</spine></package>"
-        )
-        lead = (
-            "<html><body><h1>Chapter One</h1>"
-            "<p>caf&eacute; &#8212; 東京 na&iuml;ve</p></body></html>"
-        )
-        for pdf in batches:
-            out = {"doc_id": [], "source": [], "payload_b64": []}
-            for d, txt, src in zip(
-                pdf["doc_id"].values, pdf["text"].values, pdf["source"].values
-            ):
-                ch1 = (
-                    "<html><body><p>" + escape(txt or "") + "</p></body></html>"
-                )
-                buf = io.BytesIO()
-                with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as zf:
-                    zf.writestr(
-                        zipfile.ZipInfo("mimetype"),
-                        "application/epub+zip",
-                        zipfile.ZIP_STORED,
-                    )
-                    zf.writestr("META-INF/container.xml", container)
-                    zf.writestr("OEBPS/content.opf", opf)
-                    zf.writestr("OEBPS/ch1.xhtml", ch1)  # archive order reversed
-                    zf.writestr("OEBPS/ch0.xhtml", lead)
-                out["doc_id"].append(int(d))
-                out["source"].append(src)
-                out["payload_b64"].append(
-                    "b64cfb:" + base64.b64encode(buf.getvalue()).decode()
-                )
-            yield pd.DataFrame(out)
-
-    return _synth_extract(docs, synth)
+    return _extraction_leg(spark, sf_dir, F.col("text"), epub)
 
 
 def _q_extract_text(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -731,32 +572,11 @@ def _q_extract_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     exercising the transparent gzip unwrap, the conservative text sniff,
     and the newline-normalizing decode in one leg. Expected extraction is
     the lead plus the CR-normalized text sans trailing newlines."""
-    docs = _scatter_small(
-        _table(spark, sf_dir, "documents").select("doc_id", "text", "source"),
-        spark,
-    )
 
-    def synth(batches):
-        import base64
-        import gzip
+    def gzipped(txt: str) -> bytes:
+        return gzip.compress(("café — 東京 naïve\n" + txt).encode("utf-8"), mtime=0)
 
-        import pandas as pd
-
-        for pdf in batches:
-            out = {"doc_id": [], "source": [], "payload_b64": []}
-            for d, txt, src in zip(
-                pdf["doc_id"].values, pdf["text"].values, pdf["source"].values
-            ):
-                raw = ("café — 東京 naïve\n" + (txt or "")).encode("utf-8")
-                out["doc_id"].append(int(d))
-                out["source"].append(src)
-                out["payload_b64"].append(
-                    "b64cfb:"
-                    + base64.b64encode(gzip.compress(raw, mtime=0)).decode()
-                )
-            yield pd.DataFrame(out)
-
-    return _synth_extract(docs, synth)
+    return _extraction_leg(spark, sf_dir, F.col("text"), gzipped)
 
 
 def _q_bpe_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -796,44 +616,25 @@ def _q_extract_eml(spark: SparkSession, sf_dir: str) -> DataFrame:
     only rtrims LF, so the documents corpus must carry no bare CR —
     true of the generated testdata; a CR-bearing corpus would need the
     oracle's replace-chain extended first."""
-    docs = _scatter_small(
-        _table(spark, sf_dir, "documents").select("doc_id", "text", "source"),
-        spark,
-    )
+    # hand-assembled RFC 2045 bytes (identical semantics to the stdlib
+    # generator, ~10x cheaper per row — the synthesis is bench scaffolding,
+    # not the kernel under test): RFC 2047 B-encoded subject, 76-col base64
+    # body with the canonical trailing newline
+    subj_b64 = base64.b64encode("café — 東京 naïve".encode()).decode()
+    head = (
+        "From: alice@example.com\r\n"
+        "To: bob@example.com\r\n"
+        f"Subject: =?utf-8?b?{subj_b64}?=\r\n"
+        "Date: Mon, 02 Feb 2026 10:00:00 +0000\r\n"
+        "MIME-Version: 1.0\r\n"
+        'Content-Type: text/plain; charset="utf-8"\r\n'
+        "Content-Transfer-Encoding: base64\r\n\r\n"
+    ).encode()
 
-    def synth(batches):
-        import base64
+    def eml(txt: str) -> bytes:
+        return head + base64.encodebytes((txt + "\n").encode("utf-8"))
 
-        import pandas as pd
-
-        # hand-assembled RFC 2045 bytes (identical semantics to the
-        # stdlib generator, ~10x cheaper per row — the synthesis is bench
-        # scaffolding, not the kernel under test): RFC 2047 B-encoded
-        # subject, 76-col base64 body with the canonical trailing newline
-        subj_b64 = base64.b64encode("café — 東京 naïve".encode()).decode()
-        head = (
-            "From: alice@example.com\r\n"
-            "To: bob@example.com\r\n"
-            f"Subject: =?utf-8?b?{subj_b64}?=\r\n"
-            "Date: Mon, 02 Feb 2026 10:00:00 +0000\r\n"
-            "MIME-Version: 1.0\r\n"
-            'Content-Type: text/plain; charset="utf-8"\r\n'
-            "Content-Transfer-Encoding: base64\r\n\r\n"
-        ).encode()
-        for pdf in batches:
-            out = {"doc_id": [], "source": [], "payload_b64": []}
-            for d, txt, src in zip(
-                pdf["doc_id"].values, pdf["text"].values, pdf["source"].values
-            ):
-                body = base64.encodebytes(((txt or "") + "\n").encode("utf-8"))
-                out["doc_id"].append(int(d))
-                out["source"].append(src)
-                out["payload_b64"].append(
-                    "b64cfb:" + base64.b64encode(head + body).decode()
-                )
-            yield pd.DataFrame(out)
-
-    return _synth_extract(docs, synth)
+    return _extraction_leg(spark, sf_dir, F.col("text"), eml)
 
 
 def _q_extract_pdf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -845,7 +646,6 @@ def _q_extract_pdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     extraction is simply the original text (sans trailing newlines) — any
     parser drift in escapes, stream bounds, page walk or dispatch breaks
     the value hash."""
-    docs = _scatter_small(_table(spark, sf_dir, "documents"), spark)
     # the shown string is a HEX string carrying the UTF-16BE bytes of the
     # text behind a FEFF BOM (the text-string convention, PDF 7.9.2.2; the
     # extractor's no-CMap decoder BOM-sniffs exactly this): full Unicode
@@ -878,22 +678,8 @@ def _q_extract_pdf(spark: SparkSession, sf_dir: str) -> DataFrame:
         content,
         F.lit("endstream\nendobj\ntrailer<</Root 1 0 R>>\n%%EOF\n"),
     )
-    transcripts = docs.select(
-        F.col("source").alias("conv_id"),
-        F.col("doc_id").cast("int").alias("turn_idx"),
-        F.lit("tool").alias("role"),
-        F.lit(None).cast("string").alias("text"),
-        F.concat(F.lit("b64cfb:"), F.base64(F.encode(pdf, "UTF-8"))).alias(
-            "tool"
-        ),
-        F.lit("2026-01-01 00:00:00").cast("timestamp").alias("ts"),
-    )
-    out = run_extraction(transcripts)
-    return out.select(
-        F.col("turn_idx").cast("long").alias("doc_id"),
-        F.col("text").alias("extracted"),
-        "status",
-    )
+    payload = F.concat(F.lit(PAYLOAD_PREFIX), F.base64(F.encode(pdf, "UTF-8")))
+    return _extraction_leg(spark, sf_dir, payload)
 
 
 def _q_extract_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -928,6 +714,55 @@ def _q_media_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_audio_features(media)
 
 
+def _media_leg(
+    spark: SparkSession, sf_dir: str, payload: Callable[[int], bytes]
+) -> DataFrame:
+    """Media rows (media_id, payload) of the grid oracle twins: one per
+    documents-row with doc_id < 200, media_id d-<doc_id, 6 digits> and
+    payload(doc_id) bytes built by one Python map over the scattered scan.
+    `payload` must be a closure or a package function, as for
+    _extraction_leg's `build`."""
+    docs = _scatter_small(
+        _table(spark, sf_dir, "documents")
+        .select("doc_id")
+        .where(F.col("doc_id") < 200),
+        spark,
+    )
+
+    def synth(batches):
+        import pyarrow as pa
+
+        for b in batches:
+            ids = b.column("doc_id").to_pylist()
+            yield pa.RecordBatch.from_arrays(
+                [pa.array([f"d-{d:06d}" for d in ids], pa.string()),
+                 pa.array([payload(d) for d in ids], pa.binary())],
+                names=["media_id", "payload"],
+            )
+
+    return docs.mapInArrow(synth, schema="media_id string, payload binary")
+
+
+def _grid_image(h: int, w: int) -> Callable[[int], bytes]:
+    """Payload builder of the image grid twins: document d's h x w RGB
+    image with pixel(y, x, c) = (d*7 + y*3 + x*5 + c*11) % 256, encoded
+    through the REAL codecs, PNG with filter type d % 5 for even d and BMP
+    for odd. It returns a closure, which Spark ships by value."""
+
+    def image(d: int) -> bytes:
+        import numpy as np
+
+        from b2xtranslator_spark.formats.imaging import encode_bmp, encode_png
+
+        y, x, c = np.meshgrid(
+            np.arange(h), np.arange(w), np.arange(3), indexing="ij"
+        )
+        img = ((d * 7 + y * 3 + x * 5 + c * 11) % 256).astype(np.uint8)
+        return encode_png(img, filter_type=d % 5) if d % 2 == 0 else encode_bmp(img)
+
+    return image
+
+
 def _q_media_image_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-engine ORACLE TWIN for the image decode + feature path (the
     similarity_topk_ivf_grid pattern applied to media): each document gets
@@ -940,42 +775,8 @@ def _q_media_image_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     channel means / maxes / mins from the arithmetic alone. Every emitted
     value is an exact multiple of 1/64 — float32-exact, so no rounding
     slack is hiding drift."""
-    docs = _scatter_small(
-        _table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .where(F.col("doc_id") < 200),
-        spark,
-    )
-
-    def synth(batches):
-        import numpy as np
-        import pandas as pd
-
-        from b2xtranslator_spark.formats.imaging import encode_bmp, encode_png
-
-        for pdf in batches:
-            rows = {"media_id": [], "kind": [], "payload": []}
-            y, x, c = np.meshgrid(
-                np.arange(8), np.arange(8), np.arange(3), indexing="ij"
-            )
-            base = y * 3 + x * 5 + c * 11
-            for d in pdf["doc_id"].values:
-                d = int(d)
-                img = ((d * 7 + base) % 256).astype(np.uint8)
-                payload = (
-                    encode_png(img, filter_type=d % 5)
-                    if d % 2 == 0
-                    else encode_bmp(img)
-                )
-                rows["media_id"].append(f"d-{d:06d}")
-                rows["kind"].append("image")
-                rows["payload"].append(payload)
-            yield pd.DataFrame(rows)
-
-    media = docs.mapInPandas(
-        synth, schema="media_id string, kind string, payload binary"
-    )
-    feats = run_media_features(media)
+    media = _media_leg(spark, sf_dir, _grid_image(8, 8))
+    feats = run_media_features(media.withColumn("kind", F.lit("image")))
 
     def g(i: int, name: str):
         return F.round(F.get(F.col("feature"), i).cast("double"), 4).alias(name)
@@ -998,35 +799,19 @@ def _q_media_audio_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     (= q/32768 exactly — constant-magnitude wave), zero-crossing rate
     (= floor(255/p)*8000/256) and duration from the arithmetic alone.
     Spectral centroid is excluded (FFT is not portably SQL-expressible)."""
-    docs = _scatter_small(
-        _table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .where(F.col("doc_id") < 200),
-        spark,
-    )
 
-    def synth(batches):
+    def square_wave(d: int) -> bytes:
         import numpy as np
-        import pandas as pd
 
         from b2xtranslator_spark.formats.audio import encode_wav
 
-        for pdf in batches:
-            rows = {"media_id": [], "payload": []}
-            for d in pdf["doc_id"].values:
-                d = int(d)
-                q = 1000 + (d % 1000) * 20
-                p = 8 + d % 8
-                i = np.arange(256)
-                sign = np.where((i // p) % 2 == 0, 1.0, -1.0)
-                rows["media_id"].append(f"d-{d:06d}")
-                rows["payload"].append(
-                    encode_wav(sign * (q / 32767.0), sample_rate=8000)
-                )
-            yield pd.DataFrame(rows)
+        q = 1000 + (d % 1000) * 20
+        p = 8 + d % 8
+        i = np.arange(256)
+        sign = np.where((i // p) % 2 == 0, 1.0, -1.0)
+        return encode_wav(sign * (q / 32767.0), sample_rate=8000)
 
-    media = docs.mapInPandas(synth, schema="media_id string, payload binary")
-    af = run_audio_features(media)
+    af = run_audio_features(_media_leg(spark, sf_dir, square_wave))
     return af.select(
         "media_id",
         F.round(F.col("duration_s").cast("double"), 6).alias("duration_s"),
@@ -1122,37 +907,7 @@ def _q_media_image_dhash_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly, including the signed-int64 wrap of the top bit. Pool gaps are
     multiples of 1/12, three orders above float32 rounding — no boundary
     flakiness."""
-    docs = _scatter_small(
-        _table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .where(F.col("doc_id") < 200),
-        spark,
-    )
-
-    def synth(batches):
-        import numpy as np
-        import pandas as pd
-
-        from b2xtranslator_spark.formats.imaging import encode_bmp, encode_png
-
-        for pdf in batches:
-            rows = {"media_id": [], "payload": []}
-            y, x, c = np.meshgrid(
-                np.arange(16), np.arange(18), np.arange(3), indexing="ij"
-            )
-            base = y * 3 + x * 5 + c * 11
-            for d in pdf["doc_id"].values:
-                d = int(d)
-                img = ((d * 7 + base) % 256).astype(np.uint8)
-                rows["media_id"].append(f"d-{d:06d}")
-                rows["payload"].append(
-                    encode_png(img, filter_type=d % 5)
-                    if d % 2 == 0
-                    else encode_bmp(img)
-                )
-            yield pd.DataFrame(rows)
-
-    media = docs.mapInPandas(synth, schema="media_id string, payload binary")
+    media = _media_leg(spark, sf_dir, _grid_image(16, 18))
     return image_dhash(media).select("media_id", "dhash", "status")
 
 
@@ -1161,41 +916,8 @@ def _q_media_thumbnails_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     REAL decode + 4x4 mean-pool + uint8 cast, compared as hex strings.
     Pool means are exact quarters, so the uint8 truncation is the integer
     division S // 4 of the 4-pixel sum — stated byte-for-byte in SQL."""
-    docs = _scatter_small(
-        _table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .where(F.col("doc_id") < 200),
-        spark,
-    )
-
-    def synth(batches):
-        import numpy as np
-        import pandas as pd
-
-        from b2xtranslator_spark.formats.imaging import encode_bmp, encode_png
-
-        for pdf in batches:
-            rows = {"media_id": [], "kind": [], "payload": []}
-            y, x, c = np.meshgrid(
-                np.arange(8), np.arange(8), np.arange(3), indexing="ij"
-            )
-            base = y * 3 + x * 5 + c * 11
-            for d in pdf["doc_id"].values:
-                d = int(d)
-                img = ((d * 7 + base) % 256).astype(np.uint8)
-                rows["media_id"].append(f"d-{d:06d}")
-                rows["kind"].append("image")
-                rows["payload"].append(
-                    encode_png(img, filter_type=d % 5)
-                    if d % 2 == 0
-                    else encode_bmp(img)
-                )
-            yield pd.DataFrame(rows)
-
-    media = docs.mapInPandas(
-        synth, schema="media_id string, kind string, payload binary"
-    )
-    return resize_thumbnails(media).select(
+    media = _media_leg(spark, sf_dir, _grid_image(8, 8))
+    return resize_thumbnails(media.withColumn("kind", F.lit("image"))).select(
         "media_id",
         F.hex(F.col("thumb")).alias("thumb_hex"),
         "thumb_w",

@@ -214,7 +214,9 @@ def _extract_one(src: memoryview) -> tuple:
 def extract_turns(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
     """mapInArrow kernel: one Arrow batch of turns in, its extracted rows
     out, in slices of about _OUT_CHUNK_BYTES of input. A pandas frame is
-    accepted too (in-process callers) and converted first."""
+    accepted too and converted first: perfbench's in-process replay
+    (perfbench/run.py, Workload._replay) feeds the kernel pandas batches
+    read from its frozen inputs, so keep this branch while it does."""
     for batch in batches:
         if not isinstance(batch, pa.RecordBatch):
             batch = pa.RecordBatch.from_pandas(batch, schema=_IN_ARROW, preserve_index=False)

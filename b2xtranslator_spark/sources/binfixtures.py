@@ -381,13 +381,15 @@ _REL_NS = 'xmlns="http://schemas.openxmlformats.org/package/2006/relationships"'
 
 
 def _zip_members(members: dict) -> bytes:
+    """A zip of `members` (name -> str or bytes) in dict order, deflated
+    except a `mimetype` member, which ODF and EPUB containers store."""
     import io
     import zipfile
 
     buf = io.BytesIO()
     with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as zf:
         for name, data in members.items():
-            zf.writestr(name, data)
+            zf.writestr(name, data, zipfile.ZIP_STORED if name == "mimetype" else None)
     return buf.getvalue()
 
 

@@ -24,6 +24,16 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .binfixtures import (
+    _zip_members,
+    build_docx_fixture,
+    build_ppt_fixture,
+    build_ppt_incremental_fixture,
+    build_pptx_fixture,
+    build_xls_fixture,
+    build_xlsx_fixture,
+)
+
 SAMPLES_DIR = "/root/reference/samples"
 FILLER = [
     "ok, looking into it now",
@@ -49,14 +59,6 @@ def load_sample_corpus(samples_dir: str = SAMPLES_DIR) -> pd.DataFrame:
     the synthetic .xls/.ppt golden fixtures (sources/binfixtures.py), so the
     extraction pipeline exercises every format the extractor supports."""
     from ..formats.word.extract import normalize_text
-    from .binfixtures import (
-        build_docx_fixture,
-        build_ppt_fixture,
-        build_ppt_incremental_fixture,
-        build_pptx_fixture,
-        build_xls_fixture,
-        build_xlsx_fixture,
-    )
 
     rows = []
 
@@ -183,31 +185,21 @@ _ODF_FIXTURE_NS = (
 )
 
 
-def _zip_fixture(members: list[tuple[str, bytes | str, bool]]) -> bytes:
-    import io
-    import zipfile
-
-    buf = io.BytesIO()
-    with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as zf:
-        for name, data, stored in members:
-            if stored:
-                zf.writestr(zipfile.ZipInfo(name), data, zipfile.ZIP_STORED)
-            else:
-                zf.writestr(name, data)
-    return buf.getvalue()
-
-
 def _odf_fixture(kind: str, body_inner: str) -> bytes:
+    """An ODF container ("odt", "ods" or "odp") whose office:body holds
+    `body_inner`: the stored mimetype member plus content.xml."""
     which = {"odt": "text", "ods": "spreadsheet", "odp": "presentation"}[kind]
-    mime = f"application/vnd.oasis.opendocument.{ {'odt': 'text', 'ods': 'spreadsheet', 'odp': 'presentation'}[kind] }"
     content = (
         f'<?xml version="1.0" encoding="UTF-8"?>'
         f"<office:document-content {_ODF_FIXTURE_NS}>"
         f"<office:body><office:{which}>{body_inner}</office:{which}>"
         f"</office:body></office:document-content>"
     )
-    return _zip_fixture(
-        [("mimetype", mime, True), ("content.xml", content, False)]
+    return _zip_members(
+        {
+            "mimetype": f"application/vnd.oasis.opendocument.{which}",
+            "content.xml": content,
+        }
     )
 
 
@@ -253,9 +245,12 @@ def build_odp_fixture() -> tuple[bytes, str]:
     return _odf_fixture("odp", body), "Synthetic ODP slide\npresenter note"
 
 
-def build_epub_fixture() -> tuple[bytes, str]:
-    """Two-chapter EPUB with the archive order reversed (spine order is
-    the contract under test; formats/epub.py)."""
+def _epub_fixture(chapters: list[str], extra_manifest: str = "") -> bytes:
+    """An EPUB whose spine lists `chapters` (XHTML strings) in order while
+    the archive holds them in REVERSE order, so spine resolution is what a
+    reader must get right; `extra_manifest` adds manifest items that are
+    not in the spine."""
+    ids = range(len(chapters))
     container = (
         '<?xml version="1.0"?>'
         '<container xmlns="urn:oasis:names:tc:opendocument:xmlns:container">'
@@ -265,18 +260,32 @@ def build_epub_fixture() -> tuple[bytes, str]:
     opf = (
         '<?xml version="1.0"?>'
         '<package xmlns="http://www.idpf.org/2007/opf" version="3.0"><manifest>'
-        '<item id="c0" href="ch0.xhtml" media-type="application/xhtml+xml"/>'
-        '<item id="c1" href="ch1.xhtml" media-type="application/xhtml+xml"/>'
-        '</manifest><spine><itemref idref="c0"/><itemref idref="c1"/></spine>'
-        "</package>"
+        + "".join(
+            f'<item id="c{i}" href="ch{i}.xhtml" media-type="application/xhtml+xml"/>'
+            for i in ids
+        )
+        + extra_manifest
+        + "</manifest><spine>"
+        + "".join(f'<itemref idref="c{i}"/>' for i in ids)
+        + "</spine></package>"
     )
-    payload = _zip_fixture(
+    members = {
+        "mimetype": "application/epub+zip",
+        "META-INF/container.xml": container,
+        "OEBPS/content.opf": opf,
+    }
+    for i in reversed(ids):
+        members[f"OEBPS/ch{i}.xhtml"] = chapters[i]
+    return _zip_members(members)
+
+
+def build_epub_fixture() -> tuple[bytes, str]:
+    """Two-chapter EPUB with the archive order reversed (spine order is
+    the contract under test; formats/epub.py)."""
+    payload = _epub_fixture(
         [
-            ("mimetype", "application/epub+zip", True),
-            ("META-INF/container.xml", container, False),
-            ("OEBPS/content.opf", opf, False),
-            ("OEBPS/ch1.xhtml", "<html><body><p>chapter two text</p></body></html>", False),
-            ("OEBPS/ch0.xhtml", "<html><body><h1>Synthetic EPUB</h1><p>chapter one text</p></body></html>", False),
+            "<html><body><h1>Synthetic EPUB</h1><p>chapter one text</p></body></html>",
+            "<html><body><p>chapter two text</p></body></html>",
         ]
     )
     return payload, "Synthetic EPUB\nchapter one text\nchapter two text"

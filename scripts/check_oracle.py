@@ -8,9 +8,9 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 import duckdb
 import pandas as pd
-from pyspark.sql import SparkSession
 
 import __spark_entry__ as entry
+from b2xtranslator_spark.plans.session import build_session
 
 SF_DIR = "/root/testdata/sf0.01"
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
@@ -36,12 +36,7 @@ def main():
     oq = entry.oracle_sql()
     if not names:
         names = [n for n in qs if n in oq]
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.driver.memory", "8g")
-        .getOrCreate()
-    )
+    spark = build_session(app_name="b2x-oracle")
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()
     for t in TABLES:

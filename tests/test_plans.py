@@ -259,7 +259,10 @@ def test_new_extraction_legs_shuffle_only_prescatter(spark):
     round-robin scatter of pre-synthesis rows (doc_id/text/source) that
     restores parallelism on one-file bench tables (_scatter_small — a
     guarded no-op at corpus scale where splits abound). Synthesized
-    payloads must never shuffle: no hash/range Exchange anywhere."""
+    payloads must never shuffle: no hash/range Exchange anywhere. Each leg
+    runs ONE Python evaluation, its fused mapInArrow: a synthesis UDF
+    chained in front of the extraction map is a second Arrow worker per
+    task and a second boundary crossing of every payload."""
     import importlib.util
     from pathlib import Path
 
@@ -278,9 +281,13 @@ def test_new_extraction_legs_shuffle_only_prescatter(spark):
         "extract_eml_transcripts",
         "extract_text_transcripts",
         "extract_markup_transcripts",
+        "extract_markup_main_content",
         "extract_pdf_transcripts",
     ):
         plan = _plan(em.queries()[name](spark, SF_DIR))
+        assert plan.count("MapInArrow") == 1, (name, plan)
+        for node in ("ArrowEvalPython", "BatchEvalPython", "MapInPandas"):
+            assert node not in plan, (name, node)
         n_ex = plan.count("Exchange")
         assert n_ex <= 1, (name, n_ex)
         if n_ex:
