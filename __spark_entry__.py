@@ -21,9 +21,11 @@ from xml.sax.saxutils import escape
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
+from b2xtranslator_spark.formats.word.extract import normalize_text  # noqa: E402
 from b2xtranslator_spark.operators.dedup import (  # noqa: E402
     SIMHASH_BITS,
     connected_components,
@@ -88,14 +90,19 @@ from b2xtranslator_spark.pipeline import (  # noqa: E402
     MARKUP_MAIN_PREFIX,
     MARKUP_PREFIX,
     PAYLOAD_PREFIX,
+    _strings,
     extract_turns,
     extraction_metrics,
+    map_rows,
     run_extraction,
 )
-from b2xtranslator_spark.sources.binfixtures import _W_NS, _zip_members  # noqa: E402
-from b2xtranslator_spark.sources.transcripts import (  # noqa: E402
+from b2xtranslator_spark.sources.binfixtures import (  # noqa: E402
+    _W_NS,
     _epub_fixture,
     _odf_fixture,
+    _zip_members,
+)
+from b2xtranslator_spark.sources.transcripts import (  # noqa: E402
     load_sample_corpus,
     synthesize_transcripts,
 )
@@ -193,10 +200,12 @@ def _extraction_leg(
     batch as a transcript RecordBatch and feeds it straight into
     pipeline.extract_turns (the product extraction code, unchanged)
     in-process, and ships back only the three columns the leg returns
-    instead of the full extraction schema. A synthesized payload never
-    crosses the JVM<->Python boundary and each task runs one Arrow worker
-    (guide §4.1: you control how many bytes cross the boundary); a
-    synthesis UDF chained in front of run_extraction was slower at sf0.1
+    instead of the full extraction schema; a built payload column comes
+    from pipeline._strings, so the worker imports no pandas. A
+    synthesized payload never crosses the JVM<->Python boundary and each
+    task runs one Arrow worker (guide §4.1: you control how many bytes
+    cross the boundary); a synthesis UDF chained in front of
+    run_extraction was slower at sf0.1
     (docx 1.14 -> 1.76 s, text 0.82 -> 1.18 s, median of 5 warm runs on a
     4-vCPU VM). `build` must be a closure or a package function: a
     top-level function of this module is pickled by reference, and this
@@ -218,12 +227,11 @@ def _extraction_leg(
             for b in batches:
                 tool = b.column("tool")
                 if build is not None:
-                    tool = pa.array(
+                    tool = _strings(
                         [
-                            PAYLOAD_PREFIX + base64.b64encode(build(t or "")).decode()
+                            PAYLOAD_PREFIX.encode() + base64.b64encode(build(t or ""))
                             for t in tool.to_pylist()
-                        ],
-                        pa.string(),
+                        ]
                     )
                 yield pa.RecordBatch.from_arrays(
                     [b.column("conv_id"), b.column("turn_idx"),
@@ -271,37 +279,24 @@ def _q_extract_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The one genuine relational join of the system (SURVEY.md §2.3 J7):
     extraction output vs expected fixture table."""
     transcripts, expected = _transcripts(spark, sf_dir)
-    extracted = run_extraction(transcripts)
 
-    @F.pandas_udf("string")
-    def norm(s):
-        # vectorized NormalizeText (same contract as formats.word.extract.
-        # normalize_text, which stays the per-string spec for the fixture
-        # suite): C#-Replace passes, then whitespace-collapse around
-        # newlines = strip-each-line + drop-blank-lines in one greedy regex
-        t = (
-            s.fillna("")
-            .str.replace("\r\n", "\n", regex=False)
-            .str.replace("\r", "\n", regex=False)
-            .str.replace("\t", "", regex=False)
-            .str.replace("  ", " ", regex=False)
-            .str.replace("\n\n", "\n", regex=False)
-            .str.replace("\n\n", "\n", regex=False)
-        )
-        t = t.str.replace(r"\s*\n\s*", "\n", regex=True)
-        return t.str.strip().str.lower()
+    def normalized(conv_id, turn_idx, text, error):
+        return [
+            (conv_id, turn_idx, *(normalize_text(s or "").lower() for s in (text, error)))
+        ]
 
+    extracted = map_rows(
+        run_extraction(transcripts).select("conv_id", "turn_idx", "text", "error"),
+        StructType.fromDDL("conv_id string, turn_idx int, text string, error string"),
+        normalized,
+    )
     joined = (
         extracted.join(expected, ["conv_id", "turn_idx"], "inner")
         .withColumn(
             "ok",
             (
-                (norm("text") == F.lower("expected_text"))
-                | (
-                    F.coalesce(norm("error"), F.lit("")).contains(
-                        F.lower("expected_text")
-                    )
-                )
+                (F.col("text") == F.lower("expected_text"))
+                | F.col("error").contains(F.lower("expected_text"))
             ).cast("int"),
         )
         .groupBy("sample_name")
@@ -729,18 +724,11 @@ def _media_leg(
         spark,
     )
 
-    def synth(batches):
-        import pyarrow as pa
-
-        for b in batches:
-            ids = b.column("doc_id").to_pylist()
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([f"d-{d:06d}" for d in ids], pa.string()),
-                 pa.array([payload(d) for d in ids], pa.binary())],
-                names=["media_id", "payload"],
-            )
-
-    return docs.mapInArrow(synth, schema="media_id string, payload binary")
+    return map_rows(
+        docs,
+        StructType.fromDDL("media_id string, payload binary"),
+        lambda d: [(f"d-{d:06d}", payload(d))],
+    )
 
 
 def _grid_image(h: int, w: int) -> Callable[[int], bytes]:

@@ -31,6 +31,7 @@ Implements the text-relevant core of the public RTF 1.9 specification:
 from __future__ import annotations
 
 from ..budget import check_deadline
+from .ooxml import _tiled_spans
 
 __all__ = ["extract_rtf_parts", "looks_like_rtf"]
 
@@ -331,15 +332,4 @@ def extract_rtf_parts(
     # trailing paragraph mark: Word writers end the body with \par; the
     # reference's writers drop the final empty line, and so do we
     text = text.rstrip("\n")
-    # spans TILE the text (pipeline contract, test_spans_cover_text): the
-    # paragraph-joining newline belongs to the span it terminates
-    spans: list[tuple[str, int, int]] = []
-    start_off = 0
-    lines = text.split("\n")
-    for i, line in enumerate(lines):
-        end = start_off + len(line)
-        spans.append(("par", start_off, end + (1 if i < len(lines) - 1 else 0)))
-        start_off = end + 1
-    if text == "":
-        spans = []
-    return text, records, spans
+    return text, records, _tiled_spans(text, "par")

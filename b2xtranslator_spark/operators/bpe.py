@@ -18,7 +18,7 @@ frequent adjacent symbol pair.
   cap is the explicit knob). Deterministic: pair ties break
   lexicographically, so the merge list is reproducible to the byte.
 - **encode** (`bpe_encode`): merges BROADCAST as a plain Python list
-  (vocab-sized); the corpus-side encode is a pure `mapInPandas` — zero
+  (vocab-sized); the corpus-side encode is a pure Arrow row map — zero
   shuffle, horizontally scaling, the same black-box-map shape as the
   extraction kernel.
 
@@ -30,6 +30,9 @@ including the classic low/lower/newest/widest corpus from the paper.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import StructType
+
+from ..pipeline import map_rows
 
 __all__ = ["bpe_apply_merges", "bpe_encode", "bpe_train", "bpe_train_core"]
 
@@ -143,31 +146,21 @@ def bpe_encode(
     """(doc_id, tokens array<string>, n_tokens) — pure map over a
     broadcast-by-closure merge table; zero shuffle."""
     ranks = {tuple(p): i for i, p in enumerate(merges)}
+    cache: dict[str, list[str]] = {}
 
-    def enc(batches):
-        import pandas as pd
+    def row(doc_id, text):
+        toks: list[str] = []
+        for w in (text or "").lower().split():
+            got = cache.get(w)
+            if got is None:
+                got = bpe_apply_merges(w, ranks)
+                if len(cache) < 1 << 20:
+                    cache[w] = got
+            toks.extend(got)
+        return [(doc_id, toks, len(toks))]
 
-        cache: dict[str, list[str]] = {}
-        for pdf in batches:
-            toks_col = []
-            for txt in pdf["text"].values:
-                toks: list[str] = []
-                for w in (txt or "").lower().split():
-                    got = cache.get(w)
-                    if got is None:
-                        got = bpe_apply_merges(w, ranks)
-                        if len(cache) < 1 << 20:
-                            cache[w] = got
-                    toks.extend(got)
-                toks_col.append(toks)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "tokens": toks_col,
-                    "n_tokens": [len(t) for t in toks_col],
-                }
-            )
-
-    return documents.select("doc_id", "text").mapInPandas(
-        enc, schema="doc_id long, tokens array<string>, n_tokens long"
+    return map_rows(
+        documents.select("doc_id", "text"),
+        StructType.fromDDL("doc_id long, tokens array<string>, n_tokens long"),
+        row,
     )

@@ -20,10 +20,8 @@ from __future__ import annotations
 
 import hashlib
 import struct
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     ArrayType,
@@ -35,6 +33,11 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from ..formats.audio import audio_features, decode_wav, is_wav
+from ..formats.imaging import decode_image, is_bmp, is_png, mean_pool
+from ..formats.video import decode_avi, is_avi
+from ..pipeline import map_rows
 
 MEDIA_SCHEMA = StructType(
     [
@@ -80,63 +83,46 @@ def _decode_image_stub(payload: bytes) -> np.ndarray:
 def _decode_media(payload: bytes) -> np.ndarray:
     """REAL image decode for PNG/BMP payloads (formats/imaging.py), stub
     fallback for everything else. Returns float32 HxWx3."""
-    from ..formats.imaging import decode_image, is_bmp, is_png
-
     if is_png(payload) or is_bmp(payload):
         return decode_image(payload).astype(np.float32)
     return _decode_image_stub(payload)
 
 
-def extract_media_features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas kernel: decode (stub) -> resize/pool -> feature vector.
-
-    The pooling/feature math is genuine vectorized NumPy over the whole
-    batch's decoded arrays."""
-    for pdf in batches:
-        out_rows = {k: [] for k in ("media_id", "kind", "n_bytes", "feature",
-                                     "thumb_w", "thumb_h", "status")}
-        for media_id, kind, payload in zip(
-            pdf["media_id"].values, pdf["kind"].values, pdf["payload"].values
-        ):
-            payload = bytes(payload) if payload is not None else b""
-            try:
-                from ..formats.imaging import mean_pool
-
-                img = _decode_media(payload)
-                # mean-pool to 4x4 (any input size) + channel stats = 16-dim
-                pooled = mean_pool(img, 4, 4)
-                feature = np.concatenate(
-                    [
-                        pooled.mean(axis=(0, 1)),
-                        pooled.std(axis=(0, 1)),
-                        pooled.max(axis=(0, 1)),
-                        pooled.min(axis=(0, 1)),
-                        [img.mean(), img.std(), float(len(payload) % 255), 1.0],
-                    ]
-                ).astype(np.float32)[:FEATURE_DIM]
-                out_rows["feature"].append([float(x) for x in feature])
-                out_rows["thumb_w"].append(4)
-                out_rows["thumb_h"].append(4)
-                out_rows["status"].append("ok")
-            except Exception as exc:  # row-level tolerance
-                out_rows["feature"].append([])
-                out_rows["thumb_w"].append(0)
-                out_rows["thumb_h"].append(0)
-                out_rows["status"].append(f"decode_error: {exc}")
-            out_rows["media_id"].append(media_id)
-            out_rows["kind"].append(kind)
-            out_rows["n_bytes"].append(len(payload))
-        yield pd.DataFrame(out_rows)
+def _tolerant(zero: tuple, decode, *args) -> tuple:
+    """decode(*args): one row's output values, the status last. This is the
+    row-level tolerance of every media operator: when the decode raises,
+    the row gets the operator's `zero` values and the status
+    'decode_error: <exc>', and the task goes on."""
+    try:
+        return decode(*args)
+    except Exception as exc:  # row-level tolerance
+        return (*zero, f"decode_error: {exc}")
 
 
-def run_media_features(media: DataFrame, num_partitions: int | None = None) -> DataFrame:
-    spark = media.sparkSession
-    n = num_partitions or spark.sparkContext.defaultParallelism
-    return (
-        media.select("media_id", "kind", "payload")
-        .repartition(n, "media_id")
-        .mapInPandas(extract_media_features, schema=FEATURE_SCHEMA)
-    )
+def run_media_features(media: DataFrame) -> DataFrame:
+    """Decode (real PNG/BMP; stub otherwise) -> mean-pool -> a FEATURE_DIM
+    feature vector per media row, as a pure map over the input splits."""
+
+    def features(payload: bytes) -> tuple:
+        img = _decode_media(payload)
+        # mean-pool to 4x4 (any input size) + channel stats = 16-dim
+        pooled = mean_pool(img, 4, 4)
+        feature = np.concatenate(
+            [
+                pooled.mean(axis=(0, 1)),
+                pooled.std(axis=(0, 1)),
+                pooled.max(axis=(0, 1)),
+                pooled.min(axis=(0, 1)),
+                [img.mean(), img.std(), float(len(payload) % 255), 1.0],
+            ]
+        ).astype(np.float32)[:FEATURE_DIM]
+        return feature.tolist(), 4, 4, "ok"
+
+    def row(media_id, kind, payload):
+        payload = payload or b""
+        return [(media_id, kind, len(payload), *_tolerant(([], 0, 0), features, payload))]
+
+    return map_rows(media.select("media_id", "kind", "payload"), FEATURE_SCHEMA, row)
 
 
 def synthesize_media(spark, n_rows: int = 64) -> DataFrame:
@@ -210,35 +196,14 @@ def resize_thumbnails(media: DataFrame, side: int = 4) -> DataFrame:
     thumbnail bytes. The Spark-side contract: binary in, small binary out,
     row-level error tolerance, Arrow batching."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("media_id", "kind", "thumb", "thumb_w",
-                                    "thumb_h", "status")}
-            for media_id, kind, payload in zip(
-                pdf["media_id"].values, pdf["kind"].values, pdf["payload"].values
-            ):
-                payload = bytes(payload) if payload is not None else b""
-                try:
-                    from ..formats.imaging import mean_pool
+    def thumb(payload: bytes) -> tuple:
+        pooled = mean_pool(_decode_media(payload), side, side)
+        return pooled.astype(np.uint8).tobytes(), side, side, "ok"
 
-                    img = _decode_media(payload)
-                    pooled = mean_pool(img, side, side)
-                    out["thumb"].append(pooled.astype(np.uint8).tobytes())
-                    out["thumb_w"].append(side)
-                    out["thumb_h"].append(side)
-                    out["status"].append("ok")
-                except Exception as exc:  # row-level tolerance
-                    out["thumb"].append(b"")
-                    out["thumb_w"].append(0)
-                    out["thumb_h"].append(0)
-                    out["status"].append(f"decode_error: {exc}")
-                out["media_id"].append(media_id)
-                out["kind"].append(kind)
-            yield pd.DataFrame(out)
+    def row(media_id, kind, payload):
+        return [(media_id, kind, *_tolerant((b"", 0, 0), thumb, payload or b""))]
 
-    return media.select("media_id", "kind", "payload").mapInPandas(
-        kernel, schema=THUMB_SCHEMA
-    )
+    return map_rows(media.select("media_id", "kind", "payload"), THUMB_SCHEMA, row)
 
 
 FRAME_SCHEMA = StructType(
@@ -261,63 +226,40 @@ def sample_frames(media: DataFrame, n_frames: int = 4) -> DataFrame:
     sampled timestamp maps to the nearest decoded frame. Compressed
     codecs (no pyav in this environment) fall back to the deterministic
     stub and say so in the row status; non-video rows pass through as a
-    single frame_idx=0 row."""
+    single frame_idx=0 row. A NULL duration_ms counts as 0."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..formats.video import decode_avi, is_avi
+    def row(media_id, kind, payload, duration):
+        payload = payload or b""
+        frames = n_frames if kind == "video" else 1
+        dur = duration or 0
+        real_frames = None
+        if kind == "video" and is_avi(payload):
+            try:
+                real_frames, _fps, _dims = decode_avi(payload)
+            except Exception:
+                real_frames = None  # compressed/corrupt: stub below
+        if real_frames and dur == 0:
+            dur = len(real_frames)  # frame-count timeline fallback
+        # honest per-row provenance
+        status = "ok_stub" if kind == "video" and real_frames is None else "ok"
 
-        for pdf in batches:
-            out = {k: [] for k in ("media_id", "frame_idx", "ts_ms", "feature",
-                                    "status")}
-            for media_id, kind, payload, duration in zip(
-                pdf["media_id"].values, pdf["kind"].values,
-                pdf["payload"].values, pdf["duration_ms"].values,
-            ):
-                payload = bytes(payload) if payload is not None else b""
-                frames = n_frames if kind == "video" else 1
-                # NULL duration_ms arrives as NaN through Arrow/pandas, not
-                # None — int(nan) would fail the whole task, breaking the
-                # row-level tolerance contract
-                dur = 0 if pd.isna(duration) else int(duration)
-                real_frames = None
-                status_ok = "ok"
-                if kind == "video" and is_avi(payload):
-                    try:
-                        real_frames, _fps, _dims = decode_avi(payload)
-                        status_ok = "ok"
-                    except Exception:
-                        real_frames = None  # compressed/corrupt: stub below
-                if real_frames is not None and dur == 0 and real_frames:
-                    dur = len(real_frames)  # frame-count timeline fallback
-                if kind == "video" and real_frames is None:
-                    status_ok = "ok_stub"  # honest per-row provenance
-                for fi in range(frames):
-                    ts = (dur * fi) // max(1, frames)
-                    try:
-                        if real_frames:
-                            src = real_frames[
-                                min(len(real_frames) - 1,
-                                    (fi * len(real_frames)) // max(1, frames))
-                            ].astype(np.float32)
-                        else:
-                            src = _decode_image_stub(
-                                payload + struct.pack("<i", fi)
-                            )
-                        feat = np.concatenate(
-                            [src.mean(axis=(0, 1)), src.std(axis=(0, 1))]
-                        ).astype(np.float32)
-                        out["feature"].append([float(x) for x in feat])
-                        out["status"].append(status_ok)
-                    except Exception as exc:  # row-level tolerance
-                        out["feature"].append([])
-                        out["status"].append(f"decode_error: {exc}")
-                    out["media_id"].append(media_id)
-                    out["frame_idx"].append(fi)
-                    out["ts_ms"].append(int(ts))
-            yield pd.DataFrame(out)
+        def feature(fi: int) -> tuple:
+            if real_frames:
+                src = real_frames[
+                    min(len(real_frames) - 1, (fi * len(real_frames)) // max(1, frames))
+                ].astype(np.float32)
+            else:
+                src = _decode_image_stub(payload + struct.pack("<i", fi))
+            feat = np.concatenate([src.mean(axis=(0, 1)), src.std(axis=(0, 1))])
+            return feat.astype(np.float32).tolist(), status
 
-    return media.select("media_id", "kind", "payload", "duration_ms").mapInPandas(
-        kernel, schema=FRAME_SCHEMA
+        return [
+            (media_id, fi, (dur * fi) // max(1, frames), *_tolerant(([],), feature, fi))
+            for fi in range(frames)
+        ]
+
+    return map_rows(
+        media.select("media_id", "kind", "payload", "duration_ms"), FRAME_SCHEMA, row
     )
 
 
@@ -340,39 +282,22 @@ def image_dhash(media: DataFrame, hash_side: int = 8) -> DataFrame:
     64 bits at side=8; non-image payloads (stub decode) still hash
     deterministically so the operator is total over the media table."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..formats.imaging import mean_pool
+    def dhash(payload: bytes) -> tuple:
+        grey = _decode_media(payload).mean(axis=2)
+        pooled = mean_pool(grey[:, :, None], hash_side, hash_side + 1)[:, :, 0]
+        bits = (pooled[:, 1:] > pooled[:, :-1]).reshape(-1)
+        h = 0
+        for b in bits:
+            h = (h << 1) | int(b)
+        # keep within signed int64 (64 bits -> top bit signed)
+        if h >= 1 << 63:
+            h -= 1 << 64
+        return h, "ok"
 
-        for pdf in batches:
-            out = {"media_id": [], "dhash": [], "status": []}
-            for media_id, payload in zip(
-                pdf["media_id"].values, pdf["payload"].values
-            ):
-                payload = bytes(payload) if payload is not None else b""
-                try:
-                    img = _decode_media(payload)
-                    grey = img.mean(axis=2)
-                    pooled = mean_pool(
-                        grey[:, :, None], hash_side, hash_side + 1
-                    )[:, :, 0]
-                    bits = (pooled[:, 1:] > pooled[:, :-1]).reshape(-1)
-                    h = 0
-                    for b in bits:
-                        h = (h << 1) | int(b)
-                    # keep within signed int64 (64 bits -> top bit signed)
-                    if h >= 1 << 63:
-                        h -= 1 << 64
-                    out["dhash"].append(h)
-                    out["status"].append("ok")
-                except Exception as exc:  # row-level tolerance
-                    out["dhash"].append(0)
-                    out["status"].append(f"decode_error: {exc}")
-                out["media_id"].append(media_id)
-            yield pd.DataFrame(out)
+    def row(media_id, payload):
+        return [(media_id, *_tolerant((0,), dhash, payload or b""))]
 
-    return media.select("media_id", "payload").mapInPandas(
-        kernel, schema=DHASH_SCHEMA
-    )
+    return map_rows(media.select("media_id", "payload"), DHASH_SCHEMA, row)
 
 
 def image_near_duplicates(
@@ -419,40 +344,15 @@ def run_audio_features(media: DataFrame) -> DataFrame:
     + NumPy — RMS, zero-crossing rate, spectral centroid, duration). Rows
     whose payload is not RIFF/WAVE get status='unsupported_codec' (honest:
     compressed audio needs pyav/soundfile, absent in this container)."""
+    zero = (0.0, 0.0, 0.0, 0.0)
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..formats.audio import audio_features, decode_wav, is_wav
+    def features(payload: bytes) -> tuple:
+        if not is_wav(payload):
+            return (*zero, "unsupported_codec")
+        f = audio_features(*decode_wav(payload))
+        return (*(float(f[k]) for k in ("duration_s", "rms", "zcr", "centroid_hz")), "ok")
 
-        for pdf in batches:
-            out = {k: [] for k in ("media_id", "duration_s", "rms", "zcr",
-                                    "centroid_hz", "status")}
-            for media_id, payload in zip(
-                pdf["media_id"].values, pdf["payload"].values
-            ):
-                payload = bytes(payload) if payload is not None else b""
-                try:
-                    if not is_wav(payload):
-                        raise ValueError("unsupported_codec")
-                    samples, rate = decode_wav(payload)
-                    f = audio_features(samples, rate)
-                    out["duration_s"].append(float(f["duration_s"]))
-                    out["rms"].append(float(f["rms"]))
-                    out["zcr"].append(float(f["zcr"]))
-                    out["centroid_hz"].append(float(f["centroid_hz"]))
-                    out["status"].append("ok")
-                except Exception as exc:  # row-level tolerance
-                    out["duration_s"].append(0.0)
-                    out["rms"].append(0.0)
-                    out["zcr"].append(0.0)
-                    out["centroid_hz"].append(0.0)
-                    msg = str(exc)
-                    out["status"].append(
-                        "unsupported_codec" if "unsupported_codec" in msg
-                        else f"decode_error: {msg}"
-                    )
-                out["media_id"].append(media_id)
-            yield pd.DataFrame(out)
+    def row(media_id, payload):
+        return [(media_id, *_tolerant(zero, features, payload or b""))]
 
-    return media.select("media_id", "payload").mapInPandas(
-        kernel, schema=AUDIO_FEATURE_SCHEMA
-    )
+    return map_rows(media.select("media_id", "payload"), AUDIO_FEATURE_SCHEMA, row)

@@ -130,38 +130,51 @@ def lsh_band_buckets(
     ``bands`` times, never pairwise, and never its embedding.
 
     All bands*planes projections are ONE BLAS matmul per Arrow batch
-    (mapInPandas) against the deterministic integer plane matrix — measured
+    (mapInArrow) against the deterministic integer plane matrix — measured
     ~10x the 40 interpreted Catalyst array-folds this replaced, and a pure
     map (no shuffle). Integer weights times float64 products are exact, so
     the only engine-dependence is FP summation order on projections that
     land exactly at zero — the recall margin (and the exact-cosine verify
     stage downstream) absorbs it."""
     import numpy as np
-    import pandas as pd
 
     n_planes = bands * planes_per_band
 
     def kernel(batches):
+        import pyarrow as pa
+
         planes_t = None
-        for pdf in batches:
-            if len(pdf) == 0:
+        for batch in batches:
+            n = batch.num_rows
+            if n == 0:
                 continue
-            mat = np.array(list(pdf["embedding"]), dtype=np.float64)
+            # the batch's vectors as one (n, dim) matrix over the list
+            # column's flat values
+            emb = batch.column("embedding")
+            dims = np.diff(emb.offsets.to_numpy())
+            if (dims != dims[0]).any():
+                raise ValueError("embeddings of one batch differ in length")
+            values = emb.flatten().to_numpy(zero_copy_only=False)
+            mat = values.astype(np.float64).reshape(n, dims[0])
             if planes_t is None:
                 planes_t = _plane_matrix(n_planes, mat.shape[1]).T
             bits = (mat @ planes_t >= 0).astype(np.int64)  # n x planes
             # band keys: planes_per_band bits -> integer per band
-            keys = np.zeros((len(pdf), bands), dtype=np.int64)
+            keys = np.zeros((n, bands), dtype=np.int64)
             for b in range(bands):
                 for r in range(planes_per_band):
                     keys[:, b] = keys[:, b] * 2 + bits[:, b * planes_per_band + r]
-            yield pd.DataFrame({
-                "vec_id": np.repeat(pdf["vec_id"].to_numpy(), bands),
-                "band": np.tile(np.arange(bands), len(pdf)),
-                "bucket": keys.reshape(-1),
-            })
+            vec_id = batch.column("vec_id").to_numpy().astype(np.int64)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(np.repeat(vec_id, bands)),
+                    pa.array(np.tile(np.arange(bands, dtype=np.int32), n)),
+                    pa.array(keys.reshape(-1)),
+                ],
+                names=["vec_id", "band", "bucket"],
+            )
 
-    return embeddings.select("vec_id", "embedding").mapInPandas(
+    return embeddings.select("vec_id", "embedding").mapInArrow(
         kernel, "vec_id long, band int, bucket long"
     )
 

@@ -30,7 +30,7 @@ import hashlib
 import os
 import time
 from collections import OrderedDict
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator
 
 import numpy as np
 import pyarrow as pa
@@ -328,6 +328,30 @@ def _strings(values: list, valid: list[bool] | None = None) -> pa.Array:
         len(values),
         [mask, pa.py_buffer(offsets.astype(np.int32)), pa.py_buffer(b"".join(values))],
     )
+
+
+def map_rows(
+    df: DataFrame, schema: StructType, row: Callable[..., Iterable[tuple]]
+) -> DataFrame:
+    """A mapInArrow over `df` that calls row(*cells) for each input row, its
+    cells as Python values in column order (a NULL is None), and emits the
+    output tuples it returns, each in `schema` field order. The operators'
+    per-row Python stages run on it; their outputs go through pa.array,
+    which imports pandas into the worker, unlike extract_turns above."""
+    arrow = pa.schema(list(to_arrow_type(schema)))
+
+    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            out = [
+                t for cells in zip(*(c.to_pylist() for c in batch.columns))
+                for t in row(*cells)
+            ]
+            yield pa.RecordBatch.from_arrays(
+                [pa.array([t[i] for t in out], f.type) for i, f in enumerate(arrow)],
+                schema=arrow,
+            )
+
+    return df.mapInArrow(kernel, schema)
 
 
 def run_extraction(transcripts: DataFrame) -> DataFrame:

@@ -393,6 +393,68 @@ def _zip_members(members: dict) -> bytes:
     return buf.getvalue()
 
 
+_ODF_FIXTURE_NS = (
+    'xmlns:office="urn:oasis:names:tc:opendocument:xmlns:office:1.0" '
+    'xmlns:text="urn:oasis:names:tc:opendocument:xmlns:text:1.0" '
+    'xmlns:table="urn:oasis:names:tc:opendocument:xmlns:table:1.0" '
+    'xmlns:draw="urn:oasis:names:tc:opendocument:xmlns:drawing:1.0" '
+    'xmlns:presentation="urn:oasis:names:tc:opendocument:xmlns:presentation:1.0" '
+    'xmlns:xlink="http://www.w3.org/1999/xlink"'
+)
+
+
+def _odf_fixture(kind: str, body_inner: str) -> bytes:
+    """An ODF container ("odt", "ods" or "odp") whose office:body holds
+    `body_inner`: the stored mimetype member plus content.xml."""
+    which = {"odt": "text", "ods": "spreadsheet", "odp": "presentation"}[kind]
+    content = (
+        f'<?xml version="1.0" encoding="UTF-8"?>'
+        f"<office:document-content {_ODF_FIXTURE_NS}>"
+        f"<office:body><office:{which}>{body_inner}</office:{which}>"
+        f"</office:body></office:document-content>"
+    )
+    return _zip_members(
+        {
+            "mimetype": f"application/vnd.oasis.opendocument.{which}",
+            "content.xml": content,
+        }
+    )
+
+
+def _epub_fixture(chapters: list[str], extra_manifest: str = "") -> bytes:
+    """An EPUB whose spine lists `chapters` (XHTML strings) in order while
+    the archive holds them in REVERSE order, so spine resolution is what a
+    reader must get right; `extra_manifest` adds manifest items that are
+    not in the spine."""
+    ids = range(len(chapters))
+    container = (
+        '<?xml version="1.0"?>'
+        '<container xmlns="urn:oasis:names:tc:opendocument:xmlns:container">'
+        '<rootfiles><rootfile full-path="OEBPS/content.opf" '
+        'media-type="application/oebps-package+xml"/></rootfiles></container>'
+    )
+    opf = (
+        '<?xml version="1.0"?>'
+        '<package xmlns="http://www.idpf.org/2007/opf" version="3.0"><manifest>'
+        + "".join(
+            f'<item id="c{i}" href="ch{i}.xhtml" media-type="application/xhtml+xml"/>'
+            for i in ids
+        )
+        + extra_manifest
+        + "</manifest><spine>"
+        + "".join(f'<itemref idref="c{i}"/>' for i in ids)
+        + "</spine></package>"
+    )
+    members = {
+        "mimetype": "application/epub+zip",
+        "META-INF/container.xml": container,
+        "OEBPS/content.opf": opf,
+    }
+    for i in reversed(ids):
+        members[f"OEBPS/ch{i}.xhtml"] = chapters[i]
+    return _zip_members(members)
+
+
 def build_docx_fixture() -> tuple[bytes, str]:
     """Deterministic .docx + expected text (paragraphs, tab run, rendered
     hyperlink, table rows — the docx leg of the flagship corpus)."""

@@ -1,6 +1,10 @@
 """Local replica of the driver's correctness gate: run queries() vs
 oracle_sql() at sf0.01, compare rows/schema/value-hash (columns sorted by
 name, md5 over row-sorted values). Usage: python scripts/check_oracle.py [q1 q2 ...]
+
+Each line prints the Spark-side value hash (and the oracle's), so two trees'
+runs of the same queries compare with `diff`. Named queries without an
+oracle print their row count and value hash only.
 """
 import sys
 from pathlib import Path
@@ -43,15 +47,16 @@ def main():
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')")
     fails = 0
     for name in names:
-        spdf = qs[name](spark, SF_DIR).toPandas()
+        sr, sc, sh = canon(qs[name](spark, SF_DIR).toPandas())
         if name not in oq:
-            print(f"{name}: no_oracle spark_rows={len(spdf)}")
+            print(f"{name}: no_oracle spark_rows={sr} spark_hash={sh}")
             continue
-        odf = con.execute(oq[name]).df()
-        sr, sc, sh = canon(spdf)
-        orr, oc, oh = canon(odf)
+        orr, oc, oh = canon(con.execute(oq[name]).df())
         ok = (sr == orr) and (sc == oc) and (sh == oh)
-        print(f"{name}: rows {sr}/{orr} schema_match={sc == oc} hash_match={sh == oh} {'PASS' if ok else 'FAIL'}")
+        print(
+            f"{name}: rows {sr}/{orr} schema_match={sc == oc} hash_match={sh == oh} "
+            f"spark_hash={sh} oracle_hash={oh} {'PASS' if ok else 'FAIL'}"
+        )
         if not ok:
             fails += 1
             if sc != oc:

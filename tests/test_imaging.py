@@ -98,7 +98,21 @@ def test_media_features_use_real_decoder(spark):
     )
 
     media = synthesize_media(spark, n_rows=12)
-    feats = run_media_features(media).toPandas().set_index("media_id")
+    # a truncated PNG fails its own row, with the operator's zero values
+    png = encode_png(np.zeros((4, 4, 3), np.uint8))
+    cut = png[: len(png) // 2]
+    bad = spark.createDataFrame(
+        [("bad", "image", bytearray(cut))],
+        "media_id string, kind string, payload binary",
+    )
+    feats = run_media_features(media.unionByName(bad, allowMissingColumns=True))
+    feats = feats.toPandas().set_index("media_id")
+    row = feats.loc["bad"]
+    assert row["status"] == "decode_error: missing IHDR/IDAT"
+    assert (row["n_bytes"], list(row["feature"]), row["thumb_w"], row["thumb_h"]) == (
+        len(cut), [], 0, 0,
+    )
+    feats = feats.drop("bad")
     assert (feats["status"] == "ok").all()
     # recompute row m-00000 (image, PNG, seed 0) independently
     rng = np.random.RandomState(0)

@@ -63,3 +63,17 @@ def test_sample_frames_decodes_real_avi(spark):
     )
     st = {r["status"] for r in sample_frames(media2, n_frames=2).collect()}
     assert st == {"ok_stub"}
+    # a NULL duration_ms is 0: the real AVI falls back to its frame-count
+    # timeline, the stub path to ts 0, and no row fails
+    media3 = spark.createDataFrame(
+        [("v3", "video", bytearray(payload), None),
+         ("v4", "video", bytearray(b"\x00\x01\x02mp4-ish"), None)],
+        "media_id string, kind string, payload binary, duration_ms long",
+    )
+    got = sorted(
+        (r["media_id"], r["frame_idx"], r["ts_ms"], r["status"])
+        for r in sample_frames(media3, n_frames=4).collect()
+    )
+    assert got == [("v3", fi, 2 * fi, "ok") for fi in range(4)] + [
+        ("v4", fi, 0, "ok_stub") for fi in range(4)
+    ]

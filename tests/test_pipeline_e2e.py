@@ -439,3 +439,46 @@ def test_arrow_kernel_never_imports_pandas(tmp_path):
         capture_output=True, text=True, timeout=120, check=True,
     )
     assert out.stdout.split() == ["False"], out.stdout + out.stderr
+
+
+_FIXTURE_LEG_PANDAS_FREE = r"""
+import base64
+import sys
+import pyarrow as pa
+from b2xtranslator_spark.pipeline import (
+    PAYLOAD_PREFIX, _IN_ARROW, _ints, _strings, extract_turns,
+)
+from b2xtranslator_spark.sources.binfixtures import _epub_fixture, _odf_fixture
+
+payloads = [
+    _odf_fixture("odt", "<text:p>odf leg</text:p>"),
+    _epub_fixture(["<html><body><p>epub leg</p></body></html>"]),
+]
+batch = pa.RecordBatch.from_arrays(
+    [_strings([b"c", b"c"]), _ints([0, 1], pa.int32()), pa.nulls(2, pa.string()),
+     _strings([PAYLOAD_PREFIX.encode() + base64.b64encode(p) for p in payloads])],
+    schema=_IN_ARROW,
+)
+out = pa.Table.from_batches(list(extract_turns(iter([batch]))))
+print(out.column("status").to_pylist(), out.column("text").to_pylist())
+print("pandas" in sys.modules)
+"""
+
+
+def test_fixture_legs_never_import_pandas():
+    """The ODF and EPUB oracle legs' worker work (build the fixture
+    container, make the b64cfb: payload column, run the kernel) imports
+    no pandas, in a fresh interpreter."""
+    import subprocess
+    import sys
+
+    import b2xtranslator_spark.pipeline as pl
+
+    out = subprocess.run(
+        [sys.executable, "-c", _FIXTURE_LEG_PANDAS_FREE],
+        cwd=pl.__file__.rsplit("/b2xtranslator_spark/", 1)[0],
+        capture_output=True, text=True, timeout=120, check=True,
+    )
+    assert out.stdout.splitlines() == [
+        "['ok', 'ok'] ['odf leg', 'epub leg']", "False",
+    ], out.stdout + out.stderr

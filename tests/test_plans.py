@@ -120,7 +120,7 @@ def test_embedding_lsh_has_no_cross_join(spark):
     plan = _plan(embedding_near_duplicates_lsh(emb, max_vecs=100))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
-    assert plan.count("MapInPandas") == 1, "band kernel must run once"
+    assert plan.count("MapInArrow") == 1, "band kernel must run once"
 
 
 def test_simhash_votes_aggregate_partially(docs):
@@ -449,3 +449,32 @@ def test_decompression_is_charged_in_budget():
             if name == "decompress" or member:
                 offenders.append(f"{rel}:{node.lineno} {name}")
     assert not offenders, f"inflates outside budget.py: {offenders}"
+
+
+def test_python_stages_are_arrow_maps():
+    """Every Python stage of the package and of ``__spark_entry__.py`` is a
+    ``mapInArrow``, directly or through ``pipeline.map_rows``: no file
+    there calls, decorates with or imports ``mapInPandas``,
+    ``pandas_udf`` or ``applyInPandas``. Pure ``ast`` walk; no Spark."""
+    import ast
+    from pathlib import Path
+
+    repo = Path(__file__).resolve().parent.parent
+    pandas_maps = {"mapInPandas", "pandas_udf", "applyInPandas"}
+    offenders = []
+    for path in [*sorted((repo / "b2xtranslator_spark").rglob("*.py")),
+                 repo / "__spark_entry__.py"]:
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Attribute):
+                names = [node.attr]
+            elif isinstance(node, ast.Name):
+                names = [node.id]
+            elif isinstance(node, ast.ImportFrom):
+                names = [a.name for a in node.names]
+            else:
+                continue
+            offenders += [
+                f"{path.relative_to(repo)}:{node.lineno} {n}"
+                for n in names if n in pandas_maps
+            ]
+    assert not offenders, f"pandas-based Python stages: {offenders}"
