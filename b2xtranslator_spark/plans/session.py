@@ -5,7 +5,8 @@ the knobs that matter are Arrow batch shaping for the mapInArrow kernel, one
 task slot per physical core, AQE for runtime coalescing of the operators'
 shuffles, and at least 32 shuffle partitions (a real cluster submit
 overrides via spark-submit --conf). The default master runs one local
-thread per CPU this process may use.
+thread per CPU this process may use, and the driver heap defaults to half
+the machine's memory (SPARK_DRIVER_MEM overrides it).
 """
 
 from __future__ import annotations
@@ -43,6 +44,16 @@ def task_cpus(cpus: set[int], siblings: dict[int, str], cores: int) -> int:
         for c in cpus
     }
     return max(1, min(len(cpus) // max(1, len(physical)), cores))
+
+
+def driver_memory(total_bytes: int) -> str:
+    """Default driver heap for a machine with `total_bytes` of memory (its
+    MemTotal): half of it in whole GiB, from 1g up to 16g. With a local
+    master the driver JVM also runs the executors, and beside its heap the
+    box holds the JVM's off-heap Arrow buffers and one Python worker per
+    slot, so a heap the size of the machine (16g on 15 GB) is an
+    overcommit."""
+    return f"{max(1, min(16, total_bytes // (2 << 30)))}g"
 
 
 def _sibling_lists(cpus: set[int]) -> dict[int, str]:
@@ -115,7 +126,11 @@ def build_session(
             str(task_cpus(cpus, _sibling_lists(cpus),
                           int(local.group(1)) if local else len(cpus))),
         )
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM")
+            or driver_memory(os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Djava.net.preferIPv6Addresses=false")
     )

@@ -102,6 +102,39 @@ def test_word_document_structures():
     assert all(fc is not None for fc in fcs)
 
 
+def _chpx_page(rgfc: list[int], word_offset: int) -> bytes:
+    """One CHPX FKP whose runs all point at a bold grpprl (cb 3) placed at
+    byte 2 * word_offset."""
+    page = bytearray(512)
+    crun = len(rgfc) - 1
+    struct.pack_into(f"<{crun + 1}i", page, 0, *rgfc)
+    page[4 * (crun + 1) : 4 * (crun + 1) + crun] = bytes([word_offset]) * crun
+    at = 2 * word_offset
+    chpx = b"\x03\x35\x08\x01"
+    page[at : at + len(chpx)] = chpx[: 512 - at]
+    page[511] = crun
+    return bytes(page)
+
+
+def test_chpx_fkps_truncate_at_the_first_bad_page():
+    """GetAllCHPXFKPs swallows the first page that throws and keeps only the
+    pages before it: of three pages whose middle one holds a CHPX running
+    out of the page (bytes 510-513), the first page alone is returned."""
+    from b2xtranslator_spark.formats.word.fkp import get_all_chpx_fkps
+
+    pages = [_chpx_page([0, 10], 200), _chpx_page([10, 20], 255), _chpx_page([20, 30], 200)]
+    word_stream = bytes(512) + b"".join(pages)
+    bin_table = struct.pack("<4i3i", 0, 10, 20, 30, 1, 2, 3)  # PlcfBte: 4 FCs, 3 pages
+    table_stream = b"\x00" * 8 + bin_table
+    fkps = get_all_chpx_fkps(8, len(bin_table), word_stream, table_stream)
+    assert [f.rgfc for f in fkps] == [[0, 10]]
+    assert fkps[0].grpchpx == [[(0x0835, b"\x01")]]
+    # the same three pages with a good middle page all load
+    pages[1] = _chpx_page([10, 20], 200)
+    fkps = get_all_chpx_fkps(8, len(bin_table), bytes(512) + b"".join(pages), table_stream)
+    assert [f.rgfc for f in fkps] == [[0, 10], [10, 20], [20, 30]]
+
+
 @needs_ref
 def test_xls_simple_cells():
     res = extract_payload_text(open(SIMPLE_XLS, "rb").read())

@@ -55,9 +55,10 @@ def test_agg_has_partial_phase(docs):
     assert plan.count("HashAggregate") >= 2
 
 
-def test_extraction_plan_shape(spark):
-    """The extraction job must be scan -> exchange (salted) -> python map:
-    exactly one shuffle, no joins, no driver-side collect."""
+def test_extraction_plan_shape(spark, tmp_path):
+    """Over a parquet scan the extraction job is the scan and one python
+    map: no shuffle and no join (run_extraction maps the scan partitions
+    directly)."""
     from b2xtranslator_spark.pipeline import run_extraction
     from b2xtranslator_spark.sources.transcripts import synthesize_transcripts
 
@@ -65,12 +66,12 @@ def test_extraction_plan_shape(spark):
         transcripts, _ = synthesize_transcripts(spark, n_turns=50, doc_fraction=0.2)
     except Exception:
         pytest.skip("sample corpus unavailable")
-    extracted = run_extraction(transcripts)
+    transcripts.write.parquet(str(tmp_path / "transcripts"))
+    extracted = run_extraction(spark.read.parquet(str(tmp_path / "transcripts")))
     plan = _plan(extracted)
-    assert "MapInArrow" in plan
-    assert plan.count("Exchange") >= 1
-    # extraction itself must add no joins beyond the generator's broadcasts
-    assert "SortMergeJoin" not in plan
+    assert plan.count("MapInArrow") == 1
+    assert plan.count("Exchange") == 0
+    assert "Join" not in plan
 
 
 def test_whole_stage_codegen_on_textstats(docs):

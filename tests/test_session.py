@@ -1,6 +1,7 @@
-"""The session's slot rule: one map task slot per physical core."""
+"""The session's defaults: one map task slot per physical core, a driver
+heap that fits the machine."""
 
-from b2xtranslator_spark.plans.session import task_cpus
+from b2xtranslator_spark.plans.session import driver_memory, task_cpus
 
 
 def test_one_cpu_is_one_slot():
@@ -26,3 +27,11 @@ def test_smt_siblings_share_one_task():
     assert task_cpus(set(range(16)), siblings, cores=16) == 1
     # a master with fewer cores than threads per core still starts
     assert task_cpus(cpus, siblings, cores=1) == 1
+
+
+def test_driver_heap_is_half_the_machine():
+    gib = 1 << 30
+    assert driver_memory(16479424 * 1024) == "7g"  # a 15.7 GiB box
+    assert driver_memory(8 * gib) == "4g"
+    assert driver_memory(64 * gib) == "16g"  # capped
+    assert driver_memory(gib) == "1g"  # never below Spark's own default
