@@ -510,7 +510,7 @@ def run_with_checkpoints(
     return stats
 
 
-def read_extracted(spark: SparkSession, out_dir: str, n_groups: int = 8) -> DataFrame:
+def read_extracted(spark: SparkSession, out_dir: str, n_groups: int) -> DataFrame:
     paths = [os.path.join(out_dir, f"group={g}") for g in range(n_groups)]
     # through Hadoop's FileSystem: os.path cannot see file://, hdfs:// or
     # s3a:// URIs

@@ -17,6 +17,46 @@ import re
 from pyspark.sql import SparkSession
 
 
+# The settings of every session that runs the job, whatever starts it:
+# build_session here and the spark-submit entry point (scripts/job.py).
+# The master, spark.task.cpus, the shuffle partitions and the driver heap
+# depend on the machine: build_session works them out for this one, and a
+# cluster run passes them to spark-submit.
+JOB_CONF = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    # parallelismFirst stays at its default (true): measured A/B,
+    # coalescing tiny shuffles to the advisory byte size
+    # serialized the CPU-heavy per-pair verify stages (bytes are a bad
+    # proxy for compute there) — dedup_embedding_lsh 0.9 s -> 2.5 s
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # payloads are ~10KB-10MB each: Arrow batch size trades JVM<->Python
+    # handoff overhead against worst-case batch memory and straggler
+    # granularity. Swept on the sample corpus at local[32]: 32 rows
+    # 7.9s, 64 3.9s, 128 3.3s, 256 13s (memory pressure cliff) —
+    # 128 is the plateau (ISSUE-003-Memory-Management.md bounds still
+    # hold: 128 x 10MB worst case = 1.3GB per in-flight batch).
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "128",
+    # the parquet reader's batch (default 4096 rows) matches the Arrow
+    # batch: its column vectors hold a batch of payload rows per scan
+    # task (doc_cold peak RSS 30-85 MB lower than at 4096)
+    "spark.sql.parquet.columnarReaderBatchSize": "128",
+    # smaller splits than the 128MB default: payload rows are huge, so
+    # 32MB keeps scan tasks plentiful and uniform for the map stage
+    "spark.sql.files.maxPartitionBytes": "33554432",
+    # row groups are the atomic scan unit: with multi-MB payload rows the
+    # default 128MB block yields so few groups that a wide cluster
+    # tail-locks on single row-group tasks — 8MB groups keep splits real
+    "spark.hadoop.parquet.block.size": "8388608",
+    "spark.sql.parquet.compression.codec": "zstd",
+    # pin the session zone: TIMESTAMP_NTZ columns cast to epoch micros
+    # (sessionize_events) must mean treat-as-UTC on every host, not
+    # whatever the box's /etc/localtime says
+    "spark.sql.session.timeZone": "UTC",
+}
+
+
 def _cpu_list(text: str) -> set[int]:
     """CPU numbers of a sysfs list such as "0-3,8,10-11"."""
     cpus: set[int] = set()
@@ -84,38 +124,8 @@ def build_session(
     b = (
         SparkSession.builder.appName(app_name)
         .master(master)
+        .config(map=JOB_CONF)
         .config("spark.sql.shuffle.partitions", str(max(len(cpus), 32)))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # parallelismFirst stays at its default (true): measured A/B this
-        # round, coalescing tiny shuffles to the advisory byte size
-        # serialized the CPU-heavy per-pair verify stages (bytes are a bad
-        # proxy for compute there) — dedup_embedding_lsh 0.9 s -> 2.5 s
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # payloads are ~10KB-10MB each: Arrow batch size trades JVM<->Python
-        # handoff overhead against worst-case batch memory and straggler
-        # granularity. Swept on the sample corpus at local[32]: 32 rows
-        # 7.9s, 64 3.9s, 128 3.3s, 256 13s (memory pressure cliff) —
-        # 128 is the plateau (ISSUE-003-Memory-Management.md bounds still
-        # hold: 128 x 10MB worst case = 1.3GB per in-flight batch).
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "128")
-        # the parquet reader's batch (default 4096 rows) matches the Arrow
-        # batch: its column vectors hold a batch of payload rows per scan
-        # task (doc_cold peak RSS 30-85 MB lower than at 4096)
-        .config("spark.sql.parquet.columnarReaderBatchSize", "128")
-        # smaller splits than the 128MB default: payload rows are huge, so
-        # 32MB keeps scan tasks plentiful and uniform for the map stage
-        .config("spark.sql.files.maxPartitionBytes", "33554432")
-        # row groups are the atomic scan unit: with multi-MB payload rows the
-        # default 128MB block yields so few groups that a wide cluster
-        # tail-locks on single row-group tasks — 8MB groups keep splits real
-        .config("spark.hadoop.parquet.block.size", "8388608")
-        .config("spark.sql.parquet.compression.codec", "zstd")
-        # pin the session zone: TIMESTAMP_NTZ columns cast to epoch micros
-        # (sessionize_events) must mean treat-as-UTC on every host, not
-        # whatever the box's /etc/localtime says
-        .config("spark.sql.session.timeZone", "UTC")
         # one task slot, so one (JVM thread, Python worker) pair, per
         # physical core (task_cpus). Set even when it is 1: readers of the
         # conf count slots as cores / task.cpus. A real multi-executor

@@ -17,6 +17,15 @@ import argparse
 from pyspark.sql import SparkSession
 
 
+def builder() -> SparkSession.Builder:
+    """The job's session builder, WITHOUT master(): spark-submit / the
+    cluster manager decides it, with task.cpus, the shuffle partitions and
+    the driver heap. The other settings are plans.session.JOB_CONF."""
+    from b2xtranslator_spark.plans.session import JOB_CONF
+
+    return SparkSession.builder.appName("b2x-extract").config(map=JOB_CONF)
+
+
 def main() -> None:
     p = argparse.ArgumentParser()
     p.add_argument("--input", required=True)
@@ -27,13 +36,7 @@ def main() -> None:
 
     from b2xtranslator_spark.pipeline import run_with_checkpoints
 
-    # builder WITHOUT master(): spark-submit / cluster manager decides
-    spark = (
-        SparkSession.builder.appName("b2x-extract")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "128")
-        .getOrCreate()
-    )
+    spark = builder().getOrCreate()
     stats = run_with_checkpoints(
         spark, args.input, args.output, args.run_id, n_groups=args.groups
     )

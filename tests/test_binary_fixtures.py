@@ -18,9 +18,10 @@ from b2xtranslator_spark.sources.binfixtures import (
     build_ppt_fixture,
     build_ppt_incremental_fixture,
     build_xls_fixture,
-    make_cfb,
 )
 from b2xtranslator_spark.extractors import extract_payload_text
+from b2xtranslator_spark.formats.cfb import CompoundFile
+from perfbench.docgen import write_cfb
 
 
 def build_xls_shared_formula_fixture() -> tuple[bytes, str]:
@@ -74,15 +75,28 @@ def build_xls_shared_formula_fixture() -> tuple[bytes, str]:
     glb = globals_block(0)
     workbook = globals_block(len(glb)) + sheet
     expected = "\n".join(["Shared", "10.5", "20.5", "30.5", "366"])
-    return make_cfb([("Workbook", workbook)]), expected
+    return write_cfb([("Workbook", workbook)]), expected
+
+
+def _both_layouts(payload: bytes, *names: str) -> list[bytes]:
+    """A fixture as built (its short streams in the mini-stream) and
+    re-wrapped with each named stream padded to the 4096-byte cutoff, so
+    the streams sit in normal FAT sectors; trailing zeros are inert for
+    the BIFF and PPT record walks."""
+    cf = CompoundFile(payload)
+    return [
+        payload,
+        write_cfb([(n, cf.get_stream(n).ljust(4096, b"\0")) for n in names]),
+    ]
 
 
 def test_xls_fixture_parity():
     payload, expected = build_xls_fixture()
-    res = extract_payload_text(payload)
-    assert res.status == "ok", res.error
-    assert res.kind == "xls"
-    assert res.text == expected
+    for data in _both_layouts(payload, "Workbook"):
+        res = extract_payload_text(data)
+        assert res.status == "ok", res.error
+        assert res.kind == "xls"
+        assert res.text == expected
 
 
 def test_xls_shared_formula_and_1904_parity():
@@ -99,17 +113,19 @@ def test_xls_shared_formula_and_1904_parity():
 
 def test_ppt_fixture_parity():
     payload, expected = build_ppt_fixture()
-    res = extract_payload_text(payload)
-    assert res.status == "ok", res.error
-    assert res.kind == "ppt"
-    assert res.text == expected
+    for data in _both_layouts(payload, "Current User", "PowerPoint Document"):
+        res = extract_payload_text(data)
+        assert res.status == "ok", res.error
+        assert res.kind == "ppt"
+        assert res.text == expected
 
 
 def test_ppt_incremental_save_last_edit_wins():
     payload, expected = build_ppt_incremental_fixture()
-    res = extract_payload_text(payload)
-    assert res.status == "ok", res.error
-    assert res.text == expected
+    for data in _both_layouts(payload, "Current User", "PowerPoint Document"):
+        res = extract_payload_text(data)
+        assert res.status == "ok", res.error
+        assert res.text == expected
 
 
 def test_fixtures_survive_mutation_fuzz():

@@ -57,13 +57,14 @@ _SIZE_MISMATCH = (
 
 
 def _cfb_with_fat_edits(edits: dict[int, int]) -> bytes:
-    """One 4096-byte stream in sectors 2..9 with FAT entries overwritten;
-    make_cfb keeps the single FAT sector at sector 0 (file offset 512)."""
-    from b2xtranslator_spark.sources.binfixtures import make_cfb
+    """One 4096-byte stream in sectors 0..7 with FAT entries overwritten;
+    the single FAT sector is the one the header's DIFAT[0] (0x4C) names."""
+    from perfbench.docgen import write_cfb
 
-    data = bytearray(make_cfb([("WordDocument", b"x" * 4096)]))
+    data = bytearray(write_cfb([("WordDocument", b"x" * 4096)]))
+    fat_at = 512 + 512 * struct.unpack_from("<I", data, 0x4C)[0]
     for sid, nxt in edits.items():
-        struct.pack_into("<I", data, 512 + 4 * sid, nxt)
+        struct.pack_into("<I", data, fat_at + 4 * sid, nxt)
     return bytes(data)
 
 
@@ -75,11 +76,11 @@ def test_cfb_intact_chain_reads():
 @pytest.mark.parametrize(
     "edits, message",
     [
-        ({3: 0xFFFFFFFF}, _INVALID_SID),  # next sector is FREESECT
-        ({3: 10_000}, _INVALID_SID),  # next sector past the FAT
-        ({5: 3}, _SIZE_MISMATCH),  # cycle 3 -> 4 -> 5 -> 3
-        ({9: 10, 10: 0xFFFFFFFE}, _SIZE_MISMATCH),  # one sector too many
-        ({7: 0xFFFFFFFE}, _SIZE_MISMATCH),  # two sectors too few
+        ({1: 0xFFFFFFFF}, _INVALID_SID),  # next sector is FREESECT
+        ({1: 10_000}, _INVALID_SID),  # next sector past the FAT
+        ({3: 1}, _SIZE_MISMATCH),  # cycle 1 -> 2 -> 3 -> 1
+        ({7: 8, 8: 0xFFFFFFFE}, _SIZE_MISMATCH),  # one sector too many
+        ({5: 0xFFFFFFFE}, _SIZE_MISMATCH),  # two sectors too few
     ],
     ids=["freesect", "past-fat", "cycle", "too-long", "too-short"],
 )
@@ -397,8 +398,8 @@ def _sniff_cases():
         build_docx_fixture,
         build_ppt_fixture,
         build_xls_fixture,
-        make_cfb,
     )
+    from perfbench.docgen import write_cfb
 
     page = b"<html><body><p>hello page</p></body></html>"
     odt = _zip([
@@ -433,7 +434,7 @@ def _sniff_cases():
         ("forced-html", b"just words", "html", "html", "ok", "just words"),
         ("corrupt-zip", b"PK\x03\x04" + b"\x00" * 60, None, "unknown",
          "unsupported", zip_none),
-        ("cfb-no-stream", make_cfb([("Other", b"x")]), None, "unknown",
+        ("cfb-no-stream", write_cfb([("Other", b"x")]), None, "unknown",
          "unsupported", "no recognized document stream in container"),
         ("random", noise, None, "unknown", "parse_error", "Magic Number not found"),
     ]

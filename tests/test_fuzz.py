@@ -56,6 +56,68 @@ def test_truncated_documents_never_raise():
         assert res.status in ("parse_error", "unsupported")
 
 
+def _docgen_word_layouts():
+    """(layout, payload, data_at, data_len): seeded Word documents from
+    perfbench's generator in four CFB layouts (text in the mini-stream,
+    one FAT sector, several FAT sectors, 131 FAT sectors plus a DIFAT
+    sector), each with the file span of its Data stream, the padding no
+    text refers to (length 0 when there is none)."""
+    import struct
+
+    from perfbench.docgen import make_doc, plan_text
+
+    rng = np.random.default_rng(4242)
+    layouts = (
+        ("mini-stream", 300, 0, 1, 0),
+        ("one-fat", 3000, 0, 1, 0),
+        ("multi-fat", 3000, 150_000, 3, 0),
+        ("difat", 3000, 8_500_000, 131, 1),
+    )
+    for layout, chars, pad_to, n_fat, n_difat in layouts:
+        payload, _ = make_doc(plan_text(rng, chars, 0.5), rng, pad_to)
+        assert struct.unpack_from("<I", payload, 0x2C)[0] == n_fat, layout
+        assert struct.unpack_from("<I", payload, 0x48)[0] == n_difat, layout
+        data_at = data_len = 0
+        dir_at = 512 * (1 + struct.unpack_from("<I", payload, 0x30)[0])
+        for e in range(dir_at, dir_at + 512, 128):
+            name_len = struct.unpack_from("<H", payload, e + 64)[0]
+            if payload[e : e + name_len - 2] == "Data".encode("utf-16-le"):
+                start, data_len = struct.unpack_from("<IQ", payload, e + 116)
+                data_at = 512 * (1 + start)
+        yield layout, payload, data_at, data_len
+
+
+def test_mutated_docgen_word_layouts_never_raise_and_stay_bounded():
+    """The Word leg's soak without the reference corpus: seeded byte flips
+    and truncations of generated .doc files in every CFB layout, aimed at
+    the header, the FAT and DIFAT sectors, the directory and the text
+    streams (never at the Data padding, which nothing reads)."""
+    rng = np.random.default_rng(2024)
+    for layout, payload, data_at, data_len in _docgen_word_layouts():
+
+        def aim(offsets):
+            # offsets into the file with the Data span cut out
+            offsets[offsets >= data_at] += data_len
+            return offsets
+
+        cases = []
+        for _ in range(10):
+            n_flips = int(rng.integers(1, 50))
+            idx = aim(rng.integers(0, len(payload) - data_len, size=n_flips))
+            mutated = bytearray(payload)
+            for i, v in zip(idx, rng.integers(0, 256, size=n_flips)):
+                mutated[i] = v
+            cases.append(bytes(mutated))
+        for cut in aim(rng.integers(1, len(payload) - data_len, size=4)):
+            cases.append(payload[:cut])
+        for case in cases:
+            t0 = time.perf_counter()
+            res = extract_payload_text(case)
+            dt = time.perf_counter() - t0
+            assert res.status in ("ok", "encrypted", "parse_error", "unsupported", "timeout")
+            assert dt < 10, f"{layout} mutation took {dt:.1f}s"
+
+
 def test_mutated_lzw_pdf_streams_never_raise_and_stay_bounded():
     """LZW-filtered PDF content streams under seeded byte flips must stay
     inside the row-tolerance contract (decode salvages a prefix or the

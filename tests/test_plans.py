@@ -479,3 +479,40 @@ def test_python_stages_are_arrow_maps():
                 for n in names if n in pandas_maps
             ]
     assert not offenders, f"pandas-based Python stages: {offenders}"
+
+
+def test_one_cfb_writer():
+    """One module of the product knows the compound-file magic: the
+    reader, ``formats/cfb.py``. No other file of the package, of
+    ``scripts/`` or ``__spark_entry__.py`` holds it as bytes, as a hex
+    or latin-1 string or as an integer, so no second CFB writer grows
+    there; ``perfbench.docgen.write_cfb`` builds every compound file the
+    fixtures need. Pure ``ast`` walk over Python files, a hex search over
+    the rest; no Spark."""
+    import ast
+    from pathlib import Path
+
+    repo = Path(__file__).resolve().parent.parent
+    magic = bytes.fromhex("d0cf11e0a1b11ae1")
+    ints = {int.from_bytes(magic, "little"), int.from_bytes(magic, "big")}
+    offenders = []
+    for path in [*sorted((repo / "b2xtranslator_spark").rglob("*.py")),
+                 *sorted(p for p in (repo / "scripts").rglob("*") if p.is_file()),
+                 repo / "__spark_entry__.py"]:
+        rel = path.relative_to(repo).as_posix()
+        if rel == "b2xtranslator_spark/formats/cfb.py":
+            continue
+        if path.suffix != ".py":
+            if magic.hex() in path.read_text(errors="replace").lower():
+                offenders.append(rel)
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            v = node.value if isinstance(node, ast.Constant) else None
+            if (
+                isinstance(v, bytes) and magic in v
+                or isinstance(v, str)
+                and (magic.hex() in v.lower() or magic.decode("latin-1") in v)
+                or type(v) is int and v in ints
+            ):
+                offenders.append(f"{rel}:{node.lineno}")
+    assert not offenders, f"CFB magic outside formats/cfb.py: {offenders}"

@@ -1,5 +1,5 @@
 """The session's defaults: one map task slot per physical core, a driver
-heap that fits the machine."""
+heap that fits the machine, and the settings the spark-submit job shares."""
 
 from b2xtranslator_spark.plans.session import driver_memory, task_cpus
 
@@ -35,3 +35,28 @@ def test_driver_heap_is_half_the_machine():
     assert driver_memory(8 * gib) == "4g"
     assert driver_memory(64 * gib) == "16g"  # capped
     assert driver_memory(gib) == "1g"  # never below Spark's own default
+
+
+def test_submit_job_carries_the_session_settings(monkeypatch):
+    """The spark-submit job (scripts/job.py) and build_session both carry
+    every setting of JOB_CONF, and the job leaves the master to
+    spark-submit. Reads the builders' options; no session starts."""
+    import importlib.util
+    from pathlib import Path
+
+    from pyspark.sql import SparkSession
+
+    from b2xtranslator_spark.plans.session import JOB_CONF, build_session
+
+    path = Path(__file__).resolve().parents[1] / "scripts" / "job.py"
+    spec = importlib.util.spec_from_file_location("job", path)
+    job = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(job)
+    opts = job.builder()._options
+    assert {k: opts.get(k) for k in JOB_CONF} == JOB_CONF
+    assert "spark.master" not in opts
+
+    monkeypatch.delenv("MALLOC_ARENA_MAX", raising=False)
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", lambda b: b._options)
+    opts = build_session(master="local[1]")
+    assert {k: opts.get(k) for k in JOB_CONF} == JOB_CONF
